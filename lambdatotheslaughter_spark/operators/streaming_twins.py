@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.determinism import DEC, dsum, oracle_dsum
 from lambdatotheslaughter_spark.registry import register
+from lambdatotheslaughter_spark.streaming.harness import checkpoint_dir, drain
 from lambdatotheslaughter_spark.tables import load_table
 
 
@@ -264,12 +265,10 @@ def sink_stream_console_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lambdatotheslaughter_spark.tables import events_reader
 
     src = events_reader(spark, sf_dir, streaming=True)
-    q = (tumbling_agg(src)
-         .writeStream.outputMode("complete")
-         .option("checkpointLocation", f"/tmp/lts_ckpt_{name}")
-         .trigger(availableNow=True)
-         .format("memory").queryName(name).start())
-    q.awaitTermination(timeout=300)
+    writer = (tumbling_agg(src).writeStream.outputMode("complete")
+              .format("memory").queryName(name))
+    with checkpoint_dir(spark, name) as ckpt:
+        drain(spark, writer, ckpt)
     return spark.table(name)
 
 
@@ -320,11 +319,9 @@ def stream_stateful_state_op(spark: SparkSession, sf_dir: str) -> DataFrame:
         stateStructType="total double, n bigint",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout)
-    q = (out.writeStream.outputMode("update")
-         .option("checkpointLocation", f"/tmp/lts_ckpt_{name}")
-         .trigger(availableNow=True)
-         .format("memory").queryName(name).start())
-    q.awaitTermination(timeout=300)
+    writer = out.writeStream.outputMode("update").format("memory").queryName(name)
+    with checkpoint_dir(spark, name) as ckpt:
+        drain(spark, writer, ckpt)
     return spark.table(name)
 
 
@@ -396,11 +393,9 @@ def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputStructType="user_id bigint, total_value double, n_events bigint",
         outputMode="Update",
         timeMode="None")
-    q = (out.writeStream.outputMode("update")
-         .option("checkpointLocation", f"/tmp/lts_ckpt_{name}")
-         .trigger(availableNow=True)
-         .format("memory").queryName(name).start())
-    q.awaitTermination(timeout=300)
+    writer = out.writeStream.outputMode("update").format("memory").queryName(name)
+    with checkpoint_dir(spark, name) as ckpt:
+        drain(spark, writer, ckpt)
     return spark.table(name)
 
 
@@ -648,23 +643,17 @@ def sink_stream_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog — exactly the lambda batch-layer contract, and the appended
     table provably converges to the same oracle as the batch twin.
     Fresh table + checkpoint per run, dropped after the read-back."""
-    import shutil
     import uuid
 
     from lambdatotheslaughter_spark.tables import events_reader
 
-    run = uuid.uuid4().hex[:8]
-    table = f"lts_stream_serving_{run}"
-    ckpt = f"/tmp/lts_ckpt_{table}"
+    table = f"lts_stream_serving_{uuid.uuid4().hex[:8]}"
     src = events_reader(spark, sf_dir, streaming=True)
-    q = (src.writeStream.outputMode("append")
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .toTable(table))
-    q.awaitTermination(timeout=300)
+    with checkpoint_dir(spark, table) as ckpt:
+        drain(spark, src.writeStream.outputMode("append"), ckpt,
+              start=lambda w: w.toTable(table))
     out = tumbling_agg(spark.table(table)).localCheckpoint(eager=True)
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    shutil.rmtree(ckpt, ignore_errors=True)
     return out
 
 
@@ -705,24 +694,19 @@ def stream_rate_source_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver value-checks both the source's determinism and the resume
     arithmetic. Windows are emitted as epoch-derived strings (UTC
     session timezone, house rule for timestamp cells)."""
-    import shutil
     import uuid
 
-    run = uuid.uuid4().hex[:8]
-    ckpt = f"/tmp/lts_ckpt_rate_{run}"
-    table = f"lts_rate_sink_{run}"
-    for _ in range(3):
-        src = (spark.readStream.format("rate-micro-batch")
-               .option("rowsPerBatch", 100)
-               .option("numPartitions", 2)
-               .option("startTimestamp", 0)
-               .option("advanceMillisPerBatch", 60000)
-               .load())
-        q = (src.writeStream.outputMode("append")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .toTable(table))
-        q.awaitTermination(timeout=300)
+    table = f"lts_rate_sink_{uuid.uuid4().hex[:8]}"
+    with checkpoint_dir(spark, table) as ckpt:
+        for _ in range(3):
+            src = (spark.readStream.format("rate-micro-batch")
+                   .option("rowsPerBatch", 100)
+                   .option("numPartitions", 2)
+                   .option("startTimestamp", 0)
+                   .option("advanceMillisPerBatch", 60000)
+                   .load())
+            drain(spark, src.writeStream.outputMode("append"), ckpt,
+                  start=lambda w: w.toTable(table))
     out = (spark.table(table)
            .groupBy(F.window("timestamp", "2 minutes").alias("w"))
            .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -731,7 +715,6 @@ def stream_rate_source_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
                    "n", "vsum")
            .localCheckpoint(eager=True))
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    shutil.rmtree(ckpt, ignore_errors=True)
     return out
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.determinism import iround
 from lambdatotheslaughter_spark.registry import register
+from lambdatotheslaughter_spark.streaming.harness import checkpoint_dir, drain
 from lambdatotheslaughter_spark.tables import load_table
 
 
@@ -311,25 +312,18 @@ def source_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFra
         pass  # already registered in this session
     run = uuid.uuid4().hex[:8]
     out = os.path.join(tempfile.gettempdir(), f"lts_pyds_stream_{run}")
-    ckpt = os.path.join(out, "_ckpt")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(
             os.path.join(out, f"batch_{batch_id}"))
 
-    for _ in range(8):  # bound: feed is 900 rows / 450-row chunks
-        q = (spark.readStream.format("lts_counter_stream").load()
-             .writeStream.foreachBatch(sink)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(timeout=120):
-            # timed-out run: stop it before the next loop iteration
-            # starts a second query on the same checkpoint (would throw)
-            q.stop()
-            q.awaitTermination(timeout=30)
-        p = q.lastProgress
-        if not p or p["numInputRows"] == 0:
-            break
+    with checkpoint_dir(spark, f"lts_pyds_stream_{run}") as ckpt:
+        for _ in range(8):  # bound: feed is 900 rows / 450-row chunks
+            writer = (spark.readStream.format("lts_counter_stream").load()
+                      .writeStream.foreachBatch(sink))
+            p = drain(spark, writer, ckpt).lastProgress
+            if not p or p["numInputRows"] == 0:
+                break
     dirs = sorted(_glob.glob(os.path.join(out, "batch_*")))
     # localCheckpoint so the per-run /tmp output dir can be removed now
     # instead of leaking across sweeps (same discipline as

@@ -1,7 +1,14 @@
-"""SparkSession factory tuned for the local[32] test box but configured the
-way a 1000-executor cluster job would be: AQE on (runtime re-planning, skew
-join splitting, partition coalescing), explicit UTC session timezone (oracle
-hash alignment), Arrow enabled for the Pandas-UDF slow path.
+"""SparkSession factory, configured the way a 1000-executor cluster job
+would be: AQE on (runtime re-planning, skew join splitting, partition
+coalescing), explicit UTC session timezone (oracle hash alignment), Arrow
+enabled for the Pandas-UDF slow path.
+
+Work is sized per kind. Batch work keeps the session's shuffle partitions
+(32, or ``SPARK_GRAFT_SHUFFLE``) with AQE coalescing them at runtime. Each streaming query starts
+through ``streaming.harness.drain`` with ``defaultParallelism`` shuffle
+partitions — one state-store partition per core, fixed in the query's
+checkpoint — because streaming runs without AQE and pays a fixed cost per
+state partition on every micro-batch.
 
 At cluster scale the only knobs that change are master / memory / shuffle
 partitions; query code never needs to know.

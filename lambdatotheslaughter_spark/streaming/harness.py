@@ -6,6 +6,14 @@ semantics): a directory of parquet chunk files consumed with
 each file is a micro-batch, arrival order is file order, and watermarks /
 state / sinks behave exactly as they would behind a Kafka source. In
 production only the source line changes to ``readStream.format("kafka")``.
+
+Every streaming query the engine starts goes through ``drain``, which sizes
+it to the machine: the batch layer keeps the session's 32 shuffle
+partitions with AQE, while each streaming query shuffles into
+``defaultParallelism`` partitions — one state-store partition per core for
+a stateful query, fixed in its checkpoint from the first batch on, and as
+many files per ``foreachBatch`` merge. Checkpoints live under the session's
+``spark.sql.streaming.checkpointLocation`` root.
 """
 
 from __future__ import annotations
@@ -14,12 +22,66 @@ import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from lambdatotheslaughter_spark.tables import load_table
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+@contextmanager
+def checkpoint_dir(spark: SparkSession, name: str) -> Iterator[str]:
+    """A fresh checkpoint directory under the session's streaming
+    checkpoint root, removed on exit. Sessions built elsewhere may leave
+    the root unset; their checkpoints go to the temp directory."""
+    root = (spark.conf.get("spark.sql.streaming.checkpointLocation", None)
+            or tempfile.gettempdir())
+    path = os.path.join(root, f"{name}_{uuid.uuid4().hex[:8]}")
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def drain(spark: SparkSession, writer: DataStreamWriter, checkpoint: str,
+          start: Callable[[DataStreamWriter], StreamingQuery] = DataStreamWriter.start,
+          timeout: float = 300) -> StreamingQuery:
+    """Start the query ``writer`` describes from ``checkpoint`` with
+    AvailableNow, wait until it has drained its input, and return it.
+
+    The query is sized to the machine: ``spark.sql.shuffle.partitions`` is
+    ``defaultParallelism`` while it starts. The query's cloned session
+    captures that value, a stateful query records it in its checkpoint (a
+    restart keeps the recorded count), and a ``foreachBatch`` function
+    inherits it through ``batch_df.sparkSession``. The caller's session
+    gets its own value back as soon as the query has started; batch work
+    that another thread starts in the same session meanwhile would see the
+    streaming count.
+
+    A query that fails raises its ``StreamingQueryException``; one still
+    running after ``timeout`` seconds is stopped and raises
+    ``TimeoutError``, so a stalled drain never hands back partial output.
+    """
+    writer = writer.option("checkpointLocation", checkpoint).trigger(availableNow=True)
+    conf = spark.conf
+    batch_partitions = conf.get(_SHUFFLE_PARTITIONS)
+    conf.set(_SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism))
+    try:
+        query = start(writer)
+    finally:
+        conf.set(_SHUFFLE_PARTITIONS, batch_partitions)
+    if not query.awaitTermination(timeout):
+        query.stop()
+        raise TimeoutError(
+            f"streaming query {query.name or query.id} did not drain in {timeout} s")
+    return query
+
 
 EVENT_STREAM_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
@@ -81,23 +143,17 @@ class EventStreamHarness:
         (honors maxFilesPerTrigger → true multi-micro-batch execution),
         return the memory-sink table."""
         name = f"lts_sink_{uuid.uuid4().hex[:8]}"
-        ckpt = os.path.join(tempfile.gettempdir(), f"lts_ckpt_{name}")
-        out = transform(self.source())
-        writer = (out.writeStream
-                  .option("checkpointLocation", ckpt)
-                  .trigger(availableNow=True))
+        writer = transform(self.source()).writeStream.outputMode(output_mode)
         if foreach_batch is not None:
-            q = writer.outputMode(output_mode).foreachBatch(foreach_batch).start()
+            writer = writer.foreachBatch(foreach_batch)
         else:
-            q = writer.outputMode(output_mode).format("memory").queryName(name).start()
-        q.awaitTermination(timeout=300)
-        # expose the drained query for tests that need its progress
-        # telemetry (e.g. the final event-time watermark, which decides
-        # which outer-join null rows were evictable before shutdown)
-        self.last_query = q
-        result = self.spark.table(name) if foreach_batch is None else None
-        shutil.rmtree(ckpt, ignore_errors=True)
-        return result
+            writer = writer.format("memory").queryName(name)
+        with checkpoint_dir(self.spark, name) as ckpt:
+            # expose the drained query for tests that need its progress
+            # telemetry (e.g. the final event-time watermark, which decides
+            # which outer-join null rows were evictable before shutdown)
+            self.last_query = drain(self.spark, writer, ckpt)
+        return self.spark.table(name) if foreach_batch is None else None
 
     def cleanup(self) -> None:
         shutil.rmtree(self.input_dir, ignore_errors=True)
@@ -116,19 +172,54 @@ def latest_per_user(df: DataFrame) -> DataFrame:
             .where(F.col("_rn") == 1).drop("_rn"))
 
 
+def _versions_dir(serving_path: str) -> str:
+    return serving_path + ".versions"
+
+
+def read_serving(spark: SparkSession, serving_path: str) -> DataFrame:
+    """The serving table as of its current version. The link is resolved
+    once, so a swap while the returned DataFrame is read does not move the
+    files under it; a merge keeps the version it replaced until the next
+    merge."""
+    return spark.read.parquet(os.path.realpath(serving_path))
+
+
+def drop_serving(serving_path: str) -> None:
+    """Remove a serving table: its link and every version."""
+    if os.path.lexists(serving_path):
+        os.unlink(serving_path)
+    shutil.rmtree(_versions_dir(serving_path), ignore_errors=True)
+
+
 def upsert_foreach_batch(serving_path: str):
     """The Kudu-upsert analog (SURVEY §3 entry 2): each micro-batch is
     merged into a keyed parquet serving table, latest row per key wins.
-    Idempotent per batch — replays overwrite with identical content."""
+    Idempotent per batch — replays overwrite with identical content.
+
+    ``serving_path`` is a symlink to one version directory under
+    ``<serving_path>.versions``. Each batch writes its merge to a new
+    version, repoints the link with one atomic ``os.replace``, then
+    deletes every version but the new one and the one it replaced. A
+    reader, or a crash at any point, finds a whole table: the old version
+    or the new one. ``spark.read.parquet(serving_path)`` reads the current
+    version; readers that run during merges use ``read_serving``."""
+    versions = _versions_dir(serving_path)
+
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         new = batch_df
-        if os.path.exists(serving_path):
-            old = spark.read.parquet(serving_path)
-            new = old.unionByName(new)
-        latest = latest_per_user(new)
-        tmp = serving_path + ".tmp"
-        latest.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(serving_path, ignore_errors=True)
-        os.rename(tmp, serving_path)
+        previous = os.path.realpath(serving_path)
+        if os.path.exists(previous):
+            new = spark.read.parquet(previous).unionByName(new)
+        # unique per attempt: a replayed batch must not overwrite the
+        # version it reads from
+        version = f"b{batch_id:06d}-{uuid.uuid4().hex[:8]}"
+        latest_per_user(new).write.parquet(os.path.join(versions, version))
+        swap = serving_path + ".swap"
+        if os.path.lexists(swap):
+            os.unlink(swap)
+        os.symlink(os.path.join(os.path.basename(versions), version), swap)
+        os.replace(swap, serving_path)
+        for old in set(os.listdir(versions)) - {version, os.path.basename(previous)}:
+            shutil.rmtree(os.path.join(versions, old), ignore_errors=True)
     return _merge

@@ -18,7 +18,8 @@ from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.operators import streaming_twins as tw
 from lambdatotheslaughter_spark.streaming.harness import (
-    EventStreamHarness, upsert_foreach_batch)
+    EventStreamHarness, checkpoint_dir, drain, drop_serving, latest_per_user,
+    read_serving, upsert_foreach_batch)
 from lambdatotheslaughter_spark.tables import load_table
 from tests.conftest import SMOKE_SF_DIR, canonical_rows
 
@@ -37,9 +38,28 @@ def _assert_same(stream_df, batch_df, name):
 
 
 def test_tumbling_agg_twin(spark, harness):
+    """Also pins the sizing: the stateful query runs one state partition
+    per core while the session keeps its batch-layer partition count."""
+    batch_partitions = spark.conf.get("spark.sql.shuffle.partitions")
     out = harness.run(tw.tumbling_agg, output_mode="complete")
     _assert_same(out, tw.tumbling_agg(load_table(spark, "events", SMOKE_SF_DIR)),
                  "tumbling")
+    ops = harness.last_query.lastProgress["stateOperators"]
+    assert ops, "tumbling_agg reported no state operator"
+    assert {o["numShufflePartitions"] for o in ops} == {
+        spark.sparkContext.defaultParallelism}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == batch_partitions
+
+
+def test_drain_timeout_raises_and_stops(spark, harness):
+    """A drain that cannot finish in time raises instead of handing back a
+    partial sink table, and leaves no query running."""
+    writer = (tw.tumbling_agg(harness.source()).writeStream
+              .outputMode("complete").format("memory").queryName("lts_timeout"))
+    with checkpoint_dir(spark, "lts_timeout") as ckpt:
+        with pytest.raises(TimeoutError):
+            drain(spark, writer, ckpt, timeout=0.01)
+    assert not spark.streams.active
 
 
 def test_session_window_twin(spark, harness):
@@ -135,17 +155,61 @@ def test_stateful_running_twin(spark, harness):
 def test_foreach_batch_upsert_serving_table(spark, harness):
     """foreachBatch upsert into a keyed parquet serving table (the Kudu
     analog): after draining the stream, the table holds exactly the latest
-    event per user — identical to the batch last-per-user view."""
+    event per user — identical to the batch last-per-user view. A reader
+    polling the table while the merges swap new versions in always finds a
+    whole table (one row per user)."""
+    import threading
+
     serving = os.path.join(tempfile.gettempdir(), "lts_serving_upsert")
-    shutil.rmtree(serving, ignore_errors=True)
-    harness.run(lambda s: s, output_mode="append",
-                foreach_batch=upsert_foreach_batch(serving))
-    got = spark.read.parquet(serving).select("user_id", "event_id", "ts")
-    from lambdatotheslaughter_spark.streaming.harness import latest_per_user
-    want = latest_per_user(load_table(spark, "events", SMOKE_SF_DIR)) \
-        .select("user_id", "event_id", "ts")
-    _assert_same(got, want, "foreach_batch_upsert")
-    shutil.rmtree(serving, ignore_errors=True)
+    drop_serving(serving)
+    merge = upsert_foreach_batch(serving)
+    done = threading.Event()
+    read_version = threading.Event()
+    errors, reads = [], []
+
+    def reader():
+        while not done.is_set():
+            # before the first merge there is no table yet; after it, the
+            # table must never be missing
+            if not reads and not os.path.exists(serving):
+                done.wait(0.01)
+                continue
+            try:
+                ids = [r.user_id for r in read_serving(spark, serving)
+                       .select("user_id").collect()]
+                assert ids and len(ids) == len(set(ids)), "not a whole table"
+            except Exception as e:  # noqa: BLE001 — any failure fails the test
+                errors.append(e)
+                read_version.set()  # release a waiting merge
+                return
+            reads.append(len(ids))
+            read_version.set()
+
+    def merge_then_wait_for_a_read(batch_df, batch_id):
+        # keeps the reader busy across every swap, not just the last one
+        merge(batch_df, batch_id)
+        read_version.clear()
+        if not errors:
+            read_version.wait(timeout=60)
+
+    t = threading.Thread(target=reader, daemon=True)
+    t.start()
+    try:
+        harness.run(lambda s: s, output_mode="append",
+                    foreach_batch=merge_then_wait_for_a_read)
+    finally:
+        done.set()
+        t.join(timeout=60)
+    try:
+        assert not t.is_alive(), "serving reader did not stop"
+        assert not errors, f"serving reader failed during a swap: {errors[0]}"
+        assert len(reads) >= 4, reads
+        got = spark.read.parquet(serving).select("user_id", "event_id", "ts")
+        want = latest_per_user(load_table(spark, "events", SMOKE_SF_DIR)) \
+            .select("user_id", "event_id", "ts")
+        _assert_same(got, want, "foreach_batch_upsert")
+    finally:
+        drop_serving(serving)
 
 
 def test_sliding_agg_twin(spark, harness):
@@ -239,13 +303,17 @@ def test_checkpoint_recovery_exactly_once(spark):
     state and offsets from the checkpoint — not reprocess the already-
     committed micro-batches — and (b) converge to exactly the batch twin
     over the full input. This is the lambda-genre behavior no other test
-    covers: exactly-once across a process boundary."""
+    covers: exactly-once across a process boundary.
+
+    The first run writes its checkpoint at a state partition count other
+    than the machine's (as a checkpoint from an older build would); the
+    restart goes through ``drain`` and must keep the recorded count."""
     import uuid
 
     h = EventStreamHarness(spark, SMOKE_SF_DIR, n_chunks=4)
     hold_dir = tempfile.mkdtemp(prefix="lts_heldback_")
-    ckpt = os.path.join(tempfile.gettempdir(),
-                        f"lts_ckpt_recov_{uuid.uuid4().hex[:8]}")
+    recorded = spark.sparkContext.defaultParallelism + 1
+    batch_partitions = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         files = sorted(f for f in os.listdir(h.input_dir)
                        if f.endswith(".parquet"))
@@ -255,30 +323,38 @@ def test_checkpoint_recovery_exactly_once(spark):
             shutil.move(os.path.join(h.input_dir, f),
                         os.path.join(hold_dir, f))
 
-        def start(name):
+        def writer(name):
             return (tw.tumbling_agg(h.source())
                     .writeStream.outputMode("complete")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .format("memory").queryName(name).start())
+                    .format("memory").queryName(name))
 
-        q1 = start(f"lts_recov1_{uuid.uuid4().hex[:6]}")
-        q1.awaitTermination(timeout=300)  # drains chunks 0-1, then "crashes"
+        with checkpoint_dir(spark, "lts_recov") as ckpt:
+            spark.conf.set("spark.sql.shuffle.partitions", str(recorded))
+            try:
+                q1 = (writer(f"lts_recov1_{uuid.uuid4().hex[:6]}")
+                      .option("checkpointLocation", ckpt)
+                      .trigger(availableNow=True).start())
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", batch_partitions)
+            assert q1.awaitTermination(timeout=300)  # drains chunks 0-1, then "crashes"
 
-        # the held-back chunks arrive while the query is down
-        for f in files[2:]:
-            shutil.move(os.path.join(hold_dir, f),
-                        os.path.join(h.input_dir, f))
+            # the held-back chunks arrive while the query is down
+            for f in files[2:]:
+                shutil.move(os.path.join(hold_dir, f),
+                            os.path.join(h.input_dir, f))
 
-        name2 = f"lts_recov2_{uuid.uuid4().hex[:6]}"
-        q2 = start(name2)
-        q2.awaitTermination(timeout=300)
+            name2 = f"lts_recov2_{uuid.uuid4().hex[:6]}"
+            q2 = drain(spark, writer(name2), ckpt)
 
         # exactly-once convergence: restarted query's final complete-mode
         # emission equals the oracled batch twin over ALL events
         _assert_same(spark.table(name2),
                      tw.stream_tumbling_agg(spark, SMOKE_SF_DIR),
                      "checkpoint_recovery")
+
+        # the state partition count is the checkpoint's, not the machine's
+        assert {o["numShufflePartitions"]
+                for o in q2.lastProgress["stateOperators"]} == {recorded}
 
         # no reprocessing: the restart must resume from recorded offsets,
         # reading only the two new chunks (not the whole topic again)
@@ -290,27 +366,34 @@ def test_checkpoint_recovery_exactly_once(spark):
     finally:
         h.cleanup()
         shutil.rmtree(hold_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_foreach_batch_upsert_survives_restart(spark):
     """Crash-recovery for the SERVING-TABLE path (the Kudu-upsert analog):
-    drain half the chunks into the keyed serving table via foreachBatch,
-    stop, land the rest, restart from the same checkpoint. The restarted
-    query must resume from recorded offsets, and the serving table must
-    converge to exactly the batch latest-per-user view — the end-to-end
-    exactly-once property a lambda serving layer promises (idempotent
-    merge + offset tracking, not just stream-side state recovery)."""
+    drain half the chunks into the keyed serving table via foreachBatch
+    and crash the query in its second batch, after that batch's merge
+    swapped the table in but before the batch committed; land the rest,
+    restart from the same checkpoint. The crashed drain must raise, the
+    restarted query must replay the uncommitted batch and resume from
+    recorded offsets, and the serving table must converge to exactly the
+    batch latest-per-user view — the end-to-end exactly-once property a
+    lambda serving layer promises (idempotent merge + offset tracking, not
+    just stream-side state recovery)."""
     import uuid
 
-    from lambdatotheslaughter_spark.streaming.harness import latest_per_user
+    from pyspark.errors import StreamingQueryException
 
     h = EventStreamHarness(spark, SMOKE_SF_DIR, n_chunks=4)
     hold_dir = tempfile.mkdtemp(prefix="lts_heldback_fb_")
     serving = os.path.join(tempfile.gettempdir(),
                            f"lts_serving_recov_{uuid.uuid4().hex[:8]}")
-    ckpt = os.path.join(tempfile.gettempdir(),
-                        f"lts_ckpt_fbrecov_{uuid.uuid4().hex[:8]}")
+    merge = upsert_foreach_batch(serving)
+
+    def merge_then_crash(batch_df, batch_id):
+        merge(batch_df, batch_id)
+        if batch_id == 1:
+            raise RuntimeError("crash after the swap, before the commit")
+
     try:
         files = sorted(f for f in os.listdir(h.input_dir)
                        if f.endswith(".parquet"))
@@ -318,25 +401,23 @@ def test_foreach_batch_upsert_survives_restart(spark):
             shutil.move(os.path.join(h.input_dir, f),
                         os.path.join(hold_dir, f))
 
-        def start():
-            return (h.source().writeStream
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .outputMode("append")
-                    .foreachBatch(upsert_foreach_batch(serving)).start())
+        def writer(fn):
+            return h.source().writeStream.outputMode("append").foreachBatch(fn)
 
-        q1 = start()
-        q1.awaitTermination(timeout=300)
-        for f in files[2:]:
-            shutil.move(os.path.join(hold_dir, f),
-                        os.path.join(h.input_dir, f))
-        q2 = start()
-        q2.awaitTermination(timeout=300)
+        with checkpoint_dir(spark, "lts_fbrecov") as ckpt:
+            with pytest.raises(StreamingQueryException):
+                drain(spark, writer(merge_then_crash), ckpt)
+            for f in files[2:]:
+                shutil.move(os.path.join(hold_dir, f),
+                            os.path.join(h.input_dir, f))
+            q2 = drain(spark, writer(merge), ckpt)
 
         got = spark.read.parquet(serving).select("user_id", "event_id", "ts")
         want = latest_per_user(load_table(spark, "events", SMOKE_SF_DIR)) \
             .select("user_id", "event_id", "ts")
         _assert_same(got, want, "foreach_batch_restart")
+        # the last merge kept its own version and the one it replaced
+        assert len(os.listdir(serving + ".versions")) == 2
 
         p2_rows = sum(int(p.numInputRows) for p in q2.recentProgress)
         total = load_table(spark, "events", SMOKE_SF_DIR).count()
@@ -345,8 +426,7 @@ def test_foreach_batch_upsert_survives_restart(spark):
     finally:
         h.cleanup()
         shutil.rmtree(hold_dir, ignore_errors=True)
-        shutil.rmtree(serving, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        drop_serving(serving)
 
 
 def test_scd2_incremental_foreachbatch_converges(spark, harness):
