@@ -1082,3 +1082,90 @@ def date_retail_445_calendar(spark: SparkSession,
             .groupBy("fiscal_year", "fiscal_month_445")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"),
                  F.sum("cents").cast("bigint").alias("revenue_cents")))
+
+
+_POSEXPLODE_ORACLE = """
+SELECT * FROM (
+  SELECT doc_id,
+         CAST(unnest(range(len(string_split(text, ' ')))) AS BIGINT) AS pos,
+         unnest(string_split(text, ' ')) AS token
+  FROM documents WHERE doc_id < 40
+) WHERE pos < 8
+"""
+
+
+@register("explode_posexplode", oracle=_POSEXPLODE_ORACLE)
+def explode_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """posexplode (explode WITH ORDINALITY): tokenize and keep each token's
+    position — the order-preserving flatten that plain explode loses.
+    DuckDB's zipped-unnest idiom is the oracle twin. Generators run inside
+    whole-stage codegen (no UDF); the doc_id/pos filters land before/after
+    the generate respectively, and column pruning drops `text` right after
+    the split."""
+    d = load_table(spark, "documents", sf_dir).where(F.col("doc_id") < 40)
+    return (
+        d.select("doc_id", F.posexplode(F.split("text", " "))
+                 .alias("pos", "token"))
+        .where(F.col("pos") < 8)
+        .withColumn("pos", F.col("pos").cast("bigint"))
+    )
+
+
+_REGEXP_ALL_ORACLE = """
+SELECT doc_id,
+       COALESCE(array_to_string(regexp_extract_all(text, 's\\w+'), ' '), '')
+         AS s_words,
+       CAST(len(regexp_extract_all(text, 's\\w+')) AS INTEGER) AS n_s_words
+FROM documents
+"""
+
+
+@register("str_regexp_extract_all", oracle=_REGEXP_ALL_ORACLE)
+def str_regexp_extract_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """regexp_extract_all: every s-prefixed token per document, flattened to
+    a joined string (arrays stringified for repr-stable hashing, the house
+    convention). Both regex engines agree on this portable \\w+ subset.
+    JVM-side codegen — the regex never leaves the executor row loop."""
+    d = load_table(spark, "documents", sf_dir)
+    arr = F.regexp_extract_all("text", F.lit(r"s\w+"), 0)
+    return d.select(
+        "doc_id",
+        F.array_join(arr, " ").alias("s_words"),
+        F.size(arr).alias("n_s_words"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# outer generators: empty arrays must keep their row (round 6)
+# ---------------------------------------------------------------------------
+
+_EXPLODE_OUTER_ORACLE = r"""
+WITH t AS (
+  SELECT doc_id, regexp_extract_all(text, 'q\w+') AS arr FROM documents
+)
+SELECT doc_id,
+       CAST(i - 1 AS BIGINT) AS pos,
+       arr[i] AS qword
+FROM t LEFT JOIN LATERAL (
+  SELECT unnest(generate_series(1, len(arr))) AS i) u ON TRUE
+"""
+
+
+@register("explode_outer_nulls", oracle=_EXPLODE_OUTER_ORACLE)
+def explode_outer_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`posexplode_outer`: flattening that PRESERVES rows whose array is
+    empty (NULL pos/element) — the anti-join-free way to keep "documents
+    with no matches" visible in the flattened view. Plain explode drops
+    them, and the classic workaround (flatten + left anti + union) is two
+    extra shuffles; the outer generator is zero extra shuffles (generate
+    is map-side). The q-word extraction leaves most docs with an empty
+    array, so the outer semantics carry real weight here. Oracle: DuckDB
+    LEFT JOIN LATERAL over generate_series(1, len(arr)) — its unnest
+    drops empty rows exactly like plain explode, so the lateral left join
+    is the porting idiom."""
+    d = load_table(spark, "documents", sf_dir)
+    return (d.select(
+        "doc_id",
+        F.posexplode_outer(F.expr(r"regexp_extract_all(text, 'q\\w+', 0)"))
+        .alias("pos", "qword"))
+        .withColumn("pos", F.col("pos").cast("bigint")))

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.determinism import (
     disc_price_csum, dsum, oracle_disc_price_csum, oracle_dsum)
+from lambdatotheslaughter_spark.operators.sql import scd2_collapse
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.tables import load_table
 
@@ -786,3 +787,100 @@ def geo_knn_within_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (pts.join(best, pts.id == F.col("bid"), "left")
             .select("id", F.col("s.nb").alias("nn_id"),
                     F.col("s.d2").alias("nn_dist_sq")))
+
+
+_LATERAL_ORACLE = """
+SELECT c.c_custkey, t.o_orderkey, round(t.o_totalprice, 2) AS totalprice
+FROM customer c,
+LATERAL (SELECT o_orderkey, o_totalprice FROM orders o
+         WHERE o.o_custkey = c.c_custkey
+         ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
+WHERE c.c_custkey <= 300
+"""
+
+
+@register("join_lateral_topn", oracle=_LATERAL_ORACLE)
+def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LATERAL subquery (correlated derived table): top-2 orders PER
+    customer written the way an analyst writes it — identical SQL text
+    on both engines. The tie on o_totalprice is pinned by o_orderkey in
+    the lateral ORDER BY, making LIMIT deterministic. Catalyst rewrites
+    the lateral into the same window/topk-per-group machinery as
+    win_topk_per_group (DomainJoin → rank filter), so the declarative
+    per-row subquery costs one partitioned window at scale, not a
+    per-customer re-execution."""
+    for name in ("orders", "customer"):
+        load_table(spark, name, sf_dir).createOrReplaceTempView(name)
+    return spark.sql(_LATERAL_ORACLE)
+
+
+_SCD2_PIT_ORACLE = """
+WITH feed AS (
+  SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
+         LAG(o_orderpriority) OVER (PARTITION BY o_custkey
+                                    ORDER BY o_orderdate, o_orderkey) AS prev
+  FROM orders
+), chg AS (
+  SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey FROM feed
+  WHERE prev IS NULL OR prev <> o_orderpriority
+), dim AS (
+  SELECT o_custkey AS custkey, o_orderpriority AS priority,
+         o_orderdate AS valid_from,
+         LEAD(o_orderdate) OVER w AS valid_to,
+         CAST(ROW_NUMBER() OVER w AS BIGINT) AS version
+  FROM chg
+  WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+)
+SELECT f.o_orderkey AS fact_key, f.o_custkey AS custkey,
+       CAST(f.o_orderdate AS VARCHAR) AS fact_date,
+       d.version, d.priority AS dim_priority,
+       (f.o_orderpriority = d.priority) AS priority_matches
+FROM orders f JOIN dim d
+  ON f.o_custkey = d.custkey
+ AND f.o_orderdate >= d.valid_from
+ AND (d.valid_to IS NULL OR f.o_orderdate < d.valid_to)
+"""
+
+
+@register("join_scd2_point_in_time", oracle=_SCD2_PIT_ORACLE)
+def join_scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Point-in-time dimension lookup — the query SCD2 exists FOR: each
+    fact row joined to the dimension version that was valid at the fact's
+    own date (valid_from <= t < valid_to, open current range matches
+    everything after valid_from). Half-open ranges tile the timeline, so
+    every fact matches EXACTLY one version — no post-dedup, and the
+    `priority_matches` flag surfaces the one honest subtlety (same-day
+    flip-flops: a fact can predate its date's final version in the
+    (date, orderkey) feed order).
+
+    Scale shape: the EQUI key (custkey) carries the join — one shuffle,
+    hash or sort-merge — and the range predicate filters inside each
+    key's version list (bounded by versions-per-key, typically a
+    handful); never a time-theta join across keys. Shares scd2_collapse
+    with the dimension build and the streaming incremental merge, so
+    serving lookups and dimension maintenance cannot drift."""
+    o = load_table(spark, "orders", sf_dir)
+    feed = o.select("o_custkey", "o_orderpriority", "o_orderdate",
+                    "o_orderkey")
+    dim = (scd2_collapse(feed, key="o_custkey", attr="o_orderpriority",
+                         ord_cols=["o_orderdate", "o_orderkey"],
+                         valid_col="o_orderdate")
+           .select(F.col("o_custkey").alias("custkey"),
+                   F.col("o_orderpriority").alias("dim_priority"),
+                   F.col("o_orderdate").alias("valid_from"),
+                   "valid_to", "version"))
+    facts = o.select(F.col("o_orderkey").alias("fact_key"),
+                     F.col("o_custkey").alias("custkey"),
+                     F.col("o_orderdate").alias("fact_date"),
+                     F.col("o_orderpriority").alias("fact_priority"))
+    return (facts.join(
+                dim,
+                (facts.custkey == dim.custkey)
+                & (F.col("fact_date") >= F.col("valid_from"))
+                & (F.col("valid_to").isNull()
+                   | (F.col("fact_date") < F.col("valid_to"))))
+            .select("fact_key", facts.custkey.alias("custkey"),
+                    F.col("fact_date").cast("string").alias("fact_date"),
+                    "version", "dim_priority",
+                    (F.col("fact_priority") == F.col("dim_priority"))
+                    .alias("priority_matches")))

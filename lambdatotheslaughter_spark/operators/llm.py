@@ -17,7 +17,6 @@ Design notes for 100 TB:
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -202,8 +201,7 @@ def _verified_near_dup_pairs(sh: DataFrame) -> DataFrame:
     duplicate MASS, not just its size, so it cannot be unconditionally
     broadcast at 100 TB.
 
-    • count ≤ _VERIFY_BROADCAST_MAX_PAIRS (env-overridable via
-      SPARK_GRAFT_VERIFY_BROADCAST_MAX): BROADCAST the candidates and
+    • count ≤ _VERIFY_BROADCAST_MAX_PAIRS: BROADCAST the candidates and
       stream the corpus map-side, twice. The reverse order (shuffling the
       shingle arrays to meet the pairs) measured ~0.5 s slower at sf0.1
       and would move the whole corpus for a tiny pair set.
@@ -217,12 +215,10 @@ def _verified_near_dup_pairs(sh: DataFrame) -> DataFrame:
     verify join reads the materialized blocks instead of re-running the
     minhash pipeline."""
     cand = _lsh_candidate_pairs(sh).localCheckpoint(eager=False)
-    cap = int(os.environ.get("SPARK_GRAFT_VERIFY_BROADCAST_MAX",
-                             _VERIFY_BROADCAST_MAX_PAIRS))
     sa = sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b"))
     jac = _jaccard_spark(F.col("sh_a"), F.col("sh_b"))
-    if cand.count() <= cap:
+    if cand.count() <= _VERIFY_BROADCAST_MAX_PAIRS:
         withsa = sa.join(F.broadcast(cand), "a_id")
         return (sb.join(F.broadcast(withsa), "b_id")
                 .select("a_id", "b_id", jac.alias("jaccard")))
@@ -1894,26 +1890,22 @@ def llm_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     Dispatch (same discipline as the kNN broadcast fastpath llm.py §sim):
     the candidate-pair graph is TINY relative to the corpus — LSH already
     reduced n docs to the near-dup survivors — so when the pair count is
-    bounded (≤ _CC_FASTPATH_MAX_EDGES, env-overridable) an exact
-    driver-side union-find solves it in one collect: deterministic,
-    iteration-order-independent (roots are always component minima), and
-    free of per-round job overhead. Above the cap — a 100 TB corpus whose
+    bounded (≤ _CC_FASTPATH_MAX_EDGES) an exact driver-side union-find
+    solves it in one collect: deterministic, iteration-order-independent
+    (roots are always component minima), and free of per-round job
+    overhead. Above the cap — a 100 TB corpus whose
     pair graph itself is distributed-sized — the pointer-jumping loop
     runs: round 0 folded into the label initialization (min(self,
     neighbors) — one propagation for free), TWO fused propagation steps
     per driver sync, convergence judged on the second step alone (sound:
     if the latest step changed nothing, the fixpoint was already
-    reached). tools/scale_probe.py forces this loop path via
-    SPARK_GRAFT_CC_FASTPATH_MAX=0 so the scaling curve always measures
-    the at-scale algorithm."""
+    reached)."""
     # lazy checkpoint: the dispatch count below materializes the pair
     # blocks in the same job that computes them; collect/edges then read
     # the blocks without re-running the minhash pipeline
     pairs = (llm_dedup_fuzzy_minhash(spark, sf_dir).select("a_id", "b_id")
              .localCheckpoint(eager=False))
-    cap = int(os.environ.get("SPARK_GRAFT_CC_FASTPATH_MAX",
-                             _CC_FASTPATH_MAX_EDGES))
-    if pairs.count() <= cap:
+    if pairs.count() <= _CC_FASTPATH_MAX_EDGES:
         return _union_find_clusters(spark, pairs)
     # at-scale path: symmetrize + dedupe the checkpointed pairs (cheap
     # relative to the pair generation) and iterate distributed
@@ -3112,7 +3104,7 @@ WHERE 10 * len(list_intersect(a.sh, b.sh)) >= 8 * least(len(a.sh), len(b.sh))
 # byte-distinct doc (total/approx-distinct fingerprint ratio), dispatch
 # to the exact-dedup-first plan instead of running the inverted index
 # over raw rows. Module-level — the closeness-gate pattern
-# (round7b._CLOSENESS_DEDUP_MIN_ROWS) — so tests can force BOTH branches
+# (graph._CLOSENESS_DEDUP_MIN_ROWS) — so tests can force BOTH branches
 # by monkeypatching (inf => always direct, 0 => always dedup-first).
 # Both branches are VALUE-IDENTICAL by construction (pinned in
 # tests/test_edge_regressions.py), so an accidental override can never

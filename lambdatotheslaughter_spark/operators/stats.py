@@ -1,4 +1,4 @@
-"""Statistical-inference operators (SURVEY.md §2.16).
+"""Statistical-inference and ML-evaluation operators (SURVEY.md §2.16).
 
 The batch layer of a lambda pipeline is where A/B readouts, drift checks
 and data-quality audits run; the representatives here are the classical
@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.bucketed import bucketed_order
+from lambdatotheslaughter_spark.operators.timeseries import (
+    _ACF_ORACLE, ts_acf_multi_lag)
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.tables import load_table
 
@@ -3404,3 +3406,2578 @@ def stat_fisher_z_corr_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(r, 6).alias("pearson_r"),
         F.round(back(zr - half), 6).alias("ci_lo"),
         F.round(back(zr + half), 6).alias("ci_hi"))
+
+# ---------------------------------------------------------------------------
+# exact PR-AUC (step interpolation)
+# ---------------------------------------------------------------------------
+
+# fixed-point quantum for cross-threshold term sums: each per-threshold
+# term is computed through an IDENTICAL double tree in both engines (so
+# the doubles are bit-equal), then quantized to an integer in 1e-12 units
+# — integer addition is associative, so the cross-threshold sum is
+# partition-order-free in Spark AND engine-portable (the
+# llm_embedding_pq_quantize fixed-point-error-sum discipline applied to a
+# value-exact oracle).
+_PR_Q = 1_000_000_000_000
+
+_PR_AUC_ORACLE = f"""
+WITH c AS (
+  SELECT event_type = 'purchase' AS pos,
+         CAST(round(value * 100, 0) AS BIGINT) AS xc
+  FROM events WHERE event_type IN ('click', 'purchase')
+), dom AS (
+  SELECT xc, CAST(COUNT(*) AS BIGINT) AS t,
+         CAST(COUNT(*) FILTER (WHERE pos) AS BIGINT) AS p
+  FROM c GROUP BY xc
+), cum AS (
+  SELECT xc, t, p,
+         CAST(SUM(t) OVER w AS BIGINT) AS cum_t,
+         CAST(SUM(p) OVER w AS BIGINT) AS cum_p
+  FROM dom
+  WINDOW w AS (ORDER BY xc DESC ROWS UNBOUNDED PRECEDING)
+), tot AS (
+  SELECT CAST(SUM(p) AS BIGINT) AS np,
+         CAST(SUM(t - p) AS BIGINT) AS nn,
+         CAST(COUNT(*) AS BIGINT) AS k
+  FROM dom
+), terms AS (
+  SELECT CAST(round((CAST(p AS DOUBLE) / CAST(tot.np AS DOUBLE))
+                    * (CAST(cum_p AS DOUBLE) / CAST(cum_t AS DOUBLE))
+                    * {_PR_Q}, 0) AS BIGINT) AS q
+  FROM cum CROSS JOIN tot
+)
+SELECT tot.np AS n_pos, tot.nn AS n_neg, tot.k AS n_thresholds,
+       CAST(tot.np AS DOUBLE) / CAST(tot.np + tot.nn AS DOUBLE)
+         AS baseline_precision,
+       CAST(CAST(SUM(terms.q) AS BIGINT) AS DOUBLE) / {_PR_Q}.0 AS pr_auc
+FROM terms CROSS JOIN tot
+GROUP BY tot.np, tot.nn, tot.k
+"""
+
+
+@register("ml_pr_auc_exact", oracle=_PR_AUC_ORACLE)
+def ml_pr_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT area under the precision–recall curve (step interpolation,
+    the average-precision identity AP = Σ ΔR_i · P_i) for the
+    value-predicts-purchase ranking — the imbalanced-data companion to
+    ml_roc_auc_exact: ROC-AUC stays optimistic when positives are rare,
+    PR-AUC reads against the baseline_precision floor. The corpus
+    collapses to per-score-value counts; each threshold's term
+    (Δrecall · precision) is one identical double tree quantized to
+    1e-12 units, so the cross-threshold fold is an associative BIGINT
+    sum — no float-order hazard at any partitioning.
+
+    Scale shape: one combinable domain collapse (score values, bounded
+    cents domain); one cumulative window over the DOMAIN (bounded by
+    construction, the ml_roc_auc_exact precedent); a broadcast
+    one-row total; one integer fold to a single row."""
+    ev = (load_table(spark, "events", sf_dir)
+          .where(F.col("event_type").isin("click", "purchase")))
+    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    dom = (ev.select((F.col("event_type") == "purchase").alias("pos"),
+                     xc.alias("xc"))
+           .groupBy("xc")
+           .agg(F.count(F.lit(1)).cast("bigint").alias("t"),
+                F.count(F.when(F.col("pos"), 1)).cast("bigint").alias("p")))
+    wd = (Window.orderBy(F.col("xc").desc())
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    cum = dom.select(
+        "t", "p",
+        F.sum("t").over(wd).cast("bigint").alias("cum_t"),
+        F.sum("p").over(wd).cast("bigint").alias("cum_p"))
+    tot = dom.agg(F.sum("p").cast("bigint").alias("np"),
+                  F.sum(F.col("t") - F.col("p")).cast("bigint").alias("nn"),
+                  F.count(F.lit(1)).cast("bigint").alias("k"))
+    term = ((F.col("p").cast("double") / F.col("np").cast("double"))
+            * (F.col("cum_p").cast("double") / F.col("cum_t").cast("double")))
+    q = F.round(term * F.lit(_PR_Q), 0).cast("bigint")
+    return (cum.crossJoin(F.broadcast(tot))
+            .select("np", "nn", "k", q.alias("q"))
+            .groupBy("np", "nn", "k")
+            .agg(F.sum("q").cast("bigint").alias("qs"))
+            .select(F.col("np").alias("n_pos"), F.col("nn").alias("n_neg"),
+                    F.col("k").alias("n_thresholds"),
+                    (F.col("np").cast("double")
+                     / (F.col("np") + F.col("nn")).cast("double"))
+                    .alias("baseline_precision"),
+                    (F.col("qs").cast("double") / F.lit(float(_PR_Q)))
+                    .alias("pr_auc")))
+
+
+# ---------------------------------------------------------------------------
+# calibration / reliability table
+# ---------------------------------------------------------------------------
+
+_CAL_BINS = 10
+
+_CAL_ORACLE = f"""
+WITH c AS (
+  SELECT event_type = 'purchase' AS pos,
+         CAST(round(value * 100, 0) AS BIGINT) AS xc
+  FROM events WHERE event_type IN ('click', 'purchase')
+), mx AS (
+  SELECT CAST(MAX(xc) AS BIGINT) AS m FROM c
+), binned AS (
+  SELECT LEAST({_CAL_BINS - 1}, (xc * {_CAL_BINS}) // (m + 1)) AS bin,
+         xc, pos, m
+  FROM c CROSS JOIN mx
+)
+SELECT CAST(bin AS BIGINT) AS bin,
+       CAST(COUNT(*) AS BIGINT) AS n,
+       CAST(COUNT(*) FILTER (WHERE pos) AS BIGINT) AS n_pos,
+       CAST(CAST(SUM(xc) AS BIGINT) AS DOUBLE)
+         / (CAST(COUNT(*) AS DOUBLE) * CAST(MAX(m) AS DOUBLE))
+         AS mean_pred,
+       CAST(COUNT(*) FILTER (WHERE pos) AS DOUBLE)
+         / CAST(COUNT(*) AS DOUBLE) AS obs_rate,
+       CAST(CAST(SUM(xc) AS BIGINT) AS DOUBLE)
+         / (CAST(COUNT(*) AS DOUBLE) * CAST(MAX(m) AS DOUBLE))
+         - CAST(COUNT(*) FILTER (WHERE pos) AS DOUBLE)
+           / CAST(COUNT(*) AS DOUBLE) AS calibration_gap
+FROM binned GROUP BY bin
+"""
+
+
+@register("ml_calibration_reliability", oracle=_CAL_ORACLE)
+def ml_calibration_reliability(spark: SparkSession,
+                               sf_dir: str) -> DataFrame:
+    """Reliability (calibration) table for the value-as-score ranking:
+    ten fixed-width score bins, each reporting mean normalized score
+    vs observed positive rate and their gap — the table behind every
+    calibration curve, and what ml_brier_score_rank summarizes into one
+    number. Bin edges are integer-exact ((xc·10) div (max+1), broadcast
+    max), counts exact, three divisions per bin row.
+
+    Scale shape: one broadcast 1-row max; one combinable 10-group
+    fold — the whole query is two map-side passes and a 10-row
+    result."""
+    ev = (load_table(spark, "events", sf_dir)
+          .where(F.col("event_type").isin("click", "purchase")))
+    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    c = ev.select((F.col("event_type") == "purchase").alias("pos"),
+                  xc.alias("xc"))
+    mx = c.agg(F.max("xc").cast("bigint").alias("m"))
+    binned = (c.crossJoin(F.broadcast(mx))
+              .select(F.least(F.lit(_CAL_BINS - 1),
+                              F.floor(F.col("xc") * _CAL_BINS
+                                      / (F.col("m") + 1)))
+                      .cast("bigint").alias("bin"), "xc", "pos", "m"))
+    mean_pred = (F.sum("xc").cast("bigint").cast("double")
+                 / (F.count(F.lit(1)).cast("double")
+                    * F.max("m").cast("double")))
+    obs = (F.count(F.when(F.col("pos"), 1)).cast("double")
+           / F.count(F.lit(1)).cast("double"))
+    return (binned.groupBy("bin")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
+                 F.count(F.when(F.col("pos"), 1)).cast("bigint")
+                 .alias("n_pos"),
+                 mean_pred.alias("mean_pred"),
+                 obs.alias("obs_rate"),
+                 (mean_pred - obs).alias("calibration_gap")))
+
+
+# ---------------------------------------------------------------------------
+# Jarque–Bera normality test
+# ---------------------------------------------------------------------------
+
+_JB_ORACLE = """
+WITH c AS (
+  SELECT CAST(round(value * 100, 0) AS BIGINT) AS x
+  FROM events WHERE event_type = 'purchase'
+), s AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(x) AS HUGEINT) AS s1,
+         CAST(SUM(CAST(x AS HUGEINT) * x) AS HUGEINT) AS s2,
+         CAST(SUM(CAST(x AS HUGEINT) * x * x) AS HUGEINT) AS s3,
+         CAST(SUM(CAST(x AS HUGEINT) * x * x * x) AS HUGEINT) AS s4
+  FROM c
+), m AS (
+  SELECT n,
+         CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) AS mu,
+         CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE) AS r2,
+         CAST(s3 AS DOUBLE) / CAST(n AS DOUBLE) AS r3,
+         CAST(s4 AS DOUBLE) / CAST(n AS DOUBLE) AS r4
+  FROM s
+), cm AS (
+  SELECT n, mu,
+         r2 - mu * mu AS m2,
+         r3 - 3.0 * mu * r2 + 2.0 * mu * mu * mu AS m3,
+         r4 - 4.0 * mu * r3 + 6.0 * mu * mu * r2
+            - 3.0 * mu * mu * mu * mu AS m4
+  FROM m
+)
+SELECT n,
+       m3 / (m2 * sqrt(m2)) AS skewness,
+       m4 / (m2 * m2) - 3.0 AS excess_kurtosis,
+       CAST(n AS DOUBLE) / 6.0
+         * ((m3 / (m2 * sqrt(m2))) * (m3 / (m2 * sqrt(m2)))
+            + (m4 / (m2 * m2) - 3.0) * (m4 / (m2 * m2) - 3.0) / 4.0)
+         AS jarque_bera
+FROM cm
+"""
+
+
+@register("stat_jarque_bera", oracle=_JB_ORACLE)
+def stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Jarque–Bera normality test on purchase cents — the one-number
+    is-it-Gaussian gate (JB = n/6·(S² + K²/4)) that should be read
+    before any of the z-based tests in this family trusts its normal
+    approximation. All four raw power sums are EXACT decimal(38,0)
+    integers (x⁴ passes int64, the HUGEINT moment discipline); central
+    moments and JB assemble through one identical double tree; the only
+    root is sqrt (correctly rounded in both engines), so the result is
+    bit-exact with NO tolerance and no rounding.
+
+    Scale shape: ONE combinable four-sum fold over the scan to a single
+    row — the same shape as stat_ols_two_feature's normal equations."""
+    ev = load_table(spark, "events", sf_dir) \
+        .where(F.col("event_type") == "purchase")
+    x = F.round(F.col("value") * 100, 0).cast("bigint")
+    xd = x.cast("decimal(38,0)")
+    s = ev.select(x.alias("x"), xd.alias("xd")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("xd").alias("s1"),
+        F.sum(F.col("xd") * F.col("x")).alias("s2"),
+        F.sum(F.col("xd") * F.col("x") * F.col("x")).alias("s3"),
+        F.sum(F.col("xd") * F.col("x") * F.col("x") * F.col("x"))
+        .alias("s4"))
+    nd = F.col("n").cast("double")
+    mu = F.col("s1").cast("double") / nd
+    r2 = F.col("s2").cast("double") / nd
+    r3 = F.col("s3").cast("double") / nd
+    r4 = F.col("s4").cast("double") / nd
+    m2 = r2 - mu * mu
+    m3 = r3 - F.lit(3.0) * mu * r2 + F.lit(2.0) * mu * mu * mu
+    m4 = (r4 - F.lit(4.0) * mu * r3 + F.lit(6.0) * mu * mu * r2
+          - F.lit(3.0) * mu * mu * mu * mu)
+    skew = m3 / (m2 * F.sqrt(m2))
+    kurt = m4 / (m2 * m2) - F.lit(3.0)
+    return s.select(
+        "n", skew.alias("skewness"), kurt.alias("excess_kurtosis"),
+        (nd / F.lit(6.0) * (skew * skew + kurt * kurt / F.lit(4.0)))
+        .alias("jarque_bera"))
+
+
+# ---------------------------------------------------------------------------
+# McNemar's paired test
+# ---------------------------------------------------------------------------
+
+_MCNEMAR_ORACLE = """
+WITH hourly AS (
+  SELECT event_type, date_trunc('hour', ts) AS hr,
+         CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
+           AS cents
+  FROM events WHERE event_type IN ('click', 'purchase')
+  GROUP BY event_type, date_trunc('hour', ts)
+), paired AS (
+  SELECT x.hr, x.cents AS hc, y.cents AS pc
+  FROM (SELECT hr, cents FROM hourly WHERE event_type = 'click') x
+  JOIN (SELECT hr, cents FROM hourly WHERE event_type = 'purchase') y
+    ON x.hr = y.hr
+), tot AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS k,
+         CAST(SUM(hc) AS BIGINT) AS sc,
+         CAST(SUM(pc) AS BIGINT) AS sp
+  FROM paired
+), flags AS (
+  -- integer-safe above-own-mean flags: cents * k > series total
+  SELECT (hc * k > sc) AS fa, (pc * k > sp) AS fb
+  FROM paired CROSS JOIN tot
+)
+SELECT CAST(COUNT(*) AS BIGINT) AS n_hours,
+       CAST(COUNT(*) FILTER (WHERE fa AND fb) AS BIGINT) AS n_both_hi,
+       CAST(COUNT(*) FILTER (WHERE fa AND NOT fb) AS BIGINT) AS b,
+       CAST(COUNT(*) FILTER (WHERE NOT fa AND fb) AS BIGINT) AS c,
+       (CAST(COUNT(*) FILTER (WHERE fa AND NOT fb) AS DOUBLE)
+        - CAST(COUNT(*) FILTER (WHERE NOT fa AND fb) AS DOUBLE))
+       * (CAST(COUNT(*) FILTER (WHERE fa AND NOT fb) AS DOUBLE)
+          - CAST(COUNT(*) FILTER (WHERE NOT fa AND fb) AS DOUBLE))
+       / (CAST(COUNT(*) FILTER (WHERE fa AND NOT fb) AS DOUBLE)
+          + CAST(COUNT(*) FILTER (WHERE NOT fa AND fb) AS DOUBLE))
+         AS mcnemar_chi2
+FROM flags
+"""
+
+
+@register("stat_mcnemar_paired", oracle=_MCNEMAR_ORACLE)
+def stat_mcnemar_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """McNemar's test on hour-paired binary outcomes: is an hour being
+    above-average for CLICK revenue associated with the SAME hour being
+    above-average for PURCHASE revenue? Only the discordant cells (b =
+    click-hi/purchase-lo, c = the reverse) carry information —
+    χ² = (b−c)²/(b+c), the CLASSICAL uncorrected form (documented; the
+    continuity-corrected variant subtracts 1 from |b−c|). The
+    above-own-mean flags are INTEGER-safe cross-multiplications
+    (cents·k > Σcents — no float mean anywhere), the agg_pareto_cutoff
+    trick applied to a test statistic.
+
+    Scale shape: calendar-bounded hourly fold; one broadcast 1-row
+    total; one combinable four-count fold to a single row."""
+    ev = (load_table(spark, "events", sf_dir)
+          .where(F.col("event_type").isin("click", "purchase")))
+    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    hourly = (ev.groupBy("event_type",
+                         F.date_trunc("hour", "ts").alias("hr"))
+              .agg(F.sum(cents).cast("bigint").alias("cents")))
+    x = (hourly.where(F.col("event_type") == "click")
+         .select("hr", F.col("cents").alias("hc")))
+    y = (hourly.where(F.col("event_type") == "purchase")
+         .select(F.col("hr").alias("hry"), F.col("cents").alias("pc")))
+    paired = x.join(y, F.col("hr") == F.col("hry")).select("hr", "hc", "pc")
+    tot = paired.agg(F.count(F.lit(1)).cast("bigint").alias("k"),
+                     F.sum("hc").cast("bigint").alias("sc"),
+                     F.sum("pc").cast("bigint").alias("sp"))
+    flags = (paired.crossJoin(F.broadcast(tot))
+             .select((F.col("hc") * F.col("k") > F.col("sc")).alias("fa"),
+                     (F.col("pc") * F.col("k") > F.col("sp")).alias("fb")))
+    b = F.count(F.when(F.col("fa") & ~F.col("fb"), 1)).cast("double")
+    c = F.count(F.when(~F.col("fa") & F.col("fb"), 1)).cast("double")
+    return flags.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_hours"),
+        F.count(F.when(F.col("fa") & F.col("fb"), 1)).cast("bigint")
+        .alias("n_both_hi"),
+        F.count(F.when(F.col("fa") & ~F.col("fb"), 1)).cast("bigint")
+        .alias("b"),
+        F.count(F.when(~F.col("fa") & F.col("fb"), 1)).cast("bigint")
+        .alias("c"),
+        ((b - c) * (b - c) / (b + c)).alias("mcnemar_chi2"))
+
+
+# ---------------------------------------------------------------------------
+# Hodges–Lehmann location shift
+# ---------------------------------------------------------------------------
+
+_HL_ORACLE = """
+WITH hourly AS (
+  SELECT event_type, date_trunc('hour', ts) AS hr,
+         CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
+           AS cents
+  FROM events WHERE event_type IN ('click', 'purchase')
+  GROUP BY event_type, date_trunc('hour', ts)
+), d AS (
+  SELECT x.hr, x.cents - y.cents AS diff
+  FROM (SELECT hr, cents FROM hourly WHERE event_type = 'click') x
+  JOIN (SELECT hr, cents FROM hourly WHERE event_type = 'purchase') y
+    ON x.hr = y.hr
+), walsh AS (
+  -- all pairs i <= j, keeping the SUM (2x the Walsh average) integer
+  SELECT a.hr AS ha, b.hr AS hb, a.diff + b.diff AS w
+  FROM d a JOIN d b ON a.hr <= b.hr
+), ranked AS (
+  SELECT w, row_number() OVER (ORDER BY w, ha, hb) AS rk,
+         COUNT(*) OVER () AS m
+  FROM walsh
+)
+SELECT CAST(MAX(m) AS BIGINT) AS n_walsh_pairs,
+       -- median of w/2: average the two middle doubled values, /4
+       (CAST(MIN(CASE WHEN rk = (m + 1) // 2 THEN w END) AS DOUBLE)
+        + CAST(MIN(CASE WHEN rk = (m + 2) // 2 THEN w END) AS DOUBLE))
+       / 4.0 AS hl_shift_cents
+FROM ranked
+"""
+
+
+@register("stat_hodges_lehmann_shift", oracle=_HL_ORACLE)
+def stat_hodges_lehmann_shift(spark: SparkSession,
+                              sf_dir: str) -> DataFrame:
+    """Hodges–Lehmann estimator of the paired click−purchase hourly
+    shift: the MEDIAN of all Walsh averages (dᵢ+dⱼ)/2 over pairs
+    i ≤ j — the location estimate that goes with the Wilcoxon
+    signed-rank test (stat_wilcoxon_signed_rank says WHETHER the shift
+    is real; this says HOW BIG, robustly). Walsh SUMS stay integer
+    (halving deferred to the final expression); the median is a
+    rank-pick, averaging the two middle values for even counts.
+
+    Scale shape: the O(k²) Walsh expansion is calendar-bounded (the
+    Theil–Sen discipline, ~250k pairs on ~700 hours); the global
+    median rank is the two-pass bucketed rank (bucketed.py — no
+    single-partition window over the pair table)."""
+    ev = (load_table(spark, "events", sf_dir)
+          .where(F.col("event_type").isin("click", "purchase")))
+    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    hourly = (ev.groupBy("event_type",
+                         F.date_trunc("hour", "ts").alias("hr"))
+              .agg(F.sum(cents).cast("bigint").alias("cents")))
+    x = (hourly.where(F.col("event_type") == "click")
+         .select("hr", F.col("cents").alias("hc")))
+    y = (hourly.where(F.col("event_type") == "purchase")
+         .select(F.col("hr").alias("hry"), F.col("cents").alias("pc")))
+    d = (x.join(y, F.col("hr") == F.col("hry"))
+         .select("hr", (F.col("hc") - F.col("pc")).alias("diff"))
+         .localCheckpoint(eager=False))  # both pair sides share it
+    a, b = d.alias("a"), d.alias("b")
+    walsh = (a.join(b, F.col("a.hr") <= F.col("b.hr"))
+             .select(F.col("a.hr").alias("ha"), F.col("b.hr").alias("hb"),
+                     (F.col("a.diff") + F.col("b.diff")).alias("w")))
+    tot = walsh.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
+    ranked = (bucketed_order(walsh, "w", ["ha", "hb"], rank_col="rk")
+              .crossJoin(F.broadcast(tot)))
+    lo = F.floor((F.col("m") + 1) / 2)
+    hi = F.floor((F.col("m") + 2) / 2)
+    return ranked.agg(
+        F.max("m").cast("bigint").alias("n_walsh_pairs"),
+        ((F.min(F.when(F.col("rk") == lo, F.col("w"))).cast("double")
+          + F.min(F.when(F.col("rk") == hi, F.col("w"))).cast("double"))
+         / F.lit(4.0)).alias("hl_shift_cents"))
+
+
+# ---------------------------------------------------------------------------
+# Cliff's delta (ordinal effect size)
+# ---------------------------------------------------------------------------
+
+_CLIFFS_ORACLE = """
+WITH c AS (
+  SELECT event_type = 'click' AS is_x,
+         CAST(round(value * 100, 0) AS BIGINT) AS v
+  FROM events WHERE event_type IN ('click', 'purchase')
+), dom AS (
+  SELECT v,
+         CAST(COUNT(*) FILTER (WHERE is_x) AS BIGINT) AS cx,
+         CAST(COUNT(*) FILTER (WHERE NOT is_x) AS BIGINT) AS cy
+  FROM c GROUP BY v
+), cum AS (
+  SELECT v, cx, cy,
+         CAST(COALESCE(SUM(cy) OVER (ORDER BY v
+                                     ROWS BETWEEN UNBOUNDED PRECEDING
+                                              AND 1 PRECEDING), 0)
+              AS BIGINT) AS y_below,
+         CAST(SUM(cy) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
+              AS BIGINT) AS y_le
+  FROM dom
+), s AS (
+  SELECT
+    CAST(SUM(cx) AS BIGINT) AS nx,
+    CAST(SUM(cy) AS BIGINT) AS ny,
+    CAST(SUM(CAST(cx AS HUGEINT) * y_below) AS HUGEINT) AS n_gt,
+    CAST(SUM(CAST(cx AS HUGEINT)
+             * ((SELECT SUM(cy) FROM dom) - y_le)) AS HUGEINT) AS n_lt
+  FROM cum
+)
+SELECT nx AS n_click, ny AS n_purchase,
+       CAST(n_gt AS BIGINT) AS n_greater, CAST(n_lt AS BIGINT) AS n_less,
+       (CAST(n_gt AS DOUBLE) - CAST(n_lt AS DOUBLE))
+         / (CAST(nx AS DOUBLE) * CAST(ny AS DOUBLE)) AS cliffs_delta
+FROM s
+"""
+
+
+@register("stat_cliffs_delta", oracle=_CLIFFS_ORACLE)
+def stat_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cliff's delta between click and purchase values — the ordinal
+    effect size that accompanies stat_mann_whitney_u exactly as
+    stat_cohens_d accompanies the t-test: δ = (#(x>y) − #(x<y))/(n·m),
+    reading dominance direction free of any distribution assumption.
+    Pure domain collapse: per-value side counts, strictly-below /
+    less-or-equal cumulative counts over the value DOMAIN, and the pair
+    counts assemble as exact integer products (decimal(38,0) — n·m
+    passes int64 at fleet scale) with ONE final division.
+
+    Scale shape: one combinable domain collapse (bounded cents domain);
+    one cumulative window over the domain (bounded by construction);
+    one integer fold to a single row."""
+    ev = (load_table(spark, "events", sf_dir)
+          .where(F.col("event_type").isin("click", "purchase")))
+    v = F.round(F.col("value") * 100, 0).cast("bigint")
+    dom = (ev.select((F.col("event_type") == "click").alias("is_x"),
+                     v.alias("v"))
+           .groupBy("v")
+           .agg(F.count(F.when(F.col("is_x"), 1)).cast("bigint")
+                .alias("cx"),
+                F.count(F.when(~F.col("is_x"), 1)).cast("bigint")
+                .alias("cy")))
+    wb = (Window.orderBy("v")
+          .rowsBetween(Window.unboundedPreceding, -1))
+    wle = (Window.orderBy("v")
+           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    tot_y = dom.agg(F.sum("cy").cast("bigint").alias("ny_all"))
+    cum = (dom.select(
+        "cx", "cy",
+        F.coalesce(F.sum("cy").over(wb), F.lit(0)).cast("bigint")
+        .alias("y_below"),
+        F.sum("cy").over(wle).cast("bigint").alias("y_le"))
+        .crossJoin(F.broadcast(tot_y)))
+    s = cum.agg(
+        F.sum("cx").cast("bigint").alias("nx"),
+        F.sum("cy").cast("bigint").alias("ny"),
+        F.sum(F.col("cx").cast("decimal(38,0)") * F.col("y_below"))
+        .alias("n_gt"),
+        F.sum(F.col("cx").cast("decimal(38,0)")
+              * (F.col("ny_all") - F.col("y_le"))).alias("n_lt"))
+    return s.select(
+        F.col("nx").alias("n_click"), F.col("ny").alias("n_purchase"),
+        F.col("n_gt").cast("bigint").alias("n_greater"),
+        F.col("n_lt").cast("bigint").alias("n_less"),
+        ((F.col("n_gt").cast("double") - F.col("n_lt").cast("double"))
+         / (F.col("nx").cast("double") * F.col("ny").cast("double")))
+        .alias("cliffs_delta"))
+
+
+# ---------------------------------------------------------------------------
+# Dunn's post-hoc pairwise test with Benjamini–Hochberg step-up
+# ---------------------------------------------------------------------------
+
+# Frozen two-sided normal quantiles for the BH step-up at alpha = 0.05
+# over m = 10 pairs: thresholds z_k = Phi^-1(1 - 0.05*k/10/2) for
+# k = 1..10, computed once (statistics.NormalDist().inv_cdf) and pasted —
+# the transcendental-constants-as-literals discipline. BH rejects the
+# top-k |z| ranks where rank k's |z| still clears z_k (step-up from the
+# largest k).
+_DUNN_Z = (2.807033768, 2.575829304, 2.432379059, 2.326347874,
+           2.241402728, 2.170090378, 2.108358399, 2.053748911,
+           2.004654462, 1.959963985)
+
+
+def _dunn_thresh_sql(rank: str) -> str:
+    branches = " ".join(f"WHEN {rank} = {k} THEN {z}"
+                        for k, z in enumerate(_DUNN_Z, 1))
+    return f"CASE {branches} END"
+
+
+_DUNN_ORACLE = f"""
+WITH c AS (
+  SELECT event_type, CAST(round(value * 100, 0) AS BIGINT) AS v
+  FROM events
+), dom AS (
+  SELECT v, CAST(COUNT(*) AS BIGINT) AS t FROM c GROUP BY v
+), cum AS (
+  SELECT v, t,
+         CAST(COALESCE(SUM(t) OVER (ORDER BY v
+                                    ROWS BETWEEN UNBOUNDED PRECEDING
+                                             AND 1 PRECEDING), 0)
+              AS BIGINT) AS below
+  FROM dom
+), tv AS (
+  SELECT event_type, v, CAST(COUNT(*) AS BIGINT) AS tv
+  FROM c GROUP BY event_type, v
+), per_type AS (
+  -- doubled average rank of value v is 2*below + t + 1 (exact integer)
+  SELECT tv.event_type,
+         CAST(SUM(tv.tv) AS BIGINT) AS n_i,
+         CAST(SUM(CAST(tv.tv AS HUGEINT) * (2 * cum.below + cum.t + 1))
+              AS HUGEINT) AS sr2
+  FROM tv JOIN cum ON tv.v = cum.v
+  GROUP BY tv.event_type
+), g AS (
+  SELECT CAST(SUM(n_i) AS BIGINT) AS nn,
+         CAST((SELECT SUM(CAST(t AS HUGEINT) * t * t - t) FROM dom)
+              AS HUGEINT) AS tie3
+  FROM per_type
+), pairs AS (
+  SELECT a.event_type AS type_a, b.event_type AS type_b,
+         a.n_i AS n_a, b.n_i AS n_b,
+         (CAST(a.sr2 AS DOUBLE) / (2.0 * CAST(a.n_i AS DOUBLE))
+          - CAST(b.sr2 AS DOUBLE) / (2.0 * CAST(b.n_i AS DOUBLE)))
+         / sqrt((CAST(g.nn AS DOUBLE) * (CAST(g.nn AS DOUBLE) + 1.0) / 12.0
+                 - CAST(g.tie3 AS DOUBLE)
+                   / (12.0 * (CAST(g.nn AS DOUBLE) - 1.0)))
+                * (1.0 / CAST(a.n_i AS DOUBLE)
+                   + 1.0 / CAST(b.n_i AS DOUBLE))) AS z
+  FROM per_type a JOIN per_type b ON a.event_type < b.event_type
+  CROSS JOIN g
+), ranked AS (
+  SELECT type_a, type_b, n_a, n_b, z,
+         CAST(row_number() OVER (ORDER BY abs(z) DESC, type_a, type_b)
+              AS BIGINT) AS abs_rank
+  FROM pairs
+), kstar AS (
+  SELECT MAX(CASE WHEN abs(z) >= {_dunn_thresh_sql("abs_rank")}
+                  THEN abs_rank END) AS k
+  FROM ranked
+)
+SELECT type_a, type_b, n_a, n_b, z AS z_stat, abs_rank,
+       COALESCE(abs_rank <= kstar.k, false) AS reject_bh
+FROM ranked CROSS JOIN kstar
+"""
+
+
+@register("stat_dunn_posthoc_bh", oracle=_DUNN_ORACLE)
+def stat_dunn_posthoc_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dunn's post-hoc test: WHICH event-type pairs differ, after
+    stat_kruskal_wallis says SOME do — pairwise z on shared
+    Kruskal–Wallis mean ranks with the tie-corrected variance, and a
+    Benjamini–Hochberg step-up over the 10 pairs so the multiple-
+    comparison control is part of the operator, not an exercise for the
+    reader. p-value ordering is |z| ordering (monotone), so BH runs on
+    frozen normal-quantile thresholds per rank (z_k literals, the
+    Poisson-CDF-thresholds discipline) — no CDF at query time.
+
+    Scale shape: one domain collapse + one (type, value) collapse; the
+    cumulative window runs over the value DOMAIN (bounded); pairwise
+    z and the BH pass live on 5-type/10-pair tables."""
+    ev = load_table(spark, "events", sf_dir)
+    v = F.round(F.col("value") * 100, 0).cast("bigint")
+    c = ev.select("event_type", v.alias("v"))
+    dom = c.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("t"))
+    wb = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
+    cum = dom.select(
+        "v", "t",
+        F.coalesce(F.sum("t").over(wb), F.lit(0)).cast("bigint")
+        .alias("below"))
+    tv = (c.groupBy("event_type", "v")
+          .agg(F.count(F.lit(1)).cast("bigint").alias("tv")))
+    per_type = (tv.join(cum, "v")
+                .groupBy("event_type")
+                .agg(F.sum("tv").cast("bigint").alias("n_i"),
+                     F.sum(F.col("tv").cast("decimal(38,0)")
+                           * (2 * F.col("below") + F.col("t") + 1))
+                     .alias("sr2")))
+    tie3 = dom.agg(
+        F.sum(F.col("t").cast("decimal(38,0)") * F.col("t") * F.col("t")
+              - F.col("t")).alias("tie3"))
+    g = (per_type.agg(F.sum("n_i").cast("bigint").alias("nn"))
+         .crossJoin(F.broadcast(tie3)))
+    a, b = per_type.alias("a"), per_type.alias("b")
+    nnd = F.col("nn").cast("double")
+    var = (nnd * (nnd + F.lit(1.0)) / F.lit(12.0)
+           - F.col("tie3").cast("double")
+           / (F.lit(12.0) * (nnd - F.lit(1.0))))
+    mean_a = (F.col("a.sr2").cast("double")
+              / (F.lit(2.0) * F.col("a.n_i").cast("double")))
+    mean_b = (F.col("b.sr2").cast("double")
+              / (F.lit(2.0) * F.col("b.n_i").cast("double")))
+    z = ((mean_a - mean_b)
+         / F.sqrt(var * (F.lit(1.0) / F.col("a.n_i").cast("double")
+                         + F.lit(1.0) / F.col("b.n_i").cast("double"))))
+    pairs = (a.join(b, F.col("a.event_type") < F.col("b.event_type"))
+             .crossJoin(F.broadcast(g))
+             .select(F.col("a.event_type").alias("type_a"),
+                     F.col("b.event_type").alias("type_b"),
+                     F.col("a.n_i").alias("n_a"),
+                     F.col("b.n_i").alias("n_b"),
+                     z.alias("z")))
+    wr = Window.orderBy(F.abs("z").desc(), "type_a", "type_b")
+    ranked = pairs.select("*", F.row_number().over(wr).cast("bigint")
+                          .alias("abs_rank"))
+    thr = F.element_at(F.array(*[F.lit(x) for x in _DUNN_Z]),
+                       F.col("abs_rank").cast("int"))
+    kstar = ranked.agg(F.max(F.when(F.abs("z") >= thr,
+                                    F.col("abs_rank"))).alias("k"))
+    return (ranked.crossJoin(F.broadcast(kstar))
+            .select("type_a", "type_b", "n_a", "n_b",
+                    F.col("z").alias("z_stat"), "abs_rank",
+                    F.coalesce(F.col("abs_rank") <= F.col("k"),
+                               F.lit(False)).alias("reject_bh")))
+
+
+# ---------------------------------------------------------------------------
+# Cochran's Q (k related binary samples)
+# ---------------------------------------------------------------------------
+
+_COCHRAN_ORACLE = """
+WITH hourly AS (
+  SELECT event_type, date_trunc('hour', ts) AS hr,
+         CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
+           AS cents
+  FROM events GROUP BY event_type, date_trunc('hour', ts)
+), tm AS (
+  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS k_t,
+         CAST(SUM(cents) AS BIGINT) AS s_t
+  FROM hourly GROUP BY event_type
+), complete_blocks AS (
+  SELECT hr FROM hourly GROUP BY hr HAVING COUNT(*) = 5
+), flags AS (
+  -- integer-safe above-own-mean flag (the McNemar convention)
+  SELECT h.hr, h.event_type,
+         CASE WHEN h.cents * tm.k_t > tm.s_t THEN 1 ELSE 0 END AS x
+  FROM hourly h
+  JOIN complete_blocks b ON h.hr = b.hr
+  JOIN tm ON h.event_type = tm.event_type
+), cols AS (
+  SELECT event_type, CAST(SUM(x) AS BIGINT) AS c_j FROM flags
+  GROUP BY event_type
+), rows_ AS (
+  SELECT hr, CAST(SUM(x) AS BIGINT) AS r_i FROM flags GROUP BY hr
+), s AS (
+  SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM cols) AS k,
+         (SELECT CAST(COUNT(*) AS BIGINT) FROM rows_) AS n_blocks,
+         (SELECT CAST(SUM(c_j) AS BIGINT) FROM cols) AS n,
+         (SELECT CAST(SUM(c_j * c_j) AS BIGINT) FROM cols) AS sum_c2,
+         (SELECT CAST(SUM(r_i * r_i) AS BIGINT) FROM rows_) AS sum_r2
+)
+SELECT n_blocks, k, n AS n_successes,
+       -- Q = (k-1) * (k*sum C_j^2 - N^2) / (k*N - sum R_i^2): every
+       -- term exact BIGINT, ONE final division
+       (CAST(k AS DOUBLE) - 1.0)
+         * (CAST(k * sum_c2 AS DOUBLE) - CAST(n * n AS DOUBLE))
+         / (CAST(k * n AS DOUBLE) - CAST(sum_r2 AS DOUBLE)) AS cochran_q
+FROM s
+"""
+
+
+@register("stat_cochran_q", oracle=_COCHRAN_ORACLE)
+def stat_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cochran's Q across the five event types on hour blocks: do the
+    types differ in their above-own-mean RATE when each hour is its own
+    block? — the k-treatment generalization of stat_mcnemar_paired
+    exactly as stat_friedman_test generalizes the paired rank tests,
+    closing the related-samples ladder (sign → Wilcoxon → Friedman for
+    magnitudes; McNemar → Cochran Q for binaries). Flags are the same
+    integer-safe cents·k > Σ comparisons; complete blocks only; Q
+    assembles from four exact integer sums with ONE division.
+
+    Scale shape: calendar-bounded hourly fold; flags map-side against a
+    broadcast 5-row moment dim; column/row folds over the bounded block
+    grid."""
+    ev = load_table(spark, "events", sf_dir)
+    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    hourly = (ev.groupBy("event_type",
+                         F.date_trunc("hour", "ts").alias("hr"))
+              .agg(F.sum(cents).cast("bigint").alias("cents"))
+              .localCheckpoint(eager=False))  # moments + blocks share it
+    tm = hourly.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("k_t"),
+        F.sum("cents").cast("bigint").alias("s_t"))
+    complete = (hourly.groupBy("hr")
+                .agg(F.count(F.lit(1)).alias("nb"))
+                .where(F.col("nb") == 5).select("hr"))
+    flags = (hourly.join(complete, "hr")
+             .join(F.broadcast(tm), "event_type")
+             .select("hr", "event_type",
+                     F.when(F.col("cents") * F.col("k_t") > F.col("s_t"),
+                            F.lit(1)).otherwise(F.lit(0)).alias("x")))
+    cols = flags.groupBy("event_type").agg(
+        F.sum("x").cast("bigint").alias("c_j"))
+    rows_ = flags.groupBy("hr").agg(
+        F.sum("x").cast("bigint").alias("r_i"))
+    cstats = cols.agg(F.count(F.lit(1)).cast("bigint").alias("k"),
+                      F.sum("c_j").cast("bigint").alias("n"),
+                      F.sum(F.col("c_j") * F.col("c_j")).cast("bigint")
+                      .alias("sum_c2"))
+    rstats = rows_.agg(F.count(F.lit(1)).cast("bigint").alias("n_blocks"),
+                       F.sum(F.col("r_i") * F.col("r_i")).cast("bigint")
+                       .alias("sum_r2"))
+    s = cstats.crossJoin(F.broadcast(rstats))
+    kd = F.col("k").cast("double")
+    q = ((kd - F.lit(1.0))
+         * ((F.col("k") * F.col("sum_c2")).cast("double")
+            - (F.col("n") * F.col("n")).cast("double"))
+         / ((F.col("k") * F.col("n")).cast("double")
+            - F.col("sum_r2").cast("double")))
+    return s.select("n_blocks", "k",
+                    F.col("n").alias("n_successes"),
+                    q.alias("cochran_q"))
+
+
+# ---------------------------------------------------------------------------
+# DeLong confidence interval for the exact ROC-AUC
+# ---------------------------------------------------------------------------
+
+_DELONG_Z = 1.959963985
+
+_DELONG_ORACLE = f"""
+WITH c AS (
+  SELECT event_type = 'purchase' AS pos,
+         CAST(round(value * 100, 0) AS BIGINT) AS xc
+  FROM events WHERE event_type IN ('click', 'purchase')
+), dom AS (
+  SELECT xc, CAST(COUNT(*) FILTER (WHERE pos) AS BIGINT) AS p,
+         CAST(COUNT(*) FILTER (WHERE NOT pos) AS BIGINT) AS q
+  FROM c GROUP BY xc
+), cum AS (
+  SELECT xc, p, q,
+         CAST(COALESCE(SUM(q) OVER wb, 0) AS BIGINT) AS q_below,
+         CAST(COALESCE(SUM(p) OVER wb, 0) AS BIGINT) AS p_below
+  FROM dom
+  WINDOW wb AS (ORDER BY xc ROWS BETWEEN UNBOUNDED PRECEDING
+                                     AND 1 PRECEDING)
+), tot AS (
+  SELECT CAST(SUM(p) AS BIGINT) AS np, CAST(SUM(q) AS BIGINT) AS nq
+  FROM dom
+), s AS (
+  -- doubled placement values stay integer: for a positive at value v,
+  -- 2*placement*nq = 2*q_below + q (ties count half); for a negative,
+  -- 2*placement'*np = 2*(np - p_below - p) + p
+  SELECT
+    CAST(SUM(CAST(p AS HUGEINT) * (2 * q_below + q)) AS HUGEINT) AS sp1,
+    CAST(SUM(CAST(p AS HUGEINT) * (2 * q_below + q)
+             * (2 * q_below + q)) AS HUGEINT) AS sp2,
+    CAST(SUM(CAST(q AS HUGEINT)
+             * (2 * (tot.np - p_below - p) + p)) AS HUGEINT) AS sq1,
+    CAST(SUM(CAST(q AS HUGEINT)
+             * (2 * (tot.np - p_below - p) + p)
+             * (2 * (tot.np - p_below - p) + p)) AS HUGEINT) AS sq2
+  FROM cum CROSS JOIN tot
+), a AS (
+  SELECT tot.np, tot.nq,
+         CAST(s.sp1 AS DOUBLE)
+           / (2.0 * CAST(tot.np AS DOUBLE) * CAST(tot.nq AS DOUBLE))
+           AS auc,
+         -- S10 = (E[m^2] - E[m]^2) * np/(np-1) with m = doubled
+         -- placement / (2 nq); spelled once per component
+         (CAST(s.sp2 AS DOUBLE) / CAST(tot.np AS DOUBLE)
+          - (CAST(s.sp1 AS DOUBLE) / CAST(tot.np AS DOUBLE))
+            * (CAST(s.sp1 AS DOUBLE) / CAST(tot.np AS DOUBLE)))
+         / (4.0 * CAST(tot.nq AS DOUBLE) * CAST(tot.nq AS DOUBLE))
+         * (CAST(tot.np AS DOUBLE) / (CAST(tot.np AS DOUBLE) - 1.0))
+           AS s10,
+         (CAST(s.sq2 AS DOUBLE) / CAST(tot.nq AS DOUBLE)
+          - (CAST(s.sq1 AS DOUBLE) / CAST(tot.nq AS DOUBLE))
+            * (CAST(s.sq1 AS DOUBLE) / CAST(tot.nq AS DOUBLE)))
+         / (4.0 * CAST(tot.np AS DOUBLE) * CAST(tot.np AS DOUBLE))
+         * (CAST(tot.nq AS DOUBLE) / (CAST(tot.nq AS DOUBLE) - 1.0))
+           AS s01
+  FROM s CROSS JOIN tot
+)
+SELECT np AS n_pos, nq AS n_neg, auc,
+       sqrt(s10 / CAST(np AS DOUBLE) + s01 / CAST(nq AS DOUBLE)) AS se,
+       auc - {_DELONG_Z} * sqrt(s10 / CAST(np AS DOUBLE)
+                                + s01 / CAST(nq AS DOUBLE)) AS ci_lo,
+       auc + {_DELONG_Z} * sqrt(s10 / CAST(np AS DOUBLE)
+                                + s01 / CAST(nq AS DOUBLE)) AS ci_hi
+FROM a
+"""
+
+
+@register("ml_roc_auc_delong_ci", oracle=_DELONG_ORACLE)
+def ml_roc_auc_delong_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DeLong 95% confidence interval for the exact ROC-AUC — the
+    interval ml_roc_auc_exact's point estimate never carries (the
+    stat_fisher_z_corr_ci move applied to AUC): variance from the
+    placement-value components S10 (over positives) and S01 (over
+    negatives), var = S10/n₊ + S01/n₋, frozen normal quantile. DOUBLED
+    placement values (2·q_below + q, ties half) keep every first and
+    second moment an exact wide integer off the domain collapse; the
+    only roots are sqrt.
+
+    Scale shape: one combinable domain collapse; one cumulative window
+    over the bounded value DOMAIN; one four-sum wide-integer fold to a
+    single row — identical shape to ml_roc_auc_exact plus two moments."""
+    ev = (load_table(spark, "events", sf_dir)
+          .where(F.col("event_type").isin("click", "purchase")))
+    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    dom = (ev.select((F.col("event_type") == "purchase").alias("pos"),
+                     xc.alias("xc"))
+           .groupBy("xc")
+           .agg(F.count(F.when(F.col("pos"), 1)).cast("bigint").alias("p"),
+                F.count(F.when(~F.col("pos"), 1)).cast("bigint")
+                .alias("q")))
+    wb = Window.orderBy("xc").rowsBetween(Window.unboundedPreceding, -1)
+    cum = dom.select(
+        "p", "q",
+        F.coalesce(F.sum("q").over(wb), F.lit(0)).cast("bigint")
+        .alias("q_below"),
+        F.coalesce(F.sum("p").over(wb), F.lit(0)).cast("bigint")
+        .alias("p_below"))
+    tot = dom.agg(F.sum("p").cast("bigint").alias("np"),
+                  F.sum("q").cast("bigint").alias("nq"))
+    dd = "decimal(38,0)"
+    mpos = (2 * F.col("q_below") + F.col("q"))
+    mneg = (2 * (F.col("np") - F.col("p_below") - F.col("p")) + F.col("p"))
+    s = (cum.crossJoin(F.broadcast(tot))
+         .agg(F.sum(F.col("p").cast(dd) * mpos).alias("sp1"),
+              F.sum(F.col("p").cast(dd) * mpos * mpos).alias("sp2"),
+              F.sum(F.col("q").cast(dd) * mneg).alias("sq1"),
+              F.sum(F.col("q").cast(dd) * mneg * mneg).alias("sq2"))
+         .crossJoin(F.broadcast(tot)))
+    npd = F.col("np").cast("double")
+    nqd = F.col("nq").cast("double")
+    auc = F.col("sp1").cast("double") / (F.lit(2.0) * npd * nqd)
+    s10 = ((F.col("sp2").cast("double") / npd
+            - (F.col("sp1").cast("double") / npd)
+            * (F.col("sp1").cast("double") / npd))
+           / (F.lit(4.0) * nqd * nqd) * (npd / (npd - F.lit(1.0))))
+    s01 = ((F.col("sq2").cast("double") / nqd
+            - (F.col("sq1").cast("double") / nqd)
+            * (F.col("sq1").cast("double") / nqd))
+           / (F.lit(4.0) * npd * npd) * (nqd / (nqd - F.lit(1.0))))
+    se = F.sqrt(s10 / npd + s01 / nqd)
+    return s.select(F.col("np").alias("n_pos"), F.col("nq").alias("n_neg"),
+                    auc.alias("auc"), se.alias("se"),
+                    (auc - F.lit(_DELONG_Z) * se).alias("ci_lo"),
+                    (auc + F.lit(_DELONG_Z) * se).alias("ci_hi"))
+
+
+# ---------------------------------------------------------------------------
+# KS uniformity audit of the house md5 sampler
+# ---------------------------------------------------------------------------
+
+# asymptotic two-sided Kolmogorov critical value at alpha = 0.05
+_KS_CRIT_05 = 1.358102
+_KS_SCALE = 1 << 60  # md5 15-hex-digit keys are uniform on [0, 2^60)
+
+
+_KS_MD5_ORACLE = f"""
+WITH keyed AS (
+  SELECT event_id,
+         CAST(concat('0x', substring(md5(CAST(event_id AS VARCHAR)
+                                         || ':ks-audit'), 1, 15))
+              AS BIGINT) AS u
+  FROM events
+), ranked AS (
+  SELECT u, CAST(row_number() OVER (ORDER BY u, event_id) AS BIGINT) AS i,
+         CAST(COUNT(*) OVER () AS BIGINT) AS n
+  FROM keyed
+), gaps AS (
+  -- both one-sided gaps, kept as EXACT integer numerators over the
+  -- common denominator n * 2^60 (HUGEINT: i * 2^60 passes int64)
+  SELECT n,
+         GREATEST(CAST(i AS HUGEINT) * {_KS_SCALE}
+                    - CAST(u AS HUGEINT) * n,
+                  CAST(u AS HUGEINT) * n
+                    - (CAST(i AS HUGEINT) - 1) * {_KS_SCALE}) AS num
+  FROM ranked
+)
+SELECT MAX(n) AS n,
+       CAST(MAX(num) AS DOUBLE)
+         / (CAST(MAX(n) AS DOUBLE) * {_KS_SCALE}.0) AS d_stat,
+       sqrt(CAST(MAX(n) AS DOUBLE)) * CAST(MAX(num) AS DOUBLE)
+         / (CAST(MAX(n) AS DOUBLE) * {_KS_SCALE}.0) AS sqrt_n_d,
+       sqrt(CAST(MAX(n) AS DOUBLE)) * CAST(MAX(num) AS DOUBLE)
+         / (CAST(MAX(n) AS DOUBLE) * {_KS_SCALE}.0) >= {_KS_CRIT_05}
+         AS reject_uniform_5pct
+FROM gaps
+"""
+
+
+@register("stat_ks_uniform_md5_audit", oracle=_KS_MD5_ORACLE)
+def stat_ks_uniform_md5_audit(spark: SparkSession,
+                              sf_dir: str) -> DataFrame:
+    """Kolmogorov–Smirnov uniformity audit of the house md5 randomness
+    itself: the 60-bit keys every deterministic sampler / bootstrap /
+    permutation op draws from, tested against U(0, 2⁶⁰) — the engine
+    auditing its own randomness supply (a biased key stream would
+    silently corrupt every seeded operator upstream). Both one-sided
+    ECDF gaps stay EXACT integer numerators over the common n·2⁶⁰
+    denominator (decimal(38,0) cross-multiplication — no float ECDF
+    anywhere); D converts to double once; √n·D compares against the
+    frozen asymptotic 5% critical value.
+
+    Scale shape: the global rank over the key stream is the two-pass
+    bucketed rank (bucketed.py — no single-partition window over the
+    event table); one wide-integer max fold to a single row."""
+    ev = load_table(spark, "events", sf_dir)
+    u = F.conv(F.substring(
+        F.md5(F.concat(F.col("event_id").cast("string"),
+                       F.lit(":ks-audit"))), 1, 15), 16, 10).cast("bigint")
+    keyed = ev.select("event_id", u.alias("u"))
+    tot = keyed.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    ranked = (bucketed_order(keyed, "u", ["event_id"], rank_col="i")
+              .crossJoin(F.broadcast(tot)))
+    dd = "decimal(38,0)"
+    num = F.greatest(
+        F.col("i").cast(dd) * _KS_SCALE - F.col("u").cast(dd) * F.col("n"),
+        F.col("u").cast(dd) * F.col("n")
+        - (F.col("i").cast(dd) - 1) * _KS_SCALE)
+    g = ranked.agg(F.max("n").alias("n"), F.max(num).alias("num"))
+    d_stat = (F.col("num").cast("double")
+              / (F.col("n").cast("double") * F.lit(float(_KS_SCALE))))
+    snd = F.sqrt(F.col("n").cast("double")) * d_stat
+    return g.select("n", d_stat.alias("d_stat"), snd.alias("sqrt_n_d"),
+                    (snd >= F.lit(_KS_CRIT_05))
+                    .alias("reject_uniform_5pct"))
+
+
+# ---------------------------------------------------------------------------
+# Poisson dispersion (variance-to-mean) test on hourly arrival counts
+# ---------------------------------------------------------------------------
+
+_DISPERSION_ORACLE = """
+WITH hourly AS (
+  SELECT event_type, date_trunc('hour', ts) AS hr,
+         CAST(COUNT(*) AS BIGINT) AS c
+  FROM events GROUP BY event_type, date_trunc('hour', ts)
+), s AS (
+  SELECT event_type,
+         CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(c) AS BIGINT) AS s1,
+         CAST(SUM(c * c) AS BIGINT) AS s2
+  FROM hourly GROUP BY event_type
+)
+SELECT event_type, n AS n_hours,
+       CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) AS mean_count,
+       -- sample variance via the exact-sum identity, one tree
+       (CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
+                             / CAST(n AS DOUBLE))
+         / (CAST(n AS DOUBLE) - 1.0)
+         / (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)) AS dispersion_index,
+       (CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
+                             / CAST(n AS DOUBLE))
+         / (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)) AS chi2_stat
+FROM s
+"""
+
+
+@register("stat_poisson_dispersion", oracle=_DISPERSION_ORACLE)
+def stat_poisson_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Poisson dispersion test on hourly arrival counts per event type:
+    the variance-to-mean index and its χ² form (n−1)·s²/x̄ — IS traffic
+    Poisson, or bursty? The formal companion to ts_burstiness_fano
+    (same index, different grain), and the gate before any
+    Poisson-assuming capacity model. Counts and both power sums are
+    exact integers; the index assembles in one identical tree with two
+    divisions.
+
+    Scale shape: calendar-bounded hourly count fold; one combinable
+    three-sum fold per type."""
+    ev = load_table(spark, "events", sf_dir)
+    hourly = (ev.groupBy("event_type",
+                         F.date_trunc("hour", "ts").alias("hr"))
+              .agg(F.count(F.lit(1)).cast("bigint").alias("c")))
+    s = hourly.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("c").cast("bigint").alias("s1"),
+        F.sum(F.col("c") * F.col("c")).cast("bigint").alias("s2"))
+    nd = F.col("n").cast("double")
+    s1d = F.col("s1").cast("double")
+    ss = F.col("s2").cast("double") - s1d * s1d / nd
+    mean = s1d / nd
+    return s.select("event_type", F.col("n").alias("n_hours"),
+                    mean.alias("mean_count"),
+                    (ss / (nd - F.lit(1.0)) / mean)
+                    .alias("dispersion_index"),
+                    (ss / mean).alias("chi2_stat"))
+
+
+# ---------------------------------------------------------------------------
+# TOST equivalence test (two one-sided tests)
+# ---------------------------------------------------------------------------
+
+_TOST_MARGIN = 500       # cents: the practical-equivalence margin
+_TOST_Z05 = 1.644853627  # one-sided 5% normal quantile, frozen
+
+_TOST_ORACLE = f"""
+WITH c AS (
+  SELECT event_type, CAST(round(value * 100, 0) AS BIGINT) AS x
+  FROM events WHERE event_type IN ('click', 'purchase')
+), s AS (
+  SELECT
+    CAST(COUNT(*) FILTER (WHERE event_type = 'click') AS BIGINT) AS n1,
+    CAST(COUNT(*) FILTER (WHERE event_type = 'purchase') AS BIGINT) AS n2,
+    CAST(SUM(x) FILTER (WHERE event_type = 'click') AS BIGINT) AS s1,
+    CAST(SUM(x) FILTER (WHERE event_type = 'purchase') AS BIGINT) AS s2,
+    CAST(SUM(CAST(x AS HUGEINT) * x)
+         FILTER (WHERE event_type = 'click') AS HUGEINT) AS q1,
+    CAST(SUM(CAST(x AS HUGEINT) * x)
+         FILTER (WHERE event_type = 'purchase') AS HUGEINT) AS q2
+  FROM c
+), m AS (
+  SELECT n1, n2,
+         CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)
+           - CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE) AS d,
+         sqrt((CAST(q1 AS DOUBLE)
+               - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
+                 / CAST(n1 AS DOUBLE))
+              / (CAST(n1 AS DOUBLE) - 1.0) / CAST(n1 AS DOUBLE)
+              + (CAST(q2 AS DOUBLE)
+                 - CAST(s2 AS DOUBLE) * CAST(s2 AS DOUBLE)
+                   / CAST(n2 AS DOUBLE))
+                / (CAST(n2 AS DOUBLE) - 1.0) / CAST(n2 AS DOUBLE)) AS se
+  FROM s
+)
+SELECT n1 AS n_click, n2 AS n_purchase, d AS mean_diff_cents, se,
+       (d + {_TOST_MARGIN}.0) / se AS t_lower,
+       (d - {_TOST_MARGIN}.0) / se AS t_upper,
+       ((d + {_TOST_MARGIN}.0) / se >= {_TOST_Z05}
+        AND (d - {_TOST_MARGIN}.0) / se <= -{_TOST_Z05})
+         AS equivalent_within_margin
+FROM m
+"""
+
+
+@register("stat_tost_equivalence", oracle=_TOST_ORACLE)
+def stat_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TOST equivalence test (two one-sided tests) on the click vs
+    purchase mean cents with a ±500-cent practical margin — the inverse
+    question every "no significant difference" misreads: can we
+    POSITIVELY claim the means are within the margin?
+    (stat_welch_ttest asks 'different?'; this asks 'same enough?' —
+    both belong in an A/B platform). Welch standard error off exact
+    integer moments; both one-sided z statistics against the frozen
+    one-sided 5% quantile; equivalence = both reject.
+
+    Scale shape: ONE combinable six-sum fold over the scan to a single
+    row (the Welch shape)."""
+    ev = (load_table(spark, "events", sf_dir)
+          .where(F.col("event_type").isin("click", "purchase")))
+    x = F.round(F.col("value") * 100, 0).cast("bigint")
+    is1 = F.col("event_type") == "click"
+    c = ev.select(is1.alias("is1"), x.alias("x"),
+                  x.cast("decimal(38,0)").alias("xd"))
+    s = c.agg(
+        F.count(F.when(F.col("is1"), 1)).cast("bigint").alias("n1"),
+        F.count(F.when(~F.col("is1"), 1)).cast("bigint").alias("n2"),
+        F.sum(F.when(F.col("is1"), F.col("x"))).cast("bigint").alias("s1"),
+        F.sum(F.when(~F.col("is1"), F.col("x"))).cast("bigint")
+        .alias("s2"),
+        F.sum(F.when(F.col("is1"), F.col("xd") * F.col("x"))).alias("q1"),
+        F.sum(F.when(~F.col("is1"), F.col("xd") * F.col("x")))
+        .alias("q2"))
+    n1d, n2d = F.col("n1").cast("double"), F.col("n2").cast("double")
+    d = (F.col("s1").cast("double") / n1d
+         - F.col("s2").cast("double") / n2d)
+    v1 = ((F.col("q1").cast("double")
+           - F.col("s1").cast("double") * F.col("s1").cast("double") / n1d)
+          / (n1d - F.lit(1.0)) / n1d)
+    v2 = ((F.col("q2").cast("double")
+           - F.col("s2").cast("double") * F.col("s2").cast("double") / n2d)
+          / (n2d - F.lit(1.0)) / n2d)
+    se = F.sqrt(v1 + v2)
+    tl = (d + F.lit(float(_TOST_MARGIN))) / se
+    tu = (d - F.lit(float(_TOST_MARGIN))) / se
+    return s.select(
+        F.col("n1").alias("n_click"), F.col("n2").alias("n_purchase"),
+        d.alias("mean_diff_cents"), se.alias("se"),
+        tl.alias("t_lower"), tu.alias("t_upper"),
+        ((tl >= F.lit(_TOST_Z05)) & (tu <= F.lit(-_TOST_Z05)))
+        .alias("equivalent_within_margin"))
+
+
+# ---------------------------------------------------------------------------
+# SPRT sequential conversion test, daily grain
+# ---------------------------------------------------------------------------
+
+# H0: conversion = 0.18, H1: 0.22; alpha = beta = 0.05. All four
+# transcendentals frozen (log-likelihood ratios per success/failure and
+# the two Wald boundaries ±ln((1-beta)/alpha) = ±ln 19).
+_SPRT_LR1 = 0.20067069546215124     # ln(0.22/0.18)
+_SPRT_LR0 = -0.050010420574661305   # ln(0.78/0.82)
+_SPRT_A = 2.9444389791664403        # accept H1 boundary
+_SPRT_B = -2.9444389791664403       # accept H0 boundary
+
+_SPRT_ORACLE = f"""
+WITH daily AS (
+  SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
+         CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(COUNT(*) FILTER (WHERE event_type = 'purchase') AS BIGINT)
+           AS k
+  FROM events WHERE event_type IN ('click', 'purchase')
+  GROUP BY strftime(CAST(ts AS DATE), '%Y-%m-%d')
+), llr AS (
+  SELECT day, n, k,
+         CAST(k AS DOUBLE) * {_SPRT_LR1!r}
+           + CAST(n - k AS DOUBLE) * {_SPRT_LR0!r} AS llr_day
+  FROM daily
+), cum AS (
+  SELECT day, n, k, llr_day,
+         SUM(llr_day) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
+           AS cum_llr
+  FROM llr
+)
+SELECT day, n, k, cum_llr,
+       CASE WHEN cum_llr >= {_SPRT_A!r} THEN 'accept_h1'
+            WHEN cum_llr <= {_SPRT_B!r} THEN 'accept_h0'
+            ELSE 'continue' END AS decision
+FROM cum
+"""
+
+
+@register("stat_sprt_daily", oracle=_SPRT_ORACLE)
+def stat_sprt_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Wald's SPRT on the daily conversion rate (purchase share of
+    click+purchase), H0 p=0.18 vs H1 p=0.22 at α=β=0.05 — the
+    SEQUENTIAL test that lets an experiment stop the day the evidence
+    crosses a Wald boundary instead of waiting out a fixed horizon (the
+    streaming-native member of the testing family; stream_drift_
+    bucket_counts is its state shape). All four transcendentals are
+    FROZEN literals; daily LLR increments are integer-count ×
+    frozen-literal products; the cumulative sum runs over the ordered
+    calendar (deterministic sequential fold in both engines).
+
+    Scale shape: one combinable daily two-count fold; the cumulative
+    window runs over the calendar-bounded day series."""
+    ev = (load_table(spark, "events", sf_dir)
+          .where(F.col("event_type").isin("click", "purchase")))
+    daily = (ev.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
+             .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
+                  F.count(F.when(F.col("event_type") == "purchase", 1))
+                  .cast("bigint").alias("k")))
+    llr = (F.col("k").cast("double") * F.lit(_SPRT_LR1)
+           + (F.col("n") - F.col("k")).cast("double") * F.lit(_SPRT_LR0))
+    wc = Window.orderBy("day").rowsBetween(Window.unboundedPreceding,
+                                           Window.currentRow)
+    cum = daily.select("day", "n", "k", llr.alias("llr_day")) \
+        .select("day", "n", "k",
+                F.sum("llr_day").over(wc).alias("cum_llr"))
+    decision = (F.when(F.col("cum_llr") >= F.lit(_SPRT_A), "accept_h1")
+                .when(F.col("cum_llr") <= F.lit(_SPRT_B), "accept_h0")
+                .otherwise("continue"))
+    return cum.select("day", "n", "k", "cum_llr",
+                      decision.alias("decision"))
+
+
+# ---------------------------------------------------------------------------
+# optimal-F1 threshold pick
+# ---------------------------------------------------------------------------
+
+_F1_ORACLE = """
+WITH c AS (
+  SELECT event_type = 'purchase' AS pos,
+         CAST(round(value * 100, 0) AS BIGINT) AS xc
+  FROM events WHERE event_type IN ('click', 'purchase')
+), dom AS (
+  SELECT xc, CAST(COUNT(*) AS BIGINT) AS t,
+         CAST(COUNT(*) FILTER (WHERE pos) AS BIGINT) AS p
+  FROM c GROUP BY xc
+), cum AS (
+  SELECT xc,
+         CAST(SUM(t) OVER w AS BIGINT) AS cum_t,
+         CAST(SUM(p) OVER w AS BIGINT) AS cum_p,
+         CAST(SUM(p) OVER () AS BIGINT) AS np
+  FROM dom WINDOW w AS (ORDER BY xc DESC ROWS UNBOUNDED PRECEDING)
+), scored AS (
+  SELECT xc AS threshold_cents,
+         cum_p AS tp, cum_t - cum_p AS fp, np - cum_p AS fn,
+         2.0 * CAST(cum_p AS DOUBLE)
+           / (2.0 * CAST(cum_p AS DOUBLE)
+              + CAST(cum_t - cum_p AS DOUBLE)
+              + CAST(np - cum_p AS DOUBLE)) AS f1
+  FROM cum
+)
+SELECT threshold_cents, tp, fp, fn,
+       CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) AS precision_at,
+       CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) AS recall_at,
+       f1
+FROM scored
+ORDER BY f1 DESC, threshold_cents DESC
+LIMIT 1
+"""
+
+
+@register("ml_optimal_f1_threshold", oracle=_F1_ORACLE)
+def ml_optimal_f1_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The F1-optimal decision threshold for the value-predicts-purchase
+    score — the operating point ml_confusion_threshold_sweep's ×9 grid
+    brackets and ml_lift_gains_table's deciles smooth over, picked
+    EXACTLY over every distinct score value: per-threshold TP/FP/FN off
+    the domain cumulative counts, F1 through an identical double tree,
+    argmax by (f1, threshold) via a sort-limit that fuses to
+    TakeOrdered. Ties (identical doubles in both engines) break to the
+    HIGHER threshold — the conservative operating point.
+
+    Scale shape: one combinable domain collapse; one cumulative window
+    over the bounded DOMAIN; a 1-row TakeOrdered head."""
+    ev = (load_table(spark, "events", sf_dir)
+          .where(F.col("event_type").isin("click", "purchase")))
+    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    dom = (ev.select((F.col("event_type") == "purchase").alias("pos"),
+                     xc.alias("xc"))
+           .groupBy("xc")
+           .agg(F.count(F.lit(1)).cast("bigint").alias("t"),
+                F.count(F.when(F.col("pos"), 1)).cast("bigint")
+                .alias("p")))
+    wd = (Window.orderBy(F.col("xc").desc())
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    np_ = dom.agg(F.sum("p").cast("bigint").alias("np"))
+    cum = (dom.select(
+        "xc",
+        F.sum("t").over(wd).cast("bigint").alias("cum_t"),
+        F.sum("p").over(wd).cast("bigint").alias("cum_p"))
+        .crossJoin(F.broadcast(np_)))
+    tp = F.col("cum_p")
+    fp = F.col("cum_t") - F.col("cum_p")
+    fn = F.col("np") - F.col("cum_p")
+    f1 = (F.lit(2.0) * tp.cast("double")
+          / (F.lit(2.0) * tp.cast("double") + fp.cast("double")
+             + fn.cast("double")))
+    return (cum.select(F.col("xc").alias("threshold_cents"),
+                       tp.alias("tp"), fp.alias("fp"), fn.alias("fn"),
+                       (tp.cast("double") / (tp + fp).cast("double"))
+                       .alias("precision_at"),
+                       (tp.cast("double") / (tp + fn).cast("double"))
+                       .alias("recall_at"),
+                       f1.alias("f1"))
+            .orderBy(F.col("f1").desc(),
+                     F.col("threshold_cents").desc())
+            .limit(1))
+
+# ---------------------------------------------------------------------------
+# Cochran–Armitage trend test
+# ---------------------------------------------------------------------------
+
+_CA_TREND_ORACLE = """
+WITH c AS (
+  SELECT CAST(floor(hour(ts) / 6.0) AS BIGINT) AS dose,
+         event_type = 'purchase' AS pos
+  FROM events WHERE event_type IN ('click', 'purchase')
+), g AS (
+  SELECT dose, CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(COUNT(*) FILTER (WHERE pos) AS BIGINT) AS r
+  FROM c GROUP BY dose
+), s AS (
+  SELECT CAST(SUM(n) AS BIGINT) AS nt, CAST(SUM(r) AS BIGINT) AS rt,
+         CAST(SUM(dose * n) AS BIGINT) AS sn,
+         CAST(SUM(dose * r) AS BIGINT) AS sr,
+         CAST(SUM(dose * dose * n) AS BIGINT) AS sn2
+  FROM g
+)
+SELECT nt AS n_total, rt AS n_success,
+       round(CAST(sr AS DOUBLE)
+             - (CAST(rt AS DOUBLE) / CAST(nt AS DOUBLE))
+               * CAST(sn AS DOUBLE), 6) AS t_stat,
+       round((CAST(sr AS DOUBLE)
+              - (CAST(rt AS DOUBLE) / CAST(nt AS DOUBLE))
+                * CAST(sn AS DOUBLE))
+             / sqrt((CAST(rt AS DOUBLE) / CAST(nt AS DOUBLE))
+                    * (1.0 - CAST(rt AS DOUBLE) / CAST(nt AS DOUBLE))
+                    * (CAST(sn2 AS DOUBLE)
+                       - CAST(sn AS DOUBLE) * CAST(sn AS DOUBLE)
+                         / CAST(nt AS DOUBLE))), 6) AS z_trend
+FROM s
+"""
+
+
+@register("stat_cochran_armitage_trend", oracle=_CA_TREND_ORACLE)
+def stat_cochran_armitage_trend(spark: SparkSession,
+                                sf_dir: str) -> DataFrame:
+    """Cochran–Armitage test for TREND in proportions across ordered
+    groups: is the purchase rate monotonically drifting across the four
+    six-hour day blocks (dose scores 0–3)? The missing rung between
+    stat_two_proportion_z (two groups) and stat_chi_square_independence
+    (unordered k groups): the trend test spends its single degree of
+    freedom on the ORDERING, so it sees monotone effects the omnibus
+    chi-square dilutes. T = Σsᵢrᵢ − p̄·Σsᵢnᵢ,
+    Var = p̄(1−p̄)(Σsᵢ²nᵢ − (Σsᵢnᵢ)²/N), z = T/√Var — every input an
+    exact BIGINT fold, the z a single double tree spelled identically in
+    the oracle.
+
+    Scale shape: one map-side dose projection, one combinable 4-group
+    fold, one 4→1-row sum — no shuffle wider than 4 rows after the
+    first fold."""
+    ev = (load_table(spark, "events", sf_dir)
+          .where(F.col("event_type").isin("click", "purchase")))
+    c = ev.select(
+        F.floor(F.hour("ts") / 6.0).cast("bigint").alias("dose"),
+        (F.col("event_type") == "purchase").alias("pos"))
+    g = (c.groupBy("dose")
+         .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
+              F.count(F.when(F.col("pos"), 1)).cast("bigint").alias("r")))
+    s = g.agg(
+        F.sum("n").cast("bigint").alias("nt"),
+        F.sum("r").cast("bigint").alias("rt"),
+        F.sum(F.col("dose") * F.col("n")).cast("bigint").alias("sn"),
+        F.sum(F.col("dose") * F.col("r")).cast("bigint").alias("sr"),
+        F.sum(F.col("dose") * F.col("dose") * F.col("n"))
+        .cast("bigint").alias("sn2"))
+    pbar = F.col("rt").cast("double") / F.col("nt").cast("double")
+    t_stat = F.col("sr").cast("double") - pbar * F.col("sn").cast("double")
+    var = (pbar * (F.lit(1.0) - pbar)
+           * (F.col("sn2").cast("double")
+              - F.col("sn").cast("double") * F.col("sn").cast("double")
+                / F.col("nt").cast("double")))
+    return s.select(
+        F.col("nt").alias("n_total"),
+        F.col("rt").alias("n_success"),
+        F.round(t_stat, 6).alias("t_stat"),
+        F.round(t_stat / F.sqrt(var), 6).alias("z_trend"))
+
+
+# ---------------------------------------------------------------------------
+# Bartlett's test for homogeneity of variances
+# ---------------------------------------------------------------------------
+
+_BARTLETT_ORACLE = """
+WITH c AS (
+  SELECT event_type AS grp,
+         CAST(round(value * 100, 0) AS BIGINT) AS xc
+  FROM events
+), g AS (
+  SELECT grp, CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(xc) AS DECIMAL(38,0)) AS s1,
+         CAST(SUM(CAST(xc AS DECIMAL(38,0)) * xc) AS DECIMAL(38,0)) AS s2
+  FROM c GROUP BY grp
+), v AS (
+  SELECT grp, n,
+         (CAST(s2 AS DOUBLE)
+          - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
+         / CAST(n - 1 AS DOUBLE) AS var_i
+  FROM g
+), terms AS (
+  SELECT CAST(SUM(n) AS BIGINT) AS nt,
+         CAST(COUNT(*) AS BIGINT) AS k,
+         CAST(SUM(CAST(round((CAST(n - 1 AS DOUBLE)) * var_i
+                             * 1000000.0, 0) AS DECIMAL(38,0)))
+              AS DECIMAL(38,0)) AS ssq,
+         CAST(SUM(CAST(round((CAST(n - 1 AS DOUBLE)) * ln(var_i)
+                             * 1000000.0, 0) AS DECIMAL(38,0)))
+              AS DECIMAL(38,0)) AS snl,
+         CAST(SUM(CAST(round(1000000000000.0 / CAST(n - 1 AS DOUBLE), 0)
+                       AS BIGINT)) AS BIGINT) AS sinv
+  FROM v
+)
+SELECT k, nt AS n_total,
+       round(CAST(ssq AS DOUBLE) / 1000000.0 / CAST(nt - k AS DOUBLE), 6)
+         AS pooled_var,
+       round(1.0 + (CAST(sinv AS DOUBLE) / 1000000000000.0
+                    - 1.0 / CAST(nt - k AS DOUBLE))
+                   / (3.0 * CAST(k - 1 AS DOUBLE)), 6) AS correction_c,
+       round((CAST(nt - k AS DOUBLE)
+              * ln(CAST(ssq AS DOUBLE) / 1000000.0 / CAST(nt - k AS DOUBLE))
+              - CAST(snl AS DOUBLE) / 1000000.0)
+             / (1.0 + (CAST(sinv AS DOUBLE) / 1000000000000.0
+                       - 1.0 / CAST(nt - k AS DOUBLE))
+                      / (3.0 * CAST(k - 1 AS DOUBLE))), 6)
+         AS bartlett_chi2
+FROM terms
+"""
+
+
+@register("stat_bartlett_test", oracle=_BARTLETT_ORACLE)
+def stat_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bartlett's test of variance homogeneity across the five event
+    types — the PARAMETRIC sibling of stat_brown_forsythe (more powerful
+    under normality, famously fragile without it; reading both is the
+    textbook practice). χ² = [(N−k)·ln(Sp²) − Σ(nᵢ−1)ln(Sᵢ²)]/C with the
+    Bartlett small-sample correction C. Per-group variances come off
+    exact decimal(38,0) moment folds; the (nᵢ−1)·Sᵢ², (nᵢ−1)·ln(Sᵢ²)
+    and 1/(nᵢ−1) cross-group sums are each quantized to fixed-point
+    integers per group BEFORE summing (k=5 terms), so every fold is
+    associative and partition-order-free.
+
+    Scale shape: one combinable 5-group moment fold, one 5→1-row
+    integer fold; the corpus is read once."""
+    ev = load_table(spark, "events", sf_dir)
+    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    g = (ev.select(F.col("event_type").alias("grp"), xc.alias("xc"))
+         .groupBy("grp")
+         .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
+              F.sum("xc").cast("decimal(38,0)").alias("s1"),
+              F.sum(F.col("xc").cast("decimal(38,0)") * F.col("xc"))
+              .cast("decimal(38,0)").alias("s2")))
+    var_i = ((F.col("s2").cast("double")
+              - F.col("s1").cast("double") * F.col("s1").cast("double")
+                / F.col("n").cast("double"))
+             / (F.col("n") - 1).cast("double"))
+    v = g.select("grp", "n", var_i.alias("var_i"))
+    terms = v.agg(
+        F.sum("n").cast("bigint").alias("nt"),
+        F.count(F.lit(1)).cast("bigint").alias("k"),
+        F.sum(F.round((F.col("n") - 1).cast("double") * F.col("var_i")
+                      * 1000000.0, 0).cast("decimal(38,0)"))
+        .cast("decimal(38,0)").alias("ssq"),
+        F.sum(F.round((F.col("n") - 1).cast("double") * F.log("var_i")
+                      * 1000000.0, 0).cast("decimal(38,0)"))
+        .cast("decimal(38,0)").alias("snl"),
+        F.sum(F.round(F.lit(1000000000000.0)
+                      / (F.col("n") - 1).cast("double"), 0).cast("bigint"))
+        .cast("bigint").alias("sinv"))
+    nmk = (F.col("nt") - F.col("k")).cast("double")
+    pooled = F.col("ssq").cast("double") / 1000000.0 / nmk
+    corr = (F.lit(1.0)
+            + (F.col("sinv").cast("double") / 1000000000000.0
+               - F.lit(1.0) / nmk)
+              / (3.0 * (F.col("k") - 1).cast("double")))
+    chi2 = (nmk * F.log(pooled)
+            - F.col("snl").cast("double") / 1000000.0) / corr
+    return terms.select(
+        "k", F.col("nt").alias("n_total"),
+        F.round(pooled, 6).alias("pooled_var"),
+        F.round(corr, 6).alias("correction_c"),
+        F.round(chi2, 6).alias("bartlett_chi2"))
+
+
+# ---------------------------------------------------------------------------
+# Durbin–Watson serial-correlation diagnostic
+# ---------------------------------------------------------------------------
+
+_DW_ORACLE = """
+WITH h AS (
+  SELECT CAST(epoch(date_trunc('hour', ts)) / 3600 AS BIGINT) AS eh,
+         CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS y
+  FROM events WHERE event_type = 'purchase'
+  GROUP BY 1
+), x AS (
+  SELECT eh - (SELECT MIN(eh) FROM h) AS x, y FROM h
+), s AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
+         CAST(SUM(x * x) AS BIGINT) AS sxx,
+         CAST(SUM(x * y) AS BIGINT) AS sxy
+  FROM x
+), co AS (
+  SELECT n,
+         (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+          - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+         / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+            - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS b,
+         CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)
+         - ((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+             - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+            / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+               - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
+           * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS a
+  FROM s
+), e AS (
+  SELECT x.x,
+         CAST(round((CAST(y AS DOUBLE) - co.a - co.b * CAST(x.x AS DOUBLE))
+                    * 1000000.0, 0) AS BIGINT) AS eq
+  FROM x CROSS JOIN co
+), d AS (
+  SELECT eq, eq - lag(eq) OVER (ORDER BY x) AS de FROM e
+)
+SELECT (SELECT n FROM co) AS n_hours,
+       (SELECT round(b, 6) FROM co) AS slope,
+       (SELECT round(a, 6) FROM co) AS intercept,
+       round(CAST(SUM(CAST(de AS DECIMAL(38,0)) * de) AS DOUBLE)
+             / CAST(SUM(CAST(eq AS DECIMAL(38,0)) * eq) AS DOUBLE), 6)
+         AS dw_stat
+FROM d
+"""
+
+
+@register("stat_durbin_watson", oracle=_DW_ORACLE)
+def stat_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Durbin–Watson serial-correlation diagnostic on the residuals of
+    the hourly-purchase-cents-vs-time OLS — the regression-health check
+    the OLS family (stat_ols_two_feature, ts_trend_slope) never
+    reports: DW ≈ 2 means independent residuals, → 0 positive
+    autocorrelation (the usual time-series failure), → 4 negative.
+    DW = Σ(eₜ−eₜ₋₁)²/Σeₜ². Slope/intercept come off exact BIGINT sums;
+    each residual is ONE identical double tree quantized to 1e-6-unit
+    integers, so both quadratic sums are exact decimal(38,0) folds and
+    the statistic is partition-order-free.
+
+    Scale shape: calendar-bounded hourly fold (≤8,784 rows/year
+    regardless of corpus size); broadcast 1-row coefficients; one lag
+    window over the bounded DOMAIN; one integer fold to a single row."""
+    ev = (load_table(spark, "events", sf_dir)
+          .where(F.col("event_type") == "purchase"))
+    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    h = (ev.select(
+            (F.unix_timestamp(F.date_trunc("hour", F.col("ts"))) / 3600)
+            .cast("bigint").alias("eh"),
+            cents.alias("c"))
+         .groupBy("eh")
+         .agg(F.sum("c").cast("bigint").alias("y")))
+    mn = h.agg(F.min("eh").alias("m"))
+    x = (h.crossJoin(F.broadcast(mn))
+         .select((F.col("eh") - F.col("m")).alias("x"), "y"))
+    s = x.agg(F.count(F.lit(1)).cast("bigint").alias("n"),
+              F.sum("x").cast("bigint").alias("sx"),
+              F.sum("y").cast("bigint").alias("sy"),
+              F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),
+              F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"))
+    nd = F.col("n").cast("double")
+    b = ((nd * F.col("sxy").cast("double")
+          - F.col("sx").cast("double") * F.col("sy").cast("double"))
+         / (nd * F.col("sxx").cast("double")
+            - F.col("sx").cast("double") * F.col("sx").cast("double")))
+    a = F.col("sy").cast("double") / nd - b * F.col("sx").cast("double") / nd
+    co = s.select("n", b.alias("b"), a.alias("a"))
+    e = (x.crossJoin(F.broadcast(co))
+         .select("x", "n", "a", "b",
+                 F.round((F.col("y").cast("double") - F.col("a")
+                          - F.col("b") * F.col("x").cast("double"))
+                         * 1000000.0, 0).cast("bigint").alias("eq")))
+    w = Window.orderBy("x")
+    d = e.select("n", "a", "b", "eq",
+                 (F.col("eq") - F.lag("eq").over(w)).alias("de"))
+    return (d.groupBy("n", "a", "b")
+            .agg(F.sum(F.col("de").cast("decimal(38,0)") * F.col("de"))
+                 .alias("num"),
+                 F.sum(F.col("eq").cast("decimal(38,0)") * F.col("eq"))
+                 .alias("den"))
+            .select(F.col("n").alias("n_hours"),
+                    F.round(F.col("b"), 6).alias("slope"),
+                    F.round(F.col("a"), 6).alias("intercept"),
+                    F.round(F.col("num").cast("double")
+                            / F.col("den").cast("double"), 6)
+                    .alias("dw_stat")))
+
+
+# ---------------------------------------------------------------------------
+# MCC / Youden-J / balanced-accuracy threshold sweep
+# ---------------------------------------------------------------------------
+
+_MCC_SWEEP_ORACLE = """
+WITH c AS (
+  SELECT event_type = 'purchase' AS pos,
+         CAST(round(value * 100, 0) AS BIGINT) AS xc
+  FROM events WHERE event_type IN ('click', 'purchase')
+), thr AS (
+  SELECT CAST(r * 5000 AS BIGINT) AS thr FROM range(1, 10) AS t(r)
+), cells AS (
+  SELECT thr,
+         CAST(COUNT(*) FILTER (WHERE pos AND xc >= thr) AS BIGINT) AS tp,
+         CAST(COUNT(*) FILTER (WHERE NOT pos AND xc >= thr) AS BIGINT) AS fp,
+         CAST(COUNT(*) FILTER (WHERE NOT pos AND xc < thr) AS BIGINT) AS tn,
+         CAST(COUNT(*) FILTER (WHERE pos AND xc < thr) AS BIGINT) AS fn
+  FROM c CROSS JOIN thr GROUP BY thr
+)
+SELECT thr, tp, fp, tn, fn,
+       CASE WHEN (tp+fp) = 0 OR (tp+fn) = 0 OR (tn+fp) = 0 OR (tn+fn) = 0
+            THEN 0.0
+            ELSE round((CAST(CAST(tp AS DECIMAL(38,0)) * tn
+                             - CAST(fp AS DECIMAL(38,0)) * fn AS DOUBLE))
+                       / (sqrt(CAST(tp+fp AS DOUBLE))
+                          * sqrt(CAST(tp+fn AS DOUBLE))
+                          * sqrt(CAST(tn+fp AS DOUBLE))
+                          * sqrt(CAST(tn+fn AS DOUBLE))), 6) END AS mcc,
+       round(CAST(tp AS DOUBLE) / CAST(tp+fn AS DOUBLE)
+             + CAST(tn AS DOUBLE) / CAST(tn+fp AS DOUBLE) - 1.0, 6)
+         AS youden_j,
+       round((CAST(tp AS DOUBLE) / CAST(tp+fn AS DOUBLE)
+              + CAST(tn AS DOUBLE) / CAST(tn+fp AS DOUBLE)) / 2.0, 6)
+         AS balanced_acc
+FROM cells
+ORDER BY thr
+"""
+
+
+@register("ml_mcc_threshold_sweep", oracle=_MCC_SWEEP_ORACLE)
+def ml_mcc_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Matthews correlation, Youden's J and balanced accuracy swept over
+    the same nine decision thresholds as ml_confusion_threshold_sweep —
+    the IMBALANCE-ROBUST operating-point scores that table leaves out
+    (precision/recall/F1 all ignore the true-negative cell; MCC is the
+    one single-number score using all four). Counts are exact integers
+    from ONE conditional fold; the MCC numerator is a decimal(38,0)
+    product difference (tp·tn can exceed int64 at corpus scale), the
+    denominator a product of four single sqrts so nothing overflows
+    double range; 0-margin guards are the same CASE in both engines.
+
+    Scale shape: map-side ×9 broadcast-spine fan-out folding to 9 rows
+    in ONE combinable groupBy — one corpus pass for the whole sweep."""
+    ev = (load_table(spark, "events", sf_dir)
+          .where(F.col("event_type").isin("click", "purchase")))
+    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    c = ev.select((F.col("event_type") == "purchase").alias("pos"),
+                  xc.alias("xc"))
+    thresholds = spark.range(1, 10).select(
+        (F.col("id") * 5000).cast("bigint").alias("thr"))
+    pred = F.col("xc") >= F.col("thr")
+    cells = (c.crossJoin(F.broadcast(thresholds))
+             .groupBy("thr")
+             .agg(F.count(F.when(F.col("pos") & pred, 1)).cast("bigint")
+                  .alias("tp"),
+                  F.count(F.when(~F.col("pos") & pred, 1)).cast("bigint")
+                  .alias("fp"),
+                  F.count(F.when(~F.col("pos") & ~pred, 1)).cast("bigint")
+                  .alias("tn"),
+                  F.count(F.when(F.col("pos") & ~pred, 1)).cast("bigint")
+                  .alias("fn")))
+    tp, fp, tn, fn = (F.col(x) for x in ("tp", "fp", "tn", "fn"))
+    zero = ((tp + fp == 0) | (tp + fn == 0) | (tn + fp == 0)
+            | (tn + fn == 0))
+    mcc = F.when(zero, F.lit(0.0)).otherwise(
+        F.round((tp.cast("decimal(38,0)") * tn
+                 - fp.cast("decimal(38,0)") * fn).cast("double")
+                / (F.sqrt((tp + fp).cast("double"))
+                   * F.sqrt((tp + fn).cast("double"))
+                   * F.sqrt((tn + fp).cast("double"))
+                   * F.sqrt((tn + fn).cast("double"))), 6))
+    sens = tp.cast("double") / (tp + fn).cast("double")
+    spec = tn.cast("double") / (tn + fp).cast("double")
+    return (cells.select(
+        "thr", "tp", "fp", "tn", "fn",
+        mcc.alias("mcc"),
+        F.round(sens + spec - 1.0, 6).alias("youden_j"),
+        F.round((sens + spec) / 2.0, 6).alias("balanced_acc"))
+        .orderBy("thr"))
+
+
+# ---------------------------------------------------------------------------
+# Breusch-Pagan heteroskedasticity test (Koenker LM form)
+# ---------------------------------------------------------------------------
+
+# chi-square(1) upper 5% point, frozen (the one transcendental threshold)
+_BP_CHI2_95 = 3.841458820694124
+
+_BP_ORACLE = f"""
+WITH h AS (
+  SELECT CAST(epoch(date_trunc('hour', ts)) / 3600 AS BIGINT) AS eh,
+         CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS y
+  FROM events WHERE event_type = 'purchase'
+  GROUP BY 1
+), x AS (
+  SELECT eh - (SELECT MIN(eh) FROM h) AS x, y FROM h
+), s AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
+         CAST(SUM(x * x) AS BIGINT) AS sxx,
+         CAST(SUM(x * y) AS BIGINT) AS sxy
+  FROM x
+), co AS (
+  SELECT n, sx, sxx,
+         (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+          - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+         / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+            - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS b,
+         CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)
+         - ((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+             - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+            / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+               - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
+           * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS a
+  FROM s
+), e AS (
+  SELECT x.x,
+         CAST(round(CAST(y AS DOUBLE) - co.a - co.b * CAST(x.x AS DOUBLE),
+                    0) AS BIGINT) AS ec
+  FROM x CROSS JOIN co
+), sig AS (
+  SELECT sqrt(CAST(SUM(CAST(ec AS DECIMAL(38,0)) * ec) AS DOUBLE)
+              / CAST((SELECT n FROM co) - 2 AS DOUBLE)) AS sd
+  FROM e
+), u AS (
+  SELECT e.x,
+         CAST(round((CAST(e.ec AS DOUBLE) / sig.sd)
+                    * (CAST(e.ec AS DOUBLE) / sig.sd) * 1000000.0, 0)
+              AS BIGINT) AS uq
+  FROM e CROSS JOIN sig
+), aux AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(x) AS BIGINT) AS sx,
+         CAST(SUM(x * x) AS BIGINT) AS sxx,
+         CAST(SUM(uq) AS BIGINT) AS su,
+         CAST(SUM(x * uq) AS BIGINT) AS sxu,
+         CAST(SUM(CAST(uq AS DECIMAL(38,0)) * uq) AS DECIMAL(38,0)) AS suu
+  FROM u
+)
+SELECT n AS n_hours,
+       round((CAST(n AS DOUBLE) * CAST(sxu AS DOUBLE)
+              - CAST(sx AS DOUBLE) * CAST(su AS DOUBLE))
+             * (CAST(n AS DOUBLE) * CAST(sxu AS DOUBLE)
+                - CAST(sx AS DOUBLE) * CAST(su AS DOUBLE))
+             / ((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+                 - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+                * (CAST(n AS DOUBLE) * CAST(suu AS DOUBLE)
+                   - CAST(su AS DOUBLE) * CAST(su AS DOUBLE))), 6)
+         AS r2_aux,
+       round(CAST(n AS DOUBLE)
+             * (CAST(n AS DOUBLE) * CAST(sxu AS DOUBLE)
+                - CAST(sx AS DOUBLE) * CAST(su AS DOUBLE))
+             * (CAST(n AS DOUBLE) * CAST(sxu AS DOUBLE)
+                - CAST(sx AS DOUBLE) * CAST(su AS DOUBLE))
+             / ((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+                 - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+                * (CAST(n AS DOUBLE) * CAST(suu AS DOUBLE)
+                   - CAST(su AS DOUBLE) * CAST(su AS DOUBLE))), 6)
+         AS bp_lm,
+       CAST(n AS DOUBLE)
+       * (CAST(n AS DOUBLE) * CAST(sxu AS DOUBLE)
+          - CAST(sx AS DOUBLE) * CAST(su AS DOUBLE))
+       * (CAST(n AS DOUBLE) * CAST(sxu AS DOUBLE)
+          - CAST(sx AS DOUBLE) * CAST(su AS DOUBLE))
+       / ((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+           - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+          * (CAST(n AS DOUBLE) * CAST(suu AS DOUBLE)
+             - CAST(su AS DOUBLE) * CAST(su AS DOUBLE)))
+       > {_BP_CHI2_95!r} AS heteroskedastic
+FROM aux
+"""
+
+
+@register("stat_breusch_pagan", oracle=_BP_ORACLE)
+def stat_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Breusch–Pagan heteroskedasticity test (Koenker's LM = n·R² form)
+    on the hourly-purchase-cents OLS: does residual VARIANCE drift with
+    time — the other regression-health check beside stat_durbin_watson's
+    serial correlation (heteroskedastic residuals invalidate the OLS
+    standard errors every downstream CI uses). Residuals are quantized
+    to whole cents; the auxiliary regressand is the STANDARDIZED squared
+    residual (e/σ̂)² quantized 1e-6 — R² is invariant to that scaling,
+    and it BOUNDS the integer fold at any corpus scale (z² ≤ ~10², so
+    Σu and Σu² stay in BIGINT range at 100 TB where raw e² sums would
+    overflow even decimal(38)). Decision vs the FROZEN χ²₁ 5%% point.
+
+    Scale shape: calendar-bounded hourly fold; two broadcast 1-row
+    passes (coefficients, then σ̂); every fold an exact integer sum over
+    the bounded domain."""
+    ev = (load_table(spark, "events", sf_dir)
+          .where(F.col("event_type") == "purchase"))
+    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    h = (ev.select(
+            (F.unix_timestamp(F.date_trunc("hour", F.col("ts"))) / 3600)
+            .cast("bigint").alias("eh"),
+            cents.alias("c"))
+         .groupBy("eh")
+         .agg(F.sum("c").cast("bigint").alias("y")))
+    mn = h.agg(F.min("eh").alias("m"))
+    x = (h.crossJoin(F.broadcast(mn))
+         .select((F.col("eh") - F.col("m")).alias("x"), "y"))
+    s = x.agg(F.count(F.lit(1)).cast("bigint").alias("n"),
+              F.sum("x").cast("bigint").alias("sx"),
+              F.sum("y").cast("bigint").alias("sy"),
+              F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),
+              F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"))
+    nd = F.col("n").cast("double")
+    b = ((nd * F.col("sxy").cast("double")
+          - F.col("sx").cast("double") * F.col("sy").cast("double"))
+         / (nd * F.col("sxx").cast("double")
+            - F.col("sx").cast("double") * F.col("sx").cast("double")))
+    a = F.col("sy").cast("double") / nd - b * F.col("sx").cast("double") / nd
+    co = s.select("n", b.alias("b"), a.alias("a"))
+    e = (x.crossJoin(F.broadcast(co))
+         .select("x", "n",
+                 F.round(F.col("y").cast("double") - F.col("a")
+                         - F.col("b") * F.col("x").cast("double"), 0)
+                 .cast("bigint").alias("ec")))
+    sig = e.agg(F.sqrt(F.sum(F.col("ec").cast("decimal(38,0)")
+                             * F.col("ec")).cast("double")
+                       / (F.max("n") - 2).cast("double")).alias("sd"))
+    z = F.col("ec").cast("double") / F.col("sd")
+    u = (e.crossJoin(F.broadcast(sig))
+         .select("x", F.round(z * z * 1000000.0, 0).cast("bigint")
+                 .alias("uq")))
+    aux = u.agg(F.count(F.lit(1)).cast("bigint").alias("n"),
+                F.sum("x").cast("bigint").alias("sx"),
+                F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),
+                F.sum("uq").cast("bigint").alias("su"),
+                F.sum(F.col("x") * F.col("uq")).cast("bigint").alias("sxu"),
+                F.sum(F.col("uq").cast("decimal(38,0)") * F.col("uq"))
+                .cast("decimal(38,0)").alias("suu"))
+    nd2 = F.col("n").cast("double")
+    num = (nd2 * F.col("sxu").cast("double")
+           - F.col("sx").cast("double") * F.col("su").cast("double"))
+    r2 = (num * num
+          / ((nd2 * F.col("sxx").cast("double")
+              - F.col("sx").cast("double") * F.col("sx").cast("double"))
+             * (nd2 * F.col("suu").cast("double")
+                - F.col("su").cast("double") * F.col("su").cast("double"))))
+    return aux.select(
+        F.col("n").alias("n_hours"),
+        F.round(r2, 6).alias("r2_aux"),
+        F.round(nd2 * r2, 6).alias("bp_lm"),
+        (nd2 * r2 > F.lit(_BP_CHI2_95)).alias("heteroskedastic"))
+
+
+# ---------------------------------------------------------------------------
+# cost-sensitive operating point over the threshold sweep
+# ---------------------------------------------------------------------------
+
+# frozen unit costs in cents: a false positive wastes a 100-cent
+# incentive, a missed purchase forgoes 400 cents of margin
+_COST_FP = 100
+_COST_FN = 400
+
+_COST_CURVE_ORACLE = f"""
+WITH c AS (
+  SELECT event_type = 'purchase' AS pos,
+         CAST(round(value * 100, 0) AS BIGINT) AS xc
+  FROM events WHERE event_type IN ('click', 'purchase')
+), thr AS (
+  SELECT CAST(r * 5000 AS BIGINT) AS thr FROM range(1, 10) AS t(r)
+), cells AS (
+  SELECT thr,
+         CAST(COUNT(*) FILTER (WHERE NOT pos AND xc >= thr) AS BIGINT)
+           AS fp,
+         CAST(COUNT(*) FILTER (WHERE pos AND xc < thr) AS BIGINT) AS fn
+  FROM c CROSS JOIN thr GROUP BY thr
+), costed AS (
+  SELECT thr, fp, fn,
+         {_COST_FP} * fp + {_COST_FN} * fn AS expected_cost_cents
+  FROM cells
+)
+SELECT thr, fp, fn, expected_cost_cents,
+       expected_cost_cents = (SELECT MIN(expected_cost_cents) FROM costed)
+         AS is_min_cost
+FROM costed ORDER BY thr
+"""
+
+
+@register("ml_cost_curve_threshold", oracle=_COST_CURVE_ORACLE)
+def ml_cost_curve_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cost-sensitive operating point: expected misclassification cost
+    100·FP + 400·FN cents (frozen asymmetric cost matrix) at each of
+    the nine sweep thresholds, with the cost-minimizing row flagged — the
+    business-decision layer above ml_optimal_f1_threshold (F1 weighs
+    the two error types equally; deployments almost never do, and the
+    frozen asymmetric cost matrix is exactly how that enters). Every
+    quantity is an exact integer: counts from one conditional fold,
+    costs pure integer arithmetic, argmin by integer comparison
+    against a broadcast 1-row minimum.
+
+    Scale shape: the ×9 sweep is one broadcast-spine conditional fold
+    (one corpus pass); the min is a 9-row fold broadcast back."""
+    ev = (load_table(spark, "events", sf_dir)
+          .where(F.col("event_type").isin("click", "purchase")))
+    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    c = ev.select((F.col("event_type") == "purchase").alias("pos"),
+                  xc.alias("xc"))
+    thresholds = spark.range(1, 10).select(
+        (F.col("id") * 5000).cast("bigint").alias("thr"))
+    pred = F.col("xc") >= F.col("thr")
+    cells = (c.crossJoin(F.broadcast(thresholds))
+             .groupBy("thr")
+             .agg(F.count(F.when(~F.col("pos") & pred, 1)).cast("bigint")
+                  .alias("fp"),
+                  F.count(F.when(F.col("pos") & ~pred, 1)).cast("bigint")
+                  .alias("fn")))
+    costed = cells.select(
+        "thr", "fp", "fn",
+        (F.lit(_COST_FP) * F.col("fp") + F.lit(_COST_FN) * F.col("fn"))
+        .alias("expected_cost_cents"))
+    mn = costed.agg(F.min("expected_cost_cents").alias("mc"))
+    return (costed.crossJoin(F.broadcast(mn))
+            .select("thr", "fp", "fn", "expected_cost_cents",
+                    (F.col("expected_cost_cents") == F.col("mc"))
+                    .alias("is_min_cost"))
+            .orderBy("thr"))
+
+
+# ---------------------------------------------------------------------------
+# Welch's heteroskedastic one-way ANOVA
+# ---------------------------------------------------------------------------
+
+_WELCH_ANOVA_ORACLE = """
+WITH c AS (
+  SELECT event_type AS t, CAST(round(value * 100, 0) AS BIGINT) AS xc
+  FROM events
+), per AS (
+  SELECT t, CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(xc) AS BIGINT) AS s1,
+         CAST(SUM(CAST(xc AS DECIMAL(38,0)) * xc) AS DECIMAL(38,0)) AS s2
+  FROM c GROUP BY t
+), g AS (
+  SELECT t, n,
+         CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) AS mu,
+         CAST(n AS DOUBLE)
+           / ((CAST(s2 AS DOUBLE)
+               - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
+                 / CAST(n AS DOUBLE)) / CAST(n - 1 AS DOUBLE)) AS w
+  FROM per
+), f1 AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS k,
+         list_sum(list(w ORDER BY t)) AS bigw,
+         list_sum(list(w * mu ORDER BY t)) AS swmu
+  FROM g
+), f2 AS (
+  SELECT f1.k, f1.bigw,
+         list_sum(list(g.w * (g.mu - f1.swmu / f1.bigw)
+                           * (g.mu - f1.swmu / f1.bigw) ORDER BY g.t))
+           AS a_term,
+         list_sum(list((1.0 - g.w / f1.bigw) * (1.0 - g.w / f1.bigw)
+                       / CAST(g.n - 1 AS DOUBLE) ORDER BY g.t)) AS b_term
+  FROM g CROSS JOIN f1 GROUP BY f1.k, f1.bigw
+)
+SELECT k AS n_groups,
+       round(a_term / (CAST(k AS DOUBLE) - 1.0)
+             / (1.0 + 2.0 * (CAST(k AS DOUBLE) - 2.0)
+                      / (CAST(k AS DOUBLE) * CAST(k AS DOUBLE) - 1.0)
+                      * b_term), 6) AS welch_f,
+       round((CAST(k AS DOUBLE) * CAST(k AS DOUBLE) - 1.0)
+             / (3.0 * b_term), 6) AS df2_welch
+FROM f2
+"""
+
+
+@register("stat_welch_anova", oracle=_WELCH_ANOVA_ORACLE)
+def stat_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Welch's heteroskedastic one-way ANOVA across the five event
+    types — what stat_anova_oneway_f should become once
+    stat_bartlett_test says the variances are UNEQUAL (classic ANOVA's
+    pooled variance is exactly the assumption Welch drops, weighting
+    each group by nᵢ/sᵢ²). Per-group moments are exact
+    BIGINT/decimal(38,0); the three cross-group float reductions
+    (ΣW, Σw·x̄ and then the A/B terms that depend on them) run as
+    FIXED-ORDER 5-term list folds in both engines (the
+    stat_anova_oneway_f rule), so no float sum depends on
+    partitioning; df₂ = (k²−1)/(3B) is the Welch–Satterthwaite
+    denominator d.f.
+
+    Scale shape: one combinable 5-group moment fold; both ordered
+    folds run over 5 rows — data-size-free after the first fold."""
+    ev = load_table(spark, "events", sf_dir)
+    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    per = (ev.select(F.col("event_type").alias("t"), xc.alias("xc"))
+           .groupBy("t")
+           .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
+                F.sum("xc").cast("bigint").alias("s1"),
+                F.sum(F.col("xc").cast("decimal(38,0)") * F.col("xc"))
+                .cast("decimal(38,0)").alias("s2")))
+    mu = F.col("s1").cast("double") / F.col("n").cast("double")
+    w = (F.col("n").cast("double")
+         / ((F.col("s2").cast("double")
+             - F.col("s1").cast("double") * F.col("s1").cast("double")
+               / F.col("n").cast("double"))
+            / (F.col("n") - 1).cast("double")))
+    g = per.select("t", "n", mu.alias("mu"), w.alias("w"))
+
+    def ofold(expr, name):
+        return F.aggregate(
+            F.array_sort(F.collect_list(F.struct(F.col("t"),
+                                                 expr.alias("x")))),
+            F.lit(0.0), lambda acc, s: acc + s["x"]).alias(name)
+
+    f1 = g.agg(F.count(F.lit(1)).cast("bigint").alias("k"),
+               ofold(F.col("w"), "bigw"),
+               ofold(F.col("w") * F.col("mu"), "swmu"))
+    j = g.crossJoin(F.broadcast(f1))
+    mw = F.col("swmu") / F.col("bigw")
+    f2 = (j.groupBy("k", "bigw")
+          .agg(ofold(F.col("w") * (F.col("mu") - mw)
+                     * (F.col("mu") - mw), "a_term"),
+               ofold((F.lit(1.0) - F.col("w") / F.col("bigw"))
+                     * (F.lit(1.0) - F.col("w") / F.col("bigw"))
+                     / (F.col("n") - 1).cast("double"), "b_term")))
+    kd = F.col("k").cast("double")
+    welch_f = (F.col("a_term") / (kd - 1.0)
+               / (F.lit(1.0) + 2.0 * (kd - 2.0) / (kd * kd - 1.0)
+                  * F.col("b_term")))
+    return f2.select(
+        F.col("k").alias("n_groups"),
+        F.round(welch_f, 6).alias("welch_f"),
+        F.round((kd * kd - 1.0) / (3.0 * F.col("b_term")), 6)
+        .alias("df2_welch"))
+
+
+# ---------------------------------------------------------------------------
+# Cronbach's alpha (internal consistency of the five hourly streams)
+# ---------------------------------------------------------------------------
+
+_CRONBACH_ORACLE = """
+WITH hours AS (
+  SELECT DISTINCT date_trunc('hour', ts) AS h FROM events
+), types AS (
+  SELECT DISTINCT event_type AS t FROM events
+), obs AS (
+  SELECT date_trunc('hour', ts) AS h, event_type AS t,
+         CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS x
+  FROM events GROUP BY 1, 2
+), grid AS (
+  SELECT hours.h, types.t, COALESCE(obs.x, 0) AS x
+  FROM hours CROSS JOIN types
+  LEFT JOIN obs ON obs.h = hours.h AND obs.t = types.t
+), item AS (
+  SELECT t, CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(x) AS BIGINT) AS s1,
+         CAST(SUM(CAST(x AS DECIMAL(38,0)) * x) AS DECIMAL(38,0)) AS s2
+  FROM grid GROUP BY t
+), iv AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS k, CAST(MAX(n) AS BIGINT) AS n_obs,
+         list_sum(list((CAST(s2 AS DOUBLE)
+                        - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
+                          / CAST(n AS DOUBLE)) / CAST(n - 1 AS DOUBLE)
+                       ORDER BY t)) AS sum_item_var
+  FROM item
+), rowsum AS (
+  SELECT h, CAST(SUM(x) AS BIGINT) AS r FROM grid GROUP BY h
+), tv AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(r) AS BIGINT) AS s1,
+         CAST(SUM(CAST(r AS DECIMAL(38,0)) * r) AS DECIMAL(38,0)) AS s2
+  FROM rowsum
+)
+SELECT iv.k AS k_items, iv.n_obs,
+       round(iv.sum_item_var / 10000.0, 6) AS sum_item_var_d2,
+       round((CAST(tv.s2 AS DOUBLE)
+              - CAST(tv.s1 AS DOUBLE) * CAST(tv.s1 AS DOUBLE)
+                / CAST(tv.n AS DOUBLE)) / CAST(tv.n - 1 AS DOUBLE)
+             / 10000.0, 6) AS total_var_d2,
+       round(CAST(iv.k AS DOUBLE) / (CAST(iv.k AS DOUBLE) - 1.0)
+             * (1.0 - iv.sum_item_var
+                      / ((CAST(tv.s2 AS DOUBLE)
+                          - CAST(tv.s1 AS DOUBLE) * CAST(tv.s1 AS DOUBLE)
+                            / CAST(tv.n AS DOUBLE))
+                         / CAST(tv.n - 1 AS DOUBLE))), 6)
+         AS cronbach_alpha
+FROM iv CROSS JOIN tv
+"""
+
+
+@register("stat_cronbach_alpha", oracle=_CRONBACH_ORACLE)
+def stat_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cronbach's alpha over the five hourly revenue streams treated as
+    scale items (observations = hours, items = event types):
+    α = k/(k−1)·(1 − Σvarᵢ/var_total) — the do-these-series-move-
+    together internal-consistency coefficient psychometrics
+    standardized, and in a metrics platform the one-number check that a
+    composite 'engagement' index isn't averaging five unrelated
+    signals. The hour×type grid is DENSIFIED (missing cells are true
+    zeros — both engines build the same cross join), every variance
+    comes off exact integer/decimal moments, and the one cross-item
+    float sum is the fixed-order 5-term list fold.
+
+    Scale shape: one (hour, type) fold (calendar-bounded output), one
+    ≤8784×5 grid, two moment folds — data-size-free after the first
+    fold."""
+    ev = load_table(spark, "events", sf_dir)
+    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    obs = (ev.select(F.date_trunc("hour", F.col("ts")).alias("h"),
+                     F.col("event_type").alias("t"), xc.alias("c"))
+           .groupBy("h", "t")
+           .agg(F.sum("c").cast("bigint").alias("x")))
+    hours = obs.select("h").distinct()
+    types = obs.select("t").distinct()
+    grid = (hours.crossJoin(F.broadcast(types))
+            .join(obs, ["h", "t"], "left")
+            .select("h", "t", F.coalesce("x", F.lit(0)).alias("x"))
+            .localCheckpoint(eager=False))  # item + rowsum folds share it
+    item = (grid.groupBy("t")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
+                 F.sum("x").cast("bigint").alias("s1"),
+                 F.sum(F.col("x").cast("decimal(38,0)") * F.col("x"))
+                 .cast("decimal(38,0)").alias("s2")))
+    var_i = ((F.col("s2").cast("double")
+              - F.col("s1").cast("double") * F.col("s1").cast("double")
+                / F.col("n").cast("double"))
+             / (F.col("n") - 1).cast("double"))
+    iv = item.agg(
+        F.count(F.lit(1)).cast("bigint").alias("k"),
+        F.max("n").cast("bigint").alias("n_obs"),
+        F.aggregate(
+            F.array_sort(F.collect_list(F.struct(F.col("t"),
+                                                 var_i.alias("v")))),
+            F.lit(0.0), lambda acc, s: acc + s["v"]).alias("sum_item_var"))
+    rowsum = (grid.groupBy("h")
+              .agg(F.sum("x").cast("bigint").alias("r")))
+    tv = rowsum.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("r").cast("bigint").alias("s1"),
+        F.sum(F.col("r").cast("decimal(38,0)") * F.col("r"))
+        .cast("decimal(38,0)").alias("s2"))
+    var_t = ((F.col("s2").cast("double")
+              - F.col("s1").cast("double") * F.col("s1").cast("double")
+                / F.col("n").cast("double"))
+             / (F.col("n") - 1).cast("double"))
+    kd = F.col("k").cast("double")
+    return (iv.crossJoin(F.broadcast(tv))
+            .select(F.col("k").alias("k_items"), "n_obs",
+                    F.round(F.col("sum_item_var") / 10000.0, 6)
+                    .alias("sum_item_var_d2"),
+                    F.round(var_t / 10000.0, 6).alias("total_var_d2"),
+                    F.round(kd / (kd - 1.0)
+                            * (F.lit(1.0)
+                               - F.col("sum_item_var") / var_t), 6)
+                    .alias("cronbach_alpha")))
+
+
+# ---------------------------------------------------------------------------
+# fixed-effect meta-analysis pooling (inverse-variance)
+# ---------------------------------------------------------------------------
+
+_META_Z95 = 1.959963984540054  # frozen two-sided 95% normal quantile
+
+_META_ORACLE = f"""
+WITH c AS (
+  -- DuckDB dayofweek is 0-based Sunday, Spark is 1-based: +1 aligns
+  SELECT CAST(dayofweek(ts) + 1 AS BIGINT) AS dow,
+         event_type = 'click' AS is1,
+         CAST(round(value * 100, 0) AS BIGINT) AS xc
+  FROM events WHERE event_type IN ('click', 'purchase')
+), per AS (
+  SELECT dow,
+    CAST(COUNT(*) FILTER (WHERE is1) AS BIGINT) AS n1,
+    CAST(SUM(xc) FILTER (WHERE is1) AS BIGINT) AS s1,
+    CAST(SUM(CAST(xc AS DECIMAL(38,0)) * xc) FILTER (WHERE is1)
+         AS DECIMAL(38,0)) AS ss1,
+    CAST(COUNT(*) FILTER (WHERE NOT is1) AS BIGINT) AS n2,
+    CAST(SUM(xc) FILTER (WHERE NOT is1) AS BIGINT) AS s2,
+    CAST(SUM(CAST(xc AS DECIMAL(38,0)) * xc) FILTER (WHERE NOT is1)
+         AS DECIMAL(38,0)) AS ss2
+  FROM c GROUP BY dow
+), study AS (
+  SELECT dow,
+         CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)
+           - CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE) AS theta,
+         ((CAST(ss1 AS DOUBLE)
+           - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE))
+          / CAST(n1 - 1 AS DOUBLE)) / CAST(n1 AS DOUBLE)
+         + ((CAST(ss2 AS DOUBLE)
+             - CAST(s2 AS DOUBLE) * CAST(s2 AS DOUBLE)
+               / CAST(n2 AS DOUBLE))
+            / CAST(n2 - 1 AS DOUBLE)) / CAST(n2 AS DOUBLE) AS v
+  FROM per
+), f1 AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS k,
+         list_sum(list(1.0 / v ORDER BY dow)) AS sw,
+         list_sum(list(theta / v ORDER BY dow)) AS swt
+  FROM study
+), f2 AS (
+  SELECT f1.k, f1.sw, f1.swt,
+         list_sum(list((study.theta - f1.swt / f1.sw)
+                       * (study.theta - f1.swt / f1.sw) / study.v
+                       ORDER BY study.dow)) AS q
+  FROM study CROSS JOIN f1 GROUP BY f1.k, f1.sw, f1.swt
+)
+SELECT k AS k_studies,
+       round(swt / sw / 100.0, 6) AS pooled_diff_dollars,
+       round((swt / sw - {_META_Z95!r} * sqrt(1.0 / sw)) / 100.0, 6)
+         AS ci_lo_dollars,
+       round((swt / sw + {_META_Z95!r} * sqrt(1.0 / sw)) / 100.0, 6)
+         AS ci_hi_dollars,
+       round(q, 6) AS q_heterogeneity,
+       round(CASE WHEN q > CAST(k - 1 AS DOUBLE)
+                  THEN (q - CAST(k - 1 AS DOUBLE)) / q ELSE 0.0 END, 6)
+         AS i_squared
+FROM f2
+"""
+
+
+@register("stat_meta_fixed_effect_pool", oracle=_META_ORACLE)
+def stat_meta_fixed_effect_pool(spark: SparkSession,
+                                sf_dir: str) -> DataFrame:
+    """Fixed-effect (inverse-variance) meta-analysis of the
+    click-vs-purchase mean gap across seven day-of-week strata treated
+    as independent studies: pooled estimate θ̂ = Σwθ/Σw with w = 1/v,
+    its 95%% CI (frozen normal quantile), Cochran's heterogeneity Q
+    and I² = (Q−(k−1))/Q — the does-the-effect-replicate-across-strata
+    machinery every experimentation platform needs once a metric is
+    read by segment (and the formal version of eyeballing seven
+    per-dow Welch tests). Per-stratum moments are exact
+    BIGINT/decimal(38,0); the cross-stratum float reductions are
+    FIXED-ORDER 7-term list folds (the stat_welch_anova rule), two
+    passes because Q needs θ̂.
+
+    Scale shape: one combinable 7-group six-sum fold; both ordered
+    folds run over 7 rows — data-size-free after the first fold."""
+    ev = (load_table(spark, "events", sf_dir)
+          .where(F.col("event_type").isin("click", "purchase")))
+    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    is1 = F.col("event_type") == "click"
+    per = (ev.select(F.dayofweek("ts").cast("bigint").alias("dow"),
+                     is1.alias("is1"), xc.alias("xc"))
+           .groupBy("dow")
+           .agg(F.count(F.when(F.col("is1"), 1)).cast("bigint").alias("n1"),
+                F.sum(F.when(F.col("is1"), F.col("xc"))).cast("bigint")
+                .alias("s1"),
+                F.sum(F.when(F.col("is1"),
+                             F.col("xc").cast("decimal(38,0)")
+                             * F.col("xc"))).cast("decimal(38,0)")
+                .alias("ss1"),
+                F.count(F.when(~F.col("is1"), 1)).cast("bigint")
+                .alias("n2"),
+                F.sum(F.when(~F.col("is1"), F.col("xc"))).cast("bigint")
+                .alias("s2"),
+                F.sum(F.when(~F.col("is1"),
+                             F.col("xc").cast("decimal(38,0)")
+                             * F.col("xc"))).cast("decimal(38,0)")
+                .alias("ss2")))
+    m1 = F.col("s1").cast("double") / F.col("n1").cast("double")
+    m2 = F.col("s2").cast("double") / F.col("n2").cast("double")
+    v1 = ((F.col("ss1").cast("double")
+           - F.col("s1").cast("double") * F.col("s1").cast("double")
+             / F.col("n1").cast("double"))
+          / (F.col("n1") - 1).cast("double")) / F.col("n1").cast("double")
+    v2 = ((F.col("ss2").cast("double")
+           - F.col("s2").cast("double") * F.col("s2").cast("double")
+             / F.col("n2").cast("double"))
+          / (F.col("n2") - 1).cast("double")) / F.col("n2").cast("double")
+    study = per.select("dow", (m1 - m2).alias("theta"),
+                       (v1 + v2).alias("v"))
+
+    def ofold(expr, name):
+        return F.aggregate(
+            F.array_sort(F.collect_list(F.struct(F.col("dow"),
+                                                 expr.alias("x")))),
+            F.lit(0.0), lambda acc, s: acc + s["x"]).alias(name)
+
+    f1 = study.agg(F.count(F.lit(1)).cast("bigint").alias("k"),
+                   ofold(F.lit(1.0) / F.col("v"), "sw"),
+                   ofold(F.col("theta") / F.col("v"), "swt"))
+    pooled = F.col("swt") / F.col("sw")
+    f2 = (study.crossJoin(F.broadcast(f1))
+          .groupBy("k", "sw", "swt")
+          .agg(ofold((F.col("theta") - pooled) * (F.col("theta") - pooled)
+                     / F.col("v"), "q")))
+    kd = (F.col("k") - 1).cast("double")
+    se = F.sqrt(F.lit(1.0) / F.col("sw"))
+    return f2.select(
+        F.col("k").alias("k_studies"),
+        F.round(pooled / 100.0, 6).alias("pooled_diff_dollars"),
+        F.round((pooled - F.lit(_META_Z95) * se) / 100.0, 6)
+        .alias("ci_lo_dollars"),
+        F.round((pooled + F.lit(_META_Z95) * se) / 100.0, 6)
+        .alias("ci_hi_dollars"),
+        F.round(F.col("q"), 6).alias("q_heterogeneity"),
+        F.round(F.when(F.col("q") > kd,
+                       (F.col("q") - kd) / F.col("q"))
+                .otherwise(F.lit(0.0)), 6).alias("i_squared"))
+
+
+# ---------------------------------------------------------------------------
+# process capability indices (Cp / Cpk)
+# ---------------------------------------------------------------------------
+
+_CAP_LSL = 500     # spec limits in cents, frozen
+_CAP_USL = 30000
+
+_CAPABILITY_ORACLE = f"""
+WITH c AS (
+  SELECT CAST(round(value * 100, 0) AS BIGINT) AS xc
+  FROM events WHERE event_type = 'purchase'
+), s AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(xc) AS BIGINT) AS s1,
+         CAST(SUM(CAST(xc AS DECIMAL(38,0)) * xc) AS DECIMAL(38,0)) AS s2,
+         CAST(COUNT(*) FILTER (WHERE xc < {_CAP_LSL}
+                                  OR xc > {_CAP_USL}) AS BIGINT)
+           AS n_out
+  FROM c
+)
+SELECT n, n_out,
+       round(CAST(n_out AS DOUBLE) / CAST(n AS DOUBLE), 6)
+         AS out_of_spec_share,
+       round(({_CAP_USL} - {_CAP_LSL})
+             / (6.0 * sqrt((CAST(s2 AS DOUBLE)
+                            - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
+                              / CAST(n AS DOUBLE))
+                           / CAST(n - 1 AS DOUBLE))), 6) AS cp,
+       round(LEAST({_CAP_USL} - CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE),
+                   CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) - {_CAP_LSL})
+             / (3.0 * sqrt((CAST(s2 AS DOUBLE)
+                            - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
+                              / CAST(n AS DOUBLE))
+                           / CAST(n - 1 AS DOUBLE))), 6) AS cpk
+FROM s
+"""
+
+
+@register("stat_capability_indices", oracle=_CAPABILITY_ORACLE)
+def stat_capability_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Process capability Cp/Cpk of purchase values against frozen spec
+    limits (5–300 dollars): Cp = spec width / 6σ (what the process
+    COULD hold if centered), Cpk = nearest-limit margin / 3σ (what it
+    ACTUALLY holds) — the SPC capability pair beside the control-chart
+    family (ts_cusum_drift, ts_bollinger_bands watch stability over
+    time; capability scores the distribution against the tolerance).
+    Moments and the out-of-spec count are exact folds; each index is
+    one identical double tree.
+
+    Scale shape: ONE combinable four-sum fold to a single row."""
+    ev = (load_table(spark, "events", sf_dir)
+          .where(F.col("event_type") == "purchase"))
+    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    s = ev.select(xc.alias("xc")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("xc").cast("bigint").alias("s1"),
+        F.sum(F.col("xc").cast("decimal(38,0)") * F.col("xc"))
+        .cast("decimal(38,0)").alias("s2"),
+        F.count(F.when((F.col("xc") < _CAP_LSL)
+                       | (F.col("xc") > _CAP_USL), 1)).cast("bigint")
+        .alias("n_out"))
+    nd = F.col("n").cast("double")
+    mu = F.col("s1").cast("double") / nd
+    sd = F.sqrt((F.col("s2").cast("double")
+                 - F.col("s1").cast("double") * F.col("s1").cast("double")
+                   / nd) / (F.col("n") - 1).cast("double"))
+    return s.select(
+        "n", "n_out",
+        F.round(F.col("n_out").cast("double") / nd, 6)
+        .alias("out_of_spec_share"),
+        F.round(F.lit(float(_CAP_USL - _CAP_LSL)) / (6.0 * sd), 6)
+        .alias("cp"),
+        F.round(F.least(F.lit(float(_CAP_USL)) - mu,
+                        mu - F.lit(float(_CAP_LSL))) / (3.0 * sd), 6)
+        .alias("cpk"))
+
+
+# ---------------------------------------------------------------------------
+# DataFrameStatFunctions crosstab (round 5, batch 15)
+# ---------------------------------------------------------------------------
+
+_CROSSTAB_ORACLE = """
+SELECT o_orderpriority AS o_orderpriority_k3,
+       CAST(COUNT(*) FILTER (WHERE o_orderkey % 3 = 0) AS BIGINT) AS "0",
+       CAST(COUNT(*) FILTER (WHERE o_orderkey % 3 = 1) AS BIGINT) AS "1",
+       CAST(COUNT(*) FILTER (WHERE o_orderkey % 3 = 2) AS BIGINT) AS "2"
+FROM orders GROUP BY o_orderpriority
+"""
+
+
+@register("stat_crosstab", oracle=_CROSSTAB_ORACLE)
+def stat_crosstab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`df.stat.crosstab` — the contingency-table member of Spark's
+    DataFrameStatFunctions surface: pairwise frequency counts with the
+    second column's values becoming columns. The pivot key is
+    `o_orderkey % 3` (all residues present at every SF, so the output
+    schema is corpus-independent — a data-dependent category set would
+    make the column list itself flaky at small scales). The oracle is
+    the FILTER-clause expansion, proving crosstab is exactly a
+    conditional-count pivot.
+
+    Scale shape: one hash aggregate on the pair key then a tiny pivot;
+    the category space, not the row count, bounds the output."""
+    o = load_table(spark, "orders", sf_dir).select(
+        "o_orderpriority", (F.col("o_orderkey") % 3).cast("string").alias("k3"))
+    ct = o.stat.crosstab("o_orderpriority", "k3")
+    return ct.select("o_orderpriority_k3",
+                     F.col("0").cast("bigint").alias("0"),
+                     F.col("1").cast("bigint").alias("1"),
+                     F.col("2").cast("bigint").alias("2"))
+
+
+# ---------------------------------------------------------------------------
+# chi-square independence cells (round 6)
+# ---------------------------------------------------------------------------
+
+_CHI2_ORACLE = """
+WITH cells AS (
+  SELECT event_type, CAST(user_id % 3 AS BIGINT) AS bucket,
+         CAST(COUNT(*) AS BIGINT) AS obs
+  FROM events GROUP BY event_type, CAST(user_id % 3 AS BIGINT)
+), tot AS (
+  SELECT event_type, bucket, obs,
+         SUM(obs) OVER (PARTITION BY event_type) AS row_n,
+         SUM(obs) OVER (PARTITION BY bucket) AS col_n,
+         SUM(obs) OVER () AS grand_n
+  FROM cells
+)
+SELECT event_type, bucket, obs,
+       CAST(row_n * col_n AS DOUBLE) / CAST(grand_n AS DOUBLE) AS expected,
+       (CAST(obs AS DOUBLE)
+        - CAST(row_n * col_n AS DOUBLE) / CAST(grand_n AS DOUBLE))
+       * (CAST(obs AS DOUBLE)
+          - CAST(row_n * col_n AS DOUBLE) / CAST(grand_n AS DOUBLE))
+       / (CAST(row_n * col_n AS DOUBLE) / CAST(grand_n AS DOUBLE))
+         AS chi2_contrib
+FROM tot
+"""
+
+
+@register("stat_chi_square_independence", oracle=_CHI2_ORACLE)
+def stat_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Chi-square independence test cells for event_type × user-bucket —
+    the drift/bias check a data team runs on categorical columns (is the
+    event mix independent of the user cohort?). Emits PER-CELL observed,
+    expected (row·col/grand, all integer counts until the final
+    division) and chi² contribution — per-cell rather than the summed
+    statistic, deliberately: the cross-cell float SUM is
+    association-order-dependent across engines, while each cell's value
+    is a fixed tree of correctly-rounded IEEE ops (int→double divisions,
+    one subtract, one multiply, one divide) and hashes exactly. The cell
+    table is also the more useful artifact (WHICH cell drives the
+    drift).
+
+    Scale shape: one groupBy to a (types × buckets)-sized cell table;
+    marginals are windows over that tiny table, not the events."""
+    ev = load_table(spark, "events", sf_dir)
+    cells = (ev.groupBy("event_type",
+                        (F.col("user_id") % 3).cast("bigint").alias("bucket"))
+             .agg(F.count(F.lit(1)).cast("bigint").alias("obs")))
+    tot = cells.select(
+        "event_type", "bucket", "obs",
+        F.sum("obs").over(Window.partitionBy("event_type")).alias("row_n"),
+        F.sum("obs").over(Window.partitionBy("bucket")).alias("col_n"),
+        F.sum("obs").over(
+            Window.partitionBy(F.lit(1))).alias("grand_n"))
+    expected = ((F.col("row_n") * F.col("col_n")).cast("double")
+                / F.col("grand_n").cast("double"))
+    dev = F.col("obs").cast("double") - expected
+    return tot.select("event_type", "bucket", "obs",
+                      expected.alias("expected"),
+                      (dev * dev / expected).alias("chi2_contrib"))
+
+
+# ---------------------------------------------------------------------------
+# Markov entropy rate (round 6)
+# ---------------------------------------------------------------------------
+
+_ENTROPY_RATE_ORACLE = """
+WITH seq AS (
+  SELECT user_id, event_type,
+         lag(event_type) OVER (PARTITION BY user_id
+                               ORDER BY ts, event_id) AS prev
+  FROM events
+), cells AS (
+  SELECT prev, event_type AS cur, CAST(COUNT(*) AS BIGINT) AS c
+  FROM seq WHERE prev IS NOT NULL GROUP BY prev, event_type
+), rows_ AS (
+  SELECT prev, cur, c,
+         CAST(SUM(c) OVER (PARTITION BY prev) AS BIGINT) AS c_i,
+         CAST(SUM(c) OVER () AS BIGINT) AS n
+  FROM cells
+), contrib AS (
+  SELECT prev, cur,
+         -(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
+           * ln(CAST(c AS DOUBLE) / CAST(c_i AS DOUBLE)) AS t,
+         n
+  FROM rows_
+)
+SELECT CAST(MAX(n) AS BIGINT) AS n_transitions,
+       round(list_sum(list(t ORDER BY prev, cur)), 6)
+         AS entropy_rate_nats
+FROM contrib
+"""
+
+
+@register("stat_entropy_rate_markov", oracle=_ENTROPY_RATE_ORACLE)
+def stat_entropy_rate_markov(spark: SparkSession,
+                             sf_dir: str) -> DataFrame:
+    """Entropy rate of the first-order journey process:
+    H(X_t | X_{t-1}) = -sum_ij p(i,j) ln p(j|i) over
+    seq_markov_transitions' own cell table -- HOW PREDICTABLE the next
+    user step is in one number (0 = deterministic flows, ln 5 =
+    uniform), the summary that says whether the transition matrix is
+    worth acting on at all. Cell and row-marginal counts are exact
+    integers; each cell's contribution is the standard tree; the ONE
+    cross-cell float sum folds in FIXED (prev, cur) order (the
+    stat_anova_oneway_f rule) and rounds 6 dp (ln).
+
+    Scale shape: one user-keyed lag window, a 25-cell combinable
+    groupBy, windows and the ordered fold over those 25 rows."""
+    ev = load_table(spark, "events", sf_dir)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = ev.select(F.col("event_type").alias("cur"),
+                    F.lag("event_type").over(w).alias("prev"))
+    cells = (seq.where(F.col("prev").isNotNull())
+             .groupBy("prev", "cur")
+             .agg(F.count(F.lit(1)).cast("bigint").alias("c")))
+    c_i = F.sum("c").over(Window.partitionBy("prev")).cast("bigint")
+    n = F.sum("c").over(Window.partitionBy()).cast("bigint")
+    rows_ = cells.select("prev", "cur", "c", c_i.alias("c_i"),
+                         n.alias("n"))
+    t = (-(F.col("c").cast("double") / F.col("n").cast("double"))
+         * F.log(F.col("c").cast("double") / F.col("c_i").cast("double")))
+    contrib = rows_.select("prev", "cur", t.alias("t"), "n")
+    return contrib.agg(
+        F.max("n").cast("bigint").alias("n_transitions"),
+        F.round(F.aggregate(
+            F.array_sort(F.collect_list(
+                F.struct(F.col("prev"), F.col("cur"), F.col("t")))),
+            F.lit(0.0), lambda acc, x: acc + x["t"]), 6)
+        .alias("entropy_rate_nats"))
+
+
+# ---------------------------------------------------------------------------
+# Ljung-Box white-noise test on the ACF chain (round 6)
+# ---------------------------------------------------------------------------
+
+_LJUNG_ORACLE = f"""
+WITH acf_tab AS ({_ACF_ORACLE}
+), nser AS (
+  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
+  FROM (SELECT DISTINCT event_type, date_trunc('hour', ts)
+        FROM events) GROUP BY event_type
+), terms AS (
+  SELECT a.event_type, a.lag, nser.n,
+         a.acf * a.acf / (CAST(nser.n AS DOUBLE) - CAST(a.lag AS DOUBLE))
+           AS t
+  FROM acf_tab a JOIN nser ON a.event_type = nser.event_type
+)
+SELECT event_type, CAST(MAX(n) AS BIGINT) AS n_obs,
+       CAST(COUNT(*) AS BIGINT) AS n_lags,
+       round(CAST(MAX(n) AS DOUBLE) * (CAST(MAX(n) AS DOUBLE) + 2.0)
+             * list_sum(list(t ORDER BY lag)), 6) AS ljung_box_q
+FROM terms GROUP BY event_type
+"""
+
+
+@register("stat_ljung_box_q", oracle=_LJUNG_ORACLE)
+def stat_ljung_box_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ljung-Box Q over ts_acf_multi_lag's OWN 24-lag ACF table -- is
+    the hourly series white noise, or is the autocorrelation structure
+    real? Q = n(n+2) * sum_k r_k^2/(n-k): large Q rejects
+    independence, the formal gate before trusting any of the
+    periodicity/trend readouts the ACF suggests visually. The r_k come
+    off the same bit-identical Pearson chain as the ACF operator
+    (shared HUGEINT moments + identical tree); the ONE cross-lag float
+    sum folds in FIXED lag order (the stat_anova_oneway_f rule) and Q
+    rounds 6 dp.
+
+    Scale shape: the ACF chain's own shapes (calendar-bounded series,
+    broadcast lag spine); the Q fold runs over 24 rows per type."""
+    acf = ts_acf_multi_lag(spark, sf_dir) \
+        .select("event_type", "lag", "acf")
+    ev = load_table(spark, "events", sf_dir)
+    nser = (ev.select("event_type",
+                      F.date_trunc("hour", "ts").alias("hr")).distinct()
+            .groupBy("event_type")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n")))
+    terms = (acf.join(nser, "event_type")
+             .select("event_type", "lag", "n",
+                     (F.col("acf") * F.col("acf")
+                      / (F.col("n").cast("double")
+                         - F.col("lag").cast("double"))).alias("t")))
+    nd = F.max("n").cast("double")
+    return (terms.groupBy("event_type")
+            .agg(F.max("n").cast("bigint").alias("n_obs"),
+                 F.count(F.lit(1)).cast("bigint").alias("n_lags"),
+                 F.round(nd * (nd + F.lit(2.0))
+                         * F.aggregate(
+                             F.array_sort(F.collect_list(
+                                 F.struct(F.col("lag"),
+                                          F.col("t").alias("v")))),
+                             F.lit(0.0),
+                             lambda acc, x: acc + x["v"]), 6)
+                 .alias("ljung_box_q")))

@@ -43,68 +43,17 @@ _MODULES = (
     "lambdatotheslaughter_spark.operators.streaming_twins",
     "lambdatotheslaughter_spark.operators.llm",
     "lambdatotheslaughter_spark.operators.udfs",
-    "lambdatotheslaughter_spark.operators.extras",
     "lambdatotheslaughter_spark.operators.skew",
     "lambdatotheslaughter_spark.operators.graph",
     "lambdatotheslaughter_spark.operators.corpus",
     "lambdatotheslaughter_spark.operators.stats",
-    "lambdatotheslaughter_spark.operators.round7",
-    "lambdatotheslaughter_spark.operators.round7b",
+    "lambdatotheslaughter_spark.operators.timeseries",
+    "lambdatotheslaughter_spark.operators.sequences",
+    "lambdatotheslaughter_spark.operators.quality",
+    "lambdatotheslaughter_spark.operators.sql",
 )
 
 _loaded = False
-
-# Driver-slot ordering. The driver's CORRECTNESS report verifies the FIRST
-# 50 entries of ``queries()`` (dict insertion order) per round. Rounds 1-6
-# rotated six disjoint windows -- 285 keys driver-checked, zero hash
-# failures. This list is NOT hand-counted (the r5/r6 bookkeeping nit):
-# ``python tools/rotation.py`` derives the never-slotted oracled pool from
-# the CORRECTNESS_r*.json union, and ``tools/rotation.py --check`` (run by
-# tests/test_survey_coverage.py) fails if any slot below wastes a round on
-# an already-verified key.
-#
-# ROUND 12 window -- drain COMPLETION + re-verification (VERDICT r11 ask
-# #2): slots 1-15 are the FINAL 15 never-slotted oracled keys (the whole
-# remaining pool from ``python tools/rotation.py``, registration order) --
-# with them the driver-slotted union reaches 549/549 oracled keys. Slots
-# 16-50 are 35 RE-verification slots for the keys whose operator code was
-# optimized in r11/r12 after their last driver verification (the lsh/ann
-# trio's two oracled members, the resampling family, the graph kernels,
-# adamic-adar's pinned-width r12 shape, the r12-touched containment /
-# tuning-report / PPR / stream keys) plus the most expensive headline
-# residents for regression visibility. NO rows-only slots
-# (llm_sim_lsh_approx / llm_sim_ann_ivf stay pytest-gated per VERDICT r10
-# wrong #1). Addition freeze stays in force -- zero new keys.
-_ROWS_ONLY_SLOTS: tuple[str, ...] = ()
-
-_DRIVER_PRIORITY: tuple[str, ...] = (
-    # -- 15 never-slotted oracled keys (drain completion) --
-    'dq_volume_anomaly_daily', 'graph_local_bridges',
-    'seq_user_path_entropy', 'stat_welch_anova', 'stat_cronbach_alpha',
-    'llm_cross_lang_leakage', 'ts_turning_points_test',
-    'er_fellegi_sunter_scores', 'llm_watermark_greenlist_detect',
-    'seq_next_event_prediction_eval', 'agg_histogram_equi_depth',
-    'llm_select_top_quality_budget', 'graph_avg_neighbor_degree',
-    'stat_meta_fixed_effect_pool', 'stat_capability_indices',
-    # -- 35 re-verification slots (r11/r12-optimized + headline heavies) --
-    'graph_adamic_adar_linkpred', 'llm_sim_lsh_mllib',
-    'stat_bh_fdr_permutation', 'stat_bootstrap_poisson_ci',
-    'stat_permutation_test', 'graph_triangle_count',
-    'graph_jaccard_neighbors', 'graph_clustering_coefficient',
-    'sql_scripting_block', 'graph_pagerank_fixed',
-    'graph_personalized_pagerank', 'graph_hits_fixed',
-    'graph_bfs_distance', 'llm_sim_knn_quantized', 'ml_lift_gains_table',
-    'llm_pipeline_curation_v2', 'llm_repetition_score',
-    'llm_dedup_survivorship', 'llm_dedup_containment',
-    'llm_lsh_tuning_report', 'graph_closeness_harmonic_3hop',
-    'source_python_datasource_stream', 'graph_katz_centrality_fixed',
-    'graph_label_propagation_sync', 'ts_hurst_rs', 'llm_eval_chrf',
-    'llm_dedup_fuzzy_minhash', 'llm_dedup_cluster',
-    'llm_pipeline_end_to_end', 'seq_rfm_segments',
-    'llm_dedup_ngram_jaccard', 'graph_bipartite_copurchase',
-    'llm_fingerprint_winnow', 'scd2_dimension_merge',
-    'llm_eval_bleu_corpus',
-)
 
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -126,22 +75,15 @@ def _load() -> None:
         _loaded = True
 
 
-def _ordered() -> list[Registered]:
-    """Registry entries with _DRIVER_PRIORITY names first (in list order),
-    then everything else in registration order."""
-    _load()
-    prio = [_REGISTRY[n] for n in _DRIVER_PRIORITY if n in _REGISTRY]
-    listed = set(_DRIVER_PRIORITY)
-    rest = [r for n, r in _REGISTRY.items() if n not in listed]
-    return prio + rest
-
-
 def all_queries() -> dict[str, QueryFn]:
-    return {r.name: r.fn for r in _ordered()}
+    _load()
+    return {r.name: r.fn for r in _REGISTRY.values()}
 
 
 def all_oracles() -> dict[str, str]:
-    return {r.name: r.oracle for r in _ordered() if r.oracle is not None}
+    _load()
+    return {r.name: r.oracle for r in _REGISTRY.values()
+            if r.oracle is not None}
 
 
 def get(name: str) -> Registered:

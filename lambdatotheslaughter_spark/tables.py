@@ -172,9 +172,3 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
 
 def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     return {n: load_table(spark, n, sf_dir) for n in TABLE_NAMES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every table as a temp view so operators can use spark.sql."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

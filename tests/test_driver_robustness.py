@@ -5,12 +5,16 @@ timezone, 200 shuffle partitions, no nanosAsLong — in a fresh subprocess
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
+# the checkout under test, handed to the subprocess as argv[1]
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SCRIPT = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 import duckdb
 from pyspark.sql import SparkSession
 import __spark_entry__ as e
@@ -59,6 +63,6 @@ print("ALL_OK")
 
 
 def test_queries_survive_hostile_driver_session():
-    res = subprocess.run([sys.executable, "-c", SCRIPT],
+    res = subprocess.run([sys.executable, "-c", SCRIPT, _REPO_ROOT],
                          capture_output=True, text=True, timeout=600)
     assert "ALL_OK" in res.stdout, f"stdout={res.stdout[-2000:]}\nstderr={res.stderr[-2000:]}"

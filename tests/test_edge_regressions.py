@@ -180,13 +180,28 @@ def test_closeness_dedup_gate_branches_are_value_identical(spark, monkeypatch):
     over duplicate edges, so the two branches MUST be value-identical;
     this pins the dedup branch, which no sf tier below the gate
     exercises."""
-    from lambdatotheslaughter_spark.operators import round7b
+    from lambdatotheslaughter_spark.operators import graph
     from tests.conftest import SF_DIR
     fn = registry.get("graph_closeness_harmonic_3hop").fn
     fast = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-    monkeypatch.setattr(round7b, "_CLOSENESS_DEDUP_MIN_ROWS", 0)
+    monkeypatch.setattr(graph, "_CLOSENESS_DEDUP_MIN_ROWS", 0)
     deduped = sorted(map(tuple, fn(spark, SF_DIR).collect()))
     assert deduped == fast
+
+
+def test_connected_components_distributed_path_matches_oracle(
+        spark, duck, monkeypatch):
+    """Both connected-components keys solve a bounded edge list with a
+    driver union-find; above the cap they run the pointer-jumping loop
+    (llm._pointer_jump_labels), which no stock tier reaches. Force the
+    loop with a zero cap and hold both keys to their exact oracles."""
+    from lambdatotheslaughter_spark.operators import graph, llm
+    from tests.conftest import SF_DIR, assert_parity
+    monkeypatch.setattr(llm, "_CC_FASTPATH_MAX_EDGES", 0)
+    monkeypatch.setattr(graph, "_GRAPH_CC_FASTPATH_MAX_EDGES", 0)
+    for name in ("llm_dedup_cluster", "graph_connected_components"):
+        reg = registry.get(name)
+        assert_parity(reg.fn(spark, SF_DIR), duck, reg.oracle, name)
 
 
 def test_containment_dedup_gate_branches_are_value_identical(spark, monkeypatch):

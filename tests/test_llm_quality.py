@@ -138,7 +138,7 @@ def test_lsh_hot_bucket_cap_is_not_quadratic(spark):
 
 def test_verify_join_shuffle_path_matches_broadcast(spark, monkeypatch):
     """The LSH candidate-verify join is size-dispatched: broadcast below
-    SPARK_GRAFT_VERIFY_BROADCAST_MAX candidates, shuffle join above (a
+    _VERIFY_BROADCAST_MAX_PAIRS candidates, shuffle join above (a
     100 TB corpus's candidate count grows with duplicate mass and cannot
     be unconditionally broadcast). Force each dispatch on the same corpus
     — a forced-large fixture with planted near-dups plus a hot identical
@@ -147,8 +147,7 @@ def test_verify_join_shuffle_path_matches_broadcast(spark, monkeypatch):
     from pyspark.sql import functions as F
 
     from lambdatotheslaughter_spark.functions.text import shingles3, tokens
-    from lambdatotheslaughter_spark.operators.llm import (
-        _verified_near_dup_pairs)
+    from lambdatotheslaughter_spark.operators import llm
 
     base = "the quick brown fox jumps over the lazy dog near the river bank"
     rows = [(i, base + f" tail{i % 7}") for i in range(120)]
@@ -160,12 +159,12 @@ def test_verify_join_shuffle_path_matches_broadcast(spark, monkeypatch):
 
     def run():
         return {(r.a_id, r.b_id, round(r.jaccard, 9))
-                for r in _verified_near_dup_pairs(sh)
+                for r in llm._verified_near_dup_pairs(sh)
                 .where(F.col("jaccard") >= 0.5).collect()}
 
-    monkeypatch.setenv("SPARK_GRAFT_VERIFY_BROADCAST_MAX", "0")
+    monkeypatch.setattr(llm, "_VERIFY_BROADCAST_MAX_PAIRS", 0)
     shuffled = run()
-    monkeypatch.setenv("SPARK_GRAFT_VERIFY_BROADCAST_MAX", "1000000000")
+    monkeypatch.setattr(llm, "_VERIFY_BROADCAST_MAX_PAIRS", 1_000_000_000)
     broadcasted = run()
     assert shuffled, "forced-large fixture produced no verified pairs"
     assert shuffled == broadcasted, (
@@ -736,8 +735,8 @@ def test_lttb_matches_reference_selection(spark, duck):
     INDEPENDENTLY in DuckDB, run through the same pure-Python
     lttb_select, and the (event_type, day, pos) triples must match the
     operator's output exactly."""
-    from lambdatotheslaughter_spark.operators.extras import (_LTTB_K,
-                                                             lttb_select)
+    from lambdatotheslaughter_spark.operators.timeseries import (_LTTB_K,
+                                                                 lttb_select)
 
     got = {(r.event_type, r.day, r.pos)
            for r in registry.get("ts_downsample_lttb").fn(spark, SF_DIR)
@@ -841,7 +840,7 @@ def test_dtw_kernel_matches_independent_recursive_reference():
     band's bite): exact integer equality."""
     from functools import lru_cache
 
-    from lambdatotheslaughter_spark.operators.extras import dtw_banded_cost
+    from lambdatotheslaughter_spark.operators.timeseries import dtw_banded_cost
 
     def ref(xs, ys, band):
         @lru_cache(maxsize=None)
@@ -872,7 +871,7 @@ def test_dtw_pairs_symmetric_and_zero_on_self(spark):
     """DTW(x, x) must be 0 and the banded cost must not depend on
     argument order (|Δ| cost is symmetric) — checked on the real sf0.001
     series."""
-    from lambdatotheslaughter_spark.operators.extras import dtw_banded_cost
+    from lambdatotheslaughter_spark.operators.timeseries import dtw_banded_cost
     from lambdatotheslaughter_spark.tables import load_table
     from pyspark.sql import functions as F
     ev = load_table(spark, "events", "/root/testdata/sf0.001")

@@ -442,7 +442,7 @@ def test_scd2_incremental_foreachbatch_converges(spark, harness):
     event_id (the harness's in-order chunks are event_id-ranged, so
     arrival order == feed order, the Kafka-ordered-topic premise of
     incremental SCD2)."""
-    from lambdatotheslaughter_spark.operators.extras import scd2_collapse
+    from lambdatotheslaughter_spark.operators.sql import scd2_collapse
 
     base = os.path.join(tempfile.gettempdir(),
                         f"lts_scd2_{os.getpid()}_{id(spark) % 10**6}")

@@ -9,10 +9,8 @@ import re
 
 from lambdatotheslaughter_spark import registry
 
-# Anchor paths from this file (ADVICE r10 #2: a hardcoded /root/repo made
-# the rotation cross-check silently import nothing on other checkouts).
+# Anchor paths from this file so any checkout tests its own tree.
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_TOOLS_DIR = os.path.join(_REPO_ROOT, "tools")
 
 
 def survey_keys() -> set[str]:
@@ -81,92 +79,3 @@ def test_oracle_coverage_ratio():
                # recursive DTW + symmetry/self-zero + two-run identity
                "ts_dtw_banded_pairs"}
     assert set(rows_only) <= allowed, f"unexpected rows-only queries: {rows_only}"
-
-
-def test_driver_priority_window_is_fully_oracled():
-    """The driver hash-verifies the FIRST 50 entries of queries() per round.
-    Every slot must carry an oracle — EXCEPT the slots declared in
-    registry._ROWS_ONLY_SLOTS (round 10, VERDICT r9 ask #6: the driver log
-    must show clean rows-only rows for agg_approx_distinct and a couple of
-    the other rows-only keys, replacing the stale r01 no_oracle line).
-    Every listed name must exist, and queries() must lead with the window."""
-    qs = list(registry.all_queries())
-    oracles = registry.all_oracles()
-    prio = registry._DRIVER_PRIORITY
-    assert len(prio) == 50, f"priority list is {len(prio)} names, want 50"
-    missing = [n for n in prio if n not in set(qs)]
-    assert not missing, f"priority names not registered: {missing}"
-    assert qs[:50] == list(prio), "queries() does not lead with the priority window"
-    unoracled = [n for n in qs[:50] if n not in oracles]
-    assert set(unoracled) == set(registry._ROWS_ONLY_SLOTS), (
-        f"rows-only queries occupy undeclared driver slots: "
-        f"{sorted(set(unoracled) ^ set(registry._ROWS_ONLY_SLOTS))}")
-    # the declared rows-only slots must also be in rotation.BACKFILL so the
-    # generated waste-check covers them
-    import sys
-    sys.path.insert(0, _TOOLS_DIR)
-    import rotation
-    assert set(registry._ROWS_ONLY_SLOTS) <= set(rotation.BACKFILL), (
-        "registry._ROWS_ONLY_SLOTS not declared in rotation.BACKFILL")
-
-
-def test_driver_window_is_generated_not_hand_counted():
-    """VERDICT r6 #2: the rotation list must agree with the artifact-derived
-    never-slotted pool — tools/rotation.py recomputes it from the
-    CORRECTNESS_r*.json union. VERDICT r7 wrong #1: the union EXCLUDES the
-    newest artifact, because the driver writes it AFTER the final commit by
-    draining the very window under test — a key verified only in the newest
-    artifact is the window succeeding, not a wasted slot. Every slot must be
-    first-time (vs. that stable union) or a rotation.BACKFILL-declared
-    plan-change re-confirmation, so the delivered tree stays green both
-    before AND after the driver writes this round's artifact."""
-    import sys
-    sys.path.insert(0, _TOOLS_DIR)
-    import rotation
-    pool = set(rotation.never_slotted(_REPO_ROOT, exclude_newest=True))
-    allowed = pool | set(rotation.BACKFILL)
-    wasted = [k for k in registry._DRIVER_PRIORITY if k not in allowed]
-    assert not wasted, f"window wastes slots on already-verified keys: {wasted}"
-    # r10/r11 (drain era) demanded >= 46 first-time slots per window; r12
-    # COMPLETES the drain — the full-union never-slotted pool is 15 keys
-    # and VERDICT r11 ask #2 directs the remaining 35 slots to declared
-    # re-verifications. The intent-preserving invariant now: the window
-    # must seat EVERY remaining never-slotted oracled key (union drained
-    # to zero once the driver writes this round's artifact), and every
-    # non-first-time slot must be a declared BACKFILL re-verification.
-    full_pool = set(rotation.never_slotted(_REPO_ROOT, exclude_newest=False))
-    unseated = full_pool - set(registry._DRIVER_PRIORITY)
-    assert not unseated, (
-        f"never-slotted oracled keys left out of the window: {sorted(unseated)}")
-    first_time = sum(1 for k in registry._DRIVER_PRIORITY if k in pool)
-    assert first_time >= len(full_pool), (
-        f"only {first_time} first-time slots for a {len(full_pool)}-key pool")
-
-
-def test_bench_stdout_line_survives_driver_tail():
-    """VERDICT r8 wrong #1 (three rounds running): the driver keeps only
-    the last ~2000 chars of bench.py stdout, so the final JSON line must be
-    far smaller than that or BENCH_r{N}.json records "parsed": null. The
-    line is scalars + calibration + a pointer; the per-query dict lives
-    only in bench_out.json."""
-    import json
-    import bench
-
-    full = {
-        "queries": {f"q{i}": 1.234 for i in range(200)},  # never on stdout
-        "calibration": {"plain_q1_warm_min2": 0.123,
-                        "engine_q1_warm_min2_paired": 0.171,
-                        "engine_q1_over_plain_q1": 1.397},
-        "metric": "headline_warm_total",
-        "unit": "sec",
-        "sf": 0.1,
-        "value": 54.512,
-        "n_queries": 200,
-    }
-    line = bench.stdout_line(full)
-    assert len(line) <= 600, f"stdout line {len(line)} chars — tail-capture risk"
-    parsed = json.loads(line)
-    assert parsed["value"] == 54.512
-    assert parsed["calibration"]["engine_q1_over_plain_q1"] == 1.397
-    assert parsed["queries_file"] == "bench_out.json"
-    assert "queries" not in parsed

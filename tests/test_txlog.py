@@ -1,6 +1,6 @@
-"""Round-7 ring gates beyond the shared oracle-parity sweep: the commit-log
-protocol's concurrency guarantee, and the NTILE/exact-formula invariants
-the ring's operators lean on."""
+"""Commit-log table format gates beyond the shared oracle-parity sweep:
+concurrent commits serialize, replay honours removes, and a checkpointed
+snapshot equals a full replay."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ import os
 import tempfile
 import threading
 
-from lambdatotheslaughter_spark.operators.round7 import (
+from lambdatotheslaughter_spark.operators.scans import (
     txlog_commit, txlog_snapshot_files)
 
 
@@ -66,7 +66,7 @@ def test_txlog_checkpoint_equals_replay():
     import shutil
     import tempfile
 
-    from lambdatotheslaughter_spark.operators.round7b import (
+    from lambdatotheslaughter_spark.operators.scans import (
         txlog_snapshot_files_ckpt, txlog_write_checkpoint)
 
     root = tempfile.mkdtemp(prefix="lts_txlog_ckpt_")

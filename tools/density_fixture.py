@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Materialize the affine-permutation DENSITY fixture (round 10).
 
-The standard copy-shift harness (tools/scale_probe.py) repeats the same
+A plain copy-shift scale-up (each copy a key-shifted clone) repeats the same
 baskets per copy, so the DISTINCT co-purchase graph — and every wedge /
 BFS / SpMV volume derived from it — is IDENTICAL at every tier; its
 "graph density" rows measured scan+dedup growth only. This fixture

@@ -9,13 +9,12 @@ is applied (so it composes with selectors too) — used by the sf0.1 parity
 audit to hold out the oracle-intractable closure oracles.
 """
 import os, sys, hashlib, math, threading
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # ADVICE r10 #4: the degree-cap overrides are APPROXIMATIONS (they change
-# values, unlike the physical-only SPARK_GRAFT_CC_FASTPATH_MAX /
-# SPARK_GRAFT_DRIVE_* knobs). A cap leaked into an oracle-judged
-# environment would make the capped keys silently mismatch their exact
-# oracles, so unset them up front and say so.
+# values, unlike the physical-only SPARK_GRAFT_DRIVE_* knobs). A cap
+# leaked into an oracle-judged environment would make the capped keys
+# silently mismatch their exact oracles, so unset them up front and say so.
 for _cap in ("SPARK_GRAFT_AA_DEGREE_CAP", "SPARK_GRAFT_WEDGE_DEGREE_CAP"):
     if os.environ.pop(_cap, None) is not None:
         print(f"WARNING: unset {_cap} — approximation overrides are not "
