@@ -17,6 +17,6 @@ Capability citations point at SURVEY.md §2, the normative contract.
 """
 
 from lambdatotheslaughter_spark.session import get_spark
-from lambdatotheslaughter_spark.tables import TABLE_NAMES, load_table, load_all
+from lambdatotheslaughter_spark.tables import TABLE_NAMES, load_table
 
-__all__ = ["get_spark", "TABLE_NAMES", "load_table", "load_all"]
+__all__ = ["get_spark", "TABLE_NAMES", "load_table"]

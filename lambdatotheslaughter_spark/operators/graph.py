@@ -17,8 +17,6 @@ an iterative algorithm.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -29,38 +27,6 @@ from lambdatotheslaughter_spark.tables import load_table
 
 _SCALE = 10**12
 _ITERS = 3
-
-# Opt-in hub cut for the WHOLE wedge-enumeration family (VERDICT r10 ask
-# #3 — r10 shipped it for adamic-adar only). Env name kept separate from
-# SPARK_GRAFT_AA_DEGREE_CAP because the semantics differ: AA drops hub
-# PIVOTS only (its wedge pivot is the scored term), while the family cut
-# removes hub VERTICES and their incident edges outright — the standard
-# hub-removal approximation for common-neighbor statistics on power-law
-# graphs, bounding the wedge volume by E·cap instead of Θ(Σ deg²).
-# Default (unset/0) is EXACT — the oracle-checked contract; grading runs
-# are additionally shielded by tools/drive_driver.py, which unsets every
-# SPARK_GRAFT_*_CAP override at startup (ADVICE r10 #4).
-_WEDGE_CAP_ENV = "SPARK_GRAFT_WEDGE_DEGREE_CAP"
-
-
-def apply_wedge_degree_cap(und: DataFrame) -> DataFrame:
-    """Apply the opt-in wedge-family hub cut to an undirected, deduped
-    edge list (columns a < b): with the env cap set, drop every vertex
-    whose degree exceeds it, plus incident edges, BEFORE wedge
-    enumeration. Used by graph_triangle_count, graph_jaccard_neighbors,
-    graph_clustering_coefficient and graph_local_bridges; value gates in
-    tests/test_edge_regressions.py pin that a cap above the max degree
-    changes NOTHING and a binding cap provably changes the output."""
-    cap = int(os.environ.get(_WEDGE_CAP_ENV, "0"))
-    if cap <= 0:
-        return und
-    deg = (und.select(F.col("a").alias("v"))
-           .unionAll(und.select(F.col("b").alias("v")))
-           .groupBy("v").agg(F.count(F.lit(1)).alias("d")))
-    keep = deg.where(F.col("d") <= cap).select("v")
-    return (und.join(keep.select(F.col("v").alias("a")), "a", "semi")
-            .join(keep.select(F.col("v").alias("b")), "b", "semi")
-            .localCheckpoint(eager=False))
 
 # Directed multigraph: within each order (on a TOTAL order — the testdata's
 # (l_orderkey, l_linenumber) is not unique, so linenumber alone would make
@@ -216,7 +182,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.greatest("src", "dst").alias("b"))
            .distinct()
            .localCheckpoint(eager=False))  # degree count + orientation share it
-    und = apply_wedge_degree_cap(und)  # opt-in hub cut (exact by default)
     # r11: checkpoint the O(V) degree table — da and db are separate
     # subtrees, so uncheckpointed the 2E-row degree shuffle ran twice
     deg = (und.select(F.col("a").alias("v")).unionAll(und.select("b"))
@@ -527,7 +492,6 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = (raw.select(F.least("src", "dst").alias("a"),
                       F.greatest("src", "dst").alias("b"))
            .distinct().localCheckpoint(eager=False))
-    und = apply_wedge_degree_cap(und)  # opt-in hub cut (exact by default)
     # r11: checkpoint the O(V) degree table — it feeds the two broadcast
     # orientation sides AND the final per-edge join, so uncheckpointed
     # the 2E-row degree shuffle ran four times in one plan. Kept after
@@ -777,7 +741,6 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.greatest("src", "dst").alias("b"))
            .distinct()
            .localCheckpoint(eager=False))
-    und = apply_wedge_degree_cap(und)  # opt-in hub cut (exact by default)
     # r11: checkpoint the O(V) degree table — the two broadcast
     # orientation sides and the final coefficient join are separate
     # subtrees, so uncheckpointed the 2E-row degree shuffle ran thrice.
@@ -1244,21 +1207,7 @@ def graph_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-purchase graph's degree is BASKET-bounded (max degree 83 at
     sf0.1, 10x data moves it not at all), so wedges stay ~23x the edge
     count with NO hub blowup; one combinable groupBy collapses them to
-    candidate pairs and the anti-join is edge-keyed. On a power-law
-    graph the swap is the standard hub cut, and since round 10 it is
-    CODE, not commentary (VERDICT r9 wrong #4): set
-    SPARK_GRAFT_AA_DEGREE_CAP=<d> and pivots with degree > d are
-    dropped BEFORE wedge enumeration, bounding the wedge set by
-    E·cap instead of Θ(Σ deg²). The dropped terms are each pivot's
-    SMALLEST contributions (1/ln d shrinks with degree), which is why
-    the hub cut is the accepted approximation for link prediction on
-    power-law graphs (cap ≈ √E keeps the exact answer on
-    basket-bounded graphs — the sf0.01 parity gate pins cap-binds-
-    nothing equality; the 100× density probe shows the capped wedge
-    volume flat where the exact one grows ~quadratically). Default
-    (unset/0) stays EXACT — the oracle-checked contract."""
-    import os as _os
-    aa_cap = int(_os.environ.get("SPARK_GRAFT_AA_DEGREE_CAP", "0"))
+    candidate pairs and the anti-join is edge-keyed."""
     w = Window.partitionBy("l_orderkey").orderBy(
         "l_linenumber", "l_partkey", "l_suppkey")
     li = load_table(spark, "lineitem", sf_dir)
@@ -1272,12 +1221,6 @@ def graph_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
            .unionAll(und.select(F.col("b").alias("v"),
                                 F.col("a").alias("w"))))
     deg = sym.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    if aa_cap > 0:
-        # hub cut: a pivot with degree > cap centers no wedge. Filtering
-        # the DEGREE table (V rows) before the edge join means the
-        # capped pivots' edges drop in the join itself — the wedge
-        # self-join input is at most E rows with per-pivot fan-out ≤ cap.
-        deg = deg.where(F.col("d") <= aa_cap)
     # r11 optimization: checkpoint the per-pivot term table ONCE before
     # the wedge self-join. Uncheckpointed, both join inputs rebuilt the
     # whole und → sym → deg-join subtree (the before-plan scanned the
@@ -2170,9 +2113,8 @@ def graph_local_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors via the LEFT join + COALESCE.
 
     Scale shape: one wedge equi-join pair (the O(Σdeg²) triangle-count
-    budget — the known cost of any common-neighbor statistic, bounded
-    by degree-capping at extreme scale) + one combinable edge-grain
-    fold to a single summary row."""
+    budget — the known cost of any common-neighbor statistic) + one
+    combinable edge-grain fold to a single summary row."""
     li = load_table(spark, "lineitem", sf_dir)
     w = Window.partitionBy("l_orderkey").orderBy(
         "l_linenumber", "l_partkey", "l_suppkey")
@@ -2184,7 +2126,6 @@ def graph_local_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.greatest("src", "dst").alias("b"))
           .distinct()
           .localCheckpoint(eager=False))  # edge set feeds both sides
-    e0 = apply_wedge_degree_cap(e0)  # opt-in hub cut (exact by default)
     # r11 optimization: an edge has a common neighbor iff it lies in a
     # triangle, so the UNORIENTED Σdeg² wedge join this key used to run
     # (edge ⋈ adj ⋈ adj — a ~20M-row intermediate at sf0.1, the family's
@@ -2192,8 +2133,8 @@ def graph_local_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oriented wedge probe (Θ(E^1.5) wedge volume). Each closing wedge
     # credits its three edges; edges never credited are the local
     # bridges — flagged by ONE anti-join instead of a 20M-row groupBy.
-    # Same two degree-cap value gates; output values are identical (the
-    # per-edge n_common count was only ever compared against 0).
+    # Output values are identical (the per-edge n_common count was only
+    # ever compared against 0).
     deg = (e0.select(F.col("a").alias("v")).unionAll(e0.select("b"))
            .groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
            .localCheckpoint(eager=False))
@@ -2229,7 +2170,7 @@ def graph_local_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
                .agg(F.count(F.lit(1)).cast("bigint")
                     .alias("n_local_bridges")))
     n_edges = e0.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
-    # try_divide: an empty (e.g. degree-capped or empty-shard) edge set
+    # try_divide: an empty (e.g. empty-shard) edge set
     # must report NULL share, not raise ANSI DIVIDE_BY_ZERO on 0/0
     return (n_edges.crossJoin(bridges)
             .select("n_edges", "n_local_bridges",

@@ -3108,8 +3108,7 @@ WHERE 10 * len(list_intersect(a.sh, b.sh)) >= 8 * least(len(a.sh), len(b.sh))
 # by monkeypatching (inf => always direct, 0 => always dedup-first).
 # Both branches are VALUE-IDENTICAL by construction (pinned in
 # tests/test_edge_regressions.py), so an accidental override can never
-# corrupt an oracle run — unlike SPARK_GRAFT_AA_DEGREE_CAP, which is why
-# this gate deliberately takes no env var (ADVICE r10 #4).
+# corrupt an oracle run.
 _CONTAIN_DEDUP_RATIO = 1.5
 
 

@@ -20,7 +20,9 @@ from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.determinism import iround, dsum, oracle_dsum
 from lambdatotheslaughter_spark.registry import register
-from lambdatotheslaughter_spark.tables import load_table
+from lambdatotheslaughter_spark.session import scoped_conf
+from lambdatotheslaughter_spark.tables import (drop_managed_table, load_table,
+                                               save_managed_table)
 
 
 def _source_fingerprint(sf_dir: str, table: str) -> str:
@@ -145,7 +147,6 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_managed_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serving-layer managed table (the Kudu/Hive batch-view analog):
     ``saveAsTable`` into the local warehouse, read back via the catalog."""
-    from lambdatotheslaughter_spark.plans.rebuild import save_managed_table
     save_managed_table(spark, _sink_source(spark, sf_dir), "lts_serving_view")
     return spark.table("lts_serving_view")
 
@@ -370,17 +371,13 @@ def sink_sorted_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(tmp: str) -> None:
         # INT96 (the legacy default) carries NO parquet statistics — footer
         # min/max, and with them all skipping, exist only for INT64 µs.
-        ts_conf = "spark.sql.parquet.outputTimestampType"
-        prev = spark.conf.get(ts_conf)
-        spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
-        try:
+        with scoped_conf(spark, {"spark.sql.parquet.outputTimestampType":
+                                 "TIMESTAMP_MICROS"}):
             (li.select("l_orderkey", "l_linenumber", "l_shipdate",
                        "l_extendedprice")
              .repartitionByRange(8, "l_shipdate")
              .sortWithinPartitions("l_shipdate")
              .write.mode("overwrite").parquet(tmp))
-        finally:
-            spark.conf.set(ts_conf, prev)
 
     out = _cached_dataset("lineitem_sorted", sf_dir, "lineitem", build)
     back = spark.read.parquet(out)
@@ -454,15 +451,11 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
 
     def build(tmp: str) -> None:
         ev.write.mode("overwrite").partitionBy("event_type").parquet(tmp)
-        mode_conf = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(mode_conf)
-        spark.conf.set(mode_conf, "dynamic")
-        try:
+        with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode":
+                                 "dynamic"}):
             (ev.where((F.col("event_type") == "click")
                       & (F.col("event_id") % 3 == 0))
              .write.mode("overwrite").partitionBy("event_type").parquet(tmp))
-        finally:
-            spark.conf.set(mode_conf, prev)
 
     out = _cached_dataset("events_dynover", sf_dir, "events", build)
     back = spark.read.parquet(out)
@@ -1352,16 +1345,7 @@ def catalog_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     tbl = f"lts_orders_stats_{sf_tag}"
     if not spark.catalog.tableExists(tbl):
-        # another process's metastore may have left the managed LOCATION
-        # behind (shared warehouse dir, per-process catalogs) — clear the
-        # orphan first, same discipline as ensure_bucketed_tables
-        import shutil
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        loc = os.path.join(wh, tbl)
-        if os.path.isdir(loc):
-            shutil.rmtree(loc, ignore_errors=True)
-        load_table(spark, "orders", sf_dir).write.mode("overwrite") \
-            .saveAsTable(tbl)
+        save_managed_table(spark, load_table(spark, "orders", sf_dir), tbl)
     spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS")
     desc = spark.sql(f"DESC EXTENDED {tbl}").collect()
     stats = {r.col_name: r.data_type for r in desc}
@@ -1525,15 +1509,7 @@ def sql_column_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a fixed table name would let their DROP/CREATE/INSERT interleave
     sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     tbl = f"lts_defaults_state_{sf_tag}"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    # a previous process's metastore may have left the managed LOCATION
-    # behind (shared warehouse dir, per-process catalogs) — clear the
-    # orphan first, same discipline as save_managed_table
-    loc = os.path.join(
-        spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:"),
-        tbl)
-    if os.path.isdir(loc):
-        shutil.rmtree(loc, ignore_errors=True)
+    drop_managed_table(spark, tbl)
     spark.sql(f"""
         CREATE TABLE {tbl} (
           o_orderkey BIGINT,
@@ -1664,23 +1640,18 @@ def scan_aggregate_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     enabled ONLY for this query's planning and materialization (eager
     localCheckpoint), then restored — plan shapes pinned by every other
     test keep seeing the default V1 reader."""
-    agg_key = "spark.sql.parquet.aggregatePushdown"
     v1_key = "spark.sql.sources.useV1SourceList"
-    old_agg, old_v1 = spark.conf.get(agg_key), spark.conf.get(v1_key)
-    try:
-        spark.conf.set(agg_key, "true")
-        spark.conf.set(v1_key, ",".join(
-            s for s in old_v1.split(",") if s and s != "parquet"))
+    v1 = ",".join(s for s in spark.conf.get(v1_key).split(",")
+                  if s and s != "parquet")
+    with scoped_conf(spark, {"spark.sql.parquet.aggregatePushdown": "true",
+                             v1_key: v1}):
         df = (spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
               .agg(F.min("o_orderkey").cast("bigint").alias("min_key"),
                    F.max("o_orderkey").cast("bigint").alias("max_key"),
                    F.count(F.lit(1)).cast("bigint").alias("n")))
         # materialize under the V2 confs — the lazy plan would otherwise
-        # resolve AFTER the finally block restores V1
+        # resolve AFTER the scope restores V1
         return df.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set(agg_key, old_agg)
-        spark.conf.set(v1_key, old_v1)
 
 
 # ---------------------------------------------------------------------------
@@ -1713,13 +1684,8 @@ def scan_fieldid_rename_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     Conf discipline: fieldId write/read confs are scoped to this
     query's build and materialization (eager checkpoint), then
     restored."""
-    w_key = "spark.sql.parquet.fieldId.write.enabled"
-    r_key = "spark.sql.parquet.fieldId.read.enabled"
-    old_w, old_r = spark.conf.get(w_key), spark.conf.get(r_key)
-    try:
-        spark.conf.set(w_key, "true")
-        spark.conf.set(r_key, "true")
-
+    with scoped_conf(spark, {"spark.sql.parquet.fieldId.write.enabled": "true",
+                             "spark.sql.parquet.fieldId.read.enabled": "true"}):
         def build(tmp: str) -> None:
             (load_table(spark, "orders", sf_dir)
              .where(F.col("o_orderkey") < 2000)
@@ -1743,9 +1709,6 @@ def scan_fieldid_rename_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
             F.sum("order_id").cast("bigint").alias("id_sum"),
             F.sum(iround(F.col("total_price") * 100)).cast("bigint")
             .alias("cents")).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set(w_key, old_w)
-        spark.conf.set(r_key, old_r)
 
 
 # ---------------------------------------------------------------------------

@@ -15,24 +15,19 @@ from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.determinism import csum
 from lambdatotheslaughter_spark.registry import register
-from lambdatotheslaughter_spark.tables import load_table
+from lambdatotheslaughter_spark.session import scoped_conf
+from lambdatotheslaughter_spark.tables import drop_managed_table, load_table
 
 def ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Create (once per warehouse) the 16-bucket orders/lineitem tables
     shared by the co-located join and the bucket-pruning scan. Bucket
     layout is a WRITE-time contract, so every reader benefits."""
-    import shutil
-
     sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     o_tbl, l_tbl = f"lts_orders_b_{sf_tag}", f"lts_lineitem_b_{sf_tag}"
     catalog = spark.catalog
     if not (catalog.tableExists(o_tbl) and catalog.tableExists(l_tbl)):
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
         for tbl in (o_tbl, l_tbl):
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            loc = os.path.join(wh, tbl)
-            if os.path.isdir(loc):  # orphan from a previous process
-                shutil.rmtree(loc, ignore_errors=True)
+            drop_managed_table(spark, tbl)
         (load_table(spark, "orders", sf_dir).write
          .bucketBy(16, "o_orderkey").sortBy("o_orderkey")
          .mode("overwrite").saveAsTable(o_tbl))
@@ -151,17 +146,8 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     `might_contain` predicate's presence on the fact-scan filter is
     pinned in tests/test_plans.py; the oracle proves pruning loses no
     rows."""
-    prev = {k: spark.conf.get(k, None) for k in BLOOM_CONFS}
-    for k, v in BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, BLOOM_CONFS):
         return _bloom_join(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 BLOOM_CONFS = {
@@ -234,14 +220,5 @@ def scan_bucket_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning time, so the result is materialized (eager localCheckpoint
     of a handful of rows) inside the conf scope, then session confs are
     restored."""
-    prev = {k: spark.conf.get(k, None) for k in BUCKET_SCAN_CONFS}
-    for k, v in BUCKET_SCAN_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, BUCKET_SCAN_CONFS):
         return _bucket_prune_scan(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)

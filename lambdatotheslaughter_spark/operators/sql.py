@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from lambdatotheslaughter_spark.determinism import (cavg, csum, iround,
                                                     oracle_cavg)
 from lambdatotheslaughter_spark.registry import register
+from lambdatotheslaughter_spark.session import scoped_conf
 from lambdatotheslaughter_spark.tables import load_table
 
 
@@ -1376,9 +1377,7 @@ def sql_scripting_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus view per iteration: ~20 sequential full scans, 6.6 s at
     sf0.1 and scan-bound at 100 TB; this shape runs the same script
     text over the same semantics at corpus-independent loop cost.)"""
-    old = spark.conf.get("spark.sql.scripting.enabled", "false")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
+    with scoped_conf(spark, {"spark.sql.scripting.enabled": "true"}):
         oc = (load_table(spark, "orders", sf_dir)
               .select(F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
                       .alias("cents")))
@@ -1425,8 +1424,6 @@ def sql_scripting_block(spark: SparkSession, sf_dir: str) -> DataFrame:
                  cnt AS n_above;
         END
         """)
-    finally:
-        spark.conf.set("spark.sql.scripting.enabled", old)
 
 
 # ---------------------------------------------------------------------------

@@ -2330,7 +2330,6 @@ def ml_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (the Poisson-CDF-thresholds discipline: transcendental constants exist
 # only as pasted decimals, never computed at query time)
 _Z_ALPHA_2 = 1.959963985
-_Z_BETA = 0.841621234
 # the SUM is itself a frozen literal: computing z_a + z_b at query time
 # parses two decimals and adds (engine-side), which can differ by 1 ulp
 # from the Python-side sum -- one shared decimal string removes the add

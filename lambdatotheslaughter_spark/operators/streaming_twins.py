@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from lambdatotheslaughter_spark.determinism import DEC, dsum, oracle_dsum
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.streaming.harness import checkpoint_dir, drain
-from lambdatotheslaughter_spark.tables import load_table
+from lambdatotheslaughter_spark.tables import drop_managed_table, load_table
 
 
 def tumbling_agg(events: DataFrame) -> DataFrame:
@@ -653,7 +653,7 @@ def sink_stream_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         drain(spark, src.writeStream.outputMode("append"), ckpt,
               start=lambda w: w.toTable(table))
     out = tumbling_agg(spark.table(table)).localCheckpoint(eager=True)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_managed_table(spark, table)
     return out
 
 
@@ -714,7 +714,7 @@ def stream_rate_source_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select(F.col("w.start").cast("string").alias("w_start"),
                    "n", "vsum")
            .localCheckpoint(eager=True))
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_managed_table(spark, table)
     return out
 
 

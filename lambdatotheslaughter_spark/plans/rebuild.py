@@ -9,26 +9,13 @@ consulted only for keys newer than the rebuild watermark.
 
 from __future__ import annotations
 
-import os
 import re
-import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from lambdatotheslaughter_spark import registry
-
-
-def save_managed_table(spark: SparkSession, df: DataFrame, table: str) -> None:
-    """Overwrite a managed table, tolerating an orphan warehouse directory
-    left by a previous process (a fresh session's catalog doesn't know the
-    table, so saveAsTable would refuse the existing location)."""
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    loc = os.path.join(
-        spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:"), table)
-    if os.path.isdir(loc):
-        shutil.rmtree(loc, ignore_errors=True)
-    df.write.mode("overwrite").saveAsTable(table)
+from lambdatotheslaughter_spark.tables import save_managed_table
 
 # serving views worth persisting (small, frequently queried aggregates)
 DEFAULT_VIEWS = (

@@ -3,24 +3,29 @@ would be: AQE on (runtime re-planning, skew join splitting, partition
 coalescing), explicit UTC session timezone (oracle hash alignment), Arrow
 enabled for the Pandas-UDF slow path.
 
-Work is sized per kind. Batch work keeps the session's shuffle partitions
-(32, or ``SPARK_GRAFT_SHUFFLE``) with AQE coalescing them at runtime. Each streaming query starts
+Work is sized per kind. Batch work keeps the session's 32 shuffle
+partitions with AQE coalescing them at runtime. Each streaming query starts
 through ``streaming.harness.drain`` with ``defaultParallelism`` shuffle
 partitions — one state-store partition per core, fixed in the query's
 checkpoint — because streaming runs without AQE and pays a fixed cost per
 state partition on every micro-batch.
 
-At cluster scale the only knobs that change are master / memory / shuffle
-partitions; query code never needs to know.
+Four environment settings reach the session: ``SPARK_GRAFT_CPUS``,
+``SPARK_GRAFT_DRIVER_MEM``, ``SPARK_GRAFT_WAREHOUSE`` and
+``SPARK_GRAFT_CKPT``. Every session is long-lived and shared by every query,
+so a query that needs a setting for its own plan takes it through
+``scoped_conf``, which hands the session back exactly as it found it.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+SHUFFLE_PARTITIONS = 32
 
 
 def get_spark(app_name: str = "lambdatotheslaughter_spark") -> SparkSession:
@@ -34,7 +39,7 @@ def get_spark(app_name: str = "lambdatotheslaughter_spark") -> SparkSession:
         SparkSession.builder
         .master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(SHUFFLE_PARTITIONS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -43,7 +48,7 @@ def get_spark(app_name: str = "lambdatotheslaughter_spark") -> SparkSession:
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # local metastore for the Hive-managed serving layer (sink_managed_table)
+        # local metastore for the Hive-managed serving layer (tables.save_managed_table)
         .config("spark.sql.warehouse.dir", os.environ.get(
             "SPARK_GRAFT_WAREHOUSE", "/tmp/lts_spark_warehouse"))
         .config("spark.sql.streaming.checkpointLocation", os.environ.get(
@@ -52,3 +57,25 @@ def get_spark(app_name: str = "lambdatotheslaughter_spark") -> SparkSession:
     )
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the block, then put each key back:
+    to its old value if it had one, unset otherwise. A key left unset reads
+    as Spark's default, so restoring by ``get`` then ``set`` would pin the
+    default as an explicit setting; unsetting leaves nothing behind.
+
+    Planning reads the confs, so a query that depends on them must be
+    planned (materialized) inside the block."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -30,9 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from lambdatotheslaughter_spark.session import scoped_conf
 from lambdatotheslaughter_spark.tables import load_table
-
-_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
 @contextmanager
@@ -69,13 +68,9 @@ def drain(spark: SparkSession, writer: DataStreamWriter, checkpoint: str,
     ``TimeoutError``, so a stalled drain never hands back partial output.
     """
     writer = writer.option("checkpointLocation", checkpoint).trigger(availableNow=True)
-    conf = spark.conf
-    batch_partitions = conf.get(_SHUFFLE_PARTITIONS)
-    conf.set(_SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism))
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions":
+                             str(spark.sparkContext.defaultParallelism)}):
         query = start(writer)
-    finally:
-        conf.set(_SHUFFLE_PARTITIONS, batch_partitions)
     if not query.awaitTermination(timeout):
         query.stop()
         raise TimeoutError(

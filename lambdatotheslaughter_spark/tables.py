@@ -3,17 +3,19 @@ SURVEY.md §1.3). Explicit StructTypes keep the analyzer honest and make the
 reader prune columns against a known schema instead of inferring per job.
 
 Schemas measured from the driver's parquet footers (FIXTURES.md).
+
+Managed tables in the session's warehouse are written and dropped only
+through ``save_managed_table`` and ``drop_managed_table``.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType([
@@ -155,7 +157,7 @@ def events_reader(spark: SparkSession, sf_dir: str,
     return df
 
 
-def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
+def load_table(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     """Read one table. Explicit schema keeps column pruning / filter pushdown
     exact and avoids per-query footer inference on a 100 TB lake."""
     if name not in SCHEMAS:
@@ -170,5 +172,20 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
-def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {n: load_table(spark, n, sf_dir) for n in TABLE_NAMES}
+def drop_managed_table(spark: SparkSession, table: str) -> None:
+    """Drop a managed table and any orphan warehouse directory under its
+    name. Each process has its own catalog over the shared warehouse, so a
+    directory a previous process left behind is unknown to this catalog,
+    and ``saveAsTable`` would refuse the existing location."""
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    loc = os.path.join(
+        spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:"), table)
+    if os.path.isdir(loc):
+        shutil.rmtree(loc, ignore_errors=True)
+
+
+def save_managed_table(spark: SparkSession, df: DataFrame, table: str) -> None:
+    """Overwrite a managed table, tolerating an orphan warehouse
+    directory."""
+    drop_managed_table(spark, table)
+    df.write.mode("overwrite").saveAsTable(table)

@@ -12,6 +12,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.determinism import DEC, csum, dsum
+from lambdatotheslaughter_spark.session import scoped_conf
 
 # 2-decimal "money" doubles in the testdata's magnitude range
 money = st.integers(min_value=-10_000_000, max_value=10_000_000) \
@@ -147,18 +148,13 @@ def test_rounded_float_queries_stable_across_partitioning(spark):
 
     names = ["agg_corr_covar", "llm_lm_score", "llm_token_entropy",
              "llm_embedding_outliers", "llm_bm25_rank"]
-    conf = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(conf)
     results = {}
-    try:
-        for parts in ("5", "97"):
-            spark.conf.set(conf, parts)
+    for parts in ("5", "97"):
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": parts}):
             for n in names:
                 rows = registry.get(n).fn(spark, SF_DIR).collect()
                 key = sorted(tuple(r) for r in rows)
                 results.setdefault(n, []).append(key)
-    finally:
-        spark.conf.set(conf, prev)
     for n, (a, b) in results.items():
         assert a == b, f"{n}: output depends on shuffle partitioning"
 
@@ -235,12 +231,8 @@ def test_exact_moment_ops_are_partition_invariant(spark):
                  "llm_shuffle_deterministic", "graph_bfs_distance"):
         fn = registry.get(name).fn
         base = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "97")
-        try:
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "97"}):
             churned = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         assert base == churned, f"{name}: partition-count-dependent values"
 
 
@@ -256,17 +248,13 @@ def test_round6_stats_partition_invariance(spark):
             "stat_gini_coefficient", "stat_anova_oneway_f",
             "stat_kendall_tau", "stat_spearman_rho",
             "graph_assortativity_degree", "stat_bootstrap_poisson_ci"]
-    old = spark.conf.get("spark.sql.shuffle.partitions")
     baseline = {k: sorted(map(tuple, registry.get(k).fn(spark, SF_DIR)
                               .collect())) for k in keys}
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "97")
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "97"}):
         for k in keys:
             got = sorted(map(tuple, registry.get(k).fn(spark, SF_DIR)
                              .collect()))
             assert got == baseline[k], f"{k} drifted under 97 partitions"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_third_ring_partition_invariance(spark):
@@ -300,17 +288,13 @@ def test_third_ring_partition_invariance(spark):
             "stat_friedman_test", "ts_permutation_entropy",
             "stat_kruskal_wallis", "win_skyline_2d",
             "stat_mood_median_test"]
-    old = spark.conf.get("spark.sql.shuffle.partitions")
     baseline = {k: sorted(map(tuple, registry.get(k).fn(spark, SF_DIR)
                               .collect())) for k in keys}
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "97")
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "97"}):
         for k in keys:
             got = sorted(map(tuple, registry.get(k).fn(spark, SF_DIR)
                              .collect()))
             assert got == baseline[k], f"{k} drifted under 97 partitions"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_seventh_ring_partition_invariance(spark):
@@ -342,14 +326,10 @@ def test_seventh_ring_partition_invariance(spark):
             "stat_meta_fixed_effect_pool",
             "llm_eval_ndcg_at10", "dq_cardinality_drift_report",
             "stat_capability_indices"]
-    old = spark.conf.get("spark.sql.shuffle.partitions")
     baseline = {k: sorted(map(tuple, registry.get(k).fn(spark, SF_DIR)
                               .collect())) for k in keys}
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "97")
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "97"}):
         for k in keys:
             got = sorted(map(tuple, registry.get(k).fn(spark, SF_DIR)
                              .collect()))
             assert got == baseline[k], f"{k} drifted under 97 partitions"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)

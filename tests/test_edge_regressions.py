@@ -128,28 +128,6 @@ def test_er_blocking_completeness_vacuous_truth(spark, tmp_path):
         assert pc == 1.0, f"{r['c_mktsegment']}: vacuous completeness {pc}"
 
 
-def test_adamic_adar_degree_cap_binds_nothing_at_small_sf(spark, monkeypatch):
-    """VERDICT r9 wrong #4: the power-law mitigation for
-    graph_adamic_adar_linkpred must be code, not prose. With
-    SPARK_GRAFT_AA_DEGREE_CAP set ABOVE the true max degree the hub cut
-    binds nothing, so the capped plan must be value-identical to the
-    exact (oracle-checked) default — the gate that proves the flag
-    changes the plan's bound, not its semantics. sf0.01's max co-purchase
-    degree is far below 500 (sf0.1 measures 83)."""
-    from tests.conftest import SF_DIR
-    fn = registry.get("graph_adamic_adar_linkpred").fn
-    exact = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_AA_DEGREE_CAP", "500")
-    capped = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-    assert capped == exact
-    # and a BINDING cap must actually drop hub pivots: scores can only
-    # shrink (every dropped wedge removes a positive 1/ln(d) term), and
-    # at cap=2 the wedge set is a strict subset, so the output changes
-    monkeypatch.setenv("SPARK_GRAFT_AA_DEGREE_CAP", "2")
-    tight = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-    assert tight != exact
-
-
 def test_graph_vector_broadcast_hint_is_size_gated(spark):
     """ADVICE r9: an explicit F.broadcast() hint overrides
     autoBroadcastJoinThreshold unconditionally and hard-fails past
@@ -261,30 +239,6 @@ def test_containment_gate_fires_by_default_on_duplicate_heavy_corpus(
     intra = [r for r in gated
              if r[0] % 10_000_000 == r[1] % 10_000_000 and r[3] == 1.0]
     assert len(intra) >= 3 * n_docs
-
-
-def test_wedge_family_degree_cap_gates(spark, monkeypatch):
-    """r11 (VERDICT r10 ask #3): the hub cut r10 shipped for adamic-adar
-    only now covers the whole wedge family via
-    SPARK_GRAFT_WEDGE_DEGREE_CAP (drop vertices with degree > cap, plus
-    incident edges, before wedge enumeration). Two gates per key, same as
-    the AA test: a cap ABOVE the true max degree (sf0.1 measures 83)
-    binds nothing — value-identical to the exact oracle-checked default —
-    and a binding cap=2 provably changes the output (the flag changes the
-    plan's bound, not its semantics, and it really does cut)."""
-    from tests.conftest import SF_DIR
-    for key in ("graph_triangle_count", "graph_jaccard_neighbors",
-                "graph_clustering_coefficient", "graph_local_bridges"):
-        fn = registry.get(key).fn
-        monkeypatch.delenv("SPARK_GRAFT_WEDGE_DEGREE_CAP", raising=False)
-        exact = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-        monkeypatch.setenv("SPARK_GRAFT_WEDGE_DEGREE_CAP", "500")
-        unbound = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-        assert unbound == exact, f"{key}: non-binding cap changed values"
-        monkeypatch.setenv("SPARK_GRAFT_WEDGE_DEGREE_CAP", "2")
-        tight = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-        assert tight != exact, f"{key}: binding cap changed nothing"
-        monkeypatch.delenv("SPARK_GRAFT_WEDGE_DEGREE_CAP")
 
 
 def test_bcast_row_budget_is_memory_derived(spark):

@@ -6,6 +6,7 @@ ANN/LSH operators (SURVEY §5)."""
 from __future__ import annotations
 
 from lambdatotheslaughter_spark import registry
+from lambdatotheslaughter_spark.session import scoped_conf
 from tests.conftest import SF_DIR
 
 
@@ -258,17 +259,12 @@ def test_sketch_rollup_within_tolerance_and_deterministic(spark, duck):
     widths (HLL sketches are deterministic functions of the value set)."""
     exact = duck.execute(
         "SELECT COUNT(DISTINCT user_id) FROM events").fetchone()[0]
-    conf = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(conf)
     got = []
-    try:
-        for parts in ("7", "61"):
-            spark.conf.set(conf, parts)
+    for parts in ("7", "61"):
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": parts}):
             row = registry.get("agg_distinct_sketch_rollup") \
                 .fn(spark, SF_DIR).collect()[0]
-            got.append(row.asDict())
-    finally:
-        spark.conf.set(conf, prev)
+        got.append(row.asDict())
     assert got[0] == got[1], f"sketch rollup partition-dependent: {got}"
     assert got[0]["n_users_exact"] == exact, (got[0], exact)
     assert got[0]["estimate_within_5pct"] is True, got[0]
@@ -774,16 +770,11 @@ def test_pq_quantize_error_bound_and_determinism(spark):
     order-free by construction)."""
     from lambdatotheslaughter_spark import registry
 
-    conf = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(conf)
     rows = []
-    try:
-        for parts in ("7", "61"):
-            spark.conf.set(conf, parts)
+    for parts in ("7", "61"):
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": parts}):
             rows.append(registry.get("llm_embedding_pq_quantize")
                         .fn(spark, SF_DIR).collect()[0].asDict())
-    finally:
-        spark.conf.set(conf, prev)
     assert rows[0] == rows[1], f"PQ report partition-dependent: {rows}"
     r = rows[0]
     assert r["bits_per_vector"] == 32 and r["m_subspaces"] == 8

@@ -11,6 +11,7 @@ import tempfile
 
 from lambdatotheslaughter_spark import registry
 from lambdatotheslaughter_spark.plans import checks
+from lambdatotheslaughter_spark.session import scoped_conf
 from tests.conftest import SF_DIR
 
 
@@ -346,18 +347,8 @@ def test_runtime_bloom_filter_prunes_fact_scan():
     un-materialized plan under the operator's own conf scope."""
     from lambdatotheslaughter_spark.operators import skew
 
-    spark = spark_global
-    prev = {k: spark.conf.get(k, None) for k in skew.BLOOM_CONFS}
-    for k, v in skew.BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        plan = checks.optimized_plan(skew._bloom_join(spark, SF_DIR))
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    with scoped_conf(spark_global, skew.BLOOM_CONFS):
+        plan = checks.optimized_plan(skew._bloom_join(spark_global, SF_DIR))
     assert "might_contain" in plan, plan
 
 
@@ -676,16 +667,9 @@ def test_bucket_pruning_selects_one_bucket():
     the 16 buckets before reading any row (under the operator's pinned
     confs — the registered op materializes inside the same scope)."""
     from lambdatotheslaughter_spark.operators import skew
-    prev = {k: spark_global.conf.get(k, None) for k in skew.BUCKET_SCAN_CONFS}
-    for k, v in skew.BUCKET_SCAN_CONFS.items():
-        spark_global.conf.set(k, v)
-    try:
+    with scoped_conf(spark_global, skew.BUCKET_SCAN_CONFS):
         plan = checks.executed_plan(
             skew._bucket_prune_scan(spark_global, SF_DIR))
-    finally:
-        for k, v in prev.items():
-            spark_global.conf.unset(k) if v is None \
-                else spark_global.conf.set(k, v)
     assert "SelectedBucketsCount: 1 out of 16" in plan, plan
 
 
@@ -789,21 +773,16 @@ def test_parquet_aggregate_pushdown_reaches_footer():
 
     from pyspark.sql import functions as F
     spark = spark_global
-    agg_key = "spark.sql.parquet.aggregatePushdown"
     v1_key = "spark.sql.sources.useV1SourceList"
-    old_agg, old_v1 = spark.conf.get(agg_key), spark.conf.get(v1_key)
-    try:
-        spark.conf.set(agg_key, "true")
-        spark.conf.set(v1_key, ",".join(
-            s for s in old_v1.split(",") if s and s != "parquet"))
+    v1 = ",".join(s for s in spark.conf.get(v1_key).split(",")
+                  if s and s != "parquet")
+    with scoped_conf(spark, {"spark.sql.parquet.aggregatePushdown": "true",
+                             v1_key: v1}):
         df = (spark.read.parquet(os.path.join(SF_DIR, "orders.parquet"))
               .agg(F.min("o_orderkey"), F.max("o_orderkey"),
                    F.count(F.lit(1))))
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "PushedAggregation: [MIN(o_orderkey), MAX(o_orderkey), COUNT(*)]" in plan, plan
-    finally:
-        spark.conf.set(agg_key, old_agg)
-        spark.conf.set(v1_key, old_v1)
+    assert "PushedAggregation: [MIN(o_orderkey), MAX(o_orderkey), COUNT(*)]" in plan, plan
 
 
 def test_iqr_fences_broadcast_back_to_scan():

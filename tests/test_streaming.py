@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.operators import streaming_twins as tw
+from lambdatotheslaughter_spark.session import scoped_conf
 from lambdatotheslaughter_spark.streaming.harness import (
     EventStreamHarness, checkpoint_dir, drain, drop_serving, latest_per_user,
     read_serving, upsert_foreach_batch)
@@ -313,7 +314,6 @@ def test_checkpoint_recovery_exactly_once(spark):
     h = EventStreamHarness(spark, SMOKE_SF_DIR, n_chunks=4)
     hold_dir = tempfile.mkdtemp(prefix="lts_heldback_")
     recorded = spark.sparkContext.defaultParallelism + 1
-    batch_partitions = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         files = sorted(f for f in os.listdir(h.input_dir)
                        if f.endswith(".parquet"))
@@ -329,13 +329,10 @@ def test_checkpoint_recovery_exactly_once(spark):
                     .format("memory").queryName(name))
 
         with checkpoint_dir(spark, "lts_recov") as ckpt:
-            spark.conf.set("spark.sql.shuffle.partitions", str(recorded))
-            try:
+            with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(recorded)}):
                 q1 = (writer(f"lts_recov1_{uuid.uuid4().hex[:6]}")
                       .option("checkpointLocation", ckpt)
                       .trigger(availableNow=True).start())
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", batch_partitions)
             assert q1.awaitTermination(timeout=300)  # drains chunks 0-1, then "crashes"
 
             # the held-back chunks arrive while the query is down

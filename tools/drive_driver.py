@@ -11,15 +11,6 @@ audit to hold out the oracle-intractable closure oracles.
 import os, sys, hashlib, math, threading
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# ADVICE r10 #4: the degree-cap overrides are APPROXIMATIONS (they change
-# values, unlike the physical-only SPARK_GRAFT_DRIVE_* knobs). A cap
-# leaked into an oracle-judged environment would make the capped keys
-# silently mismatch their exact oracles, so unset them up front and say so.
-for _cap in ("SPARK_GRAFT_AA_DEGREE_CAP", "SPARK_GRAFT_WEDGE_DEGREE_CAP"):
-    if os.environ.pop(_cap, None) is not None:
-        print(f"WARNING: unset {_cap} — approximation overrides are not "
-              "allowed in oracle-judged runs", file=sys.stderr)
-
 import duckdb, pandas as pd
 import __spark_entry__ as e
 from pyspark.sql import SparkSession
