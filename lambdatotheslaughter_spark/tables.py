@@ -5,13 +5,16 @@ reader prune columns against a known schema instead of inferring per job.
 Schemas measured from the driver's parquet footers (FIXTURES.md).
 
 Managed tables in the session's warehouse are written and dropped only
-through ``save_managed_table`` and ``drop_managed_table``.
+through ``save_managed_table`` and ``drop_managed_table``; batch views are
+published only through ``publish_view``.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -172,14 +175,18 @@ def load_table(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
+def _warehouse_path(spark: SparkSession, table: str) -> str:
+    return os.path.join(
+        spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:"), table)
+
+
 def drop_managed_table(spark: SparkSession, table: str) -> None:
     """Drop a managed table and any orphan warehouse directory under its
     name. Each process has its own catalog over the shared warehouse, so a
     directory a previous process left behind is unknown to this catalog,
     and ``saveAsTable`` would refuse the existing location."""
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    loc = os.path.join(
-        spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:"), table)
+    loc = _warehouse_path(spark, table)
     if os.path.isdir(loc):
         shutil.rmtree(loc, ignore_errors=True)
 
@@ -189,3 +196,41 @@ def save_managed_table(spark: SparkSession, df: DataFrame, table: str) -> None:
     directory."""
     drop_managed_table(spark, table)
     df.write.mode("overwrite").saveAsTable(table)
+
+
+def _view_version(spark: SparkSession, view: str) -> str | None:
+    """The version directory ``view`` reads now, or None if there is no
+    such view."""
+    if not spark.catalog.tableExists(view):
+        return None
+    text = spark.sql(f"SHOW CREATE TABLE {view}").first()[0]
+    m = re.search(r"parquet\.`([^`]*)`", text)
+    return os.path.basename(m.group(1)) if m else None
+
+
+def publish_view(spark: SparkSession, df: DataFrame, view: str) -> None:
+    """Write ``df`` as a new version of the view ``view`` and swap it in.
+
+    The frame is written as parquet to a fresh version directory,
+    ``<warehouse>/<view>/<version>``, then one ``CREATE OR REPLACE VIEW``
+    repoints the view at it, then every entry under ``<warehouse>/<view>``
+    but the new version and the one it replaced is deleted (an orphan
+    managed table of an earlier process included). A reader finds the old
+    version or the new one, never no view, and a reader still on the old
+    version finishes. A failed write leaves the view on its old version.
+
+    A view over a path is resolved again on every read, and a version
+    directory is never changed after its write, so no cached file listing
+    outlives the swap."""
+    root = _warehouse_path(spark, view)
+    replaced = _view_version(spark, view)
+    version = uuid.uuid4().hex
+    path = os.path.join(root, version)
+    df.write.parquet(path)
+    spark.sql(f"CREATE OR REPLACE VIEW {view} AS SELECT * FROM parquet.`{path}`")
+    for old in set(os.listdir(root)) - {version, replaced}:
+        old = os.path.join(root, old)
+        if os.path.isdir(old):
+            shutil.rmtree(old, ignore_errors=True)
+        else:
+            os.remove(old)
