@@ -685,9 +685,7 @@ def agg_regr_builtins(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: regr_* are partial-aggregatable (each partition folds
     (n, Σx, Σy, Σxx, Σxy) and merges), so one combinable hash
     aggregate — the textbook map-side-collapse shape."""
-    load_table(spark, "events", sf_dir) \
-        .createOrReplaceTempView("lts_ev_regr_v")
-    return spark.sql(_REGR_SQL.format(src="lts_ev_regr_v"))
+    return spark.sql(_REGR_SQL, src=load_table(spark, "events", sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -1468,7 +1466,7 @@ _LISTAGG_SPARK = """
 SELECT c_mktsegment,
        listagg(c_name, ',') WITHIN GROUP (ORDER BY c_name) AS names,
        COUNT(*) AS n
-FROM customer WHERE c_custkey <= 200
+FROM {customer} WHERE c_custkey <= 200
 GROUP BY c_mktsegment
 """
 
@@ -1493,8 +1491,8 @@ def agg_listagg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the per-group string grows with group size — LISTAGG is for
     bounded groups (the c_custkey cap here stands in for that contract);
     unbounded concatenation belongs in arrays/files, not a cell."""
-    load_table(spark, "customer", sf_dir).createOrReplaceTempView("customer")
-    return spark.sql(_LISTAGG_SPARK)
+    return spark.sql(_LISTAGG_SPARK,
+                     customer=load_table(spark, "customer", sf_dir))
 
 
 @register("agg_sliding_distinct_hll", oracle=None)
@@ -1694,9 +1692,7 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: all FILTER aggregates share one partial+final hash
     aggregate; the predicates evaluate per row map-side — no extra
     scans, no extra shuffles vs the unfiltered aggregate."""
-    load_table(spark, "orders", sf_dir) \
-        .createOrReplaceTempView("lts_ord_aggf_v")
-    return spark.sql(_AGG_FILTER_SQL.format(src="lts_ord_aggf_v"))
+    return spark.sql(_AGG_FILTER_SQL, src=load_table(spark, "orders", sf_dir))
 
 
 # ---------------------------------------------------------------------------

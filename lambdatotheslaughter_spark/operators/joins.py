@@ -789,17 +789,18 @@ def geo_knn_within_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("s.d2").alias("nn_dist_sq")))
 
 
-_LATERAL_ORACLE = """
+_LATERAL_SQL = """
 SELECT c.c_custkey, t.o_orderkey, round(t.o_totalprice, 2) AS totalprice
-FROM customer c,
-LATERAL (SELECT o_orderkey, o_totalprice FROM orders o
+FROM {customer} c,
+LATERAL (SELECT o_orderkey, o_totalprice FROM {orders} o
          WHERE o.o_custkey = c.c_custkey
          ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
 WHERE c.c_custkey <= 300
 """
 
 
-@register("join_lateral_topn", oracle=_LATERAL_ORACLE)
+@register("join_lateral_topn",
+          oracle=_LATERAL_SQL.format(orders="orders", customer="customer"))
 def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL subquery (correlated derived table): top-2 orders PER
     customer written the way an analyst writes it — identical SQL text
@@ -809,9 +810,8 @@ def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     win_topk_per_group (DomainJoin → rank filter), so the declarative
     per-row subquery costs one partitioned window at scale, not a
     per-customer re-execution."""
-    for name in ("orders", "customer"):
-        load_table(spark, name, sf_dir).createOrReplaceTempView(name)
-    return spark.sql(_LATERAL_ORACLE)
+    return spark.sql(_LATERAL_SQL, orders=load_table(spark, "orders", sf_dir),
+                     customer=load_table(spark, "customer", sf_dir))
 
 
 _SCD2_PIT_ORACLE = """

@@ -1516,12 +1516,10 @@ def sql_column_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
           status STRING DEFAULT 'new',
           score BIGINT DEFAULT 100) USING parquet
     """)
-    load_table(spark, "orders", sf_dir) \
-        .createOrReplaceTempView("lts_defaults_src_v")
     spark.sql(f"""
         INSERT INTO {tbl} (o_orderkey)
-        SELECT o_orderkey FROM lts_defaults_src_v WHERE o_orderkey < 400
-    """)
+        SELECT o_orderkey FROM {{orders}} WHERE o_orderkey < 400
+    """, orders=load_table(spark, "orders", sf_dir))
     return spark.table(tbl).select("o_orderkey", "status", "score")
 
 

@@ -40,18 +40,16 @@ def sql_group_by_ordinal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: resolved entirely in the analyzer; the physical plan
     is the plain 6-group partial+final hash aggregate."""
-    load_table(spark, "lineitem", sf_dir) \
-        .createOrReplaceTempView("lts_li_ord_v")
     return spark.sql("""
         SELECT l_returnflag, l_linestatus,
                CAST(COUNT(*) AS BIGINT) AS n_rows,
                CAST(SUM(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT))
                     AS BIGINT) AS qty_cents
-        FROM lts_li_ord_v
+        FROM {lineitem}
         WHERE l_shipdate <= DATE '1998-09-02'
         GROUP BY 1, 2
         ORDER BY 1, 2
-    """)
+    """, lineitem=load_table(spark, "lineitem", sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -91,17 +89,13 @@ def sql_natural_using_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: both variants resolve to the same hash equi-join plan;
     the sugar is analyzer-only."""
-    load_table(spark, "orders", sf_dir) \
-        .createOrReplaceTempView("lts_nat_o_v")
-    load_table(spark, "customer", sf_dir) \
-        .createOrReplaceTempView("lts_nat_c_v")
     return spark.sql("""
         WITH o AS (
           SELECT o_custkey AS custkey, o_orderkey,
                  CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-          FROM lts_nat_o_v
+          FROM {orders}
         ), c AS (
-          SELECT c_custkey AS custkey, c_mktsegment FROM lts_nat_c_v
+          SELECT c_custkey AS custkey, c_mktsegment FROM {customer}
         ), nat AS (
           SELECT 'natural' AS variant, c_mktsegment,
                  CAST(COUNT(*) AS BIGINT) AS n_orders,
@@ -114,7 +108,8 @@ def sql_natural_using_join(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM o JOIN c USING (custkey) GROUP BY c_mktsegment
         )
         SELECT * FROM nat UNION ALL SELECT * FROM usg
-    """)
+    """, orders=load_table(spark, "orders", sf_dir),
+        customer=load_table(spark, "customer", sf_dir))
 
 
 def _pivot_cell(etype: str) -> str:
@@ -226,20 +221,22 @@ SELECT n_name,
        COUNT(*) AS n_orders,
        (CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS DOUBLE)
         / 100.0) AS revenue
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
+FROM {orders}
+JOIN {customer} ON o_custkey = c_custkey
+JOIN {nation} ON c_nationkey = n_nationkey
 GROUP BY n_name, CAST(EXTRACT(year FROM o_orderdate) AS BIGINT)
 """
 
 
-@register("sql_api_entry", oracle=_SQL_ENTRY)
+@register("sql_api_entry", oracle=_SQL_ENTRY.format(
+    orders="orders", customer="customer", nation="nation"))
 def sql_api_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL entry point (SURVEY §3): IDENTICAL SQL text runs on Spark
-    (over temp views) and DuckDB — the dialect-portable subset in action."""
-    for name in ("orders", "customer", "nation"):
-        load_table(spark, name, sf_dir).createOrReplaceTempView(name)
-    return spark.sql(_SQL_ENTRY)
+    (over DataFrame arguments) and DuckDB — the dialect-portable subset in
+    action."""
+    return spark.sql(_SQL_ENTRY, orders=load_table(spark, "orders", sf_dir),
+                     customer=load_table(spark, "customer", sf_dir),
+                     nation=load_table(spark, "nation", sf_dir))
 
 
 _SCD2_ORACLE = """
@@ -310,18 +307,19 @@ def scd2_collapse(feed: DataFrame, key: str, attr: str,
             .withColumn("is_current", F.col("valid_to").isNull()))
 
 
-_EXISTS_ORACLE = """
+_EXISTS_SQL = """
 SELECT c.c_custkey, c.c_mktsegment, round(c.c_acctbal, 2) AS acctbal
-FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o
+FROM {customer} c
+WHERE EXISTS (SELECT 1 FROM {orders} o
               WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
-  AND NOT EXISTS (SELECT 1 FROM orders o
+  AND NOT EXISTS (SELECT 1 FROM {orders} o
                   WHERE o.o_custkey = c.c_custkey
                     AND o.o_orderpriority = '5-LOW')
 """
 
 
-@register("sub_exists_not_exists", oracle=_EXISTS_ORACLE)
+@register("sub_exists_not_exists",
+          oracle=_EXISTS_SQL.format(orders="orders", customer="customer"))
 def sub_exists_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS / NOT EXISTS subqueries — the remaining subquery
     surface beyond sub_scalar/sub_correlated: customers with at least one
@@ -330,9 +328,8 @@ def sub_exists_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a LEFT SEMI + LEFT ANTI join on o_custkey — hash joins, not
     per-row subquery execution, so the shape is two shuffles of the
     (filtered, column-pruned) orders key column at any scale."""
-    for name in ("orders", "customer"):
-        load_table(spark, name, sf_dir).createOrReplaceTempView(name)
-    return spark.sql(_EXISTS_ORACLE)
+    return spark.sql(_EXISTS_SQL, orders=load_table(spark, "orders", sf_dir),
+                     customer=load_table(spark, "customer", sf_dir))
 
 
 _CDC_ORACLE = """
@@ -384,17 +381,18 @@ def cdc_apply_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IN_SUBQ_ORACLE = """
+_IN_SUBQ_SQL = """
 SELECT n_name, CAST(COUNT(*) AS BIGINT) AS n_customers
-FROM customer JOIN nation ON c_nationkey = n_nationkey
-WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 350000)
-  AND c_custkey NOT IN (SELECT o_custkey FROM orders
+FROM {customer} JOIN {nation} ON c_nationkey = n_nationkey
+WHERE c_custkey IN (SELECT o_custkey FROM {orders} WHERE o_totalprice > 350000)
+  AND c_custkey NOT IN (SELECT o_custkey FROM {orders}
                         WHERE o_orderstatus = 'P')
 GROUP BY n_name
 """
 
 
-@register("sub_in_not_in", oracle=_IN_SUBQ_ORACLE)
+@register("sub_in_not_in", oracle=_IN_SUBQ_SQL.format(
+    orders="orders", customer="customer", nation="nation"))
 def sub_in_not_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN / NOT IN subqueries — the membership-subquery surface
     completing sub_scalar / sub_correlated / sub_exists_not_exists:
@@ -405,9 +403,9 @@ def sub_in_not_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     trap (one NULL in the subquery empties the result); o_custkey is
     non-nullable here, and at scale the null-aware anti join is why NOT
     IN on a nullable key forces a broadcast — prefer NOT EXISTS there."""
-    for name in ("orders", "customer", "nation"):
-        load_table(spark, name, sf_dir).createOrReplaceTempView(name)
-    return spark.sql(_IN_SUBQ_ORACLE)
+    return spark.sql(_IN_SUBQ_SQL, orders=load_table(spark, "orders", sf_dir),
+                     customer=load_table(spark, "customer", sf_dir),
+                     nation=load_table(spark, "nation", sf_dir))
 
 
 _REPORT_SQL = """
@@ -415,7 +413,7 @@ WITH seg_rev AS (
   SELECT c_mktsegment AS segment, c_custkey,
          SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS cents,
          COUNT(*) AS n_orders
-  FROM orders JOIN customer ON o_custkey = c_custkey
+  FROM {orders} JOIN {customer} ON o_custkey = c_custkey
   GROUP BY c_mktsegment, c_custkey
 ), seg_stats AS (
   SELECT segment,
@@ -437,7 +435,8 @@ FROM seg_stats s JOIN ranked r ON s.segment = r.segment AND r.rn = 1
 """
 
 
-@register("sql_report_cte_chain", oracle=_REPORT_SQL)
+@register("sql_report_cte_chain",
+          oracle=_REPORT_SQL.format(orders="orders", customer="customer"))
 def sql_report_cte_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The analyst-report shape: a 3-CTE chain (per-customer revenue →
     per-segment stats → tie-pinned top customer) joined into one result,
@@ -449,20 +448,19 @@ def sql_report_cte_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     the chain as ordinary nested plans — CTEs are not materialization
     barriers — so the whole report is one optimizable tree: segment agg
     reuses the seg_rev shuffle, the window tops it, no CTE re-execution."""
-    for name in ("orders", "customer"):
-        load_table(spark, name, sf_dir).createOrReplaceTempView(name)
-    return spark.sql(_REPORT_SQL)
+    return spark.sql(_REPORT_SQL, orders=load_table(spark, "orders", sf_dir),
+                     customer=load_table(spark, "customer", sf_dir))
 
 
 _RCTE_SQL = """
 WITH RECURSIVE chain(custkey, root, k) AS (
-  SELECT o_custkey, o_orderkey, o_orderkey FROM orders o
-  WHERE NOT EXISTS (SELECT 1 FROM orders p
+  SELECT o_custkey, o_orderkey, o_orderkey FROM {orders} o
+  WHERE NOT EXISTS (SELECT 1 FROM {orders} p
                     WHERE p.o_custkey = o.o_custkey
                       AND p.o_orderkey = o.o_orderkey - 1)
   UNION ALL
   SELECT c.custkey, c.root, n.o_orderkey
-  FROM chain c JOIN orders n
+  FROM chain c JOIN {orders} n
     ON n.o_custkey = c.custkey AND n.o_orderkey = c.k + 1
 )
 SELECT custkey, root AS chain_start, CAST(COUNT(*) AS BIGINT) AS chain_len,
@@ -471,7 +469,7 @@ FROM chain GROUP BY custkey, root
 """
 
 
-@register("sql_recursive_cte", oracle=_RCTE_SQL)
+@register("sql_recursive_cte", oracle=_RCTE_SQL.format(orders="orders"))
 def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WITH RECURSIVE (SQL:1999, new in Spark 4) running the IDENTICAL
     query text on both engines: per-customer chains of CONSECUTIVE order
@@ -485,8 +483,7 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     increase and are finite). Scale: the frontier shrinks every round and
     joins on the (custkey, key) composite — a bounded-fan hash join per
     step, embarrassingly parallel across chains."""
-    load_table(spark, "orders", sf_dir).createOrReplaceTempView("orders")
-    return spark.sql(_RCTE_SQL)
+    return spark.sql(_RCTE_SQL, orders=load_table(spark, "orders", sf_dir))
 
 
 _PIPE_ORACLE = """
@@ -511,9 +508,8 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     the classic formulation of the same query (pipe syntax is
     Spark-side), making the op a two-dialect equivalence check. Money in
     integer cents end-to-end."""
-    load_table(spark, "orders", sf_dir).createOrReplaceTempView("orders")
     return spark.sql("""
-FROM orders
+FROM {orders}
 |> WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
 |> AGGREGATE COUNT(*) AS n_orders,
              SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev_cents,
@@ -522,7 +518,7 @@ FROM orders
 |> SELECT o_orderpriority, CAST(n_orders AS BIGINT) AS n_orders,
           CAST(rev_cents AS BIGINT) AS rev_cents,
           CAST(n_customers AS BIGINT) AS n_customers
-""")
+""", orders=load_table(spark, "orders", sf_dir))
 
 
 _PARAM_SQL_ORACLE = """
@@ -547,18 +543,18 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     bind as typed literals BEFORE analysis, so constant folding and
     pushdown see real constants — same plan as hand-inlined literals;
     the oracle is the literal-inlined twin."""
-    load_table(spark, "orders", sf_dir).createOrReplaceTempView("orders")
     return spark.sql(
         """
         SELECT o_orderpriority,
                CAST(COUNT(*) AS BIGINT) AS n_orders,
                CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT))
                     AS BIGINT) AS rev_cents
-        FROM orders
+        FROM {orders}
         WHERE o_orderdate >= :cutoff AND o_totalprice < :price_cap
         GROUP BY o_orderpriority
         """,
-        args={"cutoff": "1996-06-01 00:00:00", "price_cap": 150000.0})
+        args={"cutoff": "1996-06-01 00:00:00", "price_cap": 150000.0},
+        orders=load_table(spark, "orders", sf_dir))
 
 
 _TRANSPOSE_ORACLE = """
@@ -609,7 +605,7 @@ def df_transpose(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ANY/ALL quantified-comparison subqueries (round 5)
+# ANY/ALL quantified-comparison subqueries
 # ---------------------------------------------------------------------------
 
 _ANY_ALL_ORACLE = """
@@ -662,7 +658,7 @@ def sub_any_all_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# EXECUTE IMMEDIATE (round 5)
+# EXECUTE IMMEDIATE
 # ---------------------------------------------------------------------------
 
 _EXEC_IMM_ORACLE = """
@@ -680,19 +676,17 @@ def sql_execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the parameter binding happens inside the SQL language itself, so a
     pure-SQL client can do it. Parameters are real bind values, not
     string splices — the injection-safe path."""
-    load_table(spark, "orders", sf_dir) \
-        .createOrReplaceTempView("lts_orders_exec_v")
     return spark.sql("""
         EXECUTE IMMEDIATE
           'SELECT o_orderkey, o_orderpriority, o_totalprice
-           FROM lts_orders_exec_v
+           FROM {orders}
            WHERE o_orderkey < ? AND o_orderpriority = ?'
           USING 500, '1-URGENT'
-    """)
+    """, orders=load_table(spark, "orders", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# SQL-language scalar function DDL (round 5)
+# SQL-language scalar function DDL
 # ---------------------------------------------------------------------------
 
 _SQL_FN_ORACLE = """
@@ -720,17 +714,15 @@ def sql_scalar_function_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
                     WHEN d < 0.06 THEN 'mid'
                     ELSE 'high' END
     """)
-    load_table(spark, "lineitem", sf_dir) \
-        .createOrReplaceTempView("lts_lineitem_fn_v")
     return spark.sql("""
         SELECT l_orderkey, l_linenumber, l_discount,
                lts_disc_band(l_discount) AS disc_band
-        FROM lts_lineitem_fn_v WHERE l_orderkey < 2000
-    """)
+        FROM {lineitem} WHERE l_orderkey < 2000
+    """, lineitem=load_table(spark, "lineitem", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# SQL session variables (round 5)
+# SQL session variables
 # ---------------------------------------------------------------------------
 
 _SESSION_VAR_ORACLE = """
@@ -750,16 +742,14 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually read."""
     spark.sql("DECLARE OR REPLACE VARIABLE lts_key_cap BIGINT DEFAULT 500")
     spark.sql("SET VAR lts_key_cap = 800")
-    load_table(spark, "orders", sf_dir) \
-        .createOrReplaceTempView("lts_orders_var_v")
     return spark.sql("""
         SELECT o_orderkey, o_orderpriority, o_totalprice
-        FROM lts_orders_var_v WHERE o_orderkey < lts_key_cap
-    """)
+        FROM {orders} WHERE o_orderkey < lts_key_cap
+    """, orders=load_table(spark, "orders", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# GROUP BY ALL / ORDER BY ALL (round 5, batch 8)
+# GROUP BY ALL / ORDER BY ALL
 # ---------------------------------------------------------------------------
 
 _GBY_ALL_ORACLE = """
@@ -785,20 +775,18 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     final hash aggregate on a 6-group key space); the sugar is resolved
     entirely in the analyzer, so nothing changes at the physical layer —
     which is exactly the claim worth pinning."""
-    load_table(spark, "lineitem", sf_dir) \
-        .createOrReplaceTempView("lts_li_gba_v")
     return spark.sql("""
         SELECT l_returnflag, l_linestatus,
                CAST(SUM(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT))
                     AS BIGINT) AS sum_qty_cents,
                CAST(COUNT(*) AS BIGINT) AS n_rows
-        FROM lts_li_gba_v WHERE l_shipdate <= DATE '1998-09-02'
+        FROM {lineitem} WHERE l_shipdate <= DATE '1998-09-02'
         GROUP BY ALL ORDER BY ALL
-    """)
+    """, lineitem=load_table(spark, "lineitem", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# named WINDOW clause (round 5, batch 8)
+# named WINDOW clause
 # ---------------------------------------------------------------------------
 
 _WIN_CLAUSE_SQL = """
@@ -826,13 +814,11 @@ def sql_window_clause_named(spark: SparkSession, sf_dir: str) -> DataFrame:
     and one sort — the named clause is how the SQL author gets the
     shared-exchange plan the DataFrame API gets from reusing a Window
     object."""
-    load_table(spark, "orders", sf_dir) \
-        .createOrReplaceTempView("lts_ord_winclause_v")
-    return spark.sql(_WIN_CLAUSE_SQL.format(src="lts_ord_winclause_v"))
+    return spark.sql(_WIN_CLAUSE_SQL, src=load_table(spark, "orders", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# VALUES inline table (round 5, batch 9)
+# VALUES inline table
 # ---------------------------------------------------------------------------
 
 _VALUES_SQL = """
@@ -859,13 +845,11 @@ def sql_values_inline_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-joins it against the fact scan (5 rows never shuffle the
     600k side), then the tier aggregate collapses map-side. This is the
     canonical tiny-dim pattern expressed purely in SQL."""
-    load_table(spark, "orders", sf_dir) \
-        .createOrReplaceTempView("lts_ord_vals_v")
-    return spark.sql(_VALUES_SQL.format(src="lts_ord_vals_v"))
+    return spark.sql(_VALUES_SQL, src=load_table(spark, "orders", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# HiveQL LATERAL VIEW (round 5, batch 9)
+# HiveQL LATERAL VIEW
 # ---------------------------------------------------------------------------
 
 _LATERAL_VIEW_ORACLE = """
@@ -888,18 +872,16 @@ def sql_lateral_view_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical Generate node to the DataFrame explode —
     narrow per-row fan-out, no shuffle; the WHERE prunes at the scan
     below the generator."""
-    load_table(spark, "documents", sf_dir) \
-        .createOrReplaceTempView("lts_doc_lv_v")
     return spark.sql("""
         SELECT doc_id, tok, CAST(pos AS BIGINT) AS pos
-        FROM lts_doc_lv_v
+        FROM {documents}
         LATERAL VIEW posexplode(split(text, ' ')) t AS pos, tok
         WHERE doc_id < 50
-    """)
+    """, documents=load_table(spark, "documents", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# DISTRIBUTE BY / SORT BY physical-layout clauses (round 5, batch 9)
+# DISTRIBUTE BY / SORT BY physical-layout clauses
 # ---------------------------------------------------------------------------
 
 _DIST_SORT_ORACLE = """
@@ -924,19 +906,17 @@ def sql_distribute_sort_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cents), so the oracle is the plain aggregate — layout
     clauses must never change CONTENT, which is exactly what parity
     pins."""
-    load_table(spark, "events", sf_dir) \
-        .createOrReplaceTempView("lts_ev_dist_v")
     return spark.sql("""
         SELECT event_type, CAST(user_id AS BIGINT) AS user_id,
                CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
                     AS BIGINT) AS cents
-        FROM lts_ev_dist_v GROUP BY event_type, user_id
+        FROM {events} GROUP BY event_type, user_id
         DISTRIBUTE BY event_type SORT BY event_type, user_id
-    """)
+    """, events=load_table(spark, "events", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# SQL join hints (round 5, batch 9)
+# SQL join hints
 # ---------------------------------------------------------------------------
 
 _JOIN_HINT_SQL = """
@@ -960,17 +940,14 @@ def sql_join_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle (the same query, no hint) pins that hints never change
     RESULTS — the two invariants that make hints safe to ship in
     production SQL."""
-    load_table(spark, "orders", sf_dir) \
-        .createOrReplaceTempView("lts_ord_hint_v")
-    load_table(spark, "customer", sf_dir) \
-        .createOrReplaceTempView("lts_cust_hint_v")
-    return spark.sql(_JOIN_HINT_SQL.format(
-        hint="/*+ BROADCAST(c) */ ", o="lts_ord_hint_v",
-        c="lts_cust_hint_v"))
+    return spark.sql(
+        _JOIN_HINT_SQL.format(hint="/*+ BROADCAST(c) */ ", o="{o}", c="{c}"),
+        o=load_table(spark, "orders", sf_dir),
+        c=load_table(spark, "customer", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# SQL merge-join hint (round 5, batch 10)
+# SQL merge-join hint
 # ---------------------------------------------------------------------------
 
 _MERGE_HINT_SQL = """
@@ -994,17 +971,15 @@ def sql_join_hint_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     fat payload column) the executor OOMs — SMJ spills sort runs to
     disk instead and degrades gracefully. The plan is pinned in
     tests/test_plans.py; the no-hint oracle pins result invariance."""
-    load_table(spark, "orders", sf_dir) \
-        .createOrReplaceTempView("lts_ord_mhint_v")
-    load_table(spark, "customer", sf_dir) \
-        .createOrReplaceTempView("lts_cust_mhint_v")
-    return spark.sql(_MERGE_HINT_SQL.format(
-        hint="/*+ SHUFFLE_MERGE(c) */ ", o="lts_ord_mhint_v",
-        c="lts_cust_mhint_v"))
+    return spark.sql(
+        _MERGE_HINT_SQL.format(hint="/*+ SHUFFLE_MERGE(c) */ ", o="{o}",
+                               c="{c}"),
+        o=load_table(spark, "orders", sf_dir),
+        c=load_table(spark, "customer", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# IDENTIFIER() dynamic-name resolution (round 5, batch 11)
+# IDENTIFIER() dynamic-name resolution
 # ---------------------------------------------------------------------------
 
 _IDENT_ORACLE = """
@@ -1023,22 +998,19 @@ def sql_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     Together with sql_parameterized (value binds) and
     sql_execute_immediate (dynamic statements) this completes the
     dynamic-SQL triad: values, names, statements — each with its own
-    safe mechanism. The name here is assembled from two fragments at
-    parse time, so the test proves resolution actually goes through
-    the clause."""
-    load_table(spark, "orders", sf_dir) \
-        .createOrReplaceTempView("lts_ident_orders_v")
+    safe mechanism. The name here arrives as a string literal, so the
+    test proves resolution actually goes through the clause."""
     return spark.sql("""
         SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders,
                CAST(SUM(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
                     AS BIGINT) AS cents
-        FROM IDENTIFIER('lts_ident_' || 'orders_v')
+        FROM IDENTIFIER('{orders}')
         GROUP BY o_orderpriority
-    """)
+    """, orders=load_table(spark, "orders", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# SELECT * EXCEPT (round 5, batch 13)
+# SELECT * EXCEPT
 # ---------------------------------------------------------------------------
 
 _STAR_EXCEPT_ORACLE = """
@@ -1057,16 +1029,14 @@ def sql_star_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics, and column PRUNING still applies — the excluded columns
     never leave the scan, so on a wide 100 TB table this reads less,
     not just projects less."""
-    load_table(spark, "orders", sf_dir) \
-        .createOrReplaceTempView("lts_ord_sexc_v")
     return spark.sql("""
         SELECT * EXCEPT (o_orderstatus, o_orderdate, o_totalprice)
-        FROM lts_ord_sexc_v WHERE o_orderkey < 500
-    """)
+        FROM {orders} WHERE o_orderkey < 500
+    """, orders=load_table(spark, "orders", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# range() table function (round 5, batch 14)
+# range() table function
 # ---------------------------------------------------------------------------
 
 _RANGE_TF_ORACLE = """
@@ -1092,20 +1062,18 @@ def sql_table_function_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: range() is a LocalRelation-like leaf parallelized by
     Spark's Range exec (no IO); the 12-row spine broadcasts against
     the fact scan."""
-    load_table(spark, "orders", sf_dir) \
-        .createOrReplaceTempView("lts_ord_range_v")
     return spark.sql("""
         SELECT r.id AS price_band,
                CAST(COUNT(o.o_orderkey) AS BIGINT) AS n_orders
         FROM range(0, 12) r
-        LEFT JOIN lts_ord_range_v o
+        LEFT JOIN {orders} o
           ON CAST(floor(o.o_totalprice / 50000) AS BIGINT) = r.id
         GROUP BY r.id
-    """)
+    """, orders=load_table(spark, "orders", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# SQL PIVOT clause (round 5, batch 15)
+# SQL PIVOT clause
 # ---------------------------------------------------------------------------
 
 _PIVOT_SQL_ORACLE = """
@@ -1132,23 +1100,21 @@ def sql_pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one hash aggregate on (ubucket, event_type) collapsed
     map-side, then the analyzer's pivot projection — no second pass."""
-    load_table(spark, "events", sf_dir) \
-        .createOrReplaceTempView("lts_ev_pivot_v")
     return spark.sql("""
         SELECT ubucket, CAST(click AS BIGINT) AS click_c,
                CAST(view AS BIGINT) AS view_c,
                CAST(purchase AS BIGINT) AS purchase_c
         FROM (SELECT event_type, CAST(user_id % 3 AS BIGINT) AS ubucket,
                      CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-              FROM lts_ev_pivot_v)
+              FROM {events})
         PIVOT (SUM(cents) FOR event_type IN ('click' AS click,
                                              'view' AS view,
                                              'purchase' AS purchase))
-    """)
+    """, events=load_table(spark, "events", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# SQL UNPIVOT clause (round 5, batch 15)
+# SQL UNPIVOT clause
 # ---------------------------------------------------------------------------
 
 _UNPIVOT_SQL_ORACLE = """
@@ -1169,19 +1135,17 @@ def sql_unpivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: a per-row Expand (rows × metrics), no shuffle — the
     long form is produced streaming at scan rate."""
-    load_table(spark, "orders", sf_dir) \
-        .createOrReplaceTempView("lts_ord_unpiv_v")
     return spark.sql("""
         SELECT o_orderkey, metric, val FROM (
           SELECT o_orderkey, CAST(o_custkey AS BIGINT) AS custkey,
                  CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-          FROM lts_ord_unpiv_v WHERE o_orderkey < 2000) t
+          FROM {orders} WHERE o_orderkey < 2000) t
         UNPIVOT (val FOR metric IN (custkey, cents))
-    """)
+    """, orders=load_table(spark, "orders", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# AQE REBALANCE hint (round 5, batch 15)
+# AQE REBALANCE hint
 # ---------------------------------------------------------------------------
 
 _REBALANCE_ORACLE = """
@@ -1203,20 +1167,18 @@ def sql_hint_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     sql_distribute_sort_by: fixed hash layout, no runtime adaptation).
     The aggregate downstream of the rebalance pins result invariance —
     layout hints must never change content."""
-    load_table(spark, "orders", sf_dir) \
-        .createOrReplaceTempView("lts_ord_rebal_v")
     return spark.sql("""
         SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
                     AS BIGINT) AS cents
         FROM (SELECT /*+ REBALANCE(o_orderpriority) */ *
-              FROM lts_ord_rebal_v)
+              FROM {orders})
         GROUP BY o_orderpriority
-    """)
+    """, orders=load_table(spark, "orders", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# LEFT SEMI / ANTI JOIN SQL keywords (round 5, batch 17)
+# LEFT SEMI / ANTI JOIN SQL keywords
 # ---------------------------------------------------------------------------
 
 _SEMI_SQL_ORACLE = """
@@ -1239,19 +1201,16 @@ def sql_semi_anti_join_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: semi join never materializes matches (first hit wins),
     and the probe side streams — the cheapest existence check at any
     scale."""
-    load_table(spark, "orders", sf_dir) \
-        .createOrReplaceTempView("lts_ord_semi_v")
-    load_table(spark, "customer", sf_dir) \
-        .createOrReplaceTempView("lts_cust_semi_v")
     return spark.sql("""
-        SELECT c.c_custkey, c.c_mktsegment FROM lts_cust_semi_v c
-        LEFT SEMI JOIN lts_ord_semi_v o
+        SELECT c.c_custkey, c.c_mktsegment FROM {customer} c
+        LEFT SEMI JOIN {orders} o
           ON o.o_custkey = c.c_custkey AND o.o_totalprice > 300000
-    """)
+    """, orders=load_table(spark, "orders", sf_dir),
+        customer=load_table(spark, "customer", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# ORDER BY ALL (round 6)
+# ORDER BY ALL
 # ---------------------------------------------------------------------------
 
 _ORDER_ALL_ORACLE = """
@@ -1279,8 +1238,6 @@ def sql_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: combinable groupBy; ORDER BY + LIMIT plans as
     TakeOrderedAndProject (per-partition top-N, never a global sort)."""
-    load_table(spark, "orders", sf_dir) \
-        .createOrReplaceTempView("lts_order_all_v")
     return spark.sql("""
         SELECT o_orderstatus,
                date_format(date_trunc('month', o_orderdate), 'yyyy-MM')
@@ -1289,15 +1246,15 @@ def sql_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(CAST(sign(o_totalprice * 100)
                              * floor(abs(o_totalprice * 100) + 0.5)
                              AS BIGINT)) AS BIGINT) AS cents
-        FROM lts_order_all_v
+        FROM {orders}
         GROUP BY ALL
         ORDER BY ALL
         LIMIT 10
-    """)
+    """, orders=load_table(spark, "orders", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# global temp views (round 6)
+# global temp views
 # ---------------------------------------------------------------------------
 
 _GLOBAL_TEMP_ORACLE = """
@@ -1333,7 +1290,7 @@ def sql_global_temp_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SQL scripting procedural block (round 6)
+# SQL scripting procedural block
 # ---------------------------------------------------------------------------
 
 _SCRIPT_ORACLE = """
@@ -1397,37 +1354,36 @@ def sql_scripting_block(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.expr("cast(100 * (cast(1 as bigint) "
                                "<< cast(k as int)) as bigint)").alias("thr"),
                         "cnt")
-                # r11: ONE partition — every WHILE iteration's scalar
+                # ONE partition — every WHILE iteration's scalar
                 # subquery launches a job over this table, and at the
                 # session's 32 shuffle partitions each of those ~20
-                # sequential jobs scheduled 32 tasks to scan 41 rows;
+                # sequential jobs would schedule 32 tasks to scan 41 rows;
                 # coalesce(1) makes each loop job a single task
                 .coalesce(1)
                 .localCheckpoint())  # loop queries hit 41 cached rows
-        hist.createOrReplaceTempView("lts_script_hist")
         return spark.sql("""
         BEGIN
           DECLARE thr BIGINT DEFAULT 100;
           DECLARE kv INT DEFAULT 0;
           DECLARE cnt BIGINT DEFAULT 0;
-          SET cnt = (SELECT cnt FROM lts_script_hist WHERE k = 0);
+          SET cnt = (SELECT cnt FROM {hist} WHERE k = 0);
           WHILE cnt >= 100 AND kv < 40 DO
             SET kv = kv + 1;
             -- one multiple-assignment scalar subquery per iteration
-            -- (round 9: two separate SETs doubled the sequential job
+            -- (two separate SETs would double the sequential job
             -- count, and each scripting scalar job costs ~70 ms of pure
             -- scheduling against the 41 cached rows)
-            SET (thr, cnt) = (SELECT thr, cnt FROM lts_script_hist
+            SET (thr, cnt) = (SELECT thr, cnt FROM {hist}
                               WHERE k = kv);
           END WHILE;
           SELECT thr AS threshold_cents, CAST(kv AS BIGINT) AS n_doublings,
                  cnt AS n_above;
         END
-        """)
+        """, hist=hist)
 
 
 # ---------------------------------------------------------------------------
-# incremental materialized-view refresh (round 6)
+# incremental materialized-view refresh
 # ---------------------------------------------------------------------------
 
 _MV_ORACLE = """

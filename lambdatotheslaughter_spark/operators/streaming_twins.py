@@ -20,7 +20,8 @@ from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.determinism import DEC, dsum, oracle_dsum
 from lambdatotheslaughter_spark.registry import register
-from lambdatotheslaughter_spark.streaming.harness import checkpoint_dir, drain
+from lambdatotheslaughter_spark.streaming.harness import (checkpoint_dir, drain,
+                                                          drain_to_memory)
 from lambdatotheslaughter_spark.tables import drop_managed_table, load_table
 
 
@@ -257,19 +258,12 @@ def sink_stream_console_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
     with AvailableNow — and returns the sink table. Same oracle as the
     tumbling twin because the stream provably converges to the batch result.
     """
-    import uuid
-
-    name = f"lts_mem_{uuid.uuid4().hex[:8]}"
     # stream straight from the sf parquet (footer-dispatched ns/µs ts
     # normalization shared with load_table)
     from lambdatotheslaughter_spark.tables import events_reader
 
     src = events_reader(spark, sf_dir, streaming=True)
-    writer = (tumbling_agg(src).writeStream.outputMode("complete")
-              .format("memory").queryName(name))
-    with checkpoint_dir(spark, name) as ckpt:
-        drain(spark, writer, ckpt)
-    return spark.table(name)
+    return drain_to_memory(spark, tumbling_agg(src), "complete", "lts_mem")[0]
 
 
 _STATE_OP_ORACLE = """
@@ -290,15 +284,10 @@ def stream_stateful_state_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     the state-store path itself is driver-checkable, not just its twin.
     Rounded to 4 dp: the in-state accumulator is a float64 (pandas) sum.
     """
-    import os
-    import uuid
-
     import pandas as pd
 
-    from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    name = f"lts_state_{uuid.uuid4().hex[:8]}"
     from lambdatotheslaughter_spark.tables import events_reader
 
     src = events_reader(spark, sf_dir, streaming=True)
@@ -319,10 +308,7 @@ def stream_stateful_state_op(spark: SparkSession, sf_dir: str) -> DataFrame:
         stateStructType="total double, n bigint",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout)
-    writer = out.writeStream.outputMode("update").format("memory").queryName(name)
-    with checkpoint_dir(spark, name) as ckpt:
-        drain(spark, writer, ckpt)
-    return spark.table(name)
+    return drain_to_memory(spark, out, "update", "lts_state")[0]
 
 
 def tws_available() -> bool:
@@ -353,8 +339,6 @@ def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState form — per-key state in the state store,
     Arrow-batched Python, one shuffle on the grouping key — with TWS
     adding typed state primitives (value/list/map) and timers."""
-    import uuid
-
     import pandas as pd
 
     if not tws_available():
@@ -384,7 +368,6 @@ def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    name = f"lts_tws_{uuid.uuid4().hex[:8]}"
     from lambdatotheslaughter_spark.tables import events_reader
 
     src = events_reader(spark, sf_dir, streaming=True)
@@ -393,10 +376,7 @@ def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputStructType="user_id bigint, total_value double, n_events bigint",
         outputMode="Update",
         timeMode="None")
-    writer = out.writeStream.outputMode("update").format("memory").queryName(name)
-    with checkpoint_dir(spark, name) as ckpt:
-        drain(spark, writer, ckpt)
-    return spark.table(name)
+    return drain_to_memory(spark, out, "update", "lts_tws")[0]
 
 
 def interval_pair_join(views: DataFrame, clicks: DataFrame,

@@ -79,7 +79,7 @@ def udaf_pandas_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped custom aggregation via applyInPandas (per-user median).
     Rounded to 6 dp: numpy's (a+b)/2 midpoint vs DuckDB's a+(b-a)*0.5
     interpolation can differ by 1 ulp. Users are sampled (user_id % 20 —
-    the udf_cogrouped_map bound, r9: the all-users demo paid ~10k Python
+    the udf_cogrouped_map bound; the all-users demo paid ~10k Python
     group dispatches, 2.6 s at sf0.1): per-group pandas overhead is the
     API's real cost, and a full-corpus median belongs on the JVM
     percentile_approx/exact-sort path."""
@@ -115,11 +115,10 @@ def udtf_explode_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield (i,)
 
     spark.udtf.register("lts_expand_seq", ExpandSeq)
-    load_table(spark, "region", sf_dir).createOrReplaceTempView("lts_region_v")
     return spark.sql("""
         SELECT r.r_regionkey, r.r_name, t.seq
-        FROM lts_region_v r, LATERAL lts_expand_seq(r.r_regionkey) t
-    """)
+        FROM {region} r, LATERAL lts_expand_seq(r.r_regionkey) t
+    """, region=load_table(spark, "region", sf_dir))
 
 
 @register("udf_arrow_optimized", oracle="""
@@ -271,11 +270,10 @@ def udtf_dynamic_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
                         for i in range(int(k)))
 
     spark.udtf.register("lts_prefix_tokens", PrefixTokens)
-    load_table(spark, "documents", sf_dir).createOrReplaceTempView("docs_udtf")
     return spark.sql("""
         SELECT d.doc_id, s.*
-        FROM docs_udtf d, LATERAL lts_prefix_tokens(d.text, 3) s
-    """)
+        FROM {docs} d, LATERAL lts_prefix_tokens(d.text, 3) s
+    """, docs=load_table(spark, "documents", sf_dir))
 
 
 _COUNTER_STREAM_ORACLE = """
@@ -328,7 +326,7 @@ def source_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFra
     # localCheckpoint so the per-run /tmp output dir can be removed now
     # instead of leaking across sweeps (same discipline as
     # sink_stream_to_table); eager=True pins the 900 rows in block storage.
-    # Schema pinned explicitly (r12): the batches were written from the
+    # Schema pinned explicitly: the batches were written from the
     # source's declared "i int, v int", so inference could only ever agree —
     # pinning skips the footer-sampling pass at plan time (guide §6).
     res = (spark.read.schema("i int, v int").parquet(*dirs)
@@ -358,8 +356,8 @@ def udf_cogrouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     as aligned pandas frames in one call (the reconciliation shape — here
     an order-vs-items audit: item count, quantity total, and the gap
     between the order's total price and the sum of its line prices, all
-    in exact integer cents). Keys are sampled (o_orderkey % 1000 = 0 —
-    tightened from %100 in round 9: at sf0.1 the 1%-of-keys demo paid
+    in exact integer cents). Keys are sampled (o_orderkey % 1000 = 0,
+    not % 100: at sf0.1 the 1%-of-keys demo paid
     ~4 ms/group × 1 500 Python group calls = 6.6 s of pure cogroup
     dispatch) so the demo stays a bounded ~0.1% of keys: per-group
     pandas overhead is the API's real cost and a full-corpus run
@@ -508,12 +506,11 @@ def udf_sql_registered(spark: SparkSession, sf_dir: str) -> DataFrame:
         return "expedite" if p and p[0] in ("1", "2") else "routine"
 
     spark.udf.register("lts_priority_lane", lane, "string")
-    load_table(spark, "orders", sf_dir).createOrReplaceTempView("lts_orders_v")
     return spark.sql("""
         SELECT o_orderkey, o_orderpriority,
                lts_priority_lane(o_orderpriority) AS lane
-        FROM lts_orders_v WHERE o_orderkey < 2000
-    """)
+        FROM {orders} WHERE o_orderkey < 2000
+    """, orders=load_table(spark, "orders", sf_dir))
 
 
 @register("udf_apply_in_arrow", oracle="""
@@ -565,7 +562,7 @@ def udf_apply_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SQL-registered Python UDTF (round 5, batch 17)
+# SQL-registered Python UDTF
 # ---------------------------------------------------------------------------
 
 _UDTF_SQL_ORACLE = """
@@ -602,19 +599,17 @@ def udtf_sql_registered(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield i, i * 50000, (i + 1) * 50000
 
     spark.udtf.register("lts_price_bands", PriceBands)
-    load_table(spark, "orders", sf_dir) \
-        .createOrReplaceTempView("lts_ord_udtf_v")
     return spark.sql("""
         SELECT b.band, CAST(COUNT(o.o_orderkey) AS BIGINT) AS n_orders
         FROM lts_price_bands(6) b
-        LEFT JOIN lts_ord_udtf_v o
+        LEFT JOIN {orders} o
           ON o.o_totalprice >= b.lo AND o.o_totalprice < b.hi
         GROUP BY b.band
-    """)
+    """, orders=load_table(spark, "orders", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# Arrow-native UDTF (round 6 — Spark 4.1)
+# Arrow-native UDTF (Spark 4.1)
 # ---------------------------------------------------------------------------
 
 _ARROW_UDTF_ORACLE = """
@@ -679,16 +674,14 @@ def udtf_arrow_optimized(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield out.combine_chunks().to_batches(max_chunksize=None)[0]
 
     spark.udtf.register("lts_token_stats_arrow", TokenStats)
-    load_table(spark, "documents", sf_dir) \
-        .createOrReplaceTempView("docs_arrow_udtf")
     return spark.sql("""
         SELECT s.* FROM lts_token_stats_arrow(
-            TABLE(SELECT doc_id, text FROM docs_arrow_udtf)) s
-    """)
+            TABLE(SELECT doc_id, text FROM {docs})) s
+    """, docs=load_table(spark, "documents", sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# UDTF with a TABLE argument + PARTITION BY (round 6, Spark 3.5+/4)
+# UDTF with a TABLE argument + PARTITION BY (Spark 3.5+/4)
 # ---------------------------------------------------------------------------
 
 _TABLE_ARG_ORACLE = """
@@ -716,7 +709,7 @@ def udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: PARTITION BY shuffles once on the group key; each
     group streams through one Python instance row-by-row with O(1)
     state -- group-parallel, never corpus-serial. Input is sampled
-    (user_id % 10, r9): per-ROW Python eval is the API's real cost
+    (user_id % 10): per-ROW Python eval is the API's real cost
     (~2.1 s for the full 200k-row corpus at sf0.1), and the routing
     contract under test is grain-independent."""
     from pyspark.sql.functions import udtf
@@ -739,14 +732,13 @@ def udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield self._key, self._n, self._sum
 
     spark.udtf.register("lts_type_rollup", TypeRollup)
-    (load_table(spark, "events", sf_dir)
-     .where(F.col("user_id") % 10 == 0)
-     .select("event_type",
-             F.round(F.col("value") * 100, 0).cast("bigint")
-             .alias("cents"))
-     .createOrReplaceTempView("lts_ev_tblarg_v"))
+    ev = (load_table(spark, "events", sf_dir)
+          .where(F.col("user_id") % 10 == 0)
+          .select("event_type",
+                  F.round(F.col("value") * 100, 0).cast("bigint")
+                  .alias("cents")))
     return spark.sql("""
         SELECT * FROM lts_type_rollup(
-          TABLE(SELECT event_type, cents FROM lts_ev_tblarg_v)
+          TABLE(SELECT event_type, cents FROM {ev})
           PARTITION BY event_type)
-    """)
+    """, ev=ev)

@@ -471,8 +471,6 @@ def win_lag_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one (user, time) exchange, O(1) state per row (the
     window operator tracks one last-non-null slot)."""
-    load_table(spark, "events", sf_dir) \
-        .createOrReplaceTempView("lts_ev_lagin_v")
     return spark.sql("""
         SELECT event_id, user_id,
           lag(nv, 1) IGNORE NULLS OVER (PARTITION BY user_id
@@ -481,8 +479,8 @@ def win_lag_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
                      CASE WHEN value > 500
                           THEN CAST(floor(value * 100 + 0.5) AS BIGINT)
                      END AS nv
-              FROM lts_ev_lagin_v WHERE user_id < 50)
-    """)
+              FROM {events} WHERE user_id < 50)
+    """, events=load_table(spark, "events", sf_dir))
 
 
 # ---------------------------------------------------------------------------

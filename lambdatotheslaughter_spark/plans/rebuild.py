@@ -1,17 +1,18 @@
 """Batch-view recomputation — lambda-architecture entry 3 (SURVEY.md §3).
 
 The batch layer periodically recomputes every serving view from the
-immutable master dataset and swaps it into the warehouse, while the speed
-layer covers the window since the last rebuild. Merge semantics: batch view
-wins; the speed view (foreachBatch upsert table, streaming/harness.py) is
-consulted only for keys newer than the rebuild watermark.
+immutable master dataset and swaps it into the warehouse. The speed layer
+keeps its own serving table (the foreachBatch upsert in
+streaming/harness.py). No read merges the two: a reader queries either a
+batch view or the serving table, and a rebuild records no watermark.
 
 A rebuild submits every view at once, one thread per view, in the one
 session, so the views' small Spark jobs share the cores instead of running
 one after another. Each view is published through ``tables.publish_view``:
 a new parquet version, then one catalog repoint, so a reader always finds
 a whole view. A view builder must therefore return a lazy plan, and set no
-session conf and register no temp view while building it.
+session conf and register no temp view while building it;
+tests/test_oracle_parity.py checks this for every registry key.
 """
 
 from __future__ import annotations

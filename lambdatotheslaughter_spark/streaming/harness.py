@@ -78,6 +78,21 @@ def drain(spark: SparkSession, writer: DataStreamWriter, checkpoint: str,
     return query
 
 
+def drain_to_memory(spark: SparkSession, stream: DataFrame, output_mode: str,
+                    prefix: str) -> tuple[DataFrame, StreamingQuery]:
+    """Drain ``stream`` into a memory sink named ``<prefix>_<random>`` and
+    return the sink's rows with the drained query. The sink's temp view is
+    dropped before this returns: the returned DataFrame has already resolved
+    it, so every call leaves the session catalog as it found it."""
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    writer = stream.writeStream.outputMode(output_mode).format("memory").queryName(name)
+    with checkpoint_dir(spark, name) as ckpt:
+        query = drain(spark, writer, ckpt)
+    rows = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return rows, query
+
+
 EVENT_STREAM_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
     T.StructField("ts", T.TimestampType()),
@@ -136,19 +151,21 @@ class EventStreamHarness:
             foreach_batch=None) -> DataFrame:
         """Apply `transform` to the stream, drain it with AvailableNow
         (honors maxFilesPerTrigger → true multi-micro-batch execution),
-        return the memory-sink table."""
+        return the memory-sink rows, or None with ``foreach_batch``.
+        ``last_query`` is the drained query, for callers that need its
+        progress telemetry (e.g. the final event-time watermark, which
+        decides which outer-join null rows were evictable before
+        shutdown)."""
+        stream = transform(self.source())
+        if foreach_batch is None:
+            rows, self.last_query = drain_to_memory(self.spark, stream,
+                                                    output_mode, "lts_sink")
+            return rows
         name = f"lts_sink_{uuid.uuid4().hex[:8]}"
-        writer = transform(self.source()).writeStream.outputMode(output_mode)
-        if foreach_batch is not None:
-            writer = writer.foreachBatch(foreach_batch)
-        else:
-            writer = writer.format("memory").queryName(name)
+        writer = stream.writeStream.outputMode(output_mode).foreachBatch(foreach_batch)
         with checkpoint_dir(self.spark, name) as ckpt:
-            # expose the drained query for tests that need its progress
-            # telemetry (e.g. the final event-time watermark, which decides
-            # which outer-join null rows were evictable before shutdown)
             self.last_query = drain(self.spark, writer, ckpt)
-        return self.spark.table(name) if foreach_batch is None else None
+        return None
 
     def cleanup(self) -> None:
         shutil.rmtree(self.input_dir, ignore_errors=True)

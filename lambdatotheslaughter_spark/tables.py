@@ -212,10 +212,10 @@ def publish_view(spark: SparkSession, df: DataFrame, view: str) -> None:
     """Write ``df`` as a new version of the view ``view`` and swap it in.
 
     The frame is written as parquet to a fresh version directory,
-    ``<warehouse>/<view>/<version>``, then one ``CREATE OR REPLACE VIEW``
-    repoints the view at it, then every entry under ``<warehouse>/<view>``
-    but the new version and the one it replaced is deleted (an orphan
-    managed table of an earlier process included). A reader finds the old
+    ``<warehouse>/<view>/<version>``, then one ``ALTER VIEW`` (``CREATE
+    VIEW`` the first time) repoints the view at it, then every entry under
+    ``<warehouse>/<view>`` but the new version and the one it replaced is
+    deleted (an orphan managed table of an earlier process included). A reader finds the old
     version or the new one, never no view, and a reader still on the old
     version finishes. A failed write leaves the view on its old version.
 
@@ -227,7 +227,11 @@ def publish_view(spark: SparkSession, df: DataFrame, view: str) -> None:
     version = uuid.uuid4().hex
     path = os.path.join(root, version)
     df.write.parquet(path)
-    spark.sql(f"CREATE OR REPLACE VIEW {view} AS SELECT * FROM parquet.`{path}`")
+    # ALTER VIEW swaps the definition in one catalog call; CREATE OR REPLACE
+    # VIEW drops the view and then creates it, and a reader in between
+    # finds no view
+    verb = "ALTER" if spark.catalog.tableExists(view) else "CREATE"
+    spark.sql(f"{verb} VIEW {view} AS SELECT * FROM parquet.`{path}`")
     for old in set(os.listdir(root)) - {version, replaced}:
         old = os.path.join(root, old)
         if os.path.isdir(old):

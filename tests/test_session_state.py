@@ -17,7 +17,6 @@ import tempfile
 import pytest
 
 from lambdatotheslaughter_spark import registry
-from lambdatotheslaughter_spark.plans.rebuild import DEFAULT_VIEWS
 from lambdatotheslaughter_spark.tables import load_table
 from tests.conftest import SMOKE_SF_DIR
 
@@ -48,27 +47,6 @@ def test_key_hands_session_confs_back(spark, monkeypatch, tmp_path, key):
     registry.get(key).fn(spark, SMOKE_SF_DIR).collect()
     assert spark.conf.getAll == before
     assert spark.sql("BEGIN SELECT 1 AS one; END").collect()[0].one == 1
-
-
-@pytest.mark.parametrize("key", DEFAULT_VIEWS)
-def test_view_builder_is_safe_on_a_rebuild_thread(spark, key):
-    """``rebuild_views`` builds and writes every view on its own thread in
-    the one session, so a view builder returns a lazy plan (no Spark job
-    while building it) and neither building nor running it changes the
-    session's confs or its tables and temp views."""
-    load_table(spark, "events", SMOKE_SF_DIR)  # tables.py's permanent confs
-    sc = spark.sparkContext
-    group = f"build-{key}"
-    confs, listed = spark.conf.getAll, spark.catalog.listTables()
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        df = registry.get(key).fn(spark, SMOKE_SF_DIR)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
-    df.collect()
-    assert spark.conf.getAll == confs
-    assert spark.catalog.listTables() == listed
 
 
 def _package_trees():

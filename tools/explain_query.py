@@ -1,11 +1,9 @@
 #!/usr/bin/env python
-"""Dump `.explain("formatted")` for one or more registry keys to
-plans/<round>/<key>_<tag>.txt (the optimization-round plan artifact).
+"""Print `.explain("formatted")` for one or more registry keys to stdout.
 
-Usage: python tools/explain_query.py <tag> <query> [<query> ...]
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_PLANS_ROUND (default r12).
+Usage: python tools/explain_query.py --sf-dir DIR <query> [<query> ...]
 """
+import argparse
 import os
 import sys
 
@@ -14,18 +12,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from lambdatotheslaughter_spark import registry
 from lambdatotheslaughter_spark.session import get_spark
 
-SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r12"))
+parser = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+parser.add_argument("queries", nargs="+", metavar="query")
+parser.add_argument("--sf-dir", required=True,
+                    help="scale-factor directory of the input parquet")
+args = parser.parse_args()
 
-tag = sys.argv[1]
-os.makedirs(OUT, exist_ok=True)
 spark = get_spark("lts-explain")
-for name in sys.argv[2:]:
-    df = registry.all_queries()[name](spark, SF)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted")
-    path = os.path.join(OUT, f"{name}_{tag}.txt")
-    with open(path, "w") as f:
-        f.write(plan)
-    print(f"wrote {path} ({len(plan.splitlines())} lines)")
+for name in args.queries:
+    df = registry.get(name).fn(spark, args.sf_dir)
+    print(f"== {name} ==")
+    print(df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"))
