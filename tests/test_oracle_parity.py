@@ -6,7 +6,7 @@ a stable schema across two runs (determinism smoke).
 Both checks also hold every key to the contract of the one shared session:
 building a key starts no Spark job, and building and running it leave the
 session's confs and catalog as they were. The two allowlists below name the
-keys whose feature is such an effect.
+keys allowed such an effect, with the reason for each.
 """
 
 from __future__ import annotations
