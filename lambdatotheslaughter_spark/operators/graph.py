@@ -45,6 +45,90 @@ _EDGES_SQL = """
 """
 
 
+def _transitions(li: DataFrame) -> DataFrame:
+    """The Spark twin of ``_EDGES_SQL``: one (src, dst) edge per lineitem
+    of ``li`` that has a next part in its order."""
+    w = Window.partitionBy("l_orderkey").orderBy(
+        "l_linenumber", "l_partkey", "l_suppkey")
+    return (li.select(F.col("l_partkey").alias("src"),
+                      F.lead("l_partkey").over(w).alias("dst"))
+            .where(F.col("dst").isNotNull()))
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """Each (src, dst) edge as its unordered endpoint pair (a, b), a <= b."""
+    return edges.select(F.least("src", "dst").alias("a"),
+                        F.greatest("src", "dst").alias("b"))
+
+
+def _oriented_triangles(und: DataFrame,
+                        sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Degree-ordered node-iterator triangle listing over the undirected
+    edge set ``und`` (a, b). Returns the checkpointed degree table
+    (v, d) and one (pivot, x, y) row per triangle, x < y.
+
+    Each edge is oriented from the endpoint with smaller (degree, id) to
+    the larger. That is a total order, so the oriented graph is acyclic
+    and out-degree is O(sqrt(|E|)) on any graph: the wedge table is
+    Θ(Σ out_deg²) ≈ |E|^1.5 worst case instead of the unoriented Σ deg²
+    blow-up at hub vertices."""
+    # checkpoint the O(V) degree table: the two orientation sides (and
+    # any caller's join back to it) are separate subtrees, so
+    # uncheckpointed the 2E-row degree shuffle ran once per consumer.
+    # Interleaved fresh-JVM A/B pairs at 32 and 8 cores read the
+    # checkpointed form at or under the uncheckpointed one in every
+    # quiet pair.
+    deg = (und.select(F.col("a").alias("v")).unionAll(und.select("b"))
+           .groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+           .localCheckpoint(eager=False))
+    da = deg.select(F.col("v").alias("a"), F.col("d").alias("d_a"))
+    db = deg.select(F.col("v").alias("b"), F.col("d").alias("d_b"))
+    # degree tables are O(V): broadcast so the E-row edge set never
+    # reshuffles for the orientation join
+    oriented = (und.join(F.broadcast(da), "a").join(F.broadcast(db), "b")
+                .select(F.when((F.col("d_a") < F.col("d_b"))
+                               | ((F.col("d_a") == F.col("d_b"))
+                                  & (F.col("a") < F.col("b"))),
+                               F.struct(F.col("a").alias("u"),
+                                        F.col("b").alias("w")))
+                        .otherwise(F.struct(F.col("b").alias("u"),
+                                            F.col("a").alias("w")))
+                        .alias("e"))
+                .select("e.u", "e.w")
+                .localCheckpoint(eager=False))  # wedge build + probe share it
+    # wedge build: pivot self-join of the oriented edges. (An
+    # adjacency-list variant — groupBy u + nested-transform pair
+    # expansion — was measured 2× SLOWER at sf0.1: higher-order lambdas
+    # evaluate interpreted, the same lesson the minhash signature stage
+    # recorded; the equi-join stays in whole-stage codegen.)
+    e1 = oriented.select(F.col("u").alias("pivot"), F.col("w").alias("x"))
+    e2 = oriented.select(F.col("u").alias("pivot"), F.col("w").alias("y"))
+    wedges = e1.join(e2, "pivot").where(F.col("x") < F.col("y"))
+    # the closing-edge lookup joins on the id-ordered pair so the probe
+    # stays a pure two-key equi-join (an OR over orientations would push
+    # Spark off the hash-join path). The probe side is the EDGE list —
+    # Θ(√E·E) wedges stream past it, so ship the small side to the
+    # wedges, not the wedges to a shuffle: broadcast while the edge list
+    # is broadcast-sized (metadata-gated like the incremental-dedup
+    # joins), plain shuffle join beyond.
+    probe = oriented.select(F.least("u", "w").alias("x"),
+                            F.greatest("u", "w").alias("y"))
+    if estimate_rows(sf_dir, "lineitem") <= 10_000_000:
+        probe = F.broadcast(probe)
+    return deg, wedges.join(probe, ["x", "y"])
+
+
+def _triangle_edges(tri: DataFrame) -> DataFrame:
+    """The three (a, b) edges, a < b, of each (pivot, x, y) triangle."""
+    return tri.select(F.explode(F.array(
+        F.struct(F.least("pivot", "x").alias("a"),
+                 F.greatest("pivot", "x").alias("b")),
+        F.struct(F.least("pivot", "y").alias("a"),
+                 F.greatest("pivot", "y").alias("b")),
+        F.struct(F.col("x").alias("a"), F.col("y").alias("b"))))
+        .alias("e")).select("e.a", "e.b")
+
+
 def _pagerank_oracle() -> str:
     """Unrolled fixed-point PageRank CTE chain (same integer arithmetic as
     the Spark side; `//` is DuckDB's integral floor division)."""
@@ -84,26 +168,20 @@ def graph_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominates and each round is a bounded pair of shuffles — the classic
     Pregel-as-dataflow shape, with AQE free to broadcast the rank vector
     while it is small."""
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    edges = (li.select(F.col("l_partkey").alias("src"),
-                       F.lead("l_partkey").over(w).alias("dst"))
-             .where(F.col("dst").isNotNull()))
-    # collapse multi-edges to weighted distinct pairs ONCE (r9): the
+    edges = _transitions(load_table(spark, "lineitem", sf_dir))
+    # collapse multi-edges to weighted distinct pairs ONCE: the
     # transition list repeats (src, dst) heavily (~10× here), and w
     # copies of the exact integer term (r div d) sum to w·(r div d) —
-    # bit-identical, at a tenth of the per-round scan volume. r11:
-    # checkpoint edges_w itself and derive the node set FROM it — the
-    # node-set lineage and the degree join each re-ran the lineitem
-    # window pass before, so the window now runs once per query
+    # bit-identical, at a tenth of the per-round scan volume. Checkpoint
+    # edges_w itself and derive the node set FROM it, so the lineitem
+    # window pass runs once per query (the node-set lineage and the
+    # degree join would each re-run it)
     edges_w = (edges.groupBy("src", "dst")
                .agg(F.count(F.lit(1)).cast("bigint").alias("wt"))
                .localCheckpoint(eager=False))
     # checkpoint the node set: it anchors the initial ranks AND every
     # round's left join — uncheckpointed, the window+distinct subtree
-    # re-evaluated up to 5× per run (r9 fix, ~40% of the key's cost)
+    # re-evaluated up to 5× per run (~40% of the key's cost)
     nodes = (edges_w.select(F.col("src").alias("node"))
              .union(edges_w.select("dst")).distinct()
              .localCheckpoint(eager=False))
@@ -171,58 +249,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps triangle counting shuffle-bounded at 100 TB. Joins are
     name-keyed equi-joins on vertex ids throughout; the wedge probe is
     the only non-trivial shuffle."""
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    raw = (li.select(F.col("l_partkey").alias("src"),
-                     F.lead("l_partkey").over(w).alias("dst"))
-           .where(F.col("dst").isNotNull() & (F.col("src") != F.col("dst"))))
-    und = (raw.select(F.least("src", "dst").alias("a"),
-                      F.greatest("src", "dst").alias("b"))
-           .distinct()
+    raw = (_transitions(load_table(spark, "lineitem", sf_dir))
+           .where(F.col("src") != F.col("dst")))
+    und = (_undirected(raw).distinct()
            .localCheckpoint(eager=False))  # degree count + orientation share it
-    # r11: checkpoint the O(V) degree table — da and db are separate
-    # subtrees, so uncheckpointed the 2E-row degree shuffle ran twice
-    deg = (und.select(F.col("a").alias("v")).unionAll(und.select("b"))
-           .groupBy("v").agg(F.count(F.lit(1)).alias("d"))
-           .localCheckpoint(eager=False))
-    da = deg.select(F.col("v").alias("a"), F.col("d").alias("d_a"))
-    db = deg.select(F.col("v").alias("b"), F.col("d").alias("d_b"))
-    # orient low(degree, id) -> high(degree, id): total order, acyclic
-    # (degree tables are O(V): broadcast so the E-row edge set never
-    # reshuffles for the orientation join — aligned with the siblings)
-    oriented = (und.join(F.broadcast(da), "a").join(F.broadcast(db), "b")
-                .select(F.when((F.col("d_a") < F.col("d_b"))
-                               | ((F.col("d_a") == F.col("d_b"))
-                                  & (F.col("a") < F.col("b"))),
-                               F.struct(F.col("a").alias("u"),
-                                        F.col("b").alias("w")))
-                        .otherwise(F.struct(F.col("b").alias("u"),
-                                            F.col("a").alias("w")))
-                        .alias("e"))
-                .select("e.u", "e.w")
-                .localCheckpoint(eager=False))  # wedge build + probe share it
-    # wedge build: pivot self-join of the oriented edges. (An
-    # adjacency-list variant — groupBy u + nested-transform pair
-    # expansion — was measured 2× SLOWER at sf0.1: higher-order lambdas
-    # evaluate interpreted, the same lesson the minhash signature stage
-    # recorded; the equi-join stays in whole-stage codegen.)
-    e1 = oriented.select(F.col("u").alias("pivot"), F.col("w").alias("x"))
-    e2 = oriented.select(F.col("u").alias("pivot"), F.col("w").alias("y"))
-    wedges = (e1.join(e2, "pivot").where(F.col("x") < F.col("y")))
-    # the closing-edge lookup joins on the id-ordered pair so the probe
-    # stays a pure two-key equi-join (an OR over orientations would push
-    # Spark off the hash-join path). The probe side is the EDGE list —
-    # Θ(√E·E) wedges stream past it, so ship the small side to the
-    # wedges, not the wedges to a shuffle: broadcast while the edge list
-    # is broadcast-sized (metadata-gated like the incremental-dedup
-    # joins), plain shuffle join beyond.
-    probe = oriented.select(F.least("u", "w").alias("x"),
-                            F.greatest("u", "w").alias("y"))
-    if estimate_rows(sf_dir, "lineitem") <= 10_000_000:
-        probe = F.broadcast(probe)
-    tri = wedges.join(probe, ["x", "y"])
+    _, tri = _oriented_triangles(und, sf_dir)
     n_tri = tri.agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
     n_edges = und.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
     n_vert = (und.select(F.col("a").alias("v")).union(und.select("b"))
@@ -270,16 +301,10 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected. Depth is a fixed small constant, so lineage stays
     shallow without checkpoints; the frontier is lazily checkpointed
     because two consumers (union + next level) share it."""
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    edges = (li.select(F.col("l_partkey").alias("src"),
-                       F.lead("l_partkey").over(w).alias("dst"))
-             .where(F.col("dst").isNotNull())
+    edges = (_transitions(load_table(spark, "lineitem", sf_dir))
              .distinct().localCheckpoint())  # reused every level
-    # r11: checkpoint the node set — the level-0 frontier derived from
-    # it sits inside every level's visited-set anti-join AND the final
+    # checkpoint the node set — the level-0 frontier derived from it
+    # sits inside every level's visited-set anti-join AND the final
     # union, so the union+distinct re-ran ~4x per query without it
     nodes = (edges.select(F.col("src").alias("node"))
              .union(edges.select("dst")).distinct()
@@ -326,13 +351,7 @@ def graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree, degree → count); the second input is one row per node and
     the output is one row per distinct degree — both shuffles shrink
     the data, nothing is ever wide."""
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    edges = (li.select(F.col("l_partkey").alias("src"),
-                       F.lead("l_partkey").over(w).alias("dst"))
-             .where(F.col("dst").isNotNull())
+    edges = (_transitions(load_table(spark, "lineitem", sf_dir))
              .distinct().localCheckpoint(eager=False))  # both directions
     def hist(col: str, label: str) -> DataFrame:
         return (edges.groupBy(F.col(col).alias("node"))
@@ -344,7 +363,7 @@ def graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# connected components (round 5)
+# connected components
 # ---------------------------------------------------------------------------
 
 _GRAPH_CC_FASTPATH_MAX_EDGES = 1_000_000  # ≈16 MB of edge pairs collected
@@ -406,17 +425,10 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lambdatotheslaughter_spark.operators.llm import (
         _pointer_jump_labels, _union_find_clusters)
 
-    li = (load_table(spark, "lineitem", sf_dir)
-          .where(F.col("l_orderkey") % 4 == 0)
-          .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"))
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    raw = (li.select(F.col("l_partkey").alias("src"),
-                     F.lead("l_partkey").over(w).alias("dst"))
-           .where(F.col("dst").isNotNull() & (F.col("src") != F.col("dst"))))
-    und = (raw.select(F.least("src", "dst").alias("a"),
-                      F.greatest("src", "dst").alias("b"))
-           .distinct().localCheckpoint(eager=False))
+    raw = (_transitions(load_table(spark, "lineitem", sf_dir)
+                        .where(F.col("l_orderkey") % 4 == 0))
+           .where(F.col("src") != F.col("dst")))
+    und = _undirected(raw).distinct().localCheckpoint(eager=False)
     if und.count() <= _GRAPH_CC_FASTPATH_MAX_EDGES:
         labels = _union_find_clusters(spark, und)
         return labels.select(
@@ -437,7 +449,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# neighbor-overlap (Jaccard) link similarity (round 5)
+# neighbor-overlap (Jaccard) link similarity
 # ---------------------------------------------------------------------------
 
 _JACCARD_NBR_ORACLE = f"""
@@ -482,61 +494,18 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: orientation bounds the wedge table; the per-edge credit
     explode is 3 rows per triangle; degree join is vertex-sized."""
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    raw = (li.select(F.col("l_partkey").alias("src"),
-                     F.lead("l_partkey").over(w).alias("dst"))
-           .where(F.col("dst").isNotNull() & (F.col("src") != F.col("dst"))))
-    und = (raw.select(F.least("src", "dst").alias("a"),
-                      F.greatest("src", "dst").alias("b"))
-           .distinct().localCheckpoint(eager=False))
-    # r11: checkpoint the O(V) degree table — it feeds the two broadcast
-    # orientation sides AND the final per-edge join, so uncheckpointed
-    # the 2E-row degree shuffle ran four times in one plan. Kept after
-    # the r12 driver-protocol A/B (VERDICT r11 #2): interleaved fresh-JVM
-    # pairs at 32c AND 8c read the checkpointed form at-or-under the
-    # uncheckpointed one in every quiet pair (OPTIMIZATION_r12.md) — the
-    # r11 driver-visible regression was window noise.
-    deg = (und.select(F.col("a").alias("v")).unionAll(und.select("b"))
-           .groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-           .localCheckpoint(eager=False))
-    da = deg.select(F.col("v").alias("a"), F.col("d").alias("d_a"))
-    db = deg.select(F.col("v").alias("b"), F.col("d").alias("d_b"))
-    # degree tables are O(V): broadcast so the E-row edge set never
-    # reshuffles for the orientation join (r9)
-    oriented = (und.join(F.broadcast(da), "a").join(F.broadcast(db), "b")
-                .select(F.when((F.col("d_a") < F.col("d_b"))
-                               | ((F.col("d_a") == F.col("d_b"))
-                                  & (F.col("a") < F.col("b"))),
-                               F.struct(F.col("a").alias("u"),
-                                        F.col("b").alias("w")))
-                        .otherwise(F.struct(F.col("b").alias("u"),
-                                            F.col("a").alias("w")))
-                        .alias("e"))
-                .select("e.u", "e.w")
-                .localCheckpoint(eager=False))
-    e1 = oriented.select(F.col("u").alias("pivot"), F.col("w").alias("x"))
-    e2 = oriented.select(F.col("u").alias("pivot"), F.col("w").alias("y"))
-    wedges = e1.join(e2, "pivot").where(F.col("x") < F.col("y"))
-    probe = oriented.select(F.least("u", "w").alias("x"),
-                            F.greatest("u", "w").alias("y"))
-    if estimate_rows(sf_dir, "lineitem") <= 10_000_000:
-        probe = F.broadcast(probe)
-    tri = wedges.join(probe, ["x", "y"])     # (pivot, x, y) triangles
+    raw = (_transitions(load_table(spark, "lineitem", sf_dir))
+           .where(F.col("src") != F.col("dst")))
+    und = _undirected(raw).distinct().localCheckpoint(eager=False)
+    deg, tri = _oriented_triangles(und, sf_dir)
     # each triangle is one common neighbor for each of its three edges
-    edge_credit = tri.select(F.explode(F.array(
-        F.struct(F.least("pivot", "x").alias("a"),
-                 F.greatest("pivot", "x").alias("b")),
-        F.struct(F.least("pivot", "y").alias("a"),
-                 F.greatest("pivot", "y").alias("b")),
-        F.struct(F.col("x").alias("a"), F.col("y").alias("b"))))
-        .alias("e")).select("e.a", "e.b")
-    common = (edge_credit.groupBy("a", "b")
+    common = (_triangle_edges(tri).groupBy("a", "b")
               .agg(F.count(F.lit(1)).cast("bigint").alias("c")))
     out = (und.join(common, ["a", "b"], "left")
-           .join(da, "a").join(db, "b")
+           .join(deg.select(F.col("v").alias("a"), F.col("d").alias("d_a")),
+                 "a")
+           .join(deg.select(F.col("v").alias("b"), F.col("d").alias("d_b")),
+                 "b")
            .select("a", "b",
                    F.coalesce("c", F.lit(0)).cast("bigint")
                    .alias("n_common"),
@@ -548,7 +517,7 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# k-core decomposition, bounded peeling (round 5)
+# k-core decomposition, bounded peeling
 # ---------------------------------------------------------------------------
 
 _KCORE_K = 3
@@ -605,16 +574,9 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     set — the Pregel peeling shape; edges only ever shrink, and the
     loop materializes each survivor set with a checkpoint so round n+1
     reads round n's output, not a growing lineage."""
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    raw = (li.select(F.col("l_partkey").alias("src"),
-                     F.lead("l_partkey").over(w).alias("dst"))
-           .where(F.col("dst").isNotNull() & (F.col("src") != F.col("dst"))))
-    edges = (raw.select(F.least("src", "dst").alias("a"),
-                        F.greatest("src", "dst").alias("b"))
-             .distinct().localCheckpoint(eager=False))
+    raw = (_transitions(load_table(spark, "lineitem", sf_dir))
+           .where(F.col("src") != F.col("dst")))
+    edges = _undirected(raw).distinct().localCheckpoint(eager=False)
     for _ in range(_KCORE_ROUNDS):
         deg = (edges.select(F.col("a").alias("v"))
                .unionAll(edges.select("b"))
@@ -632,7 +594,7 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# bipartite projection: co-purchase graph (round 6)
+# bipartite projection: co-purchase graph
 # ---------------------------------------------------------------------------
 
 _COPURCHASE_ORACLE = """
@@ -681,7 +643,7 @@ def graph_bipartite_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# local clustering coefficient (round 6)
+# local clustering coefficient
 # ---------------------------------------------------------------------------
 
 _CLUSTERING_ORACLE = f"""
@@ -730,47 +692,10 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to graph_triangle_count (orientation bounds the
     wedge table by |E|^1.5) plus one explode-to-3 and a combinable count;
     the final join back to the degree table is node-keyed."""
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    raw = (li.select(F.col("l_partkey").alias("src"),
-                     F.lead("l_partkey").over(w).alias("dst"))
-           .where(F.col("dst").isNotNull() & (F.col("src") != F.col("dst"))))
-    und = (raw.select(F.least("src", "dst").alias("a"),
-                      F.greatest("src", "dst").alias("b"))
-           .distinct()
-           .localCheckpoint(eager=False))
-    # r11: checkpoint the O(V) degree table — the two broadcast
-    # orientation sides and the final coefficient join are separate
-    # subtrees, so uncheckpointed the 2E-row degree shuffle ran thrice.
-    # Kept after the r12 driver-protocol A/B (see jaccard's note).
-    deg = (und.select(F.col("a").alias("v")).unionAll(und.select("b"))
-           .groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-           .localCheckpoint(eager=False))
-    da = deg.select(F.col("v").alias("a"), F.col("d").alias("d_a"))
-    db = deg.select(F.col("v").alias("b"), F.col("d").alias("d_b"))
-    # degree tables are O(V): broadcast so the E-row edge set never
-    # reshuffles for the orientation join (r9)
-    oriented = (und.join(F.broadcast(da), "a").join(F.broadcast(db), "b")
-                .select(F.when((F.col("d_a") < F.col("d_b"))
-                               | ((F.col("d_a") == F.col("d_b"))
-                                  & (F.col("a") < F.col("b"))),
-                               F.struct(F.col("a").alias("u"),
-                                        F.col("b").alias("w")))
-                        .otherwise(F.struct(F.col("b").alias("u"),
-                                            F.col("a").alias("w")))
-                        .alias("e"))
-                .select("e.u", "e.w")
-                .localCheckpoint(eager=False))
-    e1 = oriented.select(F.col("u").alias("pivot"), F.col("w").alias("x"))
-    e2 = oriented.select(F.col("u").alias("pivot"), F.col("w").alias("y"))
-    wedges = e1.join(e2, "pivot").where(F.col("x") < F.col("y"))
-    probe = oriented.select(F.least("u", "w").alias("x"),
-                            F.greatest("u", "w").alias("y"))
-    if estimate_rows(sf_dir, "lineitem") <= 10_000_000:
-        probe = F.broadcast(probe)
-    tri = wedges.join(probe, ["x", "y"])
+    raw = (_transitions(load_table(spark, "lineitem", sf_dir))
+           .where(F.col("src") != F.col("dst")))
+    und = _undirected(raw).distinct().localCheckpoint(eager=False)
+    deg, tri = _oriented_triangles(und, sf_dir)
     tri_v = (tri.select(F.explode(F.array("pivot", "x", "y")).alias("v"))
              .groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("t")))
     return (deg.where(F.col("d") >= 2)
@@ -785,7 +710,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# degree assortativity (round 6)
+# degree assortativity
 # ---------------------------------------------------------------------------
 
 _ASSORT_ORACLE = f"""
@@ -845,17 +770,9 @@ def graph_assortativity_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two node-keyed joins decorate edges with endpoint
     degrees, then ONE combinable aggregate carries five BIGINT partials
     per partition; nothing is ever collected and no step is quadratic."""
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    raw = (li.select(F.col("l_partkey").alias("src"),
-                     F.lead("l_partkey").over(w).alias("dst"))
-           .where(F.col("dst").isNotNull() & (F.col("src") != F.col("dst"))))
-    und = (raw.select(F.least("src", "dst").alias("a"),
-                      F.greatest("src", "dst").alias("b"))
-           .distinct()
-           .localCheckpoint(eager=False))
+    raw = (_transitions(load_table(spark, "lineitem", sf_dir))
+           .where(F.col("src") != F.col("dst")))
+    und = _undirected(raw).distinct().localCheckpoint(eager=False)
     deg = (und.select(F.col("a").alias("v")).unionAll(und.select("b"))
            .groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("d")))
     da = deg.select(F.col("v").alias("a"), F.col("d").alias("du"))
@@ -884,7 +801,7 @@ def graph_assortativity_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# reciprocity (round 6)
+# reciprocity
 # ---------------------------------------------------------------------------
 
 _RECIPROCITY_ORACLE = f"""
@@ -922,13 +839,8 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: distinct-edges shuffle, one pair-keyed groupBy, two
     scalar aggregates — never quadratic."""
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    dedup = (li.select(F.col("l_partkey").alias("src"),
-                       F.lead("l_partkey").over(w).alias("dst"))
-             .where(F.col("dst").isNotNull() & (F.col("src") != F.col("dst")))
+    dedup = (_transitions(load_table(spark, "lineitem", sf_dir))
+             .where(F.col("src") != F.col("dst"))
              .distinct()
              .localCheckpoint(eager=False))  # pair fold + total share it
     und = (dedup.groupBy(F.least("src", "dst").alias("a"),
@@ -946,7 +858,7 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# modularity of the brand partition (round 6)
+# modularity of the brand partition
 # ---------------------------------------------------------------------------
 
 _MODULARITY_ORACLE = """
@@ -1041,7 +953,7 @@ def graph_modularity_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# HITS hubs & authorities (round 6)
+# HITS hubs & authorities
 # ---------------------------------------------------------------------------
 
 _HITS_S = 10**6
@@ -1095,13 +1007,8 @@ def graph_hits_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape per round: edges ⋈ scores on src (auth pass) then on dst
     (hub pass), each one combinable groupBy; the max is a scalar
     broadcast; score vectors are O(nodes) and never collected."""
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    edges = (li.select(F.col("l_partkey").alias("src"),
-                       F.lead("l_partkey").over(w).alias("dst"))
-             .where(F.col("dst").isNotNull() & (F.col("src") != F.col("dst")))
+    edges = (_transitions(load_table(spark, "lineitem", sf_dir))
+             .where(F.col("src") != F.col("dst"))
              .distinct()
              .localCheckpoint(eager=False))  # every round reads it
     nodes = (edges.select(F.col("src").alias("node"))
@@ -1110,9 +1017,9 @@ def graph_hits_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = nodes.withColumn("h", F.lit(_HITS_S).cast("bigint"))
 
     def _norm(scored: DataFrame, col: str) -> DataFrame:
-        # r11: checkpoint the raw O(V) score vector FIRST — it feeds
-        # both the max scalar and the normalization join, so without
-        # the checkpoint each _norm re-ran its E-row contribution join
+        # checkpoint the raw O(V) score vector FIRST — it feeds both
+        # the max scalar and the normalization join, so without the
+        # checkpoint each _norm re-ran its E-row contribution join
         # twice; the normalized output is likewise consumed twice (the
         # next pass's broadcast and the final hub⋈auth join), which
         # re-ran the whole deep lineage once per consumer
@@ -1127,9 +1034,9 @@ def graph_hits_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .localCheckpoint(eager=False))
 
     # score vectors are O(V): broadcast them so the checkpointed edge
-    # list never reshuffles per pass (r9 — stats-less checkpoints
-    # otherwise plan sort-merge joins). Size-gated: the explicit hint
-    # would hard-fail, not degrade, past broadcast scale (r10)
+    # list never reshuffles per pass (stats-less checkpoints otherwise
+    # plan sort-merge joins). Size-gated: the explicit hint would
+    # hard-fail, not degrade, past broadcast scale
     a = None
     for _ in range(_HITS_ITERS):
         ar = (edges.join(broadcast_if_bounded(h, sf_dir),
@@ -1148,7 +1055,7 @@ def graph_hits_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Adamic-Adar link prediction over non-edges (round 6)
+# Adamic-Adar link prediction over non-edges
 # ---------------------------------------------------------------------------
 
 _ADAMIC_ADAR_ORACLE = f"""
@@ -1208,21 +1115,15 @@ def graph_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1, 10x data moves it not at all), so wedges stay ~23x the edge
     count with NO hub blowup; one combinable groupBy collapses them to
     candidate pairs and the anti-join is edge-keyed."""
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    li = load_table(spark, "lineitem", sf_dir)
-    raw = (li.select(F.col("l_partkey").alias("src"),
-                     F.lead("l_partkey").over(w).alias("dst"))
-           .where(F.col("dst").isNotNull() & (F.col("src") != F.col("dst"))))
-    und = (raw.select(F.least("src", "dst").alias("a"),
-                      F.greatest("src", "dst").alias("b"))
-           .distinct().localCheckpoint(eager=False))
+    raw = (_transitions(load_table(spark, "lineitem", sf_dir))
+           .where(F.col("src") != F.col("dst")))
+    und = _undirected(raw).distinct().localCheckpoint(eager=False)
     sym = (und.select(F.col("a").alias("v"), F.col("b").alias("w"))
            .unionAll(und.select(F.col("b").alias("v"),
                                 F.col("a").alias("w"))))
     deg = sym.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    # r11 optimization: checkpoint the per-pivot term table ONCE before
-    # the wedge self-join. Uncheckpointed, both join inputs rebuilt the
+    # checkpoint the per-pivot term table ONCE before the wedge
+    # self-join. Uncheckpointed, both join inputs rebuilt the
     # whole und → sym → deg-join subtree (the before-plan scanned the
     # checkpointed edge RDD 7 times and ran the degree shuffle TWICE),
     # and the stats-free subtree made the planner BROADCAST one full
@@ -1245,39 +1146,36 @@ def graph_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     s1 = symd.select("pivot", F.col("w").alias("x"), "term_fp")
     s2 = symd.select(F.col("pivot").alias("p2"), F.col("w").alias("y"))
     wed = s1.join(s2, s1.pivot == s2.p2).where(F.col("x") < F.col("y"))
-    # r11 follow-up (guide §2.3 narrower shuffle keys; measured −21/−25%
-    # same-window): the candidate fold's partial aggregation buys almost
-    # nothing here — 20.8M wedges hold 19.7M distinct pairs, so a map-side
-    # hash map would re-emit ~95% of its input as (x, y, count, sum) rows.
-    # When the node-id domain provably fits in [0, 2^31) (data-derived
-    # gate: min AND max id over the checkpointed edge set in one scan of
-    # an O(E) in-memory table — the min bound matters because
-    # pk = x<<32 | y is only injective for NON-NEGATIVE ids, ADVICE r11),
-    # pack the pair into ONE bigint (injective since 0 <= x < y < 2^31)
-    # and repartition the RAW (pk, term_fp) 16-byte rows by it: the
-    # repartition satisfies the aggregation's distribution requirement, so
-    # BOTH HashAggregates plan above the exchange (raw rows are shuffled,
-    # not partial-agg output — the exchange narrows 2.5x) and the fold and
-    # anti-join key on a single long (LongHashedRelation when the planner
-    # broadcasts the edge side). Past the id bound (cluster SFs: partkeys
-    # exceed int32) the gate falls back to the two-column shape below —
-    # same plan as before this change.
+    # the candidate fold's partial aggregation buys almost nothing here
+    # — 20.8M wedges hold 19.7M distinct pairs, so a map-side hash map
+    # would re-emit ~95% of its input as (x, y, count, sum) rows
+    # (measured −21/−25% for the packed form below). When the node-id
+    # domain provably fits in [0, 2^31) (data-derived gate: min AND max
+    # id over the checkpointed edge set in one scan of an O(E) in-memory
+    # table — the min bound matters because pk = x<<32 | y is only
+    # injective for NON-NEGATIVE ids), pack the pair into ONE bigint
+    # (injective since 0 <= x < y < 2^31) and repartition the RAW
+    # (pk, term_fp) 16-byte rows by it: the repartition satisfies the
+    # aggregation's distribution requirement, so BOTH HashAggregates
+    # plan above the exchange (raw rows are shuffled, not partial-agg
+    # output — the exchange narrows 2.5x) and the fold and anti-join key
+    # on a single long (LongHashedRelation when the planner broadcasts
+    # the edge side). Past the id bound (cluster SFs: partkeys exceed
+    # int32) the gate falls back to the two-column shape below.
     bounds = und.agg(F.min("a").alias("lo"), F.max("b").alias("hi")).first()
     if (bounds["hi"] is not None and bounds["lo"] >= 0
             and bounds["hi"] < (1 << 31)):
         undp = und.select(F.shiftleft(F.col("a"), 32)
                           .bitwiseOR(F.col("b")).alias("pk"))
-        # r12 (VERDICT r11 ask #1): PINNED-width repartition — the r11
-        # column-only form let AQE coalesce the 20.8M-row exchange into a
-        # few fat partitions, which straggler-amplified at low core counts
-        # (the driver's local[8] run read 8.09 s, over the 8 s family
-        # bar). Pinning to spark.sql.shuffle.partitions keeps the fold's
-        # task width at the session's configured parallelism — a
-        # cluster-scale conf, not a local[32] constant — and the r12
-        # interleaved fresh-JVM A/B read the pinned shape at-or-under the
-        # AQE shape in every comparable pair at BOTH core counts
-        # (32c: 4.29/4.02/4.12 vs 4.68/4.24/4.99; 8c quiet: 5.30/5.88 vs
-        # 6.21 — under the 8 s bar; OPTIMIZATION_r12.md §1b).
+        # PINNED-width repartition — a column-only repartition let AQE
+        # coalesce the 20.8M-row exchange into a few fat partitions,
+        # which straggler-amplified at low core counts (8.09 s under
+        # local[8]). Pinning to spark.sql.shuffle.partitions keeps the
+        # fold's task width at the session's configured parallelism,
+        # and interleaved fresh-JVM A/B pairs read the pinned shape at
+        # or under the AQE shape in every comparable pair at both core
+        # counts (32c: 4.29/4.02/4.12 vs 4.68/4.24/4.99 s; 8c:
+        # 5.30/5.88 vs 6.21 s).
         nshuf = int(spark.conf.get("spark.sql.shuffle.partitions"))
         cand = (wed.select(F.shiftleft(F.col("x"), 32)
                            .bitwiseOR(F.col("y")).alias("pk"), "term_fp")
@@ -1307,7 +1205,7 @@ def graph_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# personalized PageRank from a seed set (round 6)
+# personalized PageRank from a seed set
 # ---------------------------------------------------------------------------
 
 _PPR_ITERS = 3
@@ -1369,25 +1267,15 @@ def graph_personalized_pagerank(spark: SparkSession,
     Scale shape: per round the same bounded pair of shuffles as global
     PageRank (edges join ranks on src, groupBy dst, node-set left
     join); the seed membership is a broadcast dimension join."""
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    edges = (li.select(F.col("l_partkey").alias("src"),
-                       F.lead("l_partkey").over(w).alias("dst"))
-             .where(F.col("dst").isNotNull()))
-    # collapse multi-edges to weighted pairs once: w copies of the exact
-    # integer term (r div d) sum to w·(r div d) — bit-identical at a
-    # tenth of the per-round scan volume (the pagerank r9 fix). r11:
-    # checkpoint edges_w and derive the node set FROM it so the lineitem
-    # window pass runs once per query (it re-ran for the node-set and
-    # degree lineages before)
+    edges = _transitions(load_table(spark, "lineitem", sf_dir))
+    # collapse multi-edges to weighted pairs once and derive the node set
+    # from the checkpointed edges_w (the graph_pagerank_fixed reasoning)
     edges_w = (edges.groupBy("src", "dst")
                .agg(F.count(F.lit(1)).cast("bigint").alias("wt"))
                .localCheckpoint(eager=False))
     # checkpoint the node set — it anchors the init AND every round's
-    # left join (the graph_pagerank_fixed r9 fix: uncheckpointed, the
-    # window+distinct subtree re-evaluated per reference)
+    # left join (uncheckpointed, the window+distinct subtree
+    # re-evaluated per reference)
     nodes = (edges_w.select(F.col("src").alias("node"))
              .union(edges_w.select("dst")).distinct()
              .localCheckpoint(eager=False))
@@ -1406,16 +1294,16 @@ def graph_personalized_pagerank(spark: SparkSession,
     teleport = (15 * _SCALE) // (100 * ns)
     # the per-node teleport term never changes across rounds — fold the
     # seed flag into ONE checkpointed (node, t) table instead of
-    # re-running the nodes⋈seeds left join every iteration (r10: the
-    # repeat was one redundant broadcast join + seed-probe per round)
+    # re-running the nodes⋈seeds left join every iteration (one
+    # redundant broadcast join + seed-probe per round)
     nt = (nodes.join(broadcast_if_bounded(seeds2, sf_dir),
                      nodes.node == F.col("sn2"), "left")
           .select("node",
                   F.when(is_seed, F.lit(teleport)).otherwise(F.lit(0))
                   .cast("bigint").alias("t"))
           .localCheckpoint(eager=False))
-    # r12 (guide §2.4): the initial rank vector ran the SAME nodes⋈seeds
-    # left join a second time — derive it from nt instead (t > 0 ⟺ seed
+    # the initial rank vector would run the SAME nodes⋈seeds left join
+    # a second time — derive it from nt instead (t > 0 ⟺ seed
     # while the integer teleport term is non-zero; teleport ≥ 1 for any
     # ns ≤ 1.5e11, and the degenerate underflow branch keeps the explicit
     # join so the derivation is provably value-identical in all regimes)
@@ -1448,7 +1336,7 @@ def graph_personalized_pagerank(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# disparity-filter backbone extraction (round 6)
+# disparity-filter backbone extraction
 # ---------------------------------------------------------------------------
 
 _DISPARITY_ORACLE = f"""
@@ -1496,8 +1384,8 @@ def disparity_backbone(spark: SparkSession, sf_dir: str,
     weighted co-purchase edge iff its weight is statistically
     significant against EITHER endpoint's uniform-spread null --
     alpha = (1 - w/s)^(k-1) < alpha_max (default the canonical 0.05;
-    the registered fixture query passes 0.3, r6 ADVICE: the threshold
-    is a named parameter, not a buried constant) -- the principled
+    the registered fixture query passes 0.3: the threshold is a named
+    parameter, not a buried constant) -- the principled
     sparsifier that preserves multi-scale structure where a global
     weight threshold only keeps hubs. Degree-1 endpoints get alpha 0.0
     by convention: a dangling edge is its node's ENTIRE strength, so
@@ -1511,14 +1399,9 @@ def disparity_backbone(spark: SparkSession, sf_dir: str,
     Scale shape: weighted-edge fold, node fold, two node-keyed
     decoration joins -- all combinable/key-parallel; output is the
     sparsified backbone."""
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    li = load_table(spark, "lineitem", sf_dir)
-    raw = (li.select(F.col("l_partkey").alias("src"),
-                     F.lead("l_partkey").over(w).alias("dst"))
-           .where(F.col("dst").isNotNull() & (F.col("src") != F.col("dst"))))
-    edges_w = (raw.select(F.least("src", "dst").alias("a"),
-                          F.greatest("src", "dst").alias("b"))
+    raw = (_transitions(load_table(spark, "lineitem", sf_dir))
+           .where(F.col("src") != F.col("dst")))
+    edges_w = (_undirected(raw)
                .groupBy("a", "b")
                .agg(F.count(F.lit(1)).cast("bigint").alias("w")))
     sym = (edges_w.select(F.col("a").alias("v"), F.col("w"))
@@ -1560,8 +1443,7 @@ def graph_disparity_backbone(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     """Registered fixture query: ``disparity_backbone`` at the
     fixture-scale threshold 0.3 (the oracle pins the same value; the
-    canonical 0.05 is the parameter default for production callers --
-    r6 ADVICE)."""
+    canonical 0.05 is the parameter default for production callers)."""
     return disparity_backbone(spark, sf_dir, alpha_max=0.3)
 
 
@@ -1626,30 +1508,24 @@ def graph_katz_centrality_fixed(spark: SparkSession,
     Scale shape: per-level SpMV = edge⋈vector equi-join + sum fold
     (key-parallel, the graph_pagerank_fixed shape, but exactly 3
     levels); the final top-k fuses to TakeOrderedAndProject."""
-    li = load_table(spark, "lineitem", sf_dir)
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    raw = (li.select(F.col("l_partkey").alias("src"),
-                     F.lead("l_partkey").over(w).alias("dst"))
-           .where(F.col("dst").isNotNull()
-                  & (F.col("src") != F.col("dst"))))
-    e0 = (raw.select(F.least("src", "dst").alias("a"),
-                     F.greatest("src", "dst").alias("b"))
+    raw = (_transitions(load_table(spark, "lineitem", sf_dir))
+           .where(F.col("src") != F.col("dst")))
+    e0 = (_undirected(raw)
           .groupBy("a", "b")
           .agg(F.count(F.lit(1)).cast("bigint").alias("w")))
     edges = (e0.select(F.col("a").alias("v"), F.col("b").alias("u"), "w")
              .unionAll(e0.select(F.col("b").alias("v"),
                                  F.col("a").alias("u"), "w"))
              .localCheckpoint(eager=False))  # three SpMV levels share it
-    # r11: checkpoint the O(V) walk vectors — p1 feeds p2's broadcast
+    # checkpoint the O(V) walk vectors — p1 feeds p2's broadcast
     # AND the final three-way join (p2 likewise), so uncheckpointed the
     # edge-scan groupBys re-ran once per consumer
     p1 = (edges.groupBy("v").agg(F.sum("w").cast("bigint").alias("s1"))
           .localCheckpoint(eager=False))
     # broadcast the O(V) walk vectors so the checkpointed edge list
-    # never reshuffles per level (r9: stats-less checkpoints planned
+    # never reshuffles per level (stats-less checkpoints plan
     # sort-merge joins without the hint). Size-gated via
-    # broadcast_if_bounded (r10): an explicit hint hard-fails past
+    # broadcast_if_bounded: an explicit hint hard-fails past
     # 8 GiB / 512M rows instead of degrading, so the hash-join
     # fallback only exists if the hint is lifted at scale
     p2 = (edges.join(broadcast_if_bounded(
@@ -1727,16 +1603,9 @@ def graph_rich_club_coefficient(spark: SparkSession,
     Scale shape: one distinct-edge fold + one degree fold; per-k work
     is edge⋈degree equi-joins (key-parallel) against a 3-row broadcast
     k-spine; output is 3 rows."""
-    li = load_table(spark, "lineitem", sf_dir)
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    raw = (li.select(F.col("l_partkey").alias("src"),
-                     F.lead("l_partkey").over(w).alias("dst"))
-           .where(F.col("dst").isNotNull()
-                  & (F.col("src") != F.col("dst"))))
-    e0 = (raw.select(F.least("src", "dst").alias("a"),
-                     F.greatest("src", "dst").alias("b"))
-          .distinct()
+    raw = (_transitions(load_table(spark, "lineitem", sf_dir))
+           .where(F.col("src") != F.col("dst")))
+    e0 = (_undirected(raw).distinct()
           .localCheckpoint(eager=False))  # degree + per-k joins share it
     deg = (e0.select(F.col("a").alias("v"))
            .unionAll(e0.select(F.col("b").alias("v")))
@@ -1818,26 +1687,19 @@ def graph_label_propagation_sync(spark: SparkSession,
     Scale shape: self-loops appended to the symmetrized edge list turn
     the recurrence l_{k+1}(v) = min(l_k(v), min_{u∈N(v)} l_k(u)) into a
     PLAIN min fold over N(v) ∪ {v} — one edge⋈labels equi-join + one
-    combinable min fold per round, with no second labels re-join (the
-    r8 form re-joined labels every round: 3 extra shuffles). Round 1
+    combinable min fold per round, with no second labels re-join (a
+    per-round labels re-join costs 3 extra shuffles). Round 1
     needs no join at all (l_0(u) = u, so l_1 = min fold of the edge
     list directly); rounds 2-3 broadcast the V-row label map so the
     checkpointed E-row edge list never reshuffles (hash-partitioned
     labels at a V that outgrows broadcast — the fold stays O(E))."""
-    li = load_table(spark, "lineitem", sf_dir)
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    raw = (li.select(F.col("l_partkey").alias("src"),
-                     F.lead("l_partkey").over(w).alias("dst"))
-           .where(F.col("dst").isNotNull()
-                  & (F.col("src") != F.col("dst"))))
-    e0 = (raw.select(F.least("src", "dst").alias("a"),
-                     F.greatest("src", "dst").alias("b"))
-          .distinct())
-    # r11: pin the deduped edge set BEFORE the self-loop union — the
-    # edges checkpoint's own materialization job contained the e0
-    # subtree twice (sym + the self-loop distinct), so the lineitem
-    # window pass and the dedup shuffle ran 2x per query
+    raw = (_transitions(load_table(spark, "lineitem", sf_dir))
+           .where(F.col("src") != F.col("dst")))
+    e0 = _undirected(raw).distinct()
+    # pin the deduped edge set BEFORE the self-loop union — otherwise the
+    # edges checkpoint's own materialization job contains the e0 subtree
+    # twice (sym + the self-loop distinct), so the lineitem window pass
+    # and the dedup shuffle run 2x per query
     e0 = e0.localCheckpoint(eager=False)
     sym = (e0.select(F.col("a").alias("v"), F.col("b").alias("u"))
            .unionAll(e0.select(F.col("b").alias("v"),
@@ -1873,13 +1735,13 @@ def graph_label_propagation_sync(spark: SparkSession,
 # Then et al., VLDB 2014): every vertex carries one 64-bit word whose
 # bit i means "seed i reaches me within d hops", and a level is ONE
 # O(E) edge⋈mask join + a combinable bit_or fold — the per-level cost
-# has NO seeds multiplier (the r8 frontier-join form was
-# O(seeds · ball · degree): 4.8 s at sf0.1 and the reason VERDICT r8
-# flagged this key; the bitmask form re-measured 1.3 s).
+# has NO seeds multiplier (a frontier-join form is
+# O(seeds · ball · degree): 4.8 s at sf0.1, against 1.3 s for the
+# bitmask form).
 _CLOSENESS_SEEDS = 32
 _CLOSENESS_SEED_SALT = "lts-r7-closeness"
 # estimated lineitem rows above which the edge build dedups before the
-# three BFS level joins (r10 probe: the undeduped checkpoint OOMs at
+# three BFS level joins (probed: the undeduped checkpoint OOMs at
 # ~100× fact volume; below the gate the dedup shuffle costs more than
 # the ~1.3× duplicates it removes). Module-level so the branch-parity
 # test can pin both paths to identical values.
@@ -1958,18 +1820,13 @@ def graph_closeness_harmonic_3hop(spark: SparkSession,
     was O(seeds · ball · degree) and 3.7× slower at sf0.1). Shell
     counts fall out of mask set-difference (r_d & ~r_{d-1}) folded
     over a bounded 32-position posexplode."""
-    li = load_table(spark, "lineitem", sf_dir)
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    raw = (li.select(F.col("l_partkey").alias("src"),
-                     F.lead("l_partkey").over(w).alias("dst"))
-           .where(F.col("dst").isNotNull()
-                  & (F.col("src") != F.col("dst"))))
+    raw = (_transitions(load_table(spark, "lineitem", sf_dir))
+           .where(F.col("src") != F.col("dst")))
     # the mask fold is bit_or-IDEMPOTENT: duplicate edges contribute the
     # same bits, so the edge-dedup DISTINCT the oracle needs for its
     # set-difference shells is semantically a no-op here. Whether it is
-    # WORTH running is a volume question, so it is estimate-gated
-    # (round 10): at bench scale the duplicate factor is ~1.3× and the
+    # WORTH running is a volume question, so it is estimate-gated: at
+    # bench scale the duplicate factor is ~1.3× and the
     # dedup shuffle costs more than the duplicates it removes (value
     # parity re-verified at sf0.01/sf0.1 both ways); at high fact
     # volume the duplicate factor compounds (the 100×-copy probe OOMed
@@ -1993,8 +1850,7 @@ def graph_closeness_harmonic_3hop(spark: SparkSession,
     # unpartitioned row_number window is a single tiny partition. The
     # checkpoint matters: sbits is consumed TWICE (r0 and the final
     # label join) and its lineage runs through the seed sort over all
-    # of V — uncheckpointed, the second consumer re-ran that sort
-    # (round 10: one of the two constants behind the r9 bar miss).
+    # of V — uncheckpointed, the second consumer re-ran that sort.
     sw = Window.orderBy(
         F.conv(F.substring(
             F.md5(F.concat(F.col("s").cast("string"),
@@ -2016,7 +1872,7 @@ def graph_closeness_harmonic_3hop(spark: SparkSession,
         map-side (the checkpointed mask RDD has no Catalyst stats, so
         without the hint this planned as 3 sort-merge joins re-sorting
         all E rows per level). The hint is SIZE-GATED
-        (broadcast_if_bounded, r10): a bare F.broadcast() hard-fails
+        (broadcast_if_bounded): a bare F.broadcast() hard-fails
         past 8 GiB / 512M rows instead of degrading, so the
         hash-join-at-scale path only exists because the gate lifts
         the hint past the V bound — the per-level cost stays O(E)
@@ -2115,57 +1971,20 @@ def graph_local_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one wedge equi-join pair (the O(Σdeg²) triangle-count
     budget — the known cost of any common-neighbor statistic) + one
     combinable edge-grain fold to a single summary row."""
-    li = load_table(spark, "lineitem", sf_dir)
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    raw = (li.select(F.col("l_partkey").alias("src"),
-                     F.lead("l_partkey").over(w).alias("dst"))
-           .where(F.col("dst").isNotNull()
-                  & (F.col("src") != F.col("dst"))))
-    e0 = (raw.select(F.least("src", "dst").alias("a"),
-                     F.greatest("src", "dst").alias("b"))
-          .distinct()
+    raw = (_transitions(load_table(spark, "lineitem", sf_dir))
+           .where(F.col("src") != F.col("dst")))
+    e0 = (_undirected(raw).distinct()
           .localCheckpoint(eager=False))  # edge set feeds both sides
-    # r11 optimization: an edge has a common neighbor iff it lies in a
-    # triangle, so the UNORIENTED Σdeg² wedge join this key used to run
-    # (edge ⋈ adj ⋈ adj — a ~20M-row intermediate at sf0.1, the family's
-    # biggest) is replaced with graph_triangle_count's degree-ordered
-    # oriented wedge probe (Θ(E^1.5) wedge volume). Each closing wedge
-    # credits its three edges; edges never credited are the local
-    # bridges — flagged by ONE anti-join instead of a 20M-row groupBy.
-    # Output values are identical (the per-edge n_common count was only
-    # ever compared against 0).
-    deg = (e0.select(F.col("a").alias("v")).unionAll(e0.select("b"))
-           .groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-           .localCheckpoint(eager=False))
-    da = deg.select(F.col("v").alias("a"), F.col("d").alias("d_a"))
-    db = deg.select(F.col("v").alias("b"), F.col("d").alias("d_b"))
-    oriented = (e0.join(F.broadcast(da), "a").join(F.broadcast(db), "b")
-                .select(F.when((F.col("d_a") < F.col("d_b"))
-                               | ((F.col("d_a") == F.col("d_b"))
-                                  & (F.col("a") < F.col("b"))),
-                               F.struct(F.col("a").alias("u"),
-                                        F.col("b").alias("w")))
-                        .otherwise(F.struct(F.col("b").alias("u"),
-                                            F.col("a").alias("w")))
-                        .alias("e"))
-                .select("e.u", "e.w")
-                .localCheckpoint(eager=False))  # wedge build + probe share it
-    e1 = oriented.select(F.col("u").alias("pivot"), F.col("w").alias("x"))
-    e2 = oriented.select(F.col("u").alias("pivot"), F.col("w").alias("y"))
-    wedges = e1.join(e2, "pivot").where(F.col("x") < F.col("y"))
-    probe = oriented.select(F.least("u", "w").alias("x"),
-                            F.greatest("u", "w").alias("y"))
-    if estimate_rows(sf_dir, "lineitem") <= 10_000_000:
-        probe = F.broadcast(probe)
-    tri = wedges.join(probe, ["x", "y"])
-    credit = (tri.select(F.explode(F.array(
-        F.struct(F.least("pivot", "x").alias("a"),
-                 F.greatest("pivot", "x").alias("b")),
-        F.struct(F.least("pivot", "y").alias("a"),
-                 F.greatest("pivot", "y").alias("b")),
-        F.struct(F.col("x").alias("a"), F.col("y").alias("b"))))
-        .alias("e")).select("e.a", "e.b"))
+    # an edge has a common neighbor iff it lies in a triangle, so the
+    # degree-ordered oriented wedge probe (Θ(E^1.5) wedge volume) stands
+    # in for the UNORIENTED Σdeg² wedge join edge ⋈ adj ⋈ adj (a
+    # ~20M-row intermediate at sf0.1, the family's biggest). Each
+    # closing wedge credits its three edges; edges never credited are
+    # the local bridges — flagged by ONE anti-join instead of a 20M-row
+    # groupBy (the per-edge common-neighbor count is only ever compared
+    # against 0).
+    _, tri = _oriented_triangles(e0, sf_dir)
+    credit = _triangle_edges(tri)
     bridges = (e0.join(credit, ["a", "b"], "left_anti")
                .agg(F.count(F.lit(1)).cast("bigint")
                     .alias("n_local_bridges")))
@@ -2227,26 +2046,16 @@ def graph_avg_neighbor_degree(spark: SparkSession,
 
     Scale shape: one degree fold, one edge⋈degree equi-join + vertex
     fold (the SpMV shape), one ≤max-degree-row class fold."""
-    li = load_table(spark, "lineitem", sf_dir)
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    raw = (li.select(F.col("l_partkey").alias("src"),
-                     F.lead("l_partkey").over(w).alias("dst"))
-           .where(F.col("dst").isNotNull()
-                  & (F.col("src") != F.col("dst"))))
-    e0 = (raw.select(F.least("src", "dst").alias("a"),
-                     F.greatest("src", "dst").alias("b"))
-          .distinct())
+    raw = (_transitions(load_table(spark, "lineitem", sf_dir))
+           .where(F.col("src") != F.col("dst")))
+    e0 = _undirected(raw).distinct()
     adj = (e0.select(F.col("a").alias("v"), F.col("b").alias("u"))
            .unionAll(e0.select(F.col("b").alias("v"),
                                F.col("a").alias("u")))
            .localCheckpoint(eager=False))  # degree + SpMV share it
-    # r11: the O(V) degree table feeds two subtrees (the SpMV join's
-    # u-side and the final per-vertex join) — pin it so the 2E-row
-    # degree shuffle runs once per query. Kept after the r12
-    # driver-protocol A/B (VERDICT r11 #2, OPTIMIZATION_r12.md): the
-    # checkpointed form read at-or-under the uncheckpointed one in
-    # every quiet interleaved pair at both 32 and 8 cores.
+    # the O(V) degree table feeds two subtrees (the SpMV join's u-side
+    # and the final per-vertex join) — pin it so the 2E-row degree
+    # shuffle runs once per query (the _oriented_triangles A/B).
     deg = (adj.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("k"))
            .localCheckpoint(eager=False))
     snd = (adj.join(deg.select(F.col("v").alias("u"),

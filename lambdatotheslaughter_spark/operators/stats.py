@@ -20,12 +20,12 @@ precedent.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.bucketed import bucketed_order
 from lambdatotheslaughter_spark.operators.timeseries import (
-    _ACF_ORACLE, ts_acf_multi_lag)
+    _ACF_ORACLE, hourly_cents, ts_acf_multi_lag)
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.tables import load_table
 
@@ -355,7 +355,7 @@ def stat_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-pass bucketed rank over the customer table (bucketed.py —
     spend-cents buckets, broadcast prefix offsets; zero
     single-partition windows even if customer counts reach fact
-    scale, the r7 entity-grain sweep)."""
+    scale)."""
     o = load_table(spark, "orders", sf_dir)
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
     spend = (o.groupBy("o_custkey")
@@ -376,7 +376,7 @@ def stat_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# deterministic Poisson bootstrap CI (round 6)
+# deterministic Poisson bootstrap CI
 # ---------------------------------------------------------------------------
 
 # Poisson(1) CDF thresholds in 2^-32 units: weight k iff
@@ -394,6 +394,41 @@ def _boot_weight_sql(u: str) -> str:
     branches = " ".join(
         f"WHEN {u} < {t} THEN {k}" for k, t in enumerate(_POIS_T))
     return f"CASE {branches} ELSE {len(_POIS_T)} END"
+
+
+def _md5_replicates(spark: SparkSession, base: DataFrame, n_reps: int
+                    ) -> tuple[DataFrame, list[tuple[Column, Column]]]:
+    """Deterministic resampling randomness for ``n_reps`` replicates of
+    ``base`` (event_id, cents, ...). Returns the (cents, g, h0, h1) fan-out
+    — one row per (base row, replicate group g) — and, for each of the
+    four draws a digest carries, the column pair (b, u): the replicate
+    id b = 4g + j and its u32 draw u, for the caller to explode.
+
+    One md5(event_id:g) per (row, replicate GROUP): a 128-bit digest
+    carries FOUR independent u32 draws (hex chars 1-8, 9-16, 17-24,
+    25-32), so a replicate costs a quarter of an md5 — the md5 fan-out
+    dominates these queries (one draw per md5 measured 7.9 s at sf0.1
+    for stat_bh_fdr_permutation). conv() then dominated the stage: four
+    8-hex-char parses per digest cost ~2.4 s of that key's 7.5 s at
+    sf0.1. So each digest HALF is parsed once (16 hex chars -> one
+    bigint; toBase -10 = signed 64-bit so the string always casts
+    exactly, and the two's-complement bits are the same bits) and split
+    into its two u32 draws with shift/mask bit ops: half the conv calls,
+    identical u32 values."""
+    groups = spark.range(n_reps // 4).toDF("g")
+    m = F.md5(F.concat(F.col("event_id").cast("string"), F.lit(":"),
+                       F.col("g").cast("string")))
+    half = [F.conv(F.substring("m", 1 + 16 * h, 16), 16, -10)
+            .cast("bigint").alias(f"h{h}") for h in range(2)]
+    u_of = [F.shiftrightunsigned("h0", 32),
+            F.col("h0").bitwiseAND(F.lit(4294967295)),
+            F.shiftrightunsigned("h1", 32),
+            F.col("h1").bitwiseAND(F.lit(4294967295))]
+    digests = (base.crossJoin(F.broadcast(groups))
+               .select("cents", m.alias("m"), "g")
+               .select("cents", "g", *half))
+    return digests, [((F.col("g") * 4 + j).cast("bigint").alias("b"),
+                      u.cast("bigint")) for j, u in enumerate(u_of)]
 
 
 _BOOT_ORACLE = f"""
@@ -463,11 +498,6 @@ def stat_bootstrap_poisson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = ev.select(
         "event_id",
         F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"))
-    # one md5 per (row, replicate GROUP); each 128-bit digest yields
-    # FOUR independent u32 draws (the stat_bh_fdr_permutation recipe)
-    groups = spark.range(_BOOT_B // 4).toDF("g")
-    m = F.md5(F.concat(F.col("event_id").cast("string"), F.lit(":"),
-                       F.col("g").cast("string")))
 
     def pois_w(u):
         w = F.when(u < _POIS_T[0], 0)
@@ -475,23 +505,9 @@ def stat_bootstrap_poisson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             w = w.when(u < t, k)
         return w.otherwise(len(_POIS_T))
 
-    # r11 (the stat_bh_fdr_permutation finding): parse each digest HALF
-    # with ONE conv (16 hex chars, toBase -10 = signed 64-bit so the
-    # string always casts exactly) and split the two u32 draws with
-    # shift/mask bit ops — half the conv calls, identical u32 values
-    half = [F.conv(F.substring("m", 1 + 16 * h, 16), 16, -10)
-            .cast("bigint").alias(f"h{h}") for h in range(2)]
-    u_of = [F.shiftrightunsigned("h0", 32),
-            F.col("h0").bitwiseAND(F.lit(4294967295)),
-            F.shiftrightunsigned("h1", 32),
-            F.col("h1").bitwiseAND(F.lit(4294967295))]
-    draws = F.array(*[
-        F.struct((F.col("g") * 4 + j).cast("bigint").alias("b"),
-                 pois_w(u_of[j].cast("bigint")).alias("w"))
-        for j in range(4)])
-    weighted = (base.crossJoin(F.broadcast(groups))
-                .select("cents", m.alias("m"), "g")
-                .select("cents", "g", *half)
+    digests, b_u = _md5_replicates(spark, base, _BOOT_B)
+    draws = F.array(*[F.struct(b, pois_w(u).alias("w")) for b, u in b_u])
+    weighted = (digests
                 .select("cents", F.explode(draws).alias("dr"))
                 .select(F.col("dr.b").alias("b"), "cents",
                         F.col("dr.w").alias("w")))
@@ -516,7 +532,7 @@ def stat_bootstrap_poisson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# closed-form two-feature OLS (round 6)
+# closed-form two-feature OLS
 # ---------------------------------------------------------------------------
 
 _OLS_ORACLE = """
@@ -586,9 +602,7 @@ def stat_ols_two_feature(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically in both engines; R² reuses the normal-equation identity
     SSE = Σy² − β·(Σy, Σx₁y, Σx₂y). DuckDB's dayofweek is 0-based
     Sunday while Spark's is 1-based, so the oracle applies the +1 shim
-    to mirror Spark's values (the stat_two_proportion_z convention;
-    this docstring previously claimed no shim was needed -- fixed per
-    r6 ADVICE).
+    to mirror Spark's values (the stat_two_proportion_z convention).
 
     Scale shape: ONE combinable ten-sum aggregate over the scan to a
     single row; the solve is constant work after the fold — the
@@ -641,7 +655,7 @@ def stat_ols_two_feature(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Theil–Sen robust slope (round 6)
+# Theil–Sen robust slope
 # ---------------------------------------------------------------------------
 
 _THEIL_SEN_ORACLE = """
@@ -688,11 +702,7 @@ def ts_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: combinable hourly groupBy collapses the corpus; the
     pair self-join co-partitions on event_type; one ranked window per
     type over calendar-bounded pairs."""
-    ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents"))
+    hourly = (hourly_cents(load_table(spark, "events", sf_dir))
               .select("event_type",
                       (F.unix_timestamp("hr") / 3600).cast("bigint")
                       .alias("h"),
@@ -718,7 +728,7 @@ def ts_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wald–Wolfowitz runs test (round 6)
+# Wald–Wolfowitz runs test
 # ---------------------------------------------------------------------------
 
 _RUNS_ORACLE = """
@@ -781,11 +791,7 @@ def stat_runs_test_wald_wolfowitz(spark: SparkSession,
     Scale shape: hourly pre-agg collapses the corpus to the calendar;
     the rank-median, sign lag, and run count are all windows over the
     calendar-sized series; one final five-integer fold per type."""
-    ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents"))
+    hourly = (hourly_cents(load_table(spark, "events", sf_dir))
               .localCheckpoint(eager=False))  # median + signing share it
     wp = Window.partitionBy("event_type")
     ranked = hourly.select(
@@ -822,7 +828,29 @@ def stat_runs_test_wald_wolfowitz(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# Kendall tau-b (round 6)
+# click vs purchase hourly revenue, paired by hour
+# ---------------------------------------------------------------------------
+
+
+def _click_purchase_hours(spark: SparkSession, sf_dir: str,
+                          x: str, y: str) -> DataFrame:
+    """The click and purchase hourly cents series side by side, one row
+    per hour in which both types occur: (hr, <x>, hry, <y>), x the click
+    cents and y the purchase cents — the paired sample behind the
+    two-series rank, sign and correlation tests. Calendar-bounded: the
+    corpus collapses to at most one row per hour before the join."""
+    hourly = hourly_cents(load_table(spark, "events", sf_dir)
+                          .where(F.col("event_type").isin("click",
+                                                          "purchase")))
+    xs = (hourly.where(F.col("event_type") == "click")
+          .select("hr", F.col("cents").alias(x)))
+    ys = (hourly.where(F.col("event_type") == "purchase")
+          .select(F.col("hr").alias("hry"), F.col("cents").alias(y)))
+    return xs.join(ys, F.col("hr") == F.col("hry"))
+
+
+# ---------------------------------------------------------------------------
+# Kendall tau-b
 # ---------------------------------------------------------------------------
 
 _KENDALL_ORACLE = """
@@ -878,17 +906,7 @@ def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the corpus collapses to one paired hourly series; the
     O(k²) pair self-join is calendar-bounded (the Theil–Sen
     discipline); one combinable five-count fold."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents")))
-    x = (hourly.where(F.col("event_type") == "click")
-         .select("hr", F.col("cents").alias("xv")))
-    y = (hourly.where(F.col("event_type") == "purchase")
-         .select(F.col("hr").alias("hry"), F.col("cents").alias("yv")))
-    paired = (x.join(y, F.col("hr") == F.col("hry"))
+    paired = (_click_purchase_hours(spark, sf_dir, "xv", "yv")
               .select("hr", "xv", "yv")
               .localCheckpoint(eager=False))  # both pair sides share it
     a = paired.alias("a")
@@ -904,8 +922,8 @@ def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint").alias("d"),
         # classical tau-b tie terms: EVERY pair tied on x counts in tx
         # and every pair tied on y in ty, so a pair tied on BOTH series
-        # appears in both terms (the r6 ADVICE fix -- the previous
-        # AND-differing variant inflated tau_b under both-tied pairs)
+        # appears in both terms (counting only pairs tied on one series
+        # would inflate tau_b under both-tied pairs)
         F.count(F.when(F.col("dx") == 0, 1)).cast("bigint").alias("tx"),
         F.count(F.when(F.col("dy") == 0, 1)).cast("bigint").alias("ty"))
     return s.select(
@@ -921,7 +939,7 @@ def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Spearman rank correlation (round 6)
+# Spearman rank correlation
 # ---------------------------------------------------------------------------
 
 _SPEARMAN_ORACLE = """
@@ -980,17 +998,8 @@ def stat_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: calendar-bounded series; two rank windows over it; one
     combinable five-sum fold. At a corpus where the series itself were
     huge, the two-pass bucketed rank substitutes (the house recipe)."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents")))
-    x = (hourly.where(F.col("event_type") == "click")
-         .select("hr", F.col("cents").alias("xv")))
-    y = (hourly.where(F.col("event_type") == "purchase")
-         .select(F.col("hr").alias("hry"), F.col("cents").alias("yv")))
-    paired = x.join(y, F.col("hr") == F.col("hry")).select("xv", "yv")
+    paired = (_click_purchase_hours(spark, sf_dir, "xv", "yv")
+              .select("xv", "yv"))
     rx2 = (F.lit(2) * F.rank().over(Window.orderBy("xv"))
            + F.count(F.lit(1)).over(Window.partitionBy("xv")) - 1) \
         .cast("bigint")
@@ -1019,7 +1028,7 @@ def stat_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# one-way ANOVA F (round 6)
+# one-way ANOVA F
 # ---------------------------------------------------------------------------
 
 _ANOVA_ORACLE = """
@@ -1101,7 +1110,7 @@ def stat_anova_oneway_f(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# two-proportion z-test (round 6)
+# two-proportion z-test
 # ---------------------------------------------------------------------------
 
 _TWO_PROP_ORACLE = """
@@ -1169,7 +1178,7 @@ def stat_two_proportion_z(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Mann-Whitney U (rank-sum) two-sample test (round 6)
+# Mann-Whitney U (rank-sum) two-sample test
 # ---------------------------------------------------------------------------
 
 _MWU_ORACLE = """
@@ -1276,7 +1285,7 @@ def stat_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Cohen's d / Hedges' g effect size (round 6)
+# Cohen's d / Hedges' g effect size
 # ---------------------------------------------------------------------------
 
 _COHENS_D_ORACLE = """
@@ -1364,7 +1373,7 @@ def stat_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Cramer's V association strength (round 6)
+# Cramer's V association strength
 # ---------------------------------------------------------------------------
 
 _CRAMERS_V_ORACLE = """
@@ -1459,7 +1468,7 @@ def stat_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Brown-Forsythe (median-centered Levene) equality of variances (round 6)
+# Brown-Forsythe (median-centered Levene) equality of variances
 # ---------------------------------------------------------------------------
 
 _BROWN_FORSYTHE_ORACLE = """
@@ -1580,14 +1589,13 @@ def stat_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# deterministic randomization (permutation) test (round 6)
+# deterministic randomization (permutation) test
 # ---------------------------------------------------------------------------
 
-# B halved 64 -> 32 in round 9 (VERDICT r8 ask #5: the key straddled the
-# 2 s bar at B=64; the add-one p-value (1+k)/(1+B) stays exact in both
-# engines at any B, and 32 exchangeable relabelings still bound the
-# add-one p at ~0.03 resolution — the same contract change the judge
-# prescribed). The ±4x-per-md5 draw packing is unchanged.
+# B = 32 rather than 64: the key straddled a 2 s bar at B=64; the add-one
+# p-value (1+k)/(1+B) stays exact in both engines at any B, and 32
+# exchangeable relabelings still bound the add-one p at ~0.03
+# resolution.
 _PERM_B = 32
 # u32 < 2^31  <=>  the md5 bit stream assigns the row to pseudo-arm A
 _PERM_HALF = 2147483648
@@ -1680,29 +1688,10 @@ def stat_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(is1, F.col("cents"))).cast("bigint").alias("s1"),
         F.count(F.when(~is1, 1)).cast("bigint").alias("n2"),
         F.sum(F.when(~is1, F.col("cents"))).cast("bigint").alias("s2"))
-    groups = spark.range(_PERM_B // 4).toDF("g")
-    # one md5 per (row, replicate GROUP); each 128-bit digest yields
-    # FOUR independent u32 draws (the stat_bh_fdr_permutation recipe) --
-    # a 4x digest-count cut over one-draw-per-md5
-    m = F.md5(F.concat(F.col("event_id").cast("string"), F.lit(":"),
-                       F.col("g").cast("string")))
-    # r11 (the stat_bh_fdr_permutation finding): parse each digest HALF
-    # with ONE conv (16 hex chars, toBase -10 = signed 64-bit so the
-    # string always casts exactly) and split the two u32 draws with
-    # shift/mask bit ops — half the conv calls, identical u32 values
-    half = [F.conv(F.substring("m", 1 + 16 * h, 16), 16, -10)
-            .cast("bigint").alias(f"h{h}") for h in range(2)]
-    u_of = [F.shiftrightunsigned("h0", 32),
-            F.col("h0").bitwiseAND(F.lit(4294967295)),
-            F.shiftrightunsigned("h1", 32),
-            F.col("h1").bitwiseAND(F.lit(4294967295))]
-    draws = F.array(*[
-        F.struct((F.col("g") * 4 + j).cast("bigint").alias("b"),
-                 (u_of[j].cast("bigint") < F.lit(_PERM_HALF)).alias("in_a"))
-        for j in range(4)])
-    relabeled = (base.crossJoin(F.broadcast(groups))
-                 .select("cents", m.alias("m"), "g")
-                 .select("cents", "g", *half)
+    digests, b_u = _md5_replicates(spark, base, _PERM_B)
+    draws = F.array(*[F.struct(b, (u < F.lit(_PERM_HALF)).alias("in_a"))
+                      for b, u in b_u])
+    relabeled = (digests
                  .select("cents", F.explode(draws).alias("dr"))
                  .select(F.col("dr.b").alias("b"), "cents",
                          F.col("dr.in_a").alias("in_a")))
@@ -1731,7 +1720,7 @@ def stat_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Benjamini-Hochberg FDR over per-type permutation p-values (round 6)
+# Benjamini-Hochberg FDR over per-type permutation p-values
 # ---------------------------------------------------------------------------
 
 _BH_B = 64
@@ -1839,7 +1828,7 @@ def stat_bh_fdr_permutation(spark: SparkSession, sf_dir: str) -> DataFrame:
     d_obs = (F.col("s_t").cast("double") / F.col("n_t").cast("double")
              - (F.col("s") - F.col("s_t")).cast("double")
              / (F.col("n") - F.col("n_t")).cast("double"))
-    # r11: checkpoint the k-row test table — it feeds the threshold
+    # checkpoint the k-row test table — it feeds the threshold
     # literals, the rank spine and the p-value join, so uncheckpointed
     # the events groupBy re-ran for each
     tests = (per.crossJoin(F.broadcast(tot))
@@ -1847,44 +1836,19 @@ def stat_bh_fdr_permutation(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.floor(F.lit(_BH_U32) * F.col("n_t") / F.col("n"))
                      .cast("bigint").alias("thresh"))
              .localCheckpoint(eager=False))
-    # ONE md5 per (row, replicate GROUP): a 128-bit digest carries FOUR
-    # independent u32 draws (hex chars 1-8, 9-16, 17-24, 25-32), so
-    # replicate b = 4g + j costs a quarter of an md5 -- the md5 fan-out
-    # dominates this query (one-draw-per-md5 measured 7.9 s at sf0.1;
-    # this shape cuts digest count 4x). The k thresholds then partition
-    # the u32 domain into k+1 intervals, so the corpus folds ONCE to
-    # (replicate, interval) partials and each test's arm sums are
-    # prefix sums over <= 6 rows -- the original draft cross-joined the
-    # test dimension BEFORE the fold and recomputed the md5 k times
-    # (measured 39 s at sf0.1).
-    groups = spark.range(_BH_B // 4).toDF("g")
-    m = F.md5(F.concat(F.col("event_id").cast("string"), F.lit(":"),
-                       F.col("g").cast("string")))
-    # r11 (guide §1.1 measured): conv() dominated this stage — four
-    # 8-hex-char parses per digest cost ~2.4 s of the key's 7.5 s at
-    # sf0.1. Parse each digest HALF once (16 hex chars -> one bigint;
-    # toBase -10 = signed 64-bit so the string always casts exactly,
-    # and the two's-complement bits are the same bits) and split it
-    # into its two u32 draws with shift/mask bit ops: half the conv
-    # calls, identical u32 values.
-    half = [F.conv(F.substring("m", 1 + 16 * h, 16), 16, -10)
-            .cast("bigint").alias(f"h{h}") for h in range(2)]
-    u_of = [F.shiftrightunsigned("h0", 32),
-            F.col("h0").bitwiseAND(F.lit(4294967295)),
-            F.shiftrightunsigned("h1", 32),
-            F.col("h1").bitwiseAND(F.lit(4294967295))]
-    draws = F.array(*[
-        F.struct((F.col("g") * 4 + j).cast("bigint").alias("b"),
-                 u_of[j].cast("bigint").alias("u"))
-        for j in range(4)])
-    fan0 = (base.crossJoin(F.broadcast(groups))
-            .select("cents", m.alias("m"), "g")
-            .select("cents", "g", *half)
+    # the k thresholds partition the u32 domain into k+1 intervals, so
+    # the corpus folds ONCE to (replicate, interval) partials and each
+    # test's arm sums are prefix sums over <= 6 rows (cross-joining the
+    # test dimension BEFORE the fold recomputes the md5 k times:
+    # measured 39 s at sf0.1)
+    digests, b_u = _md5_replicates(spark, base, _BH_B)
+    draws = F.array(*[F.struct(b, u.alias("u")) for b, u in b_u])
+    fan0 = (digests
             .select("cents", F.explode(draws).alias("d"))
             .select(F.col("d.b").alias("b"), "cents",
                     F.col("d.u").alias("u")))
-    # r11: the interval index used to be size(filter(ta, th -> u >= th))
-    # — an INTERPRETED higher-order lambda per fan row (~1 s at sf0.1).
+    # the interval index as size(filter(ta, th -> u >= th)) is an
+    # INTERPRETED higher-order lambda per fan row (~1 s at sf0.1).
     # The k thresholds are a bounded driver scalar (one per event type,
     # the query's own output grain), so collect them once off the
     # checkpointed test table and grade each u with a codegen'd literal
@@ -1938,7 +1902,7 @@ def stat_bh_fdr_permutation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# exact ROC-AUC as the rank statistic (round 6)
+# exact ROC-AUC as the rank statistic
 # ---------------------------------------------------------------------------
 
 _AUC_ORACLE = """
@@ -2013,7 +1977,7 @@ def ml_roc_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# confusion-matrix threshold sweep (round 6)
+# confusion-matrix threshold sweep
 # ---------------------------------------------------------------------------
 
 _SWEEP_ORACLE = """
@@ -2099,7 +2063,7 @@ def ml_confusion_threshold_sweep(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# K-fold cross-validated AUC (round 6)
+# K-fold cross-validated AUC
 # ---------------------------------------------------------------------------
 
 _CV_FOLDS = 4
@@ -2147,8 +2111,8 @@ def ml_cv_auc_per_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the corpus folds to (fold, value) counts; the
     cumulative-count pass runs as the two-pass bucketed cumsum
     partitioned BY FOLD (bucketed.py — 4 folds × 256 value buckets of
-    parallelism instead of 4 fold-wide window partitions, the r7
-    entity-grain sweep); one combinable groupBy to 4 rows."""
+    parallelism instead of 4 fold-wide window partitions); one
+    combinable groupBy to 4 rows."""
     ev = (load_table(spark, "events", sf_dir)
           .where(F.col("event_type").isin("click", "purchase")))
     fold = (F.conv(F.substring(F.md5(F.col("event_id").cast("string")),
@@ -2183,7 +2147,7 @@ def ml_cv_auc_per_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# chi-square goodness-of-fit: day-of-week uniformity (round 6)
+# chi-square goodness-of-fit: day-of-week uniformity
 # ---------------------------------------------------------------------------
 
 _GOF_ORACLE = """
@@ -2235,7 +2199,7 @@ def stat_chi_square_gof_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# cumulative gains / lift table (round 6)
+# cumulative gains / lift table
 # ---------------------------------------------------------------------------
 
 _LIFT_ORACLE = """
@@ -2283,8 +2247,8 @@ def ml_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the decile assignment is the two-pass bucketed rank
     (bucketed.py — arithmetic score buckets, broadcast prefix offsets,
     SQL-standard NTILE formula from the exact global rank), so the raw
-    EVENT rows never pass through a single-partition window (the r6
-    'No Partition Defined' fix, pinned in test_plans.py); cumulative
+    EVENT rows never pass through a single-partition window (no 'No
+    Partition Defined' window, pinned in test_plans.py); cumulative
     windows then run over the 10 decile cells."""
     ev = (load_table(spark, "events", sf_dir)
           .where(F.col("event_type").isin("click", "purchase")))
@@ -2296,7 +2260,7 @@ def ml_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = ranked.groupBy("decile").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.count(F.when(F.col("pos"), 1)).cast("bigint").alias("n_pos"))
-    # r11: the 10-row cell table feeds THREE subtrees (x, y, totals), and
+    # the 10-row cell table feeds THREE subtrees (x, y, totals), and
     # Catalyst does not share subplans across join branches — without the
     # pin the whole events bucketed-rank lineage ran 3x per query
     cells = cells.localCheckpoint(eager=False)
@@ -2323,7 +2287,7 @@ def ml_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# minimum detectable effect / power planning (round 6)
+# minimum detectable effect / power planning
 # ---------------------------------------------------------------------------
 
 # two-sided alpha=0.05 and power=0.80 normal quantiles, frozen literals
@@ -2398,7 +2362,7 @@ def stat_mde_power_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 2x2 difference-in-differences (round 6)
+# 2x2 difference-in-differences
 # ---------------------------------------------------------------------------
 
 _DID_ORACLE = """
@@ -2490,7 +2454,7 @@ def stat_diff_in_diff_2x2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wilson score interval for proportions (round 6)
+# Wilson score interval for proportions
 # ---------------------------------------------------------------------------
 
 _WILSON_ORACLE = f"""
@@ -2551,7 +2515,7 @@ def stat_proportion_ci_wilson(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# Brier score of the rank-calibrated score (round 6)
+# Brier score of the rank-calibrated score
 # ---------------------------------------------------------------------------
 
 _BRIER_ORACLE = """
@@ -2639,7 +2603,7 @@ def ml_brier_score_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# interrupted time series: pre/post slopes + level shift (round 6)
+# interrupted time series: pre/post slopes + level shift
 # ---------------------------------------------------------------------------
 
 _ITS_CUT = "2024-01-16 00:00:00"
@@ -2712,7 +2676,7 @@ def stat_interrupted_time_series(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# learning curve: AUC at deterministic subsample rates (round 6)
+# learning curve: AUC at deterministic subsample rates
 # ---------------------------------------------------------------------------
 
 # u32 thresholds for 25% / 50% / 100% md5 subsamples
@@ -2803,7 +2767,7 @@ def ml_learning_curve_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# likelihood-ratio G-test cells (round 6)
+# likelihood-ratio G-test cells
 # ---------------------------------------------------------------------------
 
 _GTEST_ORACLE = """
@@ -2861,7 +2825,7 @@ def stat_g_test_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# paired sign test (round 6)
+# paired sign test
 # ---------------------------------------------------------------------------
 
 _SIGN_ORACLE = """
@@ -2903,17 +2867,7 @@ def stat_sign_test_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: calendar-bounded hourly pre-agg, hour-keyed self-join,
     one three-count fold."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents")))
-    x = (hourly.where(F.col("event_type") == "click")
-         .select("hr", F.col("cents").alias("x")))
-    y = (hourly.where(F.col("event_type") == "purchase")
-         .select(F.col("hr").alias("hry"), F.col("cents").alias("y")))
-    paired = x.join(y, F.col("hr") == F.col("hry"))
+    paired = _click_purchase_hours(spark, sf_dir, "x", "y")
     s = paired.agg(
         F.count(F.when(F.col("x") > F.col("y"), 1)).cast("bigint")
         .alias("n_plus"),
@@ -2929,7 +2883,7 @@ def stat_sign_test_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wilcoxon signed-rank test (round 6)
+# Wilcoxon signed-rank test
 # ---------------------------------------------------------------------------
 
 _WSR_ORACLE = """
@@ -2982,23 +2936,13 @@ def stat_wilcoxon_signed_rank(spark: SparkSession,
     (full magnitudes). Zero differences drop; |d| ranks ride the
     doubled-average-rank trick (2W+ stays an exact BIGINT under ties);
     the normal z uses mean n(n+1)/4 and the TIE-CORRECTED variance
-    n(n+1)(2n+1)/24 - sum(t^3-t)/48 (r6 ADVICE fix -- consistent with
-    the tie-corrected stat_mann_whitney_u / stat_kruskal_wallis
-    siblings) in an identical tree.
+    n(n+1)(2n+1)/24 - sum(t^3-t)/48 (consistent with the tie-corrected
+    stat_mann_whitney_u / stat_kruskal_wallis siblings) in an identical
+    tree.
 
     Scale shape: calendar-bounded pairs; one rank window over the
     ~700-row paired series; one two-sum fold."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents")))
-    x = (hourly.where(F.col("event_type") == "click")
-         .select("hr", F.col("cents").alias("x")))
-    y = (hourly.where(F.col("event_type") == "purchase")
-         .select(F.col("hr").alias("hry"), F.col("cents").alias("y")))
-    d = (x.join(y, F.col("hr") == F.col("hry"))
+    d = (_click_purchase_hours(spark, sf_dir, "x", "y")
          .where(F.col("x") != F.col("y"))
          .select((F.col("x") - F.col("y")).alias("diff"))
          .localCheckpoint(eager=False))  # rank + tie folds share it
@@ -3018,7 +2962,7 @@ def stat_wilcoxon_signed_rank(spark: SparkSession,
     s = s.crossJoin(F.broadcast(tie))
     nd = F.col("n").cast("double")
     mean_w = nd * (nd + F.lit(1.0)) / F.lit(4.0)
-    # tie-corrected variance (r6 ADVICE): subtract sum(t^3 - t)/48,
+    # tie-corrected variance: subtract sum(t^3 - t)/48,
     # matching the tie-corrected Mann-Whitney / Kruskal-Wallis siblings
     var_w = (nd * (nd + F.lit(1.0)) * (F.lit(2.0) * nd + F.lit(1.0))
              / F.lit(24.0)
@@ -3030,7 +2974,7 @@ def stat_wilcoxon_signed_rank(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# Friedman test across event types, hours as blocks (round 6)
+# Friedman test across event types, hours as blocks
 # ---------------------------------------------------------------------------
 
 _FRIEDMAN_ORACLE = """
@@ -3112,7 +3056,7 @@ def stat_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Kruskal-Wallis H across all five event types (round 6)
+# Kruskal-Wallis H across all five event types
 # ---------------------------------------------------------------------------
 
 _KW_ORACLE = """
@@ -3211,7 +3155,7 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Mood's median test cells (round 6)
+# Mood's median test cells
 # ---------------------------------------------------------------------------
 
 _MOOD_ORACLE = """
@@ -3298,7 +3242,7 @@ def stat_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Fisher-z confidence interval for the hourly correlation (round 6)
+# Fisher-z confidence interval for the hourly correlation
 # ---------------------------------------------------------------------------
 
 _FISHER_Z_ORACLE = f"""
@@ -3366,17 +3310,7 @@ def stat_fisher_z_corr_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: calendar-bounded pairs; one combinable five-sum
     fold."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents")))
-    x = (hourly.where(F.col("event_type") == "click")
-         .select("hr", F.col("cents").alias("x")))
-    y = (hourly.where(F.col("event_type") == "purchase")
-         .select(F.col("hr").alias("hry"), F.col("cents").alias("y")))
-    paired = x.join(y, F.col("hr") == F.col("hry"))
+    paired = _click_purchase_hours(spark, sf_dir, "x", "y")
     d38 = "decimal(38,0)"
     s = paired.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -3712,17 +3646,8 @@ def stat_mcnemar_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: calendar-bounded hourly fold; one broadcast 1-row
     total; one combinable four-count fold to a single row."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents")))
-    x = (hourly.where(F.col("event_type") == "click")
-         .select("hr", F.col("cents").alias("hc")))
-    y = (hourly.where(F.col("event_type") == "purchase")
-         .select(F.col("hr").alias("hry"), F.col("cents").alias("pc")))
-    paired = x.join(y, F.col("hr") == F.col("hry")).select("hr", "hc", "pc")
+    paired = (_click_purchase_hours(spark, sf_dir, "hc", "pc")
+              .select("hr", "hc", "pc"))
     tot = paired.agg(F.count(F.lit(1)).cast("bigint").alias("k"),
                      F.sum("hc").cast("bigint").alias("sc"),
                      F.sum("pc").cast("bigint").alias("sp"))
@@ -3791,17 +3716,7 @@ def stat_hodges_lehmann_shift(spark: SparkSession,
     Theil–Sen discipline, ~250k pairs on ~700 hours); the global
     median rank is the two-pass bucketed rank (bucketed.py — no
     single-partition window over the pair table)."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents")))
-    x = (hourly.where(F.col("event_type") == "click")
-         .select("hr", F.col("cents").alias("hc")))
-    y = (hourly.where(F.col("event_type") == "purchase")
-         .select(F.col("hr").alias("hry"), F.col("cents").alias("pc")))
-    d = (x.join(y, F.col("hr") == F.col("hry"))
+    d = (_click_purchase_hours(spark, sf_dir, "hc", "pc")
          .select("hr", (F.col("hc") - F.col("pc")).alias("diff"))
          .localCheckpoint(eager=False))  # both pair sides share it
     a, b = d.alias("a"), d.alias("b")
@@ -4117,11 +4032,7 @@ def stat_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: calendar-bounded hourly fold; flags map-side against a
     broadcast 5-row moment dim; column/row folds over the bounded block
     grid."""
-    ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents"))
+    hourly = (hourly_cents(load_table(spark, "events", sf_dir))
               .localCheckpoint(eager=False))  # moments + blocks share it
     tm = hourly.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("k_t"),
@@ -4913,21 +4824,12 @@ FROM d
 """
 
 
-@register("stat_durbin_watson", oracle=_DW_ORACLE)
-def stat_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Durbin–Watson serial-correlation diagnostic on the residuals of
-    the hourly-purchase-cents-vs-time OLS — the regression-health check
-    the OLS family (stat_ols_two_feature, ts_trend_slope) never
-    reports: DW ≈ 2 means independent residuals, → 0 positive
-    autocorrelation (the usual time-series failure), → 4 negative.
-    DW = Σ(eₜ−eₜ₋₁)²/Σeₜ². Slope/intercept come off exact BIGINT sums;
-    each residual is ONE identical double tree quantized to 1e-6-unit
-    integers, so both quadratic sums are exact decimal(38,0) folds and
-    the statistic is partition-order-free.
-
-    Scale shape: calendar-bounded hourly fold (≤8,784 rows/year
-    regardless of corpus size); broadcast 1-row coefficients; one lag
-    window over the bounded DOMAIN; one integer fold to a single row."""
+def _hourly_purchase_trend(spark: SparkSession,
+                           sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """OLS fit of hourly purchase cents on time. Returns the series
+    (x, y) — x the hour index from the first purchase hour, y that hour's
+    purchase cents — and the one-row fit (n, b, a): the slope and
+    intercept off exact BIGINT sums through one identical double tree."""
     ev = (load_table(spark, "events", sf_dir)
           .where(F.col("event_type") == "purchase"))
     cents = F.round(F.col("value") * 100, 0).cast("bigint")
@@ -4951,7 +4853,25 @@ def stat_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
          / (nd * F.col("sxx").cast("double")
             - F.col("sx").cast("double") * F.col("sx").cast("double")))
     a = F.col("sy").cast("double") / nd - b * F.col("sx").cast("double") / nd
-    co = s.select("n", b.alias("b"), a.alias("a"))
+    return x, s.select("n", b.alias("b"), a.alias("a"))
+
+
+@register("stat_durbin_watson", oracle=_DW_ORACLE)
+def stat_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Durbin–Watson serial-correlation diagnostic on the residuals of
+    the hourly-purchase-cents-vs-time OLS — the regression-health check
+    the OLS family (stat_ols_two_feature, ts_trend_slope) never
+    reports: DW ≈ 2 means independent residuals, → 0 positive
+    autocorrelation (the usual time-series failure), → 4 negative.
+    DW = Σ(eₜ−eₜ₋₁)²/Σeₜ². Slope/intercept come off exact BIGINT sums;
+    each residual is ONE identical double tree quantized to 1e-6-unit
+    integers, so both quadratic sums are exact decimal(38,0) folds and
+    the statistic is partition-order-free.
+
+    Scale shape: calendar-bounded hourly fold (≤8,784 rows/year
+    regardless of corpus size); broadcast 1-row coefficients; one lag
+    window over the bounded DOMAIN; one integer fold to a single row."""
+    x, co = _hourly_purchase_trend(spark, sf_dir)
     e = (x.crossJoin(F.broadcast(co))
          .select("x", "n", "a", "b",
                  F.round((F.col("y").cast("double") - F.col("a")
@@ -5172,30 +5092,7 @@ def stat_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: calendar-bounded hourly fold; two broadcast 1-row
     passes (coefficients, then σ̂); every fold an exact integer sum over
     the bounded domain."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type") == "purchase"))
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    h = (ev.select(
-            (F.unix_timestamp(F.date_trunc("hour", F.col("ts"))) / 3600)
-            .cast("bigint").alias("eh"),
-            cents.alias("c"))
-         .groupBy("eh")
-         .agg(F.sum("c").cast("bigint").alias("y")))
-    mn = h.agg(F.min("eh").alias("m"))
-    x = (h.crossJoin(F.broadcast(mn))
-         .select((F.col("eh") - F.col("m")).alias("x"), "y"))
-    s = x.agg(F.count(F.lit(1)).cast("bigint").alias("n"),
-              F.sum("x").cast("bigint").alias("sx"),
-              F.sum("y").cast("bigint").alias("sy"),
-              F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),
-              F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"))
-    nd = F.col("n").cast("double")
-    b = ((nd * F.col("sxy").cast("double")
-          - F.col("sx").cast("double") * F.col("sy").cast("double"))
-         / (nd * F.col("sxx").cast("double")
-            - F.col("sx").cast("double") * F.col("sx").cast("double")))
-    a = F.col("sy").cast("double") / nd - b * F.col("sx").cast("double") / nd
-    co = s.select("n", b.alias("b"), a.alias("a"))
+    x, co = _hourly_purchase_trend(spark, sf_dir)
     e = (x.crossJoin(F.broadcast(co))
          .select("x", "n",
                  F.round(F.col("y").cast("double") - F.col("a")
@@ -5752,7 +5649,7 @@ def stat_capability_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# DataFrameStatFunctions crosstab (round 5, batch 15)
+# DataFrameStatFunctions crosstab
 # ---------------------------------------------------------------------------
 
 _CROSSTAB_ORACLE = """
@@ -5787,7 +5684,7 @@ def stat_crosstab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# chi-square independence cells (round 6)
+# chi-square independence cells
 # ---------------------------------------------------------------------------
 
 _CHI2_ORACLE = """
@@ -5849,7 +5746,7 @@ def stat_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Markov entropy rate (round 6)
+# Markov entropy rate
 # ---------------------------------------------------------------------------
 
 _ENTROPY_RATE_ORACLE = """
@@ -5919,7 +5816,7 @@ def stat_entropy_rate_markov(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# Ljung-Box white-noise test on the ACF chain (round 6)
+# Ljung-Box white-noise test on the ACF chain
 # ---------------------------------------------------------------------------
 
 _LJUNG_ORACLE = f"""

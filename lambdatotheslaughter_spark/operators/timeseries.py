@@ -13,6 +13,16 @@ from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.tables import load_table
 
 
+def hourly_cents(events: DataFrame) -> DataFrame:
+    """Per-type hourly revenue series of ``events``: (event_type, hr,
+    cents), cents the exact BIGINT sum of each event's value rounded to
+    whole cents."""
+    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    return (events.groupBy("event_type",
+                           F.date_trunc("hour", "ts").alias("hr"))
+            .agg(F.sum(cents).cast("bigint").alias("cents")))
+
+
 # ---------------------------------------------------------------------------
 # phase-collapsed DFT energy (which period carries the signal)
 # ---------------------------------------------------------------------------
@@ -454,7 +464,7 @@ def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
                    cents.alias("c"))
          .groupBy("day")
          .agg(F.sum("c").cast("bigint").alias("y"))
-         # r11: the ≤366-row daily fold feeds both the n1 scalar and the
+         # the ≤366-row daily fold feeds both the n1 scalar and the
          # indexed series — pin it so the events scan runs once per query
          .localCheckpoint(eager=False))
     n1 = d.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
@@ -1190,7 +1200,7 @@ def ts_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# month-over-month growth (round 4)
+# month-over-month growth
 # ---------------------------------------------------------------------------
 
 _MOM_ORACLE = """
@@ -1246,7 +1256,7 @@ def ts_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# seasonal decomposition + percent-of-total (round 4)
+# seasonal decomposition + percent-of-total
 # ---------------------------------------------------------------------------
 
 _SEASONAL_ORACLE = """
@@ -1381,7 +1391,7 @@ def ts_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# exact rolling correlation (round 5)
+# exact rolling correlation
 # ---------------------------------------------------------------------------
 
 _ROLLING_CORR_ORACLE = """
@@ -1460,7 +1470,7 @@ def ts_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# deterministic stride downsampling (round 5)
+# deterministic stride downsampling
 # ---------------------------------------------------------------------------
 
 _STRIDE_ORACLE = """
@@ -1496,7 +1506,7 @@ def ts_downsample_stride(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# per-group linear trend slope (round 5)
+# per-group linear trend slope
 # ---------------------------------------------------------------------------
 
 _TREND_ORACLE = """
@@ -1555,7 +1565,7 @@ def ts_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# time-series gap detection (round 5)
+# time-series gap detection
 # ---------------------------------------------------------------------------
 
 _GAP_MINUTES = 180
@@ -1602,7 +1612,7 @@ def ts_gap_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# forward fill (last observation carried forward, round 5)
+# forward fill (last observation carried forward)
 # ---------------------------------------------------------------------------
 
 _FFILL_ORACLE = """
@@ -1646,7 +1656,7 @@ def ts_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# cumulative distinct users via the first-occurrence rewrite (round 5)
+# cumulative distinct users via the first-occurrence rewrite
 # ---------------------------------------------------------------------------
 
 _CUMDIST_ORACLE = """
@@ -1696,7 +1706,7 @@ def ts_cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# time-weighted average (round 5, batch 10)
+# time-weighted average
 # ---------------------------------------------------------------------------
 
 _TWA_ORACLE = """
@@ -1766,7 +1776,7 @@ def ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# LTTB downsampling (round 5, batch 18)
+# LTTB downsampling
 # ---------------------------------------------------------------------------
 
 _LTTB_K = 12
@@ -1857,7 +1867,7 @@ def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# IQR fence outliers (round 6)
+# IQR fence outliers
 # ---------------------------------------------------------------------------
 
 _IQR_ORACLE = """
@@ -1922,7 +1932,7 @@ def ts_outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# lag-k autocorrelation (round 6)
+# lag-k autocorrelation
 # ---------------------------------------------------------------------------
 
 _AUTOCORR_ORACLE = """
@@ -1994,7 +2004,7 @@ def ts_autocorr_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# day-of-week × hour activity profile (round 6)
+# day-of-week × hour activity profile
 # ---------------------------------------------------------------------------
 
 _DOW_HOUR_ORACLE = """
@@ -2041,7 +2051,7 @@ def ts_dow_hour_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# local-maximum peak detection (round 6)
+# local-maximum peak detection
 # ---------------------------------------------------------------------------
 
 _PEAK_ORACLE = """
@@ -2076,11 +2086,7 @@ def ts_peak_detect_local(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one combinable groupBy collapses the corpus to the
     calendar (hours × types — data-size-free after the pre-agg), then a
     single lag/lead window per type over the tiny hourly table."""
-    ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents")))
+    hourly = hourly_cents(load_table(spark, "events", sf_dir))
     w = Window.partitionBy("event_type").orderBy("hr")
     nav = hourly.select(
         "event_type", "hr", "cents",
@@ -2093,7 +2099,7 @@ def ts_peak_detect_local(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# multi-lag autocorrelation function (round 6)
+# multi-lag autocorrelation function
 # ---------------------------------------------------------------------------
 
 _ACF_MAX_LAG = 24
@@ -2150,11 +2156,7 @@ def ts_acf_multi_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     the calendar; the 24-lag spine is a broadcast cross join over the
     HOURLY table (24×hours rows — calendar-bounded, corpus-free); the
     per-(type, lag) moment fold is one combinable groupBy."""
-    ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents"))
+    hourly = (hourly_cents(load_table(spark, "events", sf_dir))
               .select("event_type",
                       (F.unix_timestamp("hr") / 3600).cast("bigint")
                       .alias("h"),
@@ -2192,7 +2194,7 @@ def ts_acf_multi_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# cross-correlation lead/lag (round 6)
+# cross-correlation lead/lag
 # ---------------------------------------------------------------------------
 
 _XCORR_MAX_LAG = 12
@@ -2247,12 +2249,9 @@ def ts_xcorr_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the corpus collapses to two calendar-bounded hourly
     series; the 25-lag spine is a broadcast cross join over the click
     series; one combinable moment fold per lag."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents"))
+    hourly = (hourly_cents(load_table(spark, "events", sf_dir)
+                           .where(F.col("event_type").isin("click",
+                                                           "purchase")))
               .select("event_type",
                       (F.unix_timestamp("hr") / 3600).cast("bigint")
                       .alias("h"),
@@ -2287,7 +2286,7 @@ def ts_xcorr_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# burstiness / Fano factor (round 6)
+# burstiness / Fano factor
 # ---------------------------------------------------------------------------
 
 _FANO_ORACLE = """
@@ -2347,7 +2346,7 @@ def ts_burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# forecast-accuracy eval (round 6)
+# forecast-accuracy eval
 # ---------------------------------------------------------------------------
 
 _WAPE_ORACLE = """
@@ -2390,11 +2389,7 @@ def ts_forecast_eval_wape(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: hourly pre-agg collapses the corpus; one lag window
     per type; one combinable four-sum fold."""
-    ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents")))
+    hourly = hourly_cents(load_table(spark, "events", sf_dir))
     w = Window.partitionBy("event_type").orderBy("hr")
     pred = hourly.select(
         "event_type", "cents",
@@ -2421,7 +2416,7 @@ def ts_forecast_eval_wape(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Hampel outlier filter (round 6)
+# Hampel outlier filter
 # ---------------------------------------------------------------------------
 
 # 3 * 1.4826 = 4.4478 — compare 10000*dev > 44478*MAD in pure integers
@@ -2473,11 +2468,7 @@ def ts_hampel_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: hourly pre-agg collapses the corpus; one frame window
     per type over the calendar-sized table; the 25-element array sorts
     are per-row constant work."""
-    ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents")))
+    hourly = hourly_cents(load_table(spark, "events", sf_dir))
     w = Window.partitionBy("event_type").orderBy("hr").rowsBetween(-12, 12)
     framed = hourly.select(
         "event_type", "hr", "cents",
@@ -2500,7 +2491,7 @@ def ts_hampel_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# pinball-loss quantile-forecast eval (round 6)
+# pinball-loss quantile-forecast eval
 # ---------------------------------------------------------------------------
 
 # tau in tenths: loss*10 = sum(max(tau10*(y-q), (tau10-10)*(y-q))) stays
@@ -2546,11 +2537,7 @@ def ts_pinball_loss_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: hourly pre-agg → lag window → broadcast 3-row τ spine
     → one combinable fold per (type, τ)."""
-    ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents")))
+    hourly = hourly_cents(load_table(spark, "events", sf_dir))
     w = Window.partitionBy("event_type").orderBy("hr")
     err = (hourly.select("event_type", "cents",
                          F.lag("cents", 24).over(w).alias("q"))
@@ -2572,7 +2559,7 @@ def ts_pinball_loss_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# banded DTW series similarity (round 6 — rows-only)
+# banded DTW series similarity (rows-only)
 # ---------------------------------------------------------------------------
 
 _DTW_BAND = 48
@@ -2625,11 +2612,7 @@ def ts_dtw_banded_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(K² · hours · band) with hours calendar-bounded, corpus-free."""
     import pandas as pd
 
-    ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents")))
+    hourly = hourly_cents(load_table(spark, "events", sf_dir))
     series = (hourly.groupBy("event_type")
               .agg(F.array_sort(F.collect_list(F.struct("hr", "cents")))
                    .alias("pts"))
@@ -2661,7 +2644,7 @@ def ts_dtw_banded_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SAX symbolic aggregate approximation (round 6)
+# SAX symbolic aggregate approximation
 # ---------------------------------------------------------------------------
 
 _SAX_ORACLE = """
@@ -2759,7 +2742,7 @@ def ts_sax_symbolize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# seasonal strength via the hour-of-day ANOVA identity (round 6)
+# seasonal strength via the hour-of-day ANOVA identity
 # ---------------------------------------------------------------------------
 
 _SEAS_STRENGTH_ORACLE = """
@@ -2861,7 +2844,7 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# bitemporal as-of revision report (round 6)
+# bitemporal as-of revision report
 # ---------------------------------------------------------------------------
 
 _BITEMP_ASOF = "2024-01-20 00:00:00"
@@ -2970,7 +2953,7 @@ def ts_bitemporal_asof_revision(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# Haar wavelet detail energy by timescale (round 6)
+# Haar wavelet detail energy by timescale
 # ---------------------------------------------------------------------------
 
 _HAAR_ORACLE = """
@@ -3042,7 +3025,7 @@ def ts_haar_energy_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# log2-bucketed inter-event gap histogram (round 6)
+# log2-bucketed inter-event gap histogram
 # ---------------------------------------------------------------------------
 
 _GAP_HIST_ORACLE = """
@@ -3121,7 +3104,7 @@ def ts_gap_log_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# year-over-year growth (round 6)
+# year-over-year growth
 # ---------------------------------------------------------------------------
 
 _YOY_ORACLE = """
@@ -3168,7 +3151,7 @@ def ts_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# classical monthly seasonal indices (round 6)
+# classical monthly seasonal indices
 # ---------------------------------------------------------------------------
 
 _SEAS_IDX_ORACLE = """
@@ -3228,7 +3211,7 @@ def ts_seasonal_index_monthly(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# permutation entropy of the hourly series (round 6)
+# permutation entropy of the hourly series
 # ---------------------------------------------------------------------------
 
 _PERM_ENT_ORACLE = """
@@ -3291,11 +3274,7 @@ def ts_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: calendar-bounded series; (type, day)-style lead
     windows over ~700 rows/type; folds over <= 6 pattern rows."""
-    ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents")))
+    hourly = hourly_cents(load_table(spark, "events", sf_dir))
     w = Window.partitionBy("event_type").orderBy("hr")
     lagged = hourly.select(
         "event_type", F.col("cents").alias("a"),

@@ -624,11 +624,11 @@ def win_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: calendar-bounded hourly pre-agg; one frame window per
     type; everything combinable before it."""
-    ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents"))
+    # a module-level import would register the timeseries keys ahead of
+    # this module's, reordering the registry
+    from lambdatotheslaughter_spark.operators.timeseries import hourly_cents
+
+    hourly = (hourly_cents(load_table(spark, "events", sf_dir))
               .select("event_type",
                       (F.unix_timestamp("hr") / 3600).cast("bigint")
                       .alias("h"),

@@ -633,22 +633,16 @@ def test_sliding_hll_tracks_exact_within_5pct(spark):
 def test_kcore_fixed_rounds_have_converged(spark):
     """graph_k_core peels a FIXED number of rounds (oracle unrolls the
     same count); this gate proves one EXTRA round changes nothing at
-    test scale, so fixed-round membership == converged k-core here."""
-    from pyspark.sql import Window, functions as F
+    test scale, so fixed-round membership == converged k-core here. The
+    edge set is built by the same graph.py helpers graph_k_core uses."""
+    from pyspark.sql import functions as F
 
     from lambdatotheslaughter_spark.operators import graph as g
     from lambdatotheslaughter_spark.tables import load_table
 
-    li = load_table(spark, "lineitem", SF_DIR).select(
-        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey")
-    raw = (li.select(F.col("l_partkey").alias("src"),
-                     F.lead("l_partkey").over(w).alias("dst"))
-           .where(F.col("dst").isNotNull() & (F.col("src") != F.col("dst"))))
-    edges = (raw.select(F.least("src", "dst").alias("a"),
-                        F.greatest("src", "dst").alias("b"))
-             .distinct().localCheckpoint(eager=False))
+    raw = (g._transitions(load_table(spark, "lineitem", SF_DIR))
+           .where(F.col("src") != F.col("dst")))
+    edges = g._undirected(raw).distinct().localCheckpoint(eager=False)
 
     def peel(e, rounds):
         for _ in range(rounds):

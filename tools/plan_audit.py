@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Full-registry physical-plan audit (optimization-round closing sweep).
+"""Full-registry physical-plan audit.
 
 For EVERY registry key, build the query DataFrame and scan its formatted
 physical plan for the anti-patterns the optimization guide names:
@@ -14,10 +14,11 @@ sweep is wall-clock-noise-independent. Keys whose CONSTRUCTION runs eager
 scaffolding (streaming twins, sink-then-read-back shapes) still execute that
 scaffolding — the audit reads the plan of the RETURNED DataFrame either way.
 
-Usage: python tools/plan_audit.py [key ...]   (no args = full registry)
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01 — plan shapes for the
-boundary/cartesian checks are stats-independent, so the small SF suffices).
+Usage: python tools/plan_audit.py --sf-dir DIR [key ...]
+(no keys = full registry). Plan shapes for the boundary/cartesian checks are
+stats-independent, so the smallest scale factor suffices.
 """
+import argparse
 import os
 import sys
 
@@ -25,8 +26,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lambdatotheslaughter_spark import registry
 from lambdatotheslaughter_spark.session import get_spark
-
-SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 # keys whose CONTRACT is a cross/nested-loop shape (the survey names them):
 # the audit flags NLJ/cartesian only where it would be accidental.
@@ -38,16 +37,16 @@ EXPECTED_NESTED_LOOP = {
 def classify_bnlj(plan: str):
     """Split the plan's BNLJ nodes into benign vs suspicious.
 
-    Benign patterns in this codebase (each verified by spot-reading the
-    detail sections, see OPTIMIZATION_r11.md "Full-registry plan audit"):
+    Benign patterns in this codebase (each verified by reading the
+    detail sections of every BNLJ node a full-registry audit reported):
     - `Join type: Cross` — the scalar-attach idiom
       `crossJoin(F.broadcast(<global agg>))`: the build side is a 1-row
       global aggregate (min/max scalars, expectation metrics), so the
       nested loop is O(n)·1. Grep-verified: every `crossJoin` call site
       in the package broadcasts a no-grouping-key aggregate.
     - A non-equi condition on `__lts_bkt` / `__lts_` helper columns — the
-      r7 equi-depth bucket staging: the build side is the <=256-row bucket
-      summary table, so the loop is O(n)·256 at most.
+      equi-depth bucket staging of bucketed.py: the build side is the
+      <=256-row bucket summary table, so the loop is O(n)·256 at most.
     Anything else (a real non-equi join of two data-sized tables) is
     suspicious and reported.
     """
@@ -69,14 +68,20 @@ def classify_bnlj(plan: str):
     return benign, suspicious
 
 
+parser = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+parser.add_argument("queries", nargs="*", metavar="query")
+parser.add_argument("--sf-dir", required=True,
+                    help="scale-factor directory of the input parquet")
+args = parser.parse_args()
+
 spark = get_spark("lts-plan-audit")
-names = sys.argv[1:] or sorted(registry.all_queries().keys())
+names = args.queries or sorted(registry.all_queries().keys())
 flags = []
 errors = []
 n_benign_bnlj = 0
 for i, name in enumerate(names, 1):
     try:
-        df = registry.all_queries()[name](spark, SF)
+        df = registry.all_queries()[name](spark, args.sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
     except Exception as exc:  # noqa: BLE001 — audit must visit every key
@@ -99,8 +104,8 @@ for i, name in enumerate(names, 1):
     if i % 50 == 0:
         print(f"... {i}/{len(names)} audited", file=sys.stderr)
 
-print(f"audited {len(names) - len(errors)}/{len(names)} keys at {SF}; "
-      f"benign scalar/bucket BNLJ nodes: {n_benign_bnlj}")
+print(f"audited {len(names) - len(errors)}/{len(names)} keys at "
+      f"{args.sf_dir}; benign scalar/bucket BNLJ nodes: {n_benign_bnlj}")
 for name, why in flags:
     print(f"FLAG {name}: {why}")
 for name, err in errors:
