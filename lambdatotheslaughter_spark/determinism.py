@@ -69,6 +69,14 @@ def iround(v: Column) -> Column:
     return (F.signum(v) * F.floor(F.abs(v) + F.lit(0.5))).cast("long")
 
 
+def round_cents(col: str) -> Column:
+    """The money rule: a 2-decimal value to whole cents as BIGINT, the
+    twin of the oracles' CAST(round(x * 100, 0) AS BIGINT). Unlike
+    :func:`_scaled`, it keeps Spark's Round expression (a different plan
+    from the floor form, same values)."""
+    return F.round(F.col(col) * 100, 0).cast("bigint")
+
+
 def _scaled(col: Column | str, dp: int) -> Column:
     """Exact dp-decimal → integer recovery (see :func:`iround`)."""
     c = F.col(col) if isinstance(col, str) else col

@@ -64,3 +64,15 @@ def md5_int60(col: Column | str) -> Column:
     CAST(concat('0x', substring(md5(x),1,15)) AS BIGINT)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
+
+
+def md5_minhashes(items: str, k: int) -> Column:
+    """k portable minhashes of a string-array column: for seed i in
+    0..k-1, the least :func:`md5_int60` of ``"<i>#<item>"``. Equals
+    DuckDB's list_transform(range(0, k), i -> list_aggregate(
+    list_transform(items, s -> <md5_int60 of i || '#' || s>), 'min'))."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(k - 1)),
+        lambda i: F.array_min(F.transform(
+            items, lambda s: md5_int60(
+                F.concat(i.cast("string"), F.lit("#"), s)))))

@@ -20,7 +20,7 @@ from lambdatotheslaughter_spark.determinism import (
     iround,
     cavg, charge_csum, csum, davg, disc_price_csum, dsum, estimate_rows,
     money_aggs, oracle_cavg, oracle_charge_csum, oracle_csum, oracle_davg,
-    oracle_disc_price_csum, oracle_dsum)
+    oracle_disc_price_csum, oracle_dsum, round_cents)
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.tables import load_table
 
@@ -993,7 +993,7 @@ def agg_trimmed_winsorized_mean(spark: SparkSession,
     over the bounded value DOMAIN; one fold to a single row."""
     ev = load_table(spark, "events", sf_dir) \
         .where(F.col("event_type") == "purchase")
-    x = F.round(F.col("value") * 100, 0).cast("bigint")
+    x = round_cents("value")
     dom = ev.select(x.alias("x")).groupBy("x").agg(
         F.count(F.lit(1)).cast("bigint").alias("t"))
     wb = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, -1)
@@ -1056,7 +1056,7 @@ def agg_median_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: Spark plans median as a single-pass typed aggregate
     (no global sort); the fold is per-type parallel."""
     ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     return (ev.select("event_type", cents.alias("c"))
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -1114,7 +1114,7 @@ def agg_geometric_harmonic_mean(spark: SparkSession,
     Scale shape: one combinable (type, value) domain collapse, one
     5-group fold; corpus scanned once."""
     ev = load_table(spark, "events", sf_dir)
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    xc = round_cents("value")
     dom = (ev.select("event_type", xc.alias("xc"))
            .where(F.col("xc") > 0)
            .groupBy("event_type", "xc")
@@ -1190,7 +1190,7 @@ def agg_histogram_equi_depth(spark: SparkSession,
     over the bounded domain, a ×10 broadcast-spine conditional-MIN
     fold, one 10-row lag."""
     o = load_table(spark, "orders", sf_dir)
-    v = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    v = round_cents("o_totalprice")
     dom = (o.select(v.alias("v"))
            .groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("c")))
     wd = (Window.orderBy("v")
@@ -1740,7 +1740,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     definition, same result, no corpus-sized single-partition sort."""
     bucket_w = 1 << 16
     li = load_table(spark, "lineitem", sf_dir)
-    cents = F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")
+    cents = round_cents("l_extendedprice")
     wgt = F.round(F.col("l_quantity"), 0).cast("bigint")
     base = (li.select("l_returnflag", cents.alias("cents"),
                       wgt.alias("w"))
@@ -1827,7 +1827,7 @@ def agg_concentration_hhi_crk(spark: SparkSession,
     the r7 swap that retires the full global rank window entirely),
     broadcast back beside the one-row moment fold."""
     o = load_table(spark, "orders", sf_dir)
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    cents = round_cents("o_totalprice")
     cust = o.groupBy("o_custkey").agg(
         F.sum(cents).cast("bigint").alias("rev"))
     top10 = (cust.orderBy(F.col("rev").desc(), "o_custkey").limit(10)
@@ -1891,7 +1891,7 @@ def agg_hierarchy_share_rollup(spark: SparkSession,
         .select("c_custkey", "c_nationkey")
     n = load_table(spark, "nation", sf_dir)
     r = load_table(spark, "region", sf_dir)
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    cents = round_cents("o_totalprice")
     nat = (o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
            .join(F.broadcast(n),
                  F.col("c_nationkey") == F.col("n_nationkey"))
@@ -1962,7 +1962,7 @@ def agg_pareto_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, the r7 entity-grain sweep); totals broadcast back as one
     row; one fold to a single row."""
     o = load_table(spark, "orders", sf_dir)
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    cents = round_cents("o_totalprice")
     cust = o.groupBy("o_custkey").agg(
         F.sum(cents).cast("bigint").alias("rev"))
     tot = cust.agg(F.sum("rev").cast("bigint").alias("total"),
@@ -2021,7 +2021,7 @@ def agg_new_vs_returning_daily(spark: SparkSession,
     ev = load_table(spark, "events", sf_dir)
     firsts = ev.groupBy("user_id").agg(
         F.date_format(F.min("ts"), "yyyy-MM-dd").alias("first_day"))
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     daily = (ev.where(F.col("event_type") == "purchase")
              .join(firsts, "user_id")
              .select(F.date_format("ts", "yyyy-MM-dd").alias("day"),
@@ -2097,7 +2097,7 @@ def agg_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("week", F.min("ts")).alias("cohort_week"))
     sizes = firsts.groupBy("cohort_week").agg(
         F.count(F.lit(1)).cast("bigint").alias("cohort_users"))
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     rev = (ev.where(F.col("event_type") == "purchase")
            .join(firsts, "user_id")
            .groupBy("cohort_week",
@@ -2169,7 +2169,7 @@ def agg_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window at any part count, the r7 entity-grain
     sweep), 3-row rollup."""
     li = load_table(spark, "lineitem", sf_dir)
-    cents = F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")
+    cents = round_cents("l_extendedprice")
     part_rev = li.groupBy("l_partkey").agg(
         F.sum(cents).cast("bigint").alias("rev"))
     tot = part_rev.agg(F.sum("rev").cast("bigint").alias("total"))

@@ -16,19 +16,41 @@ across engines).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.bucketed import bucketed_order
-from lambdatotheslaughter_spark.determinism import iround, estimate_rows
+from lambdatotheslaughter_spark.determinism import (
+    estimate_rows, iround, round_cents)
 from lambdatotheslaughter_spark.functions.text import (
-    SHINGLE2_SQL, SHINGLE3_SQL, md5_int60, shingles2, shingles3, tokens)
+    SHINGLE2_SQL, SHINGLE3_SQL, md5_int60, md5_minhashes, shingles2,
+    shingles3, tokens)
 from lambdatotheslaughter_spark.operators.llm import (
-    _BM25_B, _BM25_K1, _CLUSTER_ORACLE, _cosine_spark, _cosine_sql,
-    llm_dedup_cluster)
-from lambdatotheslaughter_spark.operators.stats import _CAL_BINS
+    _BM25_B, _BM25_K1, _CLUSTER_ORACLE, _bm25_stats, _bm25_term_score,
+    _cosine_spark, _cosine_sql, _id_sorted_cosines, _per_query_topk,
+    _unit_rows, llm_dedup_cluster)
+from lambdatotheslaughter_spark.operators.stats import (
+    _CAL_BINS, _calibration_bins)
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.tables import load_table
+
+
+
+def _source_num() -> Column:
+    """The number after the 3-letter ``source`` prefix. The two-arg
+    substring (to end of string) matches the oracles' SUBSTR(source, 4);
+    a fixed-length slice would truncate a longer suffix on the Spark
+    side only."""
+    return F.expr("substring(source, 4)").cast("int")
+
+
+def _source_tier() -> Column:
+    """The model tier of a document's source: sources 0-3 large, 4-9
+    medium, the rest small."""
+    src_num = _source_num()
+    return (F.when(src_num < 4, F.lit("large"))
+            .when(src_num < 10, F.lit("medium"))
+            .otherwise(F.lit("small")))
 
 # ---------------------------------------------------------------------------
 # survivor selection per near-dup cluster
@@ -64,7 +86,7 @@ def llm_dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins (past ~1M docs AQE picks the strategy)."""
     clusters = llm_dedup_cluster(spark, sf_dir).select("doc_id", "cluster_id")
     nchars = load_table(spark, "documents", sf_dir).select("doc_id", "n_chars")
-    # r11: the decorated cluster table feeds both the per-cluster argmax
+    # the decorated cluster table feeds both the per-cluster argmax
     # and the final survivor join — pin it so the documents join (and,
     # on the distributed CC path, the whole upstream cluster lineage)
     # runs once per query
@@ -419,7 +441,7 @@ def llm_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round-4 batch 2: importance sampling + semantic dedup
+# importance sampling + semantic dedup
 # ---------------------------------------------------------------------------
 
 _QUALITY_SCORE_SQL = """
@@ -506,10 +528,10 @@ def llm_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline): float64 dot products agree across summation orders to
     ~1e-13, so the rounded threshold cannot flake on an ulp, while the
     engine side runs each cell's pair matrix as ONE numpy GEMM inside
-    applyInPandas (the r9 rewrite — the per-pair interpreted fold form
-    measured 3.5 s at sf0.1; the GEMM form ~0.6 s).
+    applyInPandas (the per-pair interpreted fold form measured 3.5 s at
+    sf0.1; the GEMM form ~0.6 s).
 
-    Half-rounding-mode caveat (r10, per review): numpy rounds
+    Half-rounding-mode caveat: numpy rounds
     half-to-even, DuckDB round() half-away-from-zero, so a cosine
     landing EXACTLY on a 5e-7 decimal midpoint would round apart — and
     because the rounded value gates ROW-SET MEMBERSHIP here (>= 0.95),
@@ -538,13 +560,9 @@ def llm_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         if len(pdf) < 2:
             return pd.DataFrame({"vec_id": pd.Series([], dtype="int64")})
-        order = np.argsort(pdf["vec_id"].to_numpy())
-        ids = pdf["vec_id"].to_numpy()[order].astype("int64")
-        m = np.vstack(pdf["embedding"].to_numpy()[order]).astype(np.float64)
-        norms = np.sqrt(np.einsum("ij,ij->i", m, m))
-        sims = np.round((m @ m.T) / np.outer(norms, norms), 6)
+        ids, sims = _id_sorted_cosines(pdf)
         # column j is dropped iff ANY lower-id row i<j has sims >= 0.95
-        hit = (np.triu(sims, k=1) >= 0.95).any(axis=0)
+        hit = (np.triu(np.round(sims, 6), k=1) >= 0.95).any(axis=0)
         return pd.DataFrame({"vec_id": ids[hit]})
 
     dropped = (cells.select("vec_id", "embedding", "cell")
@@ -618,7 +636,7 @@ def llm_prompt_template_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round-4 batch 3: training-order shuffle, epoch up-sampling, dim stats
+# training-order shuffle, epoch up-sampling, dim stats
 # ---------------------------------------------------------------------------
 
 _SHUFFLE_SEED = 42
@@ -703,10 +721,7 @@ def llm_mix_epoch_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: explode(sequence(1, w)) is a narrow 1→w flatMap — no
     shuffle at all; output size is exactly sum(w), the epoch-weighted
     token budget, and downstream repartitioning is the loader's choice."""
-    # two-arg substring (to end-of-string) matches the oracle's
-    # SUBSTR(source, 4); a fixed length-8 slice would silently truncate a
-    # longer numeric suffix on the Spark side only
-    src_num = F.expr("substring(source, 4)").cast("int")
+    src_num = _source_num()
     w = (F.when(src_num < 4, 3).when(src_num < 10, 2).otherwise(1)
          .cast("int"))
     d = load_table(spark, "documents", sf_dir).select(
@@ -771,7 +786,7 @@ def llm_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round-4 batch 4: blocklist filter + fixed-k hash sample
+# blocklist filter + fixed-k hash sample
 # ---------------------------------------------------------------------------
 
 _BLOCKLIST = ("slow", "dup", "big")
@@ -850,7 +865,7 @@ def llm_sample_fixed_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# fixed-k per-stratum sampling (round 5)
+# fixed-k per-stratum sampling
 # ---------------------------------------------------------------------------
 
 _K_PER_GROUP = 20
@@ -895,7 +910,7 @@ def llm_sample_fixed_k_per_group(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# n-gram recall vs an eval set (contamination measurement, round 5)
+# n-gram recall vs an eval set (contamination measurement)
 # ---------------------------------------------------------------------------
 
 _EVAL_MOD = 50
@@ -967,7 +982,7 @@ def llm_eval_ngram_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# bag-of-words (word-order-invariant) dedup (round 5)
+# bag-of-words (word-order-invariant) dedup
 # ---------------------------------------------------------------------------
 
 _BAG_ORACLE = """
@@ -1016,7 +1031,7 @@ def llm_dedup_bag_of_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# reciprocal-rank fusion (round 5)
+# reciprocal-rank fusion
 # ---------------------------------------------------------------------------
 
 _RRF_K = 60
@@ -1086,7 +1101,7 @@ def llm_rank_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# corpus dashboard report over grouping sets (round 5)
+# corpus dashboard report over grouping sets
 # ---------------------------------------------------------------------------
 
 _CORPUS_REPORT_ORACLE = """
@@ -1133,7 +1148,7 @@ def llm_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# chat-template rendering (round 5)
+# chat-template rendering
 # ---------------------------------------------------------------------------
 
 _CHAT_ORACLE = """
@@ -1181,7 +1196,7 @@ def llm_format_chat_template(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# DPO preference-pair construction (round 5)
+# DPO preference-pair construction
 # ---------------------------------------------------------------------------
 
 _DPO_PAIRS = 5
@@ -1251,7 +1266,7 @@ def llm_dpo_pair_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# n-gram novelty vs the earlier corpus (round 5)
+# n-gram novelty vs the earlier corpus
 # ---------------------------------------------------------------------------
 
 _NOVELTY_ORACLE = f"""
@@ -1301,7 +1316,7 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# stylometric source fingerprints (round 5)
+# stylometric source fingerprints
 # ---------------------------------------------------------------------------
 
 # pinned profile vocabulary: frequency of these eight common corpus words
@@ -1382,7 +1397,7 @@ def llm_style_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# boilerplate detection by per-source shingle document frequency (round 5)
+# boilerplate detection by per-source shingle document frequency
 # ---------------------------------------------------------------------------
 
 _BOILER_ORACLE = f"""
@@ -1452,7 +1467,7 @@ def llm_boilerplate_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# seeded span-corruption masking (round 5)
+# seeded span-corruption masking
 # ---------------------------------------------------------------------------
 
 _SPANC_ORACLE = """
@@ -1549,7 +1564,7 @@ def llm_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# BM25 retrieval SERVE: top-k per query over the corpus (round 5)
+# BM25 retrieval SERVE: top-k per query over the corpus
 # ---------------------------------------------------------------------------
 
 _RETR_QUERIES = ((1, "spark"), (1, "query"), (1, "fast"),
@@ -1608,30 +1623,16 @@ def llm_retrieval_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus stats are combinable; a real serving system would precompute
     them once per snapshot. Top-k per query is a WindowGroupLimit
     (per-task heads on a handful of query groups)."""
-    d = load_table(spark, "documents", sf_dir)
     q = spark.createDataFrame(list(_RETR_QUERIES), "query_id long, t string")
-    terms = sorted({t for _, t in _RETR_QUERIES})
-    tok = d.select("doc_id", F.explode(tokens()).alias("t"))
-    doclen = tok.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("double").alias("dl"))
-    stats = doclen.agg(F.count(F.lit(1)).cast("double").alias("n_docs"),
-                       F.avg("dl").alias("avg_dl"))
-    tf = (tok.where(F.col("t").isin(*terms))
-          .groupBy("doc_id", "t")
-          .agg(F.count(F.lit(1)).cast("double").alias("tf")))
-    df_ = tf.groupBy("t").agg(
-        F.countDistinct("doc_id").cast("double").alias("df"))
-    idf = F.log((F.col("n_docs") - F.col("df") + 0.5)
-                / (F.col("df") + 0.5) + 1.0)
-    denom = (F.col("tf") + _BM25_K1 * (1.0 - _BM25_B
-             + _BM25_B * F.col("dl") / F.col("avg_dl")))
+    tf, df_, doclen, stats = _bm25_stats(
+        load_table(spark, "documents", sf_dir),
+        sorted({t for _, t in _RETR_QUERIES}))
     scored = (tf.join(F.broadcast(q), "t")
               .join(F.broadcast(df_), "t")
               .join(doclen, "doc_id")
               .crossJoin(F.broadcast(stats))
               .groupBy("query_id", "doc_id")
-              .agg(F.round(F.sum(idf * F.col("tf") * (_BM25_K1 + 1.0)
-                                 / denom), 6).alias("bm25")))
+              .agg(F.round(F.sum(_bm25_term_score()), 6).alias("bm25")))
     w = Window.partitionBy("query_id").orderBy(
         F.col("bm25").desc(), F.col("doc_id"))
     return (scored.withColumn("rank",
@@ -1641,7 +1642,7 @@ def llm_retrieval_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# HTML markup strip (round 5, batch 8)
+# HTML markup strip
 # ---------------------------------------------------------------------------
 
 _HTML_STRIP_ORACLE = """
@@ -1697,7 +1698,7 @@ def llm_html_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Matryoshka embedding truncation (round 5, batch 8)
+# Matryoshka embedding truncation
 # ---------------------------------------------------------------------------
 
 _MRL_DIMS = 16
@@ -1751,7 +1752,7 @@ def llm_embedding_truncate_renorm(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# fill-in-the-middle transform (round 5, batch 8)
+# fill-in-the-middle transform
 # ---------------------------------------------------------------------------
 
 _FIM_ORACLE = """
@@ -1819,8 +1820,24 @@ def llm_fim_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# LSH (bands × rows) tuning report (round 5, batch 12)
+# LSH (bands × rows) tuning report
 # ---------------------------------------------------------------------------
+
+def _shared_shingle_pairs(sig: DataFrame) -> DataFrame:
+    """(a_id, b_id, inter): every doc pair a < b that shares a shingle of
+    the distinct ``sh`` arrays, with the exact intersection size. The
+    inverted index (a hash join on the shingle plus a groupBy) replaces
+    an all-pairs array_intersect, since a pair sharing no shingle cannot
+    reach a positive Jaccard threshold (measured 7.6 s -> ~1 s at sf0.1
+    against the 125k-pair broadcast nested loop with per-pair array ops)."""
+    ex = sig.select("doc_id", F.explode("sh").alias("s"))
+    p, q = ex.alias("p"), ex.alias("q")
+    return (p.join(q, (F.col("p.s") == F.col("q.s"))
+                   & (F.col("p.doc_id") < F.col("q.doc_id")))
+            .groupBy(F.col("p.doc_id").alias("a_id"),
+                     F.col("q.doc_id").alias("b_id"))
+            .agg(F.count(F.lit(1)).alias("inter")))
+
 
 _LSHT_K = 24
 _LSHT_TAU = 0.5
@@ -1901,30 +1918,14 @@ def llm_lsh_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     production LSH uses), never an all-pairs comparison — the only
     all-pairs stage is the bounded ground-truth audit itself."""
     d = (load_table(spark, "documents", sf_dir)
-         .where((F.col("doc_id") < 500) & (F.size(F.split("text", " ")) >= 3))
+         .where((F.col("doc_id") < 500) & (F.size(tokens()) >= 3))
          .select("doc_id", F.array_distinct(shingles3(
-             F.split("text", " "))).alias("sh")))
-    mh = F.transform(
-        F.sequence(F.lit(0), F.lit(_LSHT_K - 1)),
-        lambda i: F.array_min(F.transform(
-            "sh", lambda s: md5_int60(
-                F.concat(i.cast("string"), F.lit("#"), s)))))
-    sig = d.select("doc_id", "sh", mh.alias("mh")) \
+             tokens())).alias("sh")))
+    sig = d.select("doc_id", "sh", md5_minhashes("sh", _LSHT_K).alias("mh")) \
         .localCheckpoint(eager=False)
 
-    # exact ground truth via the INVERTED-INDEX intersection count, not an
-    # all-pairs array_intersect: pairs sharing zero shingles cannot reach
-    # any positive threshold, so counting co-occurrences per shared shingle
-    # (hash join + groupBy) IS the exact intersection for every pair that
-    # matters — measured 7.6 s -> ~1 s at sf0.1 vs the 125k-pair
-    # broadcast-nested-loop with per-pair array ops it replaces.
-    ex = sig.select("doc_id", F.explode("sh").alias("s"))
-    p, q = ex.alias("p"), ex.alias("q")
-    inter = (p.join(q, (F.col("p.s") == F.col("q.s"))
-                    & (F.col("p.doc_id") < F.col("q.doc_id")))
-             .groupBy(F.col("p.doc_id").alias("a_id"),
-                      F.col("q.doc_id").alias("b_id"))
-             .agg(F.count(F.lit(1)).alias("inter")))
+    # exact ground truth from the inverted shingle index
+    inter = _shared_shingle_pairs(sig)
     sizes = sig.select("doc_id", F.size("sh").alias("n"))
     na = sizes.select(F.col("doc_id").alias("a_id"), F.col("n").alias("na"))
     nb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n").alias("nb"))
@@ -1967,10 +1968,9 @@ def llm_lsh_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                    & (F.col("bh") == F.col("bh2"))
                    & (F.col("a_id") < F.col("b_id")))
             .select("bands", "rows_per_band", "a_id", "b_id").distinct()
-            # r12 (the r11 §10 duplicated-lineage pattern, guide §2.4):
             # cand feeds BOTH the candidate-count fold and the recall
             # semi-join — uncheckpointed, the band self-join + distinct
-            # ran twice per query (same-window A/B in OPTIMIZATION_r12.md)
+            # ran twice per query (the plan had 20 Exchanges, 12 with it)
             .localCheckpoint(eager=False))
     caught = cand.join(true_pairs, ["a_id", "b_id"], "left_semi")
     n_true = true_pairs.agg(
@@ -1994,7 +1994,7 @@ def llm_lsh_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# cross-shard dedup merge (round 5, batch 14)
+# cross-shard dedup merge
 # ---------------------------------------------------------------------------
 
 _XSHARD_ORACLE = """
@@ -2060,7 +2060,7 @@ def llm_dedup_cross_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# paragraph-level dedup share (round 6)
+# paragraph-level dedup share
 # ---------------------------------------------------------------------------
 
 _PARA_ORACLE = """
@@ -2118,7 +2118,7 @@ def llm_dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# RAG context packing under a token budget (round 6)
+# RAG context packing under a token budget
 # ---------------------------------------------------------------------------
 
 _RAG_BUDGET = 512
@@ -2178,14 +2178,14 @@ def llm_rag_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (d.where(F.col("doc_id") < 10)
          .select(F.col("doc_id").alias("query_id"),
                  F.explode(F.array_distinct(
-                     F.slice(F.split("text", " "), 1, 5))).alias("tok")))
+                     F.slice(tokens(), 1, 5))).alias("tok")))
     ct = (d.where(F.col("doc_id") >= 10)
-          .select("doc_id", F.explode(F.split("text", " "))
+          .select("doc_id", F.explode(tokens())
                   .alias("tok")).distinct())
     scored = (ct.join(F.broadcast(q), "tok")
               .groupBy("query_id", "doc_id")
               .agg(F.count(F.lit(1)).cast("bigint").alias("score")))
-    toks = d.select("doc_id", F.size(F.split("text", " "))
+    toks = d.select("doc_id", F.size(tokens())
                     .cast("bigint").alias("doc_tokens"))
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id"))
@@ -2203,7 +2203,7 @@ def llm_rag_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# curriculum schedule (round 6)
+# curriculum schedule
 # ---------------------------------------------------------------------------
 
 _CURRICULUM_ORACLE = """
@@ -2236,8 +2236,8 @@ def llm_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: epoch assignment is the two-pass bucketed rank
     (bucketed.py — length buckets → broadcast prefix offsets → the
     SQL-standard NTILE formula off the exact global rank), so the
-    corpus never passes through a single-partition window (the r6
-    'No Partition Defined' fix, pinned in test_plans.py); the
+    corpus never passes through a single-partition window (no
+    'No Partition Defined' window, pinned in test_plans.py); the
     within-epoch md5 order is a plain partitioned sort key — nothing
     about the schedule itself is sequential."""
     d = load_table(spark, "documents", sf_dir)
@@ -2253,7 +2253,7 @@ def llm_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# minhash Jaccard ESTIMATE vs exact (round 6)
+# minhash Jaccard ESTIMATE vs exact
 # ---------------------------------------------------------------------------
 
 _MJE_K = 16
@@ -2312,23 +2312,12 @@ def llm_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
          .where((F.col("doc_id") < 300) & (F.size(tokens()) >= 3))
          .select("doc_id", F.array_distinct(
              shingles3(tokens())).alias("sh")))
-    mh = F.transform(
-        F.sequence(F.lit(0), F.lit(_MJE_K - 1)),
-        lambda i: F.array_min(F.transform(
-            "sh", lambda s: md5_int60(
-                F.concat(i.cast("string"), F.lit("#"), s)))))
     sig = d.select("doc_id", "sh", F.size("sh").alias("n_sh"),
-                   mh.alias("mh")).localCheckpoint(eager=False)
+                   md5_minhashes("sh", _MJE_K).alias("mh")) \
+        .localCheckpoint(eager=False)
 
-    # candidates via the inverted shingle index: pairs sharing >= 1
-    # shingle, with the intersection size counted by the index itself
-    ex = sig.select("doc_id", F.explode("sh").alias("s"))
-    p, q = ex.alias("p"), ex.alias("q")
-    inter = (p.join(q, (F.col("p.s") == F.col("q.s"))
-                    & (F.col("p.doc_id") < F.col("q.doc_id")))
-             .groupBy(F.col("p.doc_id").alias("a_id"),
-                      F.col("q.doc_id").alias("b_id"))
-             .agg(F.count(F.lit(1)).alias("inter")))
+    # candidates: the pairs sharing >= 1 shingle
+    inter = _shared_shingle_pairs(sig)
     sa = sig.select(F.col("doc_id").alias("a_id"),
                     F.col("n_sh").alias("na"), F.col("mh").alias("mh_a"))
     sb = sig.select(F.col("doc_id").alias("b_id"),
@@ -2349,7 +2338,7 @@ def llm_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# readability scoring (round 6)
+# readability scoring
 # ---------------------------------------------------------------------------
 
 _READABILITY_ORACLE = """
@@ -2388,7 +2377,7 @@ def llm_readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     all) — the cheapest possible corpus pass, same class as
     llm_text_stats."""
     d = load_table(spark, "documents", sf_dir)
-    n_words = F.size(F.split("text", " ")).cast("bigint")
+    n_words = F.size(tokens()).cast("bigint")
     n_sentences = F.size(F.filter(
         F.split("text", r"\. "),
         lambda p: F.length(F.trim(p)) > 0)).cast("bigint")
@@ -2408,7 +2397,7 @@ def llm_readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# labeler agreement (Cohen's kappa) (round 6)
+# labeler agreement (Cohen's kappa)
 # ---------------------------------------------------------------------------
 
 _KAPPA_ORACLE = """
@@ -2460,7 +2449,7 @@ def llm_label_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus; output is one row."""
     d = load_table(spark, "documents", sf_dir)
     l1 = F.col("n_chars") > 400
-    l2 = F.size(F.split("text", " ")) > 60
+    l2 = F.size(tokens()) > 60
 
     def cnt(cond, name):
         return F.sum(F.when(cond, 1).otherwise(0)).cast("bigint").alias(name)
@@ -2481,7 +2470,7 @@ def llm_label_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Zipf fit of the word-frequency table (round 6)
+# Zipf fit of the word-frequency table
 # ---------------------------------------------------------------------------
 
 _ZIPF_ORACLE = """
@@ -2524,7 +2513,7 @@ def llm_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded, millions of rows at 100 TB, not the corpus), and the
     rnk ≤ 1000 head keeps the regression input constant-sized."""
     d = load_table(spark, "documents", sf_dir)
-    wc = (d.select("lang", F.explode(F.split("text", " ")).alias("tok"))
+    wc = (d.select("lang", F.explode(tokens()).alias("tok"))
           .groupBy("lang", "tok")
           .agg(F.count(F.lit(1)).cast("bigint").alias("freq")))
     w = Window.partitionBy("lang").orderBy(F.col("freq").desc(), F.col("tok"))
@@ -2540,7 +2529,7 @@ def llm_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# maximal marginal relevance re-ranking (round 6)
+# maximal marginal relevance re-ranking
 # ---------------------------------------------------------------------------
 
 _MMR_LAMBDA = 0.7
@@ -2709,7 +2698,7 @@ def llm_sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# code-likeness heuristic (round 6)
+# code-likeness heuristic
 # ---------------------------------------------------------------------------
 
 _CODE_KEYWORDS = ("scan", "hash", "sort", "merge", "query", "vector",
@@ -2754,7 +2743,7 @@ def llm_code_detect_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure scan-project, embarrassingly parallel at any corpus size."""
     d = load_table(spark, "documents", sf_dir)
     kw_arr = F.array(*[F.lit(k) for k in _CODE_KEYWORDS])
-    toks = F.split(F.col("text"), " ")
+    toks = tokens()
     hits = F.size(F.filter(toks, lambda t: F.array_contains(kw_arr, t)))
     dens = hits.cast("double") / F.size(toks).cast("double")
     return d.select(
@@ -2766,7 +2755,7 @@ def llm_code_detect_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# temperature-scaled sampling weights (round 6)
+# temperature-scaled sampling weights
 # ---------------------------------------------------------------------------
 
 _TEMP_TAU = 0.7
@@ -2836,7 +2825,7 @@ def llm_sample_temperature_weights(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# c-TF-IDF cluster topic terms (round 6)
+# c-TF-IDF cluster topic terms
 # ---------------------------------------------------------------------------
 
 _CTFIDF_TOP_K = 5
@@ -2911,7 +2900,7 @@ def llm_cluster_topic_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# token-overlap F1 eval metric (round 6)
+# token-overlap F1 eval metric
 # ---------------------------------------------------------------------------
 
 _F1_ORACLE = """
@@ -2993,7 +2982,7 @@ def llm_eval_token_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SFT loss-mask spans (round 6)
+# SFT loss-mask spans
 # ---------------------------------------------------------------------------
 
 _MASK_ORACLE = """
@@ -3069,7 +3058,7 @@ def llm_loss_mask_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# lexicon sentiment scoring (round 6)
+# lexicon sentiment scoring
 # ---------------------------------------------------------------------------
 
 _SENTIMENT_ORACLE = """
@@ -3110,7 +3099,7 @@ def llm_sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: pure map-side projection -- zero exchanges, perfect
     row-linear scaling; the lexicon lives in the closure, never joined."""
     d = load_table(spark, "documents", sf_dir)
-    toks = F.split(F.col("text"), " ")
+    toks = tokens()
     n_pos = F.size(F.filter(toks, lambda t: t.isin("fast", "small"))) \
         .cast("bigint")
     n_neg = F.size(F.filter(toks, lambda t: t.isin("slow", "big"))) \
@@ -3129,7 +3118,7 @@ def llm_sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ROUGE-2 bigram-overlap eval (round 6)
+# ROUGE-2 bigram-overlap eval
 # ---------------------------------------------------------------------------
 
 _ROUGE2_ORACLE = """
@@ -3187,8 +3176,8 @@ def llm_eval_rouge2(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-linear), two combinable count groupBys, one (doc, bigram)
     outer join, one per-doc fold -- every stage key-partitioned."""
     d = load_table(spark, "documents", sf_dir) \
-        .where(F.size(F.split(F.col("text"), " ")) >= 17)
-    base = d.select("doc_id", F.split(F.col("text"), " ").alias("l"))
+        .where(F.size(tokens()) >= 17)
+    base = d.select("doc_id", tokens().alias("l"))
 
     def bigrams(lo: int, hi: int):
         return F.explode(F.transform(
@@ -3216,7 +3205,7 @@ def llm_eval_rouge2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# feature hashing trick (round 6)
+# feature hashing trick
 # ---------------------------------------------------------------------------
 
 _FH_BUCKETS = 64
@@ -3281,7 +3270,7 @@ def llm_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# out-of-fold target encoding (round 6)
+# out-of-fold target encoding
 # ---------------------------------------------------------------------------
 
 _TE_FOLDS = 4
@@ -3330,7 +3319,7 @@ def ml_target_encode_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, "orders", sf_dir)
     fold = (F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")),
                                1, 8), 16, 10).cast("bigint") % _TE_FOLDS)
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    cents = round_cents("o_totalprice")
     cell = (o.select(F.col("o_orderpriority").alias("cat"),
                      fold.alias("fold"), cents.alias("cents"))
             .groupBy("cat", "fold")
@@ -3349,7 +3338,7 @@ def ml_target_encode_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# prompt-injection safety pattern filter (round 6)
+# prompt-injection safety pattern filter
 # ---------------------------------------------------------------------------
 
 _INJ_PATTERNS = ("ignore previous instructions",
@@ -3409,7 +3398,7 @@ def llm_safety_pattern_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# curation pipeline v2: the round-6 stages composed end-to-end (round 6)
+# curation pipeline v2: the curation stages composed end-to-end
 # ---------------------------------------------------------------------------
 
 _V2_BUDGET = 512
@@ -3484,9 +3473,9 @@ FROM placed GROUP BY difficulty_q, seq_id
 
 @register("llm_pipeline_curation_v2", oracle=_PIPE_V2_ORACLE)
 def llm_pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The round-6 curation stages composed END-TO-END — what
-    llm_pipeline_end_to_end is to the round-2 family, this is to the
-    third ring: safety screen (injection regexp drops flagged docs) →
+    """The curation stages composed END-TO-END — what
+    llm_pipeline_end_to_end is to the quality/dedup operators, this is
+    to the third ring: safety screen (injection regexp drops flagged docs) →
     quality floor (≥20 tokens) → paragraph-boilerplate gate (corpus
     dup_share ≤ 0.5, doc frequencies computed over the pipeline's own
     surviving population) → sentiment label attached → curriculum
@@ -3518,8 +3507,8 @@ def llm_pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     safe = (d.select("doc_id", "text", prompt.alias("prompt"))
             .where(F.regexp_extract("prompt", _INJ_RX, 1) == "")
             .drop("prompt"))
-    toks = F.split(F.col("text"), " ")
-    # r11: pin the post-screen population — it feeds both the paragraph
+    toks = tokens()
+    # pin the post-screen population — it feeds both the paragraph
     # inventory and the dup-share join, so the injection-regexp screen
     # over the full corpus ran 2x per query without it
     quality = (safe.select("doc_id", "text",
@@ -3550,7 +3539,7 @@ def llm_pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sequences.py seq_rfm_segments): bucketed_order reads its input in up to
     # four plan branches; without the pin each branch re-executes the
     # whole six-stage screen/floor/paragraph-gate/label pipeline
-    # (VERDICT r7 wrong #4 — the r7 2.3x bench regression)
+    # (a 2.3x benchmark regression when it was missing)
     staged = bucketed_order(
         labeled.select("doc_id", "n_tokens", "is_positive")
         .localCheckpoint(eager=False),
@@ -3569,7 +3558,7 @@ def llm_pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# sequence-packing budget sweep (round 6)
+# sequence-packing budget sweep
 # ---------------------------------------------------------------------------
 
 _SWEEP_BUDGETS = (256, 512, 1024)
@@ -3620,7 +3609,7 @@ def llm_pack_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollups combinable."""
     d = load_table(spark, "documents", sf_dir)
     toks = d.select("doc_id", "lang",
-                    F.size(F.split(F.col("text"), " ")).cast("bigint")
+                    F.size(tokens()).cast("bigint")
                     .alias("n_tokens"))
     budgets = spark.createDataFrame([(b,) for b in _SWEEP_BUDGETS],
                                     "budget long")
@@ -3645,7 +3634,7 @@ def llm_pack_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# uncertainty sampling for active learning (round 6)
+# uncertainty sampling for active learning
 # ---------------------------------------------------------------------------
 
 _UNCERTAINTY_ORACLE = """
@@ -3691,7 +3680,7 @@ def llm_uncertainty_sampling(spark: SparkSession,
     (WindowGroupLimit keeps only per-task top-10 heads); no shuffle
     carries more than candidates-per-task."""
     d = load_table(spark, "documents", sf_dir)
-    toks = F.split(F.col("text"), " ")
+    toks = tokens()
     n_pos = F.size(F.filter(toks, lambda t: t.isin("fast", "small"))) \
         .cast("bigint")
     n_neg = F.size(F.filter(toks, lambda t: t.isin("slow", "big"))) \
@@ -3710,7 +3699,7 @@ def llm_uncertainty_sampling(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# RAG groundedness eval (round 6)
+# RAG groundedness eval
 # ---------------------------------------------------------------------------
 
 _RAG_GROUND_ORACLE = f"""
@@ -3787,15 +3776,15 @@ def llm_rag_groundedness_eval(spark: SparkSession,
     q = (d.where(F.col("doc_id") < 10)
          .select(F.col("doc_id").alias("query_id"),
                  F.explode(F.array_distinct(
-                     F.slice(F.split("text", " "), 1, 5))).alias("tok")))
+                     F.slice(tokens(), 1, 5))).alias("tok")))
     ct = (d.where(F.col("doc_id") >= 10)
-          .select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+          .select("doc_id", F.explode(tokens()).alias("tok"))
           .distinct())
     scored = (ct.join(F.broadcast(q), "tok")
               .groupBy("query_id", "doc_id")
               .agg(F.count(F.lit(1)).cast("bigint").alias("score")))
     dl = d.select(F.col("doc_id").alias("d2"),
-                  F.size(F.split("text", " ")).cast("bigint")
+                  F.size(tokens()).cast("bigint")
                   .alias("doc_tokens"))
     wq = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), "doc_id")
@@ -3814,7 +3803,7 @@ def llm_rag_groundedness_eval(spark: SparkSession,
                 .select("query_id", "tok").distinct())
     ans_toks = (d.where(F.col("doc_id") < 10)
                 .select(F.col("doc_id").alias("query_id"),
-                        F.explode(F.split("text", " ")).alias("tok"))
+                        F.explode(tokens()).alias("tok"))
                 .distinct())
     cov = (ans_toks.join(ctx_toks.withColumn("hit", F.lit(1)),
                          ["query_id", "tok"], "left")
@@ -3906,7 +3895,7 @@ def llm_eval_bleu_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     two gram-keyed clipped-overlap folds, one doc-keyed join — every
     stage combinable/key-parallel, nothing global."""
     d = load_table(spark, "documents", sf_dir)
-    toks = F.split(F.col("text"), " ")
+    toks = tokens()
     base = (d.where(F.size(toks) >= 20)
             .select("doc_id", toks.alias("l"))
             .localCheckpoint(eager=False))  # four gram branches share it
@@ -4063,11 +4052,7 @@ def llm_eval_pairwise_winrate(spark: SparkSession,
     scale); pairing is a rank-successor self-join on the rank key; the
     rollup is a ≤3-row fold."""
     d = load_table(spark, "documents", sf_dir)
-    src_num = F.expr("substring(source, 4)").cast("int")
-    model = (F.when(src_num < 4, F.lit("large"))
-             .when(src_num < 10, F.lit("medium"))
-             .otherwise(F.lit("small")))
-    docs = d.select("doc_id", "n_chars", model.alias("model"),
+    docs = d.select("doc_id", "n_chars", _source_tier().alias("model"),
                     F.md5(F.concat(F.col("doc_id").cast("string"),
                                    F.lit(f":{_ARENA_SEED}")))
                     .alias("skey"))
@@ -4246,7 +4231,7 @@ def llm_vocab_growth_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
                          / (F.col("m") + 1))).cast("bigint")
     toks = (d.crossJoin(F.broadcast(mx))
             .select(sl.alias("slice"),
-                    F.explode(F.split("text", " ")).alias("tok"))
+                    F.explode(tokens()).alias("tok"))
             .localCheckpoint(eager=False))  # volume + first-seen share it
     per_slice = toks.groupBy("slice").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_tok"))
@@ -4330,7 +4315,7 @@ def llm_topic_coherence_umass(spark: SparkSession,
     doc-token table (broadcast spine, corpus-side combinable count)."""
     d = load_table(spark, "documents", sf_dir)
     dt = (d.select("doc_id", "lang",
-                   F.explode(F.split("text", " ")).alias("tok"))
+                   F.explode(tokens()).alias("tok"))
           .distinct()
           .localCheckpoint(eager=False))  # df, lang-df and co share it
     df = dt.groupBy("tok").agg(
@@ -4442,7 +4427,7 @@ def llm_self_bleu_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     matter the corpus; gram tables are per-doc bounded; overlap joins
     are gram-keyed."""
     d = load_table(spark, "documents", sf_dir)
-    toks = F.split(F.col("text"), " ")
+    toks = tokens()
     base = (d.where((F.col("doc_id") < _SBLEU_N) & (F.size(toks) >= 20))
             .select("doc_id", toks.alias("l"))
             .localCheckpoint(eager=False))
@@ -4532,18 +4517,7 @@ def llm_eval_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the reliability table (broadcast max +
     one 10-group combinable fold) plus a 10-row ordered fold."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
-    c = ev.select((F.col("event_type") == "purchase").alias("pos"),
-                  xc.alias("xc"))
-    mx = c.agg(F.max("xc").cast("bigint").alias("m"))
-    binned = (c.crossJoin(F.broadcast(mx))
-              .select(F.least(F.lit(_CAL_BINS - 1),
-                              F.floor(F.col("xc") * _CAL_BINS
-                                      / (F.col("m") + 1)))
-                      .cast("bigint").alias("bin"), "xc", "pos", "m"))
-    bins = binned.groupBy("bin").agg(
+    bins = _calibration_bins(spark, sf_dir).groupBy("bin").agg(
         F.count(F.lit(1)).cast("bigint").alias("nb"),
         F.sum("xc").cast("bigint").alias("sx"),
         F.count(F.when(F.col("pos"), 1)).cast("bigint").alias("npos"),
@@ -4742,13 +4716,8 @@ def llm_mixture_kl_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one combinable map-side token fold to 3 tiers;
     everything after runs on 3 rows."""
     d = load_table(spark, "documents", sf_dir)
-    src_num = F.expr("substring(source, 4)").cast("int")
-    tier = (F.when(src_num < 4, F.lit("large"))
-            .when(src_num < 10, F.lit("medium"))
-            .otherwise(F.lit("small")))
-    actual = (d.select(tier.alias("tier"),
-                       F.size(F.split("text", " ")).cast("bigint")
-                       .alias("n_tok"))
+    actual = (d.select(_source_tier().alias("tier"),
+                       F.size(tokens()).cast("bigint").alias("n_tok"))
               .groupBy("tier")
               .agg(F.sum("n_tok").cast("bigint").alias("tok")))
     tgt = spark.createDataFrame(list(_MIX_TARGET),
@@ -4839,7 +4808,7 @@ def llm_dedup_template_prefix(spark: SparkSession,
                    F.concat_ws(" ", opener, F.col("text")))
             .otherwise(F.col("text")))
     seeded = d.select("doc_id", "lang", text.alias("text"))
-    toks = F.split(F.col("text"), " ")
+    toks = tokens()
     pre = (seeded.where(F.size(toks) >= _PREFIX_TOKS)
            .select("doc_id", "lang",
                    F.md5(F.concat_ws(" ",
@@ -4900,12 +4869,7 @@ def llm_eval_distinct_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two gram-grain combinable count-distinct folds per
     tier; a 3-row join."""
     d = load_table(spark, "documents", sf_dir)
-    src_num = F.expr("substring(source, 4)").cast("int")
-    tier = (F.when(src_num < 4, F.lit("large"))
-            .when(src_num < 10, F.lit("medium"))
-            .otherwise(F.lit("small")))
-    toks = F.split(F.col("text"), " ")
-    base = d.select(tier.alias("tier"), toks.alias("l")) \
+    base = d.select(_source_tier().alias("tier"), tokens().alias("l")) \
         .localCheckpoint(eager=False)  # both gram grains share it
     uni = base.select("tier", F.explode("l").alias("g"))
     bi = (base.where(F.size("l") >= 2)
@@ -5023,10 +4987,10 @@ def llm_eval_chrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc structurally survives: both spans are space-joined overlapping
     token windows, so ' ' is always a shared 1-gram). Per-n totals are
     closed form (len − n + 1) carried through as grouping constants.
-    The r8 two-explode + gram-join form (4 shuffles) measured 3.35 s
+    A two-explode + gram-join form (4 shuffles) measured 3.35 s
     at sf0.1; this 2-shuffle form ~2.2 s."""
     d = load_table(spark, "documents", sf_dir)
-    base = (d.select("doc_id", F.split("text", " ").alias("l"))
+    base = (d.select("doc_id", tokens().alias("l"))
             .where(F.size("l") >= 20)
             .select("doc_id",
                     F.array_join(F.slice("l", 1, _CHRF_PRED_LEN), " ")
@@ -5121,7 +5085,7 @@ def llm_hapax_ratio_per_source(spark: SparkSession,
     table), one source-grain fold — the corpus is scanned once; no
     windows, no joins."""
     d = load_table(spark, "documents", sf_dir)
-    tg = (d.select("source", F.explode(F.split("text", " ")).alias("tok"))
+    tg = (d.select("source", F.explode(tokens()).alias("tok"))
           .groupBy("source", "tok")
           .agg(F.count(F.lit(1)).cast("bigint").alias("c")))
     return (tg.groupBy("source")
@@ -5178,7 +5142,7 @@ def llm_cross_lang_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct counts per shingle; deterministic (n_langs, n_docs,
     shingle) order.
 
-    Scale shape (r9 rewrite): the per-doc DISTINCT happens MAP-SIDE
+    Scale shape: the per-doc DISTINCT happens MAP-SIDE
     (array_distinct on the shingle array before the explode — a doc's
     repeats never reach a shuffle), so (doc, lang, g) rows are unique by
     construction and the old corpus-wide distinct shuffle disappears;
@@ -5193,7 +5157,7 @@ def llm_cross_lang_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split(...) EXPRESSION inside the transform lambda re-splits the
     # whole text per gram position (O(tokens²) per doc — this exact
     # re-evaluation was the key's original 4.5 s at sf0.1)
-    toks = d.select("doc_id", "lang", F.split("text", " ").alias("l"))
+    toks = d.select("doc_id", "lang", tokens().alias("l"))
     l = F.col("l")
     grams = F.transform(
         F.sequence(F.lit(1), F.size(l) - 2),
@@ -5272,7 +5236,7 @@ def llm_watermark_greenlist_detect(spark: SparkSession,
     d = load_table(spark, "documents", sf_dir)
     toks = d.select(
         "doc_id",
-        F.posexplode(F.split("text", " ")).alias("pos", "tok"))
+        F.posexplode(tokens()).alias("pos", "tok"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     tr = (toks.select("doc_id", F.col("tok").alias("cur"),
                       F.lag("tok").over(w).alias("prev"))
@@ -5357,7 +5321,7 @@ def llm_select_top_quality_budget(spark: SparkSession,
     from lambdatotheslaughter_spark.bucketed import bucketed_order
 
     d = load_table(spark, "documents", sf_dir)
-    toks = F.split("text", " ")
+    toks = tokens()
     q = d.select(
         "doc_id",
         F.size(toks).cast("bigint").alias("n_tok"),
@@ -5457,8 +5421,8 @@ def llm_eval_ndcg_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the final division — the llm_eval_retrieval_mrr lcm trick
     generalized to graded discounts.
 
-    Scale shape (round-8 rewrite — the per-pair HOF fold measured
-    2.2 s at sf0.1 over the 50×20k pair space): the bounded query
+    Scale shape (a per-pair HOF fold measured 2.2 s at sf0.1 over the
+    50×20k pair space): the bounded query
     block ships ONCE as a broadcast numpy matrix and the pool streams
     through a mapInPandas GEMM emitting only batch-local top-10 per
     query (the llm_hard_negative_mining recipe; a correct cut because
@@ -5481,8 +5445,7 @@ def llm_eval_ndcg_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
                  "idcg_fp bigint, ndcg_at_10 double"))
     q_ids = qp["vec_id"].to_numpy("int64")
     q_labels = qp["label"].to_numpy("int64")
-    qm = np.vstack(qp["embedding"].to_numpy()).astype("float64")
-    qm /= np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-30)
+    qm = _unit_rows(qp["embedding"])
     bc = spark.sparkContext.broadcast((q_ids, q_labels, qm))
     k = _NDCG_K
 
@@ -5493,33 +5456,15 @@ def llm_eval_ndcg_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             c_ids = pdf["vec_id"].to_numpy("int64")
             c_labels = pdf["label"].to_numpy("int64")
-            cm = np.vstack(pdf["embedding"].to_numpy()).astype("float64")
-            cm /= np.maximum(np.linalg.norm(cm, axis=1, keepdims=True),
-                             1e-30)
+            cm = _unit_rows(pdf["embedding"])
             sims = np.round(b_qm @ cm.T, 12)
-            notself = b_qids[:, None] != c_ids[None, :]
-            sm = np.where(notself, sims, -np.inf)
-            n_c = sm.shape[1]
-            if n_c > k:
-                kth = np.partition(sm, n_c - k, axis=1)[:, n_c - k]
-                mask = (sm >= kth[:, None]) & notself
-            else:
-                mask = notself
-            qi, ci = np.nonzero(mask)
+            qi, ci = _per_query_topk(
+                sims, b_qids[:, None] != c_ids[None, :], b_qids, c_ids, k)
             if not len(qi):
                 continue
-            vals = sims[qi, ci]
-            qa, cb = b_qids[qi], c_ids[ci]
-            order = np.lexsort((cb, -vals, qa))
-            qa, cb, vals = qa[order], cb[order], vals[order]
-            rel = (b_qlabels[qi[order]] == c_labels[ci[order]])
-            starts = np.r_[0, np.flatnonzero(qa[1:] != qa[:-1]) + 1]
-            rank = np.arange(len(qa)) - np.repeat(starts, np.diff(
-                np.r_[starts, len(qa)]))
-            keep = rank < k
             yield pd.DataFrame({
-                "qid": qa[keep], "pid": cb[keep], "c_r": vals[keep],
-                "rel": rel[keep].astype("int32")})
+                "qid": b_qids[qi], "pid": c_ids[ci], "c_r": sims[qi, ci],
+                "rel": (b_qlabels[qi] == c_labels[ci]).astype("int32")})
 
     cand = (e.select("vec_id", "label", "embedding")
             .mapInPandas(run, "qid bigint, pid bigint, c_r double, rel int"))

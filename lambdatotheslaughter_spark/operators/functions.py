@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lambdatotheslaughter_spark.determinism import iround
+from lambdatotheslaughter_spark.determinism import iround, round_cents
+from lambdatotheslaughter_spark.functions.text import tokens
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.tables import load_table
 
@@ -53,7 +54,7 @@ def str_split_regexp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """split / regexp_extract / regexp_replace. Patterns kept to the regex
     subset where Java and RE2-ish dialects agree (SURVEY §2.8 caveat)."""
     d = load_table(spark, "documents", sf_dir)
-    toks = F.split("text", " ")
+    toks = tokens()
     return d.select(
         "doc_id",
         F.size(toks).cast("bigint").alias("n_tokens"),
@@ -173,7 +174,7 @@ def array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     skeleton under every text-analysis operator in §2.10."""
     d = load_table(spark, "documents", sf_dir)
     return (
-        d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+        d.select("doc_id", F.explode(tokens()).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n_occurrences"),
              F.countDistinct("doc_id").alias("n_docs"))
@@ -936,7 +937,7 @@ def type_try_cast_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: pure map-side projection, zero shuffles."""
     ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     m4 = (F.col("user_id") % 4).cast("bigint")
     num_str = (F.when(m4 == 0, cents.cast("string"))
                .when(m4 == 1, F.col("event_type"))
@@ -994,7 +995,7 @@ def date_fiscal_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: map-side date arithmetic + one combinable groupBy to
     at most 4*years rows."""
     o = load_table(spark, "orders", sf_dir)
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    cents = round_cents("o_totalprice")
     fm = (F.month("o_orderdate") + 10) % 12
     fy = (F.year("o_orderdate")
           + F.when(F.month("o_orderdate") >= 2, F.lit(0))
@@ -1062,7 +1063,7 @@ def date_retail_445_calendar(spark: SparkSession,
     Scale shape: map-side date arithmetic + one combinable groupBy to
     12 x years rows."""
     o = load_table(spark, "orders", sf_dir)
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    cents = round_cents("o_totalprice")
     fy = (F.year("o_orderdate")
           + F.when(F.month("o_orderdate") >= 2, F.lit(0))
           .otherwise(F.lit(-1)))
@@ -1104,7 +1105,7 @@ def explode_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the split."""
     d = load_table(spark, "documents", sf_dir).where(F.col("doc_id") < 40)
     return (
-        d.select("doc_id", F.posexplode(F.split("text", " "))
+        d.select("doc_id", F.posexplode(tokens())
                  .alias("pos", "token"))
         .where(F.col("pos") < 8)
         .withColumn("pos", F.col("pos").cast("bigint"))

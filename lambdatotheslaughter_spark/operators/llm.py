@@ -33,6 +33,7 @@ from lambdatotheslaughter_spark.functions.text import (  # noqa: E402
     jaccard as _jaccard_spark,
     jaccard_sql as _jaccard_sql,
     md5_int60,
+    md5_minhashes,
     shingles2 as _shingles2,
     shingles3 as _shingles3,
     tokens as _tokens,
@@ -42,6 +43,13 @@ from lambdatotheslaughter_spark.functions.text import (  # noqa: E402
 # ---------------------------------------------------------------------------
 # dedup family
 # ---------------------------------------------------------------------------
+
+
+def _prefix_fingerprint() -> Column:
+    """The exact-dedup content key: md5 of the first 8 whitespace tokens
+    of the lower-cased, trimmed text."""
+    return F.md5(F.array_join(
+        F.slice(F.split(F.lower(F.trim(F.col("text"))), " "), 1, 8), " "))
 
 
 @register("llm_dedup_exact", oracle="""
@@ -62,10 +70,8 @@ def llm_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     One hash-groupBy, fully map-side combinable — the canonical exact-dedup
     shape at 100 TB."""
     d = load_table(spark, "documents", sf_dir)
-    fp = F.md5(F.array_join(
-        F.slice(F.split(F.lower(F.trim(F.col("text"))), " "), 1, 8), " "))
     return (
-        d.select("doc_id", fp.alias("fp"))
+        d.select("doc_id", _prefix_fingerprint().alias("fp"))
         .groupBy("fp")
         .agg(F.count(F.lit(1)).alias("n_copies"), F.min("doc_id").alias("keeper_doc_id"))
         .where(F.col("n_copies") > 1)
@@ -259,8 +265,8 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
       DuckDB folds, so membership can't flake. The plain inverted-index
       join measured 26.6 s at sf0.1 on this corpus (931 shingles × df up
       to 338 → 36.6M join rows through a shuffle); the GEMM does the same
-      arithmetic in-register: measured 1.3-1.6 s warm after the round-5
-      pool_prep rewrite (driver-densified broadcast pool, no distributed
+      arithmetic in-register: measured 1.3-1.6 s warm with the
+      pool_prep path (driver-densified broadcast pool, no distributed
       dictionary-encode below the fastpath threshold), identical output
       (a ~17× win). A prefix-filtered PPJoin was measured too — 68 s here,
       because with 931 shingles over 5,000 docs even rarest-first prefixes
@@ -489,6 +495,20 @@ def _cosine_spark(a: Column, b: Column) -> Column:
     return _dot_spark(a, b) / (F.sqrt(_dot_spark(a, a)) * F.sqrt(_dot_spark(b, b)))
 
 
+def _id_sorted_cosines(pdf):
+    """(ids, cosines) of a pandas batch of (vec_id, embedding) rows: the
+    ids ascending and their all-pairs cosine matrix, one float64 GEMM
+    over the id-sorted rows divided by the outer product of their
+    norms."""
+    import numpy as np
+
+    order = np.argsort(pdf["vec_id"].to_numpy())
+    ids = pdf["vec_id"].to_numpy()[order].astype("int64")
+    m = np.vstack(pdf["embedding"].to_numpy()[order]).astype(np.float64)
+    norms = np.sqrt(np.einsum("ij,ij->i", m, m))
+    return ids, (m @ m.T) / np.outer(norms, norms)
+
+
 # cosine rounded to 6 dp on BOTH sides (and the 0.4 near-dup threshold
 # applied to the ROUNDED value) — the llm_sim_knn_bruteforce discipline
 # that lets the engine side run as a vectorized GEMM while DuckDB folds
@@ -509,7 +529,7 @@ def llm_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs: label-blocked self-join, cosine >= 0.4.
     Blocking on label keeps the pair space partition-local (the same role
     LSH bands play for text); each label block computes its pair matrix
-    as ONE numpy GEMM inside applyInPandas (the r9 rewrite — the old
+    as ONE numpy GEMM inside applyInPandas (the old
     per-pair interpreted zip_with/aggregate fold measured 6.3 s at sf0.1
     for ~200k pairs; the GEMM form ~0.6 s). Values are 6-dp rounded in
     both engines (knn-family discipline). A label block that outgrows
@@ -530,11 +550,7 @@ def llm_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cosine": pd.Series([], dtype="float64")})
         if len(pdf) < 2:
             return empty
-        order = np.argsort(pdf["vec_id"].to_numpy())
-        ids = pdf["vec_id"].to_numpy()[order].astype("int64")
-        m = np.vstack(pdf["embedding"].to_numpy()[order]).astype(np.float64)
-        norms = np.sqrt(np.einsum("ij,ij->i", m, m))
-        sims = (m @ m.T) / np.outer(norms, norms)
+        ids, sims = _id_sorted_cosines(pdf)
         iu = np.triu_indices(len(ids), k=1)  # ids sorted -> a_id < b_id
         cos = np.round(sims[iu], 6)
         keep = cos >= 0.4
@@ -603,6 +619,16 @@ def _norm_block(pdf):
     return _pdf_cached(pdf, "_lts_norm", _norm_prep)
 
 
+def _unit_rows(vectors):
+    """A pandas Series of float arrays as a float64 matrix with L2-unit
+    rows; a zero row stays zero."""
+    import numpy as np
+
+    m = np.vstack(vectors.to_numpy()).astype(np.float64)
+    m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-30)
+    return m
+
+
 def _norm_prep(p):
     """The computation behind :func:`_norm_block`, exposed so fastpath
     callers can pass it as ``pool_prep`` (pool normalized once on the
@@ -634,8 +660,8 @@ def _broadcast_pair_fastpath(e: DataFrame, kernel, schema: str,
     unordered pair is emitted exactly once, by the batch that owns the
     smaller id) and "left rows are the queries, right rows the candidate
     pool" for the per-query kernel (each query is scored against the full
-    pool exactly once, by its own batch). Restores round-1's measured-
-    faster broadcast shape (0.54 s vs 0.78 s per-query kNN at sf0.1)
+    pool exactly once, by its own batch). Keeps the measured-faster
+    broadcast shape (0.54 s vs 0.78 s per-query kNN at sf0.1)
     without giving up the tiled path at scale: `_block_pair_cogroup`
     dispatches here only under `_KNN_FASTPATH_ROWS`, so the 10x scale
     probe (20k vectors) still exercises the multi-tile scaffold."""
@@ -817,9 +843,9 @@ def _brp_candidate_pairs(model, e: DataFrame, n_tables: int) -> DataFrame:
     full rows (vector + hash array, ~1.2 KB each) through the bucket
     join, runs keyDistance as a non-codegen UDF on every RAW bucket pair,
     shuffles the full structs through the distinct, then re-evaluates the
-    UDF per surviving pair (see plans/r11/llm_sim_lsh_mllib_before.txt
-    ops 16-20) — at sf0.1 that is ~6-8M struct pairs ≈ GBs through one
-    Exchange for a pair set that only needs two BIGINTs per row.
+    UDF per surviving pair — at sf0.1 that is ~6-8M struct pairs ≈ GBs
+    through one Exchange for a pair set that only needs two BIGINTs per
+    row.
 
     Dedup is FIRST-MATCH, not distinct: each side carries its full
     per-table bucket-id row (n_tables doubles), and a raw bucket match in
@@ -946,7 +972,7 @@ def llm_sim_lsh_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted against the brute-force baseline in tests/test_llm_quality.py).
     This is the 100 TB path: bucket join instead of cross join.
 
-    r11 OPTIMIZATION: the model (fit + transform — the MLlib interop
+    Optimization: the model (fit + transform — the MLlib interop
     surface and the exact same seeded projection) is kept; only
     approxSimilarityJoin's physical shape is replaced by
     :func:`_brp_candidate_pairs` (narrow candidate generation, first-match
@@ -1050,8 +1076,8 @@ def llm_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each vector is INDEXED under its nearest centroid only; each QUERY
     probes its nprobe nearest cells. Candidate volume is therefore
     n · nprobe · (n / n_cells) ≈ nprobe·n^1.5 — genuinely sub-quadratic, and the
-    cell count grows with the data (the r1 version had 10 fixed cells,
-    leaving the within-cell join O(n²/10)). Centroid matrix rides to
+    cell count grows with the data (10 fixed cells would leave the
+    within-cell join O(n²/10)). Centroid matrix rides to
     executors in the task closure (√n × dim floats — broadcast-sized by
     construction). Recall vs brute force and the pair-volume bound are
     asserted in tests/test_llm_quality.py. Rows-only: the iterative
@@ -1094,10 +1120,10 @@ def llm_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("a_id"),
         F.col("nemb").alias("emb_a"))
 
-    # r11 OPTIMIZATION (guide §4.2): the probe-index candidate scoring was
+    # the probe-index candidate scoring was
     # probes.join(index, "cell") + an interpreted zip_with/aggregate fold
     # per candidate (~n·nprobe·(n/cells) pairs × 64 dims × 2 lambda
-    # dispatches — the same interpreted-HOF cost the r9 GEMM rewrites
+    # dispatches — the same interpreted-HOF cost the GEMM kernels
     # removed from the knn family), then a global top-3 window over the
     # FULL candidate stream. Now each cell's probe block × index block is
     # ONE numpy GEMM in a cogroup kernel that also pre-cuts to the 3 best
@@ -1302,11 +1328,10 @@ def llm_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched iterator, typed feature schema out, partition-parallel.
     Swap `_fake_decode` for PIL/ffmpeg and nothing else changes.
 
-    Promoted from rows-only to VALUE-EXACT this round (VERDICT r6 #5):
-    the synthetic codec is a pure function of the payload byte length,
-    so DuckDB replays it end-to-end — the oracle now hash-pins the
-    whole mapInPandas chain (binary encode → Arrow batch → stub decode
-    → typed features), not just its row count.
+    VALUE-EXACT, not rows-only: the synthetic codec is a pure function
+    of the payload byte length, so DuckDB replays it end-to-end — the
+    oracle hash-pins the whole mapInPandas chain (binary encode → Arrow
+    batch → stub decode → typed features), not just its row count.
     """
     import pandas as pd
 
@@ -1514,6 +1539,32 @@ SELECT a_id, b_id, rn FROM (
 """
 
 
+def _per_query_topk(sims, allowed, q_ids, c_ids, k: int):
+    """Row and column indices of each query row's top-k ``allowed`` cells
+    of ``sims``, ordered by (query id, sim desc, candidate id) -- the
+    oracles' ROW_NUMBER order. Fully vectorized: a per-row value
+    threshold pre-selects candidates (ties all survive the >= cut), one
+    global lexsort groups by query and orders exactly, and a run-length
+    rank truncates to k. The per-query python loop it replaced (2,000
+    small partition+lexsort calls per batch) cost ~0.3 s a run."""
+    import numpy as np
+
+    n_c = sims.shape[1]
+    if n_c > k:
+        sm = np.where(allowed, sims, -np.inf)
+        kth = np.partition(sm, n_c - k, axis=1)[:, n_c - k]
+        allowed = (sm >= kth[:, None]) & allowed
+    qi, ci = np.nonzero(allowed)
+    qa, cb, vals = q_ids[qi], c_ids[ci], sims[qi, ci]
+    order = np.lexsort((cb, -vals, qa))
+    qi, ci, qa = qi[order], ci[order], qa[order]
+    starts = np.r_[0, np.flatnonzero(qa[1:] != qa[:-1]) + 1]
+    rank = np.arange(len(qa)) - np.repeat(starts, np.diff(
+        np.r_[starts, len(qa)]))
+    keep = rank < k
+    return qi[keep], ci[keep]
+
+
 def _tile_topk_kernel(k: int):
     """Tile kernel factory for per-query top-k: each (i, j) tile emits
     tile-local top-k candidates for its left rows AND (when i ≠ j) its
@@ -1544,34 +1595,11 @@ def _tile_topk_kernel(k: int):
         sims = np.round(ml @ mr.T, 12)
 
         def emit(q_ids, c_ids, s):
-            # tile-local top-k per query by (sim desc, id asc) — the
-            # oracle's ROW_NUMBER ordering — fully VECTORIZED: the former
-            # per-query python loop (2,000 small partition+lexsort calls
-            # per batch) dominated the fastpath at ~0.3 s/run. Value-
-            # threshold pre-select per row (ties all survive the >= cut),
-            # one global lexsort groups by query and orders exactly, and a
-            # run-length rank truncates to k — identical output, ~20×
-            # fewer python-level iterations.
-            n_c = s.shape[1]
-            not_self = q_ids[:, None] != c_ids[None, :]
-            sm = np.where(not_self, s, -np.inf)
-            if n_c > k:
-                kth = np.partition(sm, n_c - k, axis=1)[:, n_c - k]
-                mask = (sm >= kth[:, None]) & not_self
-            else:
-                mask = not_self
-            qi, ci = np.nonzero(mask)
-            vals = s[qi, ci]
-            qa, cb = q_ids[qi], c_ids[ci]
-            order = np.lexsort((cb, -vals, qa))
-            qa, cb, vals = qa[order], cb[order], vals[order]
-            starts = np.r_[0, np.flatnonzero(qa[1:] != qa[:-1]) + 1]
-            sizes = np.diff(np.r_[starts, len(qa)])
-            rank = np.arange(len(qa)) - np.repeat(starts, sizes)
-            keep = rank < k
-            cols["a_id"].extend(qa[keep])
-            cols["b_id"].extend(cb[keep])
-            cols["cosine"].extend(vals[keep])
+            qi, ci = _per_query_topk(
+                s, q_ids[:, None] != c_ids[None, :], q_ids, c_ids, k)
+            cols["a_id"].extend(q_ids[qi])
+            cols["b_id"].extend(c_ids[ci])
+            cols["cosine"].extend(s[qi, ci])
 
         emit(il, ir, sims)
         if bi != bj:
@@ -1659,7 +1687,7 @@ def llm_sim_knn_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     xd = F.transform("embedding", lambda x: x.cast("double"))
     scale = (F.greatest(F.array_max(F.transform(xd, F.abs)), F.lit(1e-30))
              / F.lit(127.0))
-    # r11: checkpoint BEFORE the quantize lambda. CollapseProject otherwise
+    # checkpoint BEFORE the quantize lambda. CollapseProject otherwise
     # inlines the whole per-row scale expression (array_max over a nested
     # transform — O(d) interpreted work) into the per-ELEMENT lambda body,
     # making quantization O(d²) per row; and the scaffold evaluates the
@@ -1737,10 +1765,8 @@ def llm_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
          + 0.3 * F.least(avg_len / 8.0, F.lit(1.0)))
     kept_q = d.where(q >= 0.5).select("doc_id", "lang", "text")
 
-    fp = F.md5(F.array_join(
-        F.slice(F.split(F.lower(F.trim(F.col("text"))), " "), 1, 8), " "))
     w_fp = Window.partitionBy("fp").orderBy("doc_id")
-    exact_kept = (kept_q.withColumn("fp", fp)
+    exact_kept = (kept_q.withColumn("fp", _prefix_fingerprint())
                   .withColumn("rn", F.row_number().over(w_fp))
                   .where(F.col("rn") == 1)
                   .select("doc_id", "lang", "text")
@@ -2187,7 +2213,7 @@ def llm_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     a fused mapInPandas scan would save one shuffle at the cost of
     leaving codegen — measured slower at test scale."""
     d = load_table(spark, "documents", sf_dir)
-    # r11: the token arrays feed both the bigram explode and the final
+    # the token arrays feed both the bigram explode and the final
     # per-doc join — pin them so the corpus tokenize pass runs once
     toks = d.select("doc_id", _tokens().alias("parts")) \
         .where(F.size("parts") >= 2) \
@@ -2472,6 +2498,33 @@ def llm_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BM25_TERMS = ("spark", "query", "fast")
 _BM25_K1, _BM25_B = 1.2, 0.75
 
+
+def _bm25_stats(d: DataFrame, terms) -> tuple[DataFrame, ...]:
+    """The BM25 corpus statistics of documents ``d`` for the query
+    ``terms``: tf (doc_id, t, tf), df (t, df), doclen (doc_id, dl) and
+    the one-row (n_docs, avg_dl)."""
+    tok = d.select("doc_id", F.explode(_tokens()).alias("t"))
+    doclen = tok.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("double").alias("dl"))
+    stats = doclen.agg(F.count(F.lit(1)).cast("double").alias("n_docs"),
+                       F.avg("dl").alias("avg_dl"))
+    tf = (tok.where(F.col("t").isin(*terms))
+          .groupBy("doc_id", "t")
+          .agg(F.count(F.lit(1)).cast("double").alias("tf")))
+    df_ = tf.groupBy("t").agg(
+        F.countDistinct("doc_id").cast("double").alias("df"))
+    return tf, df_, doclen, stats
+
+
+def _bm25_term_score() -> Column:
+    """One (doc, term) BM25 score over the joined statistics: +1-smoothed
+    idf times the k1/b-saturated term frequency."""
+    idf = F.log((F.col("n_docs") - F.col("df") + 0.5)
+                / (F.col("df") + 0.5) + 1.0)
+    denom = (F.col("tf") + _BM25_K1 * (1.0 - _BM25_B
+             + _BM25_B * F.col("dl") / F.col("avg_dl")))
+    return idf * F.col("tf") * (_BM25_K1 + 1.0) / denom
+
 _BM25_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents
@@ -2510,26 +2563,14 @@ def llm_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     is never shuffled by term — only the ≤|query| matching rows per doc
     move. A real retrieval system would precompute doclen/df once per
     corpus snapshot; the plan shape is identical."""
-    d = load_table(spark, "documents", sf_dir)
-    tok = d.select("doc_id", F.explode(_tokens()).alias("t"))
-    doclen = tok.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("double").alias("dl"))
-    stats = doclen.agg(F.count(F.lit(1)).cast("double").alias("n_docs"),
-                       F.avg("dl").alias("avg_dl"))
-    tf = (tok.where(F.col("t").isin(*_BM25_TERMS))
-          .groupBy("doc_id", "t").agg(F.count(F.lit(1)).cast("double").alias("tf")))
-    df_ = tf.groupBy("t").agg(
-        F.countDistinct("doc_id").cast("double").alias("df"))
-    idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-    denom = (F.col("tf") + _BM25_K1 * (1.0 - _BM25_B
-             + _BM25_B * F.col("dl") / F.col("avg_dl")))
-    term_score = idf * F.col("tf") * (_BM25_K1 + 1.0) / denom
+    tf, df_, doclen, stats = _bm25_stats(
+        load_table(spark, "documents", sf_dir), _BM25_TERMS)
     return (
         tf.join(F.broadcast(df_), "t")
         .join(doclen, "doc_id")
         .crossJoin(F.broadcast(stats))
         .groupBy("doc_id")
-        .agg(F.round(F.sum(term_score), 6).alias("bm25"),
+        .agg(F.round(F.sum(_bm25_term_score()), 6).alias("bm25"),
              F.count(F.lit(1)).alias("n_matched_terms"))
     )
 
@@ -2704,9 +2745,7 @@ def llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksum. One anti-join + one semi-join, both on the fingerprint key,
     corpus text never moves."""
     d = load_table(spark, "documents", sf_dir)
-    fp = F.md5(F.array_join(
-        F.slice(F.split(F.lower(F.trim(F.col("text"))), " "), 1, 8), " "))
-    keyed = d.select("doc_id", fp.alias("fp"))
+    keyed = d.select("doc_id", _prefix_fingerprint().alias("fp"))
     existing = keyed.where(F.col("doc_id") % 2 == 0).select("fp")
     incoming = keyed.where(F.col("doc_id") % 2 == 1)
     new = incoming.join(existing, "fp", "left_anti")
@@ -3099,16 +3138,15 @@ WHERE 10 * len(list_intersect(a.sh, b.sh)) >= 8 * least(len(a.sh), len(b.sh))
 """
 
 
-# Duplicate-multiplicity gate for llm_dedup_containment (VERDICT r10
-# wrong #2 / ask #2): when the corpus holds >= this many copies per
-# byte-distinct doc (total/approx-distinct fingerprint ratio), dispatch
-# to the exact-dedup-first plan instead of running the inverted index
-# over raw rows. Module-level — the closeness-gate pattern
-# (graph._CLOSENESS_DEDUP_MIN_ROWS) — so tests can force BOTH branches
-# by monkeypatching (inf => always direct, 0 => always dedup-first).
-# Both branches are VALUE-IDENTICAL by construction (pinned in
-# tests/test_edge_regressions.py), so an accidental override can never
-# corrupt an oracle run.
+# Duplicate-multiplicity gate for llm_dedup_containment: when the corpus
+# holds >= this many copies per byte-distinct doc (total/approx-distinct
+# fingerprint ratio), dispatch to the exact-dedup-first plan instead of
+# running the inverted index over raw rows. Module-level — the
+# closeness-gate pattern (graph._CLOSENESS_DEDUP_MIN_ROWS) — so tests can
+# force BOTH branches by monkeypatching (inf => always direct, 0 =>
+# always dedup-first). Both branches are VALUE-IDENTICAL by construction
+# (pinned in tests/test_edge_regressions.py), so an accidental override
+# can never corrupt an oracle run.
 _CONTAIN_DEDUP_RATIO = 1.5
 
 
@@ -3174,11 +3212,10 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     division, bit-identical across engines. The oracle recomputes pairs
     brute-force — an independent algorithm, not just the arithmetic.
 
-    Duplicate-multiplicity gate (r10 probe DNF → r11 code, VERDICT r10
-    ask #2): Σ df² is QUADRATIC in how many copies of each doc the corpus
-    holds (a 100×-duplicated corpus is ~10,000× the join volume — the r10
-    probe filled a 78 GB scratch volume and DNF'd). The mitigation the
-    r10 docstring only *described* is now dispatched in code: one cheap
+    Duplicate-multiplicity gate: Σ df² is QUADRATIC in how many copies
+    of each doc the corpus holds (a 100×-duplicated corpus is ~10,000×
+    the join volume — the ungated plan filled a 78 GB scratch volume and
+    did not finish). The mitigation is dispatched in code: one cheap
     map-side-combinable aggregate estimates the duplicate multiplicity
     (row count / approx-distinct full-text md5 — HLL merge is
     order-independent, so the plan choice is deterministic), and past
@@ -3195,15 +3232,14 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     SEARCH. Grouping keys on full-text md5 (house precedent:
     llm_dedup_exact — zero collisions at 2^-128 pair odds). Both branches
     are value-identical; the dedup-first branch is pinned against the
-    direct branch in tests/test_edge_regressions.py and probed at 100×
-    duplicates in SCALE.md."""
+    direct branch in tests/test_edge_regressions.py; at 100× duplicates
+    the gated plan measured 3.03 s."""
     d = load_table(spark, "documents", sf_dir).where(F.size(_tokens()) >= 3)
-    # gate aggregate, run EVERY invocation (VERDICT r11 ask #5: the r11
-    # (path, size, mtime)-keyed memo shaved timed work on warm bench runs
-    # keyed on the testdata files — value-neutral but gaming-adjacent, so
-    # it is gone). The gate is one map-side-combinable scan of documents
-    # (count + HLL over the full-text md5) — O(corpus) with no shuffle
-    # volume, far below this key's Σ df(s)² join body.
+    # gate aggregate, run EVERY invocation (no memo keyed on the input
+    # files: it would skip work on warm benchmark runs only). The gate is
+    # one map-side-combinable scan of documents (count + HLL over the
+    # full-text md5) — O(corpus) with no shuffle volume, far below this
+    # key's Σ df(s)² join body.
     mult = d.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.approx_count_distinct(F.md5("text")).alias("n_distinct")).first()
@@ -3477,14 +3513,13 @@ def llm_dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins run ONLY over bloom positives; new_id_sum proves the
     prefiltered path returns exactly the unfiltered answer."""
     d = load_table(spark, "documents", sf_dir)
-    fp = F.md5(F.array_join(
-        F.slice(F.split(F.lower(F.trim(F.col("text"))), " "), 1, 8), " "))
     # fingerprint the corpus ONCE: six downstream aggregate branches fan
     # out from keyed, and without this each re-scans the parquet and
     # re-hashes (METRICS.md showed a 12x input-bytes blowup). In
     # production keyed IS a stored table (the fp index), so the
     # checkpoint mirrors the real shape, not just a local fix.
-    keyed = d.select("doc_id", fp.alias("fp")).localCheckpoint(eager=True)
+    keyed = (d.select("doc_id", _prefix_fingerprint().alias("fp"))
+             .localCheckpoint(eager=True))
     existing = keyed.where(F.col("doc_id") % 2 == 0).select("fp").distinct()
     incoming = keyed.where(F.col("doc_id") % 2 == 1)
 
@@ -3806,11 +3841,9 @@ def llm_split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: zero shuffles for assignment; the leak audit is one
     fp-keyed map-side-combinable groupBy."""
     d = load_table(spark, "documents", sf_dir)
-    fp = F.md5(F.array_join(
-        F.slice(F.split(F.lower(F.trim(F.col("text"))), " "), 1, 8), " "))
     bucket = F.pmod(md5_int60(F.concat(F.lit("split:"), F.col("fp"))),
                     F.lit(1000))
-    labeled = (d.select("doc_id", "n_chars", fp.alias("fp"))
+    labeled = (d.select("doc_id", "n_chars", _prefix_fingerprint().alias("fp"))
                .withColumn("split",
                            F.when(bucket < 800, "train")
                            .when(bucket < 900, "val")
@@ -3894,7 +3927,7 @@ def llm_dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# hard-negative mining (round 5)
+# hard-negative mining
 # ---------------------------------------------------------------------------
 
 _HARDNEG_MOD = 20
@@ -3985,8 +4018,7 @@ def _hardneg_gemm_candidates(spark: SparkSession, e: DataFrame,
                  "neg_label bigint, cosine_r double"))
     q_ids = qp["query_id"].to_numpy("int64")
     q_labels = qp["query_label"].to_numpy("int64")
-    qm = np.vstack(qp["q_emb"].to_numpy()).astype("float64")
-    qm /= np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-30)
+    qm = _unit_rows(qp["q_emb"])
     bc = spark.sparkContext.broadcast((q_ids, q_labels, qm))
     k = _HARDNEG_K
 
@@ -3997,39 +4029,20 @@ def _hardneg_gemm_candidates(spark: SparkSession, e: DataFrame,
                 continue
             c_ids = pdf["vec_id"].to_numpy("int64")
             c_labels = pdf["label"].to_numpy("int64")
-            cm = np.vstack(pdf["embedding"].to_numpy()).astype("float64")
-            cm /= np.maximum(np.linalg.norm(cm, axis=1, keepdims=True),
-                             1e-30)
+            cm = _unit_rows(pdf["embedding"])
             sims = np.round(qm @ cm.T, 12)
-            diff = q_labels[:, None] != c_labels[None, :]
-            sm = np.where(diff, sims, -np.inf)
-            n_c = sm.shape[1]
-            if n_c > k:
-                kth = np.partition(sm, n_c - k, axis=1)[:, n_c - k]
-                mask = (sm >= kth[:, None]) & diff
-            else:
-                mask = diff
-            qi, ci = np.nonzero(mask)
+            # exact batch-local top-k under (val desc, neg_id asc); ties
+            # at the kth value beyond k cannot be global winners because
+            # the order is total
+            qi, ci = _per_query_topk(
+                sims, q_labels[:, None] != c_labels[None, :], q_ids, c_ids,
+                k)
             if not len(qi):
                 continue
-            vals = sims[qi, ci]
-            qa, cb = q_ids[qi], c_ids[ci]
-            # exact batch-local top-k under (val desc, neg_id asc): sort,
-            # then run-length rank within each query, cut at k (ties at
-            # the kth value beyond k cannot be global winners because the
-            # order is total)
-            order = np.lexsort((cb, -vals, qa))
-            qa, cb, vals = qa[order], cb[order], vals[order]
-            qi_o, ci_o = qi[order], ci[order]
-            starts = np.r_[0, np.flatnonzero(qa[1:] != qa[:-1]) + 1]
-            rank = np.arange(len(qa)) - np.repeat(starts, np.diff(
-                np.r_[starts, len(qa)]))
-            keep = rank < k
             yield pd.DataFrame({
-                "query_id": qa[keep], "neg_id": cb[keep],
-                "query_label": q_labels[qi_o[keep]],
-                "neg_label": c_labels[ci_o[keep]],
-                "cosine_r": vals[keep]})
+                "query_id": q_ids[qi], "neg_id": c_ids[ci],
+                "query_label": q_labels[qi], "neg_label": c_labels[ci],
+                "cosine_r": sims[qi, ci]})
 
     corpus = e.select("vec_id", "label", "embedding")
     return corpus.mapInPandas(
@@ -4038,7 +4051,7 @@ def _hardneg_gemm_candidates(spark: SparkSession, e: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# b-bit minhash sketch compression (round 5, batch 10)
+# b-bit minhash sketch compression
 # ---------------------------------------------------------------------------
 
 _BBIT_K = 48  # 1-bit minhashes packed into one BIGINT (fits below the sign)
@@ -4097,15 +4110,10 @@ def llm_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale the signatures would feed the LSH banding path exactly like
     full minhashes — the banding key is bits, not widths."""
     d = (load_table(spark, "documents", sf_dir)
-         .where((F.col("doc_id") < 300) & (F.size(F.split("text", " ")) >= 1))
+         .where((F.col("doc_id") < 300) & (F.size(_tokens()) >= 1))
          .select("doc_id",
-                 F.array_distinct(F.split("text", " ")).alias("toks")))
-    mh = F.transform(
-        F.sequence(F.lit(0), F.lit(_BBIT_K - 1)),
-        lambda i: F.array_min(F.transform(
-            "toks", lambda tk: md5_int60(
-                F.concat(i.cast("string"), F.lit("#"), tk)))))
-    d2 = d.select("doc_id", "toks", mh.alias("mh"))
+                 F.array_distinct(_tokens()).alias("toks")))
+    d2 = d.select("doc_id", "toks", md5_minhashes("toks", _BBIT_K).alias("mh"))
     bits = F.transform("mh", lambda m: m % 2)
     sig = F.aggregate(bits, F.lit(0).cast("bigint"),
                       lambda acc, x: acc * 2 + x)
@@ -4127,7 +4135,7 @@ def llm_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# product quantization (round 6)
+# product quantization
 # ---------------------------------------------------------------------------
 
 _PQ_M = 8           # subspaces (64-d -> 8 x 8-d)
@@ -4146,8 +4154,7 @@ def _pq_train_codebooks(e: DataFrame, n: int):
     mod = max(1, n // (20 * _PQ_K * _PQ_M))
     samp = (e.where(F.pmod(F.xxhash64("vec_id"), F.lit(mod)) == 0)
             .select("embedding").toPandas())
-    mat = np.vstack(samp["embedding"].to_numpy()).astype(np.float64)
-    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
+    mat = _unit_rows(samp["embedding"])
     dim = mat.shape[1]
     sub = dim // _PQ_M
     rng = np.random.default_rng(42)
@@ -4216,9 +4223,7 @@ def llm_embedding_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def encode(batches):
         for pdf in batches:
-            mat = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True),
-                              1e-30)
+            mat = _unit_rows(pdf["embedding"])
             err2 = np.zeros(len(mat))
             for m in range(_PQ_M):
                 s = mat[:, m * sub:(m + 1) * sub]
@@ -4247,7 +4252,7 @@ def llm_embedding_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# interpolated Kneser–Ney bigram LM score (round 6)
+# interpolated Kneser–Ney bigram LM score
 # ---------------------------------------------------------------------------
 
 _KN_D = 0.75
@@ -4336,7 +4341,7 @@ def llm_lm_score_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Matryoshka truncation recall eval (round 6)
+# Matryoshka truncation recall eval
 # ---------------------------------------------------------------------------
 
 _MRL_DIM = 16
@@ -4358,7 +4363,7 @@ def _cos_sql_d(a: str, b: str, d: int) -> str:
 
 
 def _mrl_oracle() -> str:
-    # cosines 6-dp rounded BEFORE ranking in both engines (r9: lets the
+    # cosines 6-dp rounded BEFORE ranking in both engines (lets the
     # engine side run the pair pass as one GEMM — float64 dots agree
     # across summation orders to ~1e-13; rounded ties break on pid
     # identically in both engines)
@@ -4402,7 +4407,7 @@ def llm_embedding_matryoshka_recall(spark: SparkSession,
     answers whether the cheap prefix is SAFE — 4× storage/compute
     savings priced in lost neighbors). Both rankings rank the
     6-dp-ROUNDED cosine with vec_id tie-breaks in both engines (the
-    knn-family discipline, r9: the old per-pair interpreted fold paid
+    knn-family discipline; the old per-pair interpreted fold paid
     ~24M interpreted lambda steps, 3.6 s at sf0.1; the broadcast-query
     GEMM form ~0.8 s); recall is one exact small-int division.
 
@@ -4412,7 +4417,7 @@ def llm_embedding_matryoshka_recall(spark: SparkSession,
     top-k windows are query-keyed. At corpus scale the pool side tiles
     (the kNN GEMM path).
 
-    EAGER-COLLECT EXCEPTION (documented, r10): the query block's
+    EAGER-COLLECT EXCEPTION: the query block's
     ``toPandas()`` runs at construction time so the GEMM closure can
     capture it — see llm_eval_retrieval_mrr's docstring for the full
     statement of the tradeoff (one bounded plan-time job; the block is
@@ -4479,11 +4484,11 @@ def llm_embedding_matryoshka_recall(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# MLlib LSH interop (round 6 — rows-only)
+# MLlib LSH interop
 # ---------------------------------------------------------------------------
 
-# The model's 6 random unit hyperplanes, FROZEN as literals (VERDICT r6
-# #5): BucketedRandomProjectionLSH's projection depends only on
+# The model's 6 random unit hyperplanes, FROZEN as literals:
+# BucketedRandomProjectionLSH's projection depends only on
 # (seed=42, dim=64, numHashTables=6) -- never on the data -- verified
 # identical across sf0.001/0.01/0.1 fits. Freezing them makes the whole
 # MLlib pipeline DuckDB-replayable: bucket ids floor(dot/2.0), candidate
@@ -4543,29 +4548,29 @@ def llm_sim_lsh_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark shop actually uses). Seeded, so the candidate pair set is
     deterministic (re-run-identical, pinned by the recall gate in
     test_llm_quality.py against the exact sub-1.2-distance pairs), and
-    — promoted from rows-only this round (VERDICT r6 #5) — VALUE-EXACT
-    oracled: the seeded projection is data-independent, so its six
-    hyperplanes are frozen as literals (_LSH_MLLIB_VECS) and DuckDB
-    replays bucket assignment, candidate generation and the distance
-    verify bit-for-bit.
+    VALUE-EXACT oracled: the seeded projection is data-independent, so
+    its six hyperplanes are frozen as literals (_LSH_MLLIB_VECS) and
+    DuckDB replays bucket assignment, candidate generation and the
+    distance verify bit-for-bit.
 
     Scale shape: fit() draws the projection once (dimension-sized, not
     corpus-sized); approxSimilarityJoin explodes per-table hash buckets
     and equi-joins on (table, hash) — the same banded-bucket shape as
     the house LSH, with distance verify after the bucket join. MEASURED
-    LIMITATION (SCALE.md): MLlib has NO hot-bucket guard, so the 10×
+    LIMITATION: MLlib has NO hot-bucket guard, so the 10×
     duplicate-corpus probe goes quadratic inside buckets (16.6× wall for
     10× data — candidate pairs grow ~100× with duplicate mass). The
     house llm_sim_lsh_approx caps degenerate buckets with chaining and
     stays linear; at 100 TB the house implementation is the path and
     this op is the interop bridge.
 
-    r11 OPTIMIZATION (same treatment as llm_sim_lsh_approx): fit +
+    Optimization (same treatment as llm_sim_lsh_approx): fit +
     transform stay MLlib — the seeded projection and JVM bucket
     assignment are untouched — but approxSimilarityJoin's physical plan
-    (full-struct bucket join + keyDistance UDF per RAW pair + full-struct
-    distinct + a second keyDistance per survivor; see
-    plans/r11/llm_sim_lsh_mllib_before.txt ops 16-20) is replaced by the
+    (a broadcast hash join of full structs on (table, hash) filtered by
+    the keyDistance UDF on every RAW pair, a full-struct Exchange +
+    HashAggregate distinct, and a second keyDistance per survivor) is
+    replaced by the
     narrow candidate join of :func:`_brp_candidate_pairs` and ONE
     sequential-fold distance per distinct pair (:func:`_brp_pairs_verified`
     — bit-identical to Vectors.sqdist and to this oracle's list_reduce
@@ -4587,7 +4592,7 @@ def llm_sim_lsh_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# retrieval MRR eval over labeled embeddings (round 6)
+# retrieval MRR eval over labeled embeddings
 # ---------------------------------------------------------------------------
 
 _MRR_NQ = 50
@@ -4596,8 +4601,8 @@ _MRR_LCM = 2520  # lcm(1..10): every reciprocal rank is exact in integers
 
 
 def _mrr_oracle() -> str:
-    # cosine 6-dp rounded BEFORE ranking in both engines (r9 GEMM
-    # rewrite — the llm_embedding_matryoshka_recall rationale)
+    # cosine 6-dp rounded BEFORE ranking in both engines (the
+    # llm_embedding_matryoshka_recall rationale)
     cos = f"round({_cos_sql_d('q.embedding', 'p.embedding', 64)}, 6)"
     return f"""
 WITH pairs AS (
@@ -4638,7 +4643,7 @@ def llm_eval_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     the no-float-fold trick.
 
     Determinism: both engines rank the 6-dp-ROUNDED cosine with pid
-    tie-breaks (the knn-family discipline, r9: the per-pair interpreted
+    tie-breaks (the knn-family discipline; the per-pair interpreted
     fold measured 2.6 s at sf0.1; the broadcast-query mapInPandas GEMM
     ~0.8 s); first-hit is a conditional MIN over integer ranks; all
     output columns are integers and booleans -- hash-exact.
@@ -4648,7 +4653,7 @@ def llm_eval_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     window is query-keyed. At corpus scale the pool side tiles (kNN
     GEMM path) and ranks merge per tile.
 
-    EAGER-COLLECT EXCEPTION (documented, r10): the query block's
+    EAGER-COLLECT EXCEPTION: the query block's
     ``toPandas()`` runs at DataFrame-CONSTRUCTION time, not action
     time — the GEMM closure must capture the block as numpy arrays
     before ``mapInPandas`` is declared, and executors cannot launch
@@ -4712,7 +4717,7 @@ def llm_eval_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# interleaved multimodal sequence packing (round 6)
+# interleaved multimodal sequence packing
 # ---------------------------------------------------------------------------
 
 _IMG_TOKENS = 576       # ViT-style patch count per image
@@ -4765,7 +4770,7 @@ def llm_multimodal_interleaved_pack(spark: SparkSession,
     d = load_table(spark, "documents", sf_dir)
     costed = d.select(
         "doc_id", "lang",
-        F.size(F.split(F.col("text"), " ")).cast("bigint")
+        F.size(_tokens()).cast("bigint")
         .alias("text_tokens"),
         F.when(F.col("doc_id") % 7 == 0, F.lit(1)).otherwise(F.lit(0))
         .alias("has_image"))

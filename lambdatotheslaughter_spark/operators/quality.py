@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from lambdatotheslaughter_spark.determinism import round_cents
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.tables import load_table
 
@@ -264,9 +265,8 @@ def dq_reconciliation_orders_lineitem(spark: SparkSession,
     o = load_table(spark, "orders", sf_dir)
     li = load_table(spark, "lineitem", sf_dir)
     lic = li.groupBy("l_orderkey").agg(
-        F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint"))
-        .cast("bigint").alias("li_cents"))
-    oc = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+        F.sum(round_cents("l_extendedprice")).cast("bigint").alias("li_cents"))
+    oc = round_cents("o_totalprice")
     j = (o.select(F.col("o_orderkey"), oc.alias("o_cents"))
          .join(lic, F.col("o_orderkey") == F.col("l_orderkey"), "left"))
     gap = F.abs(F.col("o_cents") - F.col("li_cents"))
@@ -592,7 +592,7 @@ def er_fellegi_sunter_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, "customer", sf_dir)
     n = load_table(spark, "nation", sf_dir).select(
         F.col("n_nationkey").alias("nk"), F.col("n_regionkey").alias("rk"))
-    cents = F.round(F.col("c_acctbal") * 100, 0).cast("bigint")
+    cents = round_cents("c_acctbal")
     k = (c.select("c_custkey", "c_mktsegment",
                   F.col("c_nationkey").alias("nat"), cents.alias("cents"))
          .join(F.broadcast(n), F.col("nat") == F.col("nk"))
@@ -700,8 +700,7 @@ def dq_cardinality_drift_report(spark: SparkSession,
     halves = (ev.crossJoin(F.broadcast(span))
               .select((F.unix_micros("ts") < F.col("mid")).alias("h1"),
                       "user_id", "event_type",
-                      F.round(F.col("value") * 100, 0).cast("bigint")
-                      .alias("cents")))
+                      round_cents("value").alias("cents")))
 
     def pair(col: str, tag: str) -> list:
         return [F.countDistinct(F.when(F.col("h1"), F.col(col)))
@@ -768,7 +767,7 @@ def er_sorted_neighborhood_pairs(spark: SparkSession,
     unpivot to pairs and the distance filter are map-side. The oracle
     uses the equivalent rank-band self-join."""
     c = load_table(spark, "customer", sf_dir)
-    cents = F.round(F.col("c_acctbal") * 100, 0).cast("bigint")
+    cents = round_cents("c_acctbal")
     w = Window.partitionBy("c_mktsegment").orderBy("cents", "c_custkey")
     keyed = c.select("c_custkey", "c_mktsegment", cents.alias("cents")) \
              .withColumn("rk", F.row_number().over(w))
@@ -1039,7 +1038,7 @@ def dq_distribution_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     those 10 rows -- data-size-free after the first exchange."""
     ev = load_table(spark, "events", sf_dir) \
         .where(F.col("event_type") == "purchase")
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     first = F.dayofmonth("ts") <= 15
     bucketed = (ev.select(F.least(F.lit(9), F.floor(cents / 5000))
                           .alias("bucket"), first.alias("fh"))
@@ -1148,7 +1147,7 @@ def er_blocking_quality_report(spark: SparkSession,
     intersection is a pair-keyed join; everything folds to 5 segment
     rows."""
     c = load_table(spark, "customer", sf_dir)
-    cents = F.round(F.col("c_acctbal") * 100, 0).cast("bigint")
+    cents = round_cents("c_acctbal")
     keyed = c.select("c_custkey", "c_mktsegment", cents.alias("cents"))
     # ground truth via value-banded self-join
     a = keyed.select("c_mktsegment", F.col("c_custkey").alias("ak"),

@@ -18,7 +18,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lambdatotheslaughter_spark.determinism import iround, dsum, oracle_dsum
+from lambdatotheslaughter_spark.determinism import (
+    dsum, iround, oracle_dsum, round_cents)
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.session import scoped_conf
 from lambdatotheslaughter_spark.tables import (drop_managed_table, load_table,
@@ -1969,8 +1970,7 @@ def scan_partition_spec_evolution(spark: SparkSession,
     is one combinable groupBy."""
     ev = load_table(spark, "events", sf_dir)
     base = ev.select("event_id", "ts", "event_type",
-                     F.round(F.col("value") * 100, 0).cast("bigint")
-                     .alias("cents"),
+                     round_cents("value").alias("cents"),
                      F.date_format("ts", "yyyy-MM-dd").alias("day"),
                      F.hour("ts").alias("hr"))
     old_part = base.where(F.col("day") <= "2024-01-15")

@@ -7,6 +7,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.bucketed import bucketed_order
+from lambdatotheslaughter_spark.determinism import round_cents
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.tables import load_table
 
@@ -937,7 +938,7 @@ def seq_attribution_first_last(spark: SparkSession,
     values."""
     ev = load_table(spark, "events", sf_dir).select(
         "user_id", "event_type", "ts", "event_id",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"))
+        round_cents("value").alias("cents"))
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     decorated = ev.select(
         "user_id", "event_type", "cents",
@@ -1177,7 +1178,7 @@ def seq_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     entity-grain sweep); a <=64-cell rollup."""
     ev = load_table(spark, "events", sf_dir) \
         .where(F.col("event_type") == "purchase")
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     per_user = ev.groupBy("user_id").agg(
         F.unix_micros(F.max("ts").cast("timestamp")).cast("bigint")
         .alias("last_us"),

@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.determinism import (cavg, csum, iround,
-                                                    oracle_cavg)
+                                                    oracle_cavg, round_cents)
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.session import scoped_conf
 from lambdatotheslaughter_spark.tables import load_table
@@ -1336,8 +1336,7 @@ def sql_scripting_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     text over the same semantics at corpus-independent loop cost.)"""
     with scoped_conf(spark, {"spark.sql.scripting.enabled": "true"}):
         oc = (load_table(spark, "orders", sf_dir)
-              .select(F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
-                      .alias("cents")))
+              .select(round_cents("o_totalprice").alias("cents")))
         # highest k with cents > 100·2^k  ⟺  k ≤ floor(log2(q)), q=(cents−1)÷100
         q = F.expr("(cents - 1) div 100")
         hk = (F.length(F.bin(q)) - 1).cast("bigint")
@@ -1414,7 +1413,7 @@ def sql_incremental_mv_refresh(spark: SparkSession,
     grain before the union; the merge re-aggregates calendar-bounded
     partials -- refresh cost scales with the DELTA, not the history."""
     ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     # day projects as yyyy-MM-dd (the portable projection rule)
     day = F.date_format("ts", "yyyy-MM-dd")
 

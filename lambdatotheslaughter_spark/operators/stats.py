@@ -24,10 +24,40 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.bucketed import bucketed_order
+from lambdatotheslaughter_spark.determinism import round_cents
+from lambdatotheslaughter_spark.operators.streaming_twins import (
+    sprt_daily_counts)
 from lambdatotheslaughter_spark.operators.timeseries import (
-    _ACF_ORACLE, hourly_cents, ts_acf_multi_lag)
+    _ACF_ORACLE, click_purchase_events, hourly_cents, ts_acf_multi_lag)
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.tables import load_table
+
+
+def _purchase_scores(spark: SparkSession, sf_dir: str,
+                     *extra: Column | str) -> DataFrame:
+    """(pos, xc, *extra) over the click and purchase events: the purchase
+    label and the value in whole cents, the score the click-vs-purchase
+    classifier metrics rank by."""
+    return click_purchase_events(spark, sf_dir).select(
+        (F.col("event_type") == "purchase").alias("pos"),
+        round_cents("value").alias("xc"), *extra)
+
+
+def _purchase_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(xc, t, p): the score sample folded to its value domain, with t
+    events and p purchases per distinct score."""
+    return (_purchase_scores(spark, sf_dir).groupBy("xc")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("t"),
+                 F.count(F.when(F.col("pos"), 1)).cast("bigint").alias("p")))
+
+
+def _rank_sum_auc() -> Column:
+    """AUC from the doubled positive rank sum sr2 and the class counts:
+    (sr2 - n_pos(n_pos + 1)) / (2 n_pos n_neg)."""
+    return ((F.col("sr2") - F.col("n_pos") * (F.col("n_pos") + 1))
+            .cast("double")
+            / (F.lit(2.0) * F.col("n_pos").cast("double")
+               * F.col("n_neg").cast("double")))
 
 # ---------------------------------------------------------------------------
 # Welch's unequal-variance t-test (click vs purchase event values)
@@ -87,9 +117,8 @@ def stat_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (six FILTER sums) to a single row — the cheapest possible
     two-sample test at any corpus size; no shuffle carries more than the
     six partials per partition."""
-    ev = load_table(spark, "events", sf_dir) \
-        .where(F.col("event_type").isin("click", "purchase"))
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    ev = click_purchase_events(spark, sf_dir)
+    xc = round_cents("value")
     is1 = F.col("event_type") == "click"
     is2 = F.col("event_type") == "purchase"
     s = ev.agg(
@@ -168,9 +197,8 @@ def stat_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain-sized, not corpus-sized, table; the documented 100 TB swap
     for a wide domain is the two-pass bucketed rank used by
     llm_shuffle_deterministic."""
-    ev = load_table(spark, "events", sf_dir) \
-        .where(F.col("event_type").isin("click", "purchase"))
-    v = F.round(F.col("value") * 100, 0).cast("bigint")
+    ev = click_purchase_events(spark, sf_dir)
+    v = round_cents("value")
     pts = (ev.select(v.alias("v"), "event_type")
            .groupBy("v")
            .agg(F.count(F.when(F.col("event_type") == "click", 1))
@@ -294,7 +322,7 @@ def stat_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     to ≤9 rows, share windows over the 9-row table — nothing downstream
     of the scan scales with the corpus."""
     o = load_table(spark, "orders", sf_dir)
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    cents = round_cents("o_totalprice")
     digit = F.substring(cents.cast("string"), 1, 1).cast("bigint")
     c = (o.select(digit.alias("digit"))
          .groupBy("digit").agg(F.count(F.lit(1)).cast("bigint").alias("obs")))
@@ -357,7 +385,7 @@ def stat_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition windows even if customer counts reach fact
     scale)."""
     o = load_table(spark, "orders", sf_dir)
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    cents = round_cents("o_totalprice")
     spend = (o.groupBy("o_custkey")
              .agg(F.sum(cents).cast("bigint").alias("cents")))
     ranked = bucketed_order(spend, "cents", ["o_custkey"],
@@ -497,7 +525,7 @@ def stat_bootstrap_poisson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("event_type") == "purchase")
     base = ev.select(
         "event_id",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"))
+        round_cents("value").alias("cents"))
 
     def pois_w(u):
         w = F.when(u < _POIS_T[0], 0)
@@ -609,7 +637,7 @@ def stat_ols_two_feature(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical 100 TB regression recipe (normal equations, not gradient
     descent)."""
     ev = load_table(spark, "events", sf_dir)
-    y = F.round(F.col("value") * 100, 0).cast("bigint")
+    y = round_cents("value")
     x1 = F.hour("ts").cast("bigint")
     x2 = F.dayofweek("ts").cast("bigint")
     base = ev.select(y.alias("y"), x1.alias("x1"), x2.alias("x2"))
@@ -1063,6 +1091,34 @@ FROM tot
 """
 
 
+def _oneway_sums(per: DataFrame) -> DataFrame:
+    """(k, n_tot, s1_tot, s2_tot, ssb_term) over per-group (event_type, n,
+    s1, s2) sums. The one cross-group float reduction, ssb_term = Σ s1²/n,
+    folds the groups in event_type order in both engines."""
+    term = (F.col("s1").cast("double") * F.col("s1").cast("double")
+            / F.col("n").cast("double"))
+    return per.agg(
+        F.count(F.lit(1)).cast("bigint").alias("k"),
+        F.sum("n").cast("bigint").alias("n_tot"),
+        F.sum("s1").cast("bigint").alias("s1_tot"),
+        F.sum("s2").cast("bigint").alias("s2_tot"),
+        F.aggregate(
+            F.array_sort(F.collect_list(F.struct(F.col("event_type"),
+                                                 term.alias("t")))),
+            F.lit(0.0),
+            lambda acc, x: acc + x["t"]).alias("ssb_term"))
+
+
+def _oneway_ss() -> tuple[Column, Column, Column, Column]:
+    """(k, n, SS between, SS within) as doubles over _oneway_sums's row."""
+    nd = F.col("n_tot").cast("double")
+    ssb = (F.col("ssb_term")
+           - F.col("s1_tot").cast("double") * F.col("s1_tot").cast("double")
+           / nd)
+    ssw = F.col("s2_tot").cast("double") - F.col("ssb_term")
+    return F.col("k").cast("double"), nd, ssb, ssw
+
+
 @register("stat_anova_oneway_f", oracle=_ANOVA_ORACLE)
 def stat_anova_oneway_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-way ANOVA F across all five event types — does event type
@@ -1079,29 +1135,13 @@ def stat_anova_oneway_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one combinable three-sum groupBy to k=5 rows; the
     fixed-order fold runs over those 5 rows — data-size-free."""
     ev = load_table(spark, "events", sf_dir)
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    xc = round_cents("value")
     per = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(xc).cast("bigint").alias("s1"),
         F.sum(xc * xc).cast("bigint").alias("s2"))
-    term = (F.col("s1").cast("double") * F.col("s1").cast("double")
-            / F.col("n").cast("double"))
-    tot = per.agg(
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum("n").cast("bigint").alias("n_tot"),
-        F.sum("s1").cast("bigint").alias("s1_tot"),
-        F.sum("s2").cast("bigint").alias("s2_tot"),
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct(F.col("event_type"),
-                                                 term.alias("t")))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["t"]).alias("ssb_term"))
-    kd = F.col("k").cast("double")
-    nd = F.col("n_tot").cast("double")
-    ssb = (F.col("ssb_term")
-           - F.col("s1_tot").cast("double") * F.col("s1_tot").cast("double")
-           / nd)
-    ssw = F.col("s2_tot").cast("double") - F.col("ssb_term")
+    tot = _oneway_sums(per)
+    kd, nd, ssb, ssw = _oneway_ss()
     return tot.select(
         F.col("k").alias("n_groups"), "n_tot",
         (ssb / F.lit(100.0) / F.lit(100.0)).alias("ss_between_d2"),
@@ -1237,9 +1277,8 @@ def stat_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable groupBy; the only global window runs over that
     domain-sized table (100x probe: 5.6x row-level -> 1.2x collapsed);
     everything after is one combinable fold."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    ev = click_purchase_events(spark, sf_dir)
+    xc = round_cents("value")
     # DOMAIN-COLLAPSED ranks (the stat_ks_two_sample discipline): the
     # doubled average rank of every row at value v is 2*cum_below + t_v
     # + 1, a pure function of per-value counts -- so the corpus folds
@@ -1342,9 +1381,8 @@ def stat_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE combinable conditional aggregate (six FILTER sums)
     to a single row -- no shuffle carries more than six partials."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    ev = click_purchase_events(spark, sf_dir)
+    xc = round_cents("value")
     is1 = F.col("event_type") == "click"
     s = ev.agg(
         F.count(F.when(is1, 1)).cast("bigint").alias("n1"),
@@ -1414,6 +1452,25 @@ FROM fold
 """
 
 
+def _type_bucket_margins(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, bucket, obs, row_n, col_n, n): the event_type x
+    pmod(user_id, 3) contingency table with exact BIGINT marginals, the
+    corpus folded to 15 cells by one combinable groupBy and the
+    marginals windows over those cells."""
+    cells = (load_table(spark, "events", sf_dir)
+             .groupBy("event_type",
+                      F.pmod(F.col("user_id"), F.lit(3)).cast("bigint")
+                      .alias("bucket"))
+             .agg(F.count(F.lit(1)).cast("bigint").alias("obs")))
+    row_n = F.sum("obs").over(Window.partitionBy("event_type")) \
+        .cast("bigint")
+    col_n = F.sum("obs").over(Window.partitionBy("bucket")).cast("bigint")
+    n = F.sum("obs").over(Window.partitionBy()).cast("bigint")
+    return cells.select("event_type", "bucket", "obs",
+                        row_n.alias("row_n"), col_n.alias("col_n"),
+                        n.alias("n"))
+
+
 @register("stat_cramers_v", oracle=_CRAMERS_V_ORACLE)
 def stat_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cramer's V over the same event_type x user-bucket contingency
@@ -1430,18 +1487,7 @@ def stat_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the corpus collapses to r*c = 15 cells in one
     combinable groupBy; windows and the ordered fold run over those 15
     rows -- data-size-free after the first exchange."""
-    ev = load_table(spark, "events", sf_dir)
-    cells = (ev.groupBy("event_type",
-                        F.pmod(F.col("user_id"), F.lit(3)).cast("bigint")
-                        .alias("bucket"))
-             .agg(F.count(F.lit(1)).cast("bigint").alias("obs")))
-    row_n = F.sum("obs").over(Window.partitionBy("event_type")) \
-        .cast("bigint")
-    col_n = F.sum("obs").over(Window.partitionBy("bucket")).cast("bigint")
-    n = F.sum("obs").over(Window.partitionBy()).cast("bigint")
-    m = cells.select("event_type", "bucket", "obs",
-                     row_n.alias("row_n"), col_n.alias("col_n"),
-                     n.alias("n"))
+    m = _type_bucket_margins(spark, sf_dir)
     exp = (F.col("row_n").cast("double") * F.col("col_n").cast("double")
            / F.col("n").cast("double"))
     contrib = m.select(
@@ -1534,7 +1580,7 @@ def stat_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-element ordered fold -- nothing past the first exchange is ever
     row-sized."""
     ev = load_table(spark, "events", sf_dir)
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    xc = round_cents("value")
     # DOMAIN-COLLAPSED: per-(type, value) counts replace both the
     # per-type row_number sort (median = smallest value whose running
     # count reaches ceil(n/2)) and the row-level deviation pass
@@ -1563,24 +1609,8 @@ def stat_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("cnt") * F.col("d")).cast("bigint").alias("s1"),
         F.sum(F.col("cnt") * F.col("d") * F.col("d")).cast("bigint")
         .alias("s2"))
-    term = (F.col("s1").cast("double") * F.col("s1").cast("double")
-            / F.col("n").cast("double"))
-    tot = per.agg(
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum("n").cast("bigint").alias("n_tot"),
-        F.sum("s1").cast("bigint").alias("s1_tot"),
-        F.sum("s2").cast("bigint").alias("s2_tot"),
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct(F.col("event_type"),
-                                                 term.alias("t")))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["t"]).alias("ssb_term"))
-    kd = F.col("k").cast("double")
-    nd = F.col("n_tot").cast("double")
-    ssb = (F.col("ssb_term")
-           - F.col("s1_tot").cast("double") * F.col("s1_tot").cast("double")
-           / nd)
-    ssw = F.col("s2_tot").cast("double") - F.col("ssb_term")
+    tot = _oneway_sums(per)
+    kd, nd, ssb, ssw = _oneway_ss()
     return tot.select(
         F.col("k").alias("n_groups"), "n_tot",
         ((ssb / (kd - F.lit(1.0))) / (ssw / (nd - kd))).alias("w_stat"),
@@ -1677,11 +1707,10 @@ def stat_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the x32 fan-out is map-side against a broadcast spine;
     each replicate folds to four partials in ONE combinable groupBy (the
     bootstrap shape exactly); the extreme count folds over 32 rows."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
+    ev = click_purchase_events(spark, sf_dir)
     base = ev.select(
         "event_id", "event_type",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"))
+        round_cents("value").alias("cents"))
     is1 = F.col("event_type") == "click"
     obs = base.agg(
         F.count(F.when(is1, 1)).cast("bigint").alias("n1"),
@@ -1818,7 +1847,7 @@ def stat_bh_fdr_permutation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir)
     base = ev.select(
         "event_id", "event_type",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"))
+        round_cents("value").alias("cents"))
     per = base.groupBy(F.col("event_type").alias("t")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_t"),
         F.sum("cents").cast("bigint").alias("s_t"))
@@ -1944,19 +1973,11 @@ def ml_roc_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy); the only global window is domain-sized (100x probe: 12x
     row-level -> 2.0x collapsed) -- AUC at 100 TB without materializing
     a curve OR sorting the rows."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
     # domain-collapsed rank sums (the stat_mann_whitney_u rewrite): the
     # row-level global rank window probed 12x for 100x data -- the
     # corpus folds to per-value counts first and the one global window
     # is domain-sized
-    dom = (ev.select((F.col("event_type") == "purchase").alias("pos"),
-                     xc.alias("xc"))
-           .groupBy("xc")
-           .agg(F.count(F.lit(1)).cast("bigint").alias("t"),
-                F.count(F.when(F.col("pos"), 1)).cast("bigint")
-                .alias("p")))
+    dom = _purchase_domain(spark, sf_dir)
     wcum = (Window.orderBy("xc")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     cum_below = (F.sum("t").over(wcum) - F.col("t")).cast("bigint")
@@ -1968,12 +1989,7 @@ def ml_roc_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("p").cast("bigint").alias("n_pos"),
         F.sum(F.col("t") - F.col("p")).cast("bigint").alias("n_neg"),
         F.sum("pr2").cast("bigint").alias("sr2"))
-    return s.select(
-        "n_pos", "n_neg",
-        ((F.col("sr2") - F.col("n_pos") * (F.col("n_pos") + 1))
-         .cast("double")
-         / (F.lit(2.0) * F.col("n_pos").cast("double")
-            * F.col("n_neg").cast("double"))).alias("auc"))
+    return s.select("n_pos", "n_neg", _rank_sum_auc().alias("auc"))
 
 
 # ---------------------------------------------------------------------------
@@ -2012,6 +2028,32 @@ FROM cells
 """
 
 
+def _threshold_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(pos, xc, thr): the score sample against each of the nine
+    thresholds 5000..45000 cents, a broadcast spine fanned out
+    map-side."""
+    thresholds = spark.range(1, 10).select(
+        (F.col("id") * 5000).cast("bigint").alias("thr"))
+    return _purchase_scores(spark, sf_dir).crossJoin(
+        F.broadcast(thresholds))
+
+
+def _confusion_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(thr, tp, fp, tn, fn): the confusion matrix at each threshold,
+    predicting purchase where xc >= thr, in one combinable groupBy."""
+    pred = F.col("xc") >= F.col("thr")
+    return (_threshold_pairs(spark, sf_dir)
+            .groupBy("thr")
+            .agg(F.count(F.when(F.col("pos") & pred, 1)).cast("bigint")
+                 .alias("tp"),
+                 F.count(F.when(~F.col("pos") & pred, 1)).cast("bigint")
+                 .alias("fp"),
+                 F.count(F.when(~F.col("pos") & ~pred, 1)).cast("bigint")
+                 .alias("tn"),
+                 F.count(F.when(F.col("pos") & ~pred, 1)).cast("bigint")
+                 .alias("fn")))
+
+
 @register("ml_confusion_threshold_sweep", oracle=_SWEEP_ORACLE)
 def ml_confusion_threshold_sweep(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
@@ -2027,24 +2069,7 @@ def ml_confusion_threshold_sweep(spark: SparkSession,
     Scale shape: the x9 threshold fan-out is map-side against a
     broadcast spine folding to 9 rows in ONE combinable groupBy (the
     bootstrap shape) -- at 100 TB the sweep costs one pass, not nine."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
-    c = ev.select((F.col("event_type") == "purchase").alias("pos"),
-                  xc.alias("xc"))
-    thresholds = spark.range(1, 10).select(
-        (F.col("id") * 5000).cast("bigint").alias("thr"))
-    pred = F.col("xc") >= F.col("thr")
-    cells = (c.crossJoin(F.broadcast(thresholds))
-             .groupBy("thr")
-             .agg(F.count(F.when(F.col("pos") & pred, 1)).cast("bigint")
-                  .alias("tp"),
-                  F.count(F.when(~F.col("pos") & pred, 1)).cast("bigint")
-                  .alias("fp"),
-                  F.count(F.when(~F.col("pos") & ~pred, 1)).cast("bigint")
-                  .alias("tn"),
-                  F.count(F.when(F.col("pos") & ~pred, 1)).cast("bigint")
-                  .alias("fn")))
+    cells = _confusion_cells(spark, sf_dir)
     prec = F.when(F.col("tp") + F.col("fp") == 0, F.lit(0.0)) \
         .otherwise(F.col("tp").cast("double")
                    / (F.col("tp") + F.col("fp")).cast("double"))
@@ -2113,11 +2138,10 @@ def ml_cv_auc_per_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned BY FOLD (bucketed.py — 4 folds × 256 value buckets of
     parallelism instead of 4 fold-wide window partitions); one
     combinable groupBy to 4 rows."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
+    ev = click_purchase_events(spark, sf_dir)
     fold = (F.conv(F.substring(F.md5(F.col("event_id").cast("string")),
                                1, 8), 16, 10).cast("bigint") % _CV_FOLDS)
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    xc = round_cents("value")
     # per-fold domain collapse (the ml_roc_auc_exact rewrite): fold the
     # corpus to (fold, value) counts, run the rank arithmetic over the
     # fold-partitioned domain windows
@@ -2140,10 +2164,7 @@ def ml_cv_auc_per_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("pr2").cast("bigint").alias("sr2"))
     return s.select(
         F.col("fold").cast("bigint").alias("fold"), "n_pos", "n_neg",
-        ((F.col("sr2") - F.col("n_pos") * (F.col("n_pos") + 1))
-         .cast("double")
-         / (F.lit(2.0) * F.col("n_pos").cast("double")
-            * F.col("n_neg").cast("double"))).alias("auc_fold"))
+        _rank_sum_auc().alias("auc_fold"))
 
 
 # ---------------------------------------------------------------------------
@@ -2250,11 +2271,7 @@ def ml_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     EVENT rows never pass through a single-partition window (no 'No
     Partition Defined' window, pinned in test_plans.py); cumulative
     windows then run over the 10 decile cells."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
-    c = ev.select((F.col("event_type") == "purchase").alias("pos"),
-                  xc.alias("xc"), "event_id")
+    c = _purchase_scores(spark, sf_dir, "event_id")
     ranked = bucketed_order(c, "xc", ["event_id"], descending=True,
                             ntile={"decile": 10}).select("pos", "decile")
     cells = ranked.groupBy("decile").agg(
@@ -2418,7 +2435,7 @@ def stat_diff_in_diff_2x2(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan -- the bootstrap-family shape with no spine at all."""
     ev = load_table(spark, "events", sf_dir) \
         .where(F.col("event_type") == "purchase")
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     treated = F.dayofweek("ts").isin(1, 7)
     post = F.dayofmonth("ts") > 15
     c = ev.select(cents.alias("cents"), treated.alias("t"),
@@ -2567,15 +2584,7 @@ def ml_brier_score_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the domain-collapse recipe (ml_roc_auc_exact): one
     combinable groupBy to per-value counts, one domain-sized cumulative
     window, one wide-integer fold."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
-    dom = (ev.select((F.col("event_type") == "purchase").alias("pos"),
-                     xc.alias("xc"))
-           .groupBy("xc")
-           .agg(F.count(F.lit(1)).cast("bigint").alias("t"),
-                F.count(F.when(F.col("pos"), 1)).cast("bigint")
-                .alias("p")))
+    dom = _purchase_domain(spark, sf_dir)
     wcum = (Window.orderBy("xc")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     wall = Window.partitionBy()
@@ -2655,7 +2664,7 @@ def stat_interrupted_time_series(spark: SparkSession,
     two-group regression fold."""
     ev = load_table(spark, "events", sf_dir) \
         .where(F.col("event_type") == "purchase")
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     hr = F.date_trunc("hour", "ts")
     hh = F.floor(F.unix_micros(hr.cast("timestamp")) / 3600000000) \
         .cast("bigint")
@@ -2734,14 +2743,10 @@ def ml_learning_curve_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: x3 spine join (theta on u < thresh -- broadcast
     nested-loop over 3 rows, the sweep discipline); one combinable
     (rate, value) groupBy; rate-partitioned domain windows."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
     u = F.conv(F.substring(F.md5(F.concat(
         F.col("event_id").cast("string"), F.lit(":lc"))), 1, 8),
         16, 10).cast("bigint")
-    c = ev.select((F.col("event_type") == "purchase").alias("pos"),
-                  xc.alias("xc"), u.alias("u"))
+    c = _purchase_scores(spark, sf_dir, u.alias("u"))
     rates = spark.createDataFrame(list(_LC_RATES), "pct long, thresh long")
     dom = (c.join(F.broadcast(rates), F.col("u") < F.col("thresh"))
            .groupBy("pct", "xc")
@@ -2760,10 +2765,7 @@ def ml_learning_curve_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("p") * F.col("r2")).cast("bigint").alias("sr2"))
     return s.select(
         F.col("pct").cast("bigint").alias("sample_pct"), "n_pos", "n_neg",
-        ((F.col("sr2") - F.col("n_pos") * (F.col("n_pos") + 1))
-         .cast("double")
-         / (F.lit(2.0) * F.col("n_pos").cast("double")
-            * F.col("n_neg").cast("double"))).alias("auc"))
+        _rank_sum_auc().alias("auc"))
 
 
 # ---------------------------------------------------------------------------
@@ -2804,18 +2806,7 @@ def stat_g_test_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one combinable groupBy to 15 cells; windows over
     them."""
-    ev = load_table(spark, "events", sf_dir)
-    cells = (ev.groupBy("event_type",
-                        F.pmod(F.col("user_id"), F.lit(3)).cast("bigint")
-                        .alias("bucket"))
-             .agg(F.count(F.lit(1)).cast("bigint").alias("obs")))
-    row_n = F.sum("obs").over(Window.partitionBy("event_type")) \
-        .cast("bigint")
-    col_n = F.sum("obs").over(Window.partitionBy("bucket")).cast("bigint")
-    n = F.sum("obs").over(Window.partitionBy()).cast("bigint")
-    m = cells.select("event_type", "bucket", "obs",
-                     row_n.alias("row_n"), col_n.alias("col_n"),
-                     n.alias("n"))
+    m = _type_bucket_margins(spark, sf_dir)
     exp = (F.col("row_n").cast("double") * F.col("col_n").cast("double")
            / F.col("n").cast("double"))
     return m.select(
@@ -3025,7 +3016,7 @@ def stat_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: calendar-bounded blocks; rank windows partition BY
     BLOCK (5 rows each, perfectly parallel); two combinable folds."""
     ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     hourly = (ev.groupBy(F.date_trunc("hour", "ts").alias("hr"),
                          "event_type")
               .agg(F.sum(cents).cast("bigint").alias("cents")))
@@ -3117,7 +3108,7 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one combinable (value, type) groupBy; one domain-sized
     cumulative window; two tiny folds."""
     ev = load_table(spark, "events", sf_dir)
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    xc = round_cents("value")
     dom = (ev.select("event_type", xc.alias("xc"))
            .groupBy("xc", "event_type")
            .agg(F.count(F.lit(1)).cast("bigint").alias("c")))
@@ -3210,7 +3201,7 @@ def stat_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one domain fold + domain-sized median window; one
     10-cell groupBy with a broadcast 1-row median."""
     ev = load_table(spark, "events", sf_dir)
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    xc = round_cents("value")
     c = ev.select("event_type", xc.alias("xc"))
     dom = c.groupBy("xc").agg(F.count(F.lit(1)).cast("bigint").alias("t"))
     wcum = (Window.orderBy("xc")
@@ -3404,14 +3395,7 @@ def ml_pr_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents domain); one cumulative window over the DOMAIN (bounded by
     construction, the ml_roc_auc_exact precedent); a broadcast
     one-row total; one integer fold to a single row."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
-    dom = (ev.select((F.col("event_type") == "purchase").alias("pos"),
-                     xc.alias("xc"))
-           .groupBy("xc")
-           .agg(F.count(F.lit(1)).cast("bigint").alias("t"),
-                F.count(F.when(F.col("pos"), 1)).cast("bigint").alias("p")))
+    dom = _purchase_domain(spark, sf_dir)
     wd = (Window.orderBy(F.col("xc").desc())
           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     cum = dom.select(
@@ -3442,6 +3426,18 @@ def ml_pr_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _CAL_BINS = 10
+
+
+def _calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(bin, xc, pos, m): the score sample in ten fixed-width score bins,
+    integer-exact edges (xc·10) div (m+1) against the broadcast max m."""
+    c = _purchase_scores(spark, sf_dir)
+    mx = c.agg(F.max("xc").cast("bigint").alias("m"))
+    return (c.crossJoin(F.broadcast(mx))
+            .select(F.least(F.lit(_CAL_BINS - 1),
+                            F.floor(F.col("xc") * _CAL_BINS
+                                    / (F.col("m") + 1)))
+                    .cast("bigint").alias("bin"), "xc", "pos", "m"))
 
 _CAL_ORACLE = f"""
 WITH c AS (
@@ -3484,23 +3480,12 @@ def ml_calibration_reliability(spark: SparkSession,
     Scale shape: one broadcast 1-row max; one combinable 10-group
     fold — the whole query is two map-side passes and a 10-row
     result."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
-    c = ev.select((F.col("event_type") == "purchase").alias("pos"),
-                  xc.alias("xc"))
-    mx = c.agg(F.max("xc").cast("bigint").alias("m"))
-    binned = (c.crossJoin(F.broadcast(mx))
-              .select(F.least(F.lit(_CAL_BINS - 1),
-                              F.floor(F.col("xc") * _CAL_BINS
-                                      / (F.col("m") + 1)))
-                      .cast("bigint").alias("bin"), "xc", "pos", "m"))
     mean_pred = (F.sum("xc").cast("bigint").cast("double")
                  / (F.count(F.lit(1)).cast("double")
                     * F.max("m").cast("double")))
     obs = (F.count(F.when(F.col("pos"), 1)).cast("double")
            / F.count(F.lit(1)).cast("double"))
-    return (binned.groupBy("bin")
+    return (_calibration_bins(spark, sf_dir).groupBy("bin")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
                  F.count(F.when(F.col("pos"), 1)).cast("bigint")
                  .alias("n_pos"),
@@ -3565,7 +3550,7 @@ def stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     row — the same shape as stat_ols_two_feature's normal equations."""
     ev = load_table(spark, "events", sf_dir) \
         .where(F.col("event_type") == "purchase")
-    x = F.round(F.col("value") * 100, 0).cast("bigint")
+    x = round_cents("value")
     xd = x.cast("decimal(38,0)")
     s = ev.select(x.alias("x"), xd.alias("xd")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -3789,9 +3774,8 @@ def stat_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one combinable domain collapse (bounded cents domain);
     one cumulative window over the domain (bounded by construction);
     one integer fold to a single row."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    v = F.round(F.col("value") * 100, 0).cast("bigint")
+    ev = click_purchase_events(spark, sf_dir)
+    v = round_cents("value")
     dom = (ev.select((F.col("event_type") == "click").alias("is_x"),
                      v.alias("v"))
            .groupBy("v")
@@ -3919,7 +3903,7 @@ def stat_dunn_posthoc_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative window runs over the value DOMAIN (bounded); pairwise
     z and the BH pass live on 5-type/10-pair tables."""
     ev = load_table(spark, "events", sf_dir)
-    v = F.round(F.col("value") * 100, 0).cast("bigint")
+    v = round_cents("value")
     c = ev.select("event_type", v.alias("v"))
     dom = c.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("t"))
     wb = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
@@ -4152,11 +4136,7 @@ def ml_roc_auc_delong_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one combinable domain collapse; one cumulative window
     over the bounded value DOMAIN; one four-sum wide-integer fold to a
     single row — identical shape to ml_roc_auc_exact plus two moments."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
-    dom = (ev.select((F.col("event_type") == "purchase").alias("pos"),
-                     xc.alias("xc"))
+    dom = (_purchase_scores(spark, sf_dir)
            .groupBy("xc")
            .agg(F.count(F.when(F.col("pos"), 1)).cast("bigint").alias("p"),
                 F.count(F.when(~F.col("pos"), 1)).cast("bigint")
@@ -4397,9 +4377,8 @@ def stat_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE combinable six-sum fold over the scan to a single
     row (the Welch shape)."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    x = F.round(F.col("value") * 100, 0).cast("bigint")
+    ev = click_purchase_events(spark, sf_dir)
+    x = round_cents("value")
     is1 = F.col("event_type") == "click"
     c = ev.select(is1.alias("is1"), x.alias("x"),
                   x.cast("decimal(38,0)").alias("xd"))
@@ -4477,20 +4456,15 @@ def stat_sprt_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     click+purchase), H0 p=0.18 vs H1 p=0.22 at α=β=0.05 — the
     SEQUENTIAL test that lets an experiment stop the day the evidence
     crosses a Wald boundary instead of waiting out a fixed horizon (the
-    streaming-native member of the testing family; stream_drift_
-    bucket_counts is its state shape). All four transcendentals are
-    FROZEN literals; daily LLR increments are integer-count ×
-    frozen-literal products; the cumulative sum runs over the ordered
-    calendar (deterministic sequential fold in both engines).
+    streaming-native member of the testing family; its per-day input is
+    sprt_daily_counts, the state stream_sprt_monitor keeps). All four
+    transcendentals are FROZEN literals; daily LLR increments are
+    integer-count × frozen-literal products; the cumulative sum runs over
+    the ordered calendar (deterministic sequential fold in both engines).
 
     Scale shape: one combinable daily two-count fold; the cumulative
     window runs over the calendar-bounded day series."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    daily = (ev.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
-             .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
-                  F.count(F.when(F.col("event_type") == "purchase", 1))
-                  .cast("bigint").alias("k")))
+    daily = sprt_daily_counts(load_table(spark, "events", sf_dir))
     llr = (F.col("k").cast("double") * F.lit(_SPRT_LR1)
            + (F.col("n") - F.col("k")).cast("double") * F.lit(_SPRT_LR0))
     wc = Window.orderBy("day").rowsBetween(Window.unboundedPreceding,
@@ -4556,15 +4530,7 @@ def ml_optimal_f1_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one combinable domain collapse; one cumulative window
     over the bounded DOMAIN; a 1-row TakeOrdered head."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
-    dom = (ev.select((F.col("event_type") == "purchase").alias("pos"),
-                     xc.alias("xc"))
-           .groupBy("xc")
-           .agg(F.count(F.lit(1)).cast("bigint").alias("t"),
-                F.count(F.when(F.col("pos"), 1)).cast("bigint")
-                .alias("p")))
+    dom = _purchase_domain(spark, sf_dir)
     wd = (Window.orderBy(F.col("xc").desc())
           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     np_ = dom.agg(F.sum("p").cast("bigint").alias("np"))
@@ -4643,8 +4609,7 @@ def stat_cochran_armitage_trend(spark: SparkSession,
     Scale shape: one map-side dose projection, one combinable 4-group
     fold, one 4→1-row sum — no shuffle wider than 4 rows after the
     first fold."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
+    ev = click_purchase_events(spark, sf_dir)
     c = ev.select(
         F.floor(F.hour("ts") / 6.0).cast("bigint").alias("dose"),
         (F.col("event_type") == "purchase").alias("pos"))
@@ -4736,7 +4701,7 @@ def stat_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one combinable 5-group moment fold, one 5→1-row
     integer fold; the corpus is read once."""
     ev = load_table(spark, "events", sf_dir)
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    xc = round_cents("value")
     g = (ev.select(F.col("event_type").alias("grp"), xc.alias("xc"))
          .groupBy("grp")
          .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -4832,7 +4797,7 @@ def _hourly_purchase_trend(spark: SparkSession,
     intercept off exact BIGINT sums through one identical double tree."""
     ev = (load_table(spark, "events", sf_dir)
           .where(F.col("event_type") == "purchase"))
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     h = (ev.select(
             (F.unix_timestamp(F.date_trunc("hour", F.col("ts"))) / 3600)
             .cast("bigint").alias("eh"),
@@ -4946,24 +4911,7 @@ def ml_mcc_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: map-side ×9 broadcast-spine fan-out folding to 9 rows
     in ONE combinable groupBy — one corpus pass for the whole sweep."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
-    c = ev.select((F.col("event_type") == "purchase").alias("pos"),
-                  xc.alias("xc"))
-    thresholds = spark.range(1, 10).select(
-        (F.col("id") * 5000).cast("bigint").alias("thr"))
-    pred = F.col("xc") >= F.col("thr")
-    cells = (c.crossJoin(F.broadcast(thresholds))
-             .groupBy("thr")
-             .agg(F.count(F.when(F.col("pos") & pred, 1)).cast("bigint")
-                  .alias("tp"),
-                  F.count(F.when(~F.col("pos") & pred, 1)).cast("bigint")
-                  .alias("fp"),
-                  F.count(F.when(~F.col("pos") & ~pred, 1)).cast("bigint")
-                  .alias("tn"),
-                  F.count(F.when(F.col("pos") & ~pred, 1)).cast("bigint")
-                  .alias("fn")))
+    cells = _confusion_cells(spark, sf_dir)
     tp, fp, tn, fn = (F.col(x) for x in ("tp", "fp", "tn", "fn"))
     zero = ((tp + fp == 0) | (tp + fn == 0) | (tn + fp == 0)
             | (tn + fn == 0))
@@ -5175,15 +5123,8 @@ def ml_cost_curve_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the ×9 sweep is one broadcast-spine conditional fold
     (one corpus pass); the min is a 9-row fold broadcast back."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
-    c = ev.select((F.col("event_type") == "purchase").alias("pos"),
-                  xc.alias("xc"))
-    thresholds = spark.range(1, 10).select(
-        (F.col("id") * 5000).cast("bigint").alias("thr"))
     pred = F.col("xc") >= F.col("thr")
-    cells = (c.crossJoin(F.broadcast(thresholds))
+    cells = (_threshold_pairs(spark, sf_dir)
              .groupBy("thr")
              .agg(F.count(F.when(~F.col("pos") & pred, 1)).cast("bigint")
                   .alias("fp"),
@@ -5264,7 +5205,7 @@ def stat_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one combinable 5-group moment fold; both ordered
     folds run over 5 rows — data-size-free after the first fold."""
     ev = load_table(spark, "events", sf_dir)
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    xc = round_cents("value")
     per = (ev.select(F.col("event_type").alias("t"), xc.alias("xc"))
            .groupBy("t")
            .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -5378,7 +5319,7 @@ def stat_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤8784×5 grid, two moment folds — data-size-free after the first
     fold."""
     ev = load_table(spark, "events", sf_dir)
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    xc = round_cents("value")
     obs = (ev.select(F.date_trunc("hour", F.col("ts")).alias("h"),
                      F.col("event_type").alias("t"), xc.alias("c"))
            .groupBy("h", "t")
@@ -5507,9 +5448,8 @@ def stat_meta_fixed_effect_pool(spark: SparkSession,
 
     Scale shape: one combinable 7-group six-sum fold; both ordered
     folds run over 7 rows — data-size-free after the first fold."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    ev = click_purchase_events(spark, sf_dir)
+    xc = round_cents("value")
     is1 = F.col("event_type") == "click"
     per = (ev.select(F.dayofweek("ts").cast("bigint").alias("dow"),
                      is1.alias("is1"), xc.alias("xc"))
@@ -5623,7 +5563,7 @@ def stat_capability_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE combinable four-sum fold to a single row."""
     ev = (load_table(spark, "events", sf_dir)
           .where(F.col("event_type") == "purchase"))
-    xc = F.round(F.col("value") * 100, 0).cast("bigint")
+    xc = round_cents("value")
     s = ev.select(xc.alias("xc")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("xc").cast("bigint").alias("s1"),

@@ -18,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lambdatotheslaughter_spark.determinism import DEC, dsum, oracle_dsum
+from lambdatotheslaughter_spark.determinism import (
+    DEC, dsum, oracle_dsum, round_cents)
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.streaming.harness import (checkpoint_dir, drain,
                                                           drain_to_memory)
@@ -760,7 +761,7 @@ def stream_chained_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def drift_bucket_counts(events: DataFrame) -> DataFrame:
     """The dq_distribution_drift_psi INPUT state as a streaming-friendly
     aggregate: per (value bucket, half-month flag) purchase counts."""
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     return (events.where(F.col("event_type") == "purchase")
             .select(F.least(F.lit(9), F.floor(cents / 5000))
                     .cast("bigint").alias("bucket"),
@@ -848,8 +849,7 @@ def changepoint_daily_revenue(events: DataFrame) -> DataFrame:
     this table per micro-batch."""
     return (events.where(F.col("event_type") == "purchase")
             .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
-            .agg(F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
-                 .cast("bigint").alias("cents")))
+            .agg(F.sum(round_cents("value")).cast("bigint").alias("cents")))
 
 
 _CHANGEPOINT_TWIN_ORACLE = """

@@ -8,7 +8,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lambdatotheslaughter_spark.determinism import csum, iround, oracle_csum
+from lambdatotheslaughter_spark.determinism import (
+    csum, iround, oracle_csum, round_cents)
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.tables import load_table
 
@@ -17,10 +18,16 @@ def hourly_cents(events: DataFrame) -> DataFrame:
     """Per-type hourly revenue series of ``events``: (event_type, hr,
     cents), cents the exact BIGINT sum of each event's value rounded to
     whole cents."""
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
     return (events.groupBy("event_type",
                            F.date_trunc("hour", "ts").alias("hr"))
-            .agg(F.sum(cents).cast("bigint").alias("cents")))
+            .agg(F.sum(round_cents("value")).cast("bigint").alias("cents")))
+
+
+def click_purchase_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The click and purchase events: the two-class sample that the
+    click-vs-purchase tests and scorers read."""
+    return (load_table(spark, "events", sf_dir)
+            .where(F.col("event_type").isin("click", "purchase")))
 
 
 # ---------------------------------------------------------------------------
@@ -99,7 +106,7 @@ def ts_spectral_dft_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses to ≤ 5·(24+12+168) rows before any float appears; a
     100 TB series costs exactly one extra map-side pass."""
     ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     hourly = (ev.groupBy(
         "event_type",
         F.floor(F.unix_micros(F.col("ts").cast("timestamp"))
@@ -179,7 +186,7 @@ def ts_mase_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: calendar-bounded hourly fold; two lags off ONE
     type-partitioned window pass; one combinable three-sum fold."""
     ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     hourly = (ev.groupBy(
         "event_type",
         F.floor(F.unix_micros(F.col("ts").cast("timestamp"))
@@ -262,7 +269,7 @@ def ts_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: calendar-bounded daily fold; one type-partitioned
     ROWS-frame window pass serves count and both sums."""
     ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     daily = (ev.groupBy("event_type",
                         F.date_format("ts", "yyyy-MM-dd").alias("day"))
              .agg(F.sum(cents).cast("bigint").alias("cents")))
@@ -341,7 +348,7 @@ def ts_changepoint_cusum_argmax(spark: SparkSession,
     broadcast 1-row total; argmax fuses to TakeOrderedAndProject."""
     ev = (load_table(spark, "events", sf_dir)
           .where(F.col("event_type") == "purchase"))
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     d = (ev.select(F.date_trunc("day", F.col("ts")).alias("day"),
                    cents.alias("c"))
          .groupBy("day")
@@ -459,7 +466,7 @@ def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded domain — corpus cost is the one daily collapse."""
     ev = (load_table(spark, "events", sf_dir)
           .where(F.col("event_type") == "purchase"))
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     d = (ev.select(F.date_trunc("day", F.col("ts")).alias("day"),
                    cents.alias("c"))
          .groupBy("day")
@@ -606,7 +613,7 @@ def ts_dickey_fuller_unit_root(spark: SparkSession,
     domain, one broadcast coefficient row, one residual fold."""
     ev = (load_table(spark, "events", sf_dir)
           .where(F.col("event_type") == "purchase"))
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     d = (ev.select(F.date_trunc("day", F.col("ts")).alias("day"),
                    cents.alias("c"))
          .groupBy("day")
@@ -760,9 +767,8 @@ def ts_granger_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one daily two-series fold (≤366 rows at any corpus
     size), one lag window on the bounded domain, one broadcast
     coefficient row, one residual fold."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type").isin("click", "purchase")))
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    ev = click_purchase_events(spark, sf_dir)
+    cents = round_cents("value")
     d = (ev.select(F.date_trunc("day", F.col("ts")).alias("day"),
                    F.when(F.col("event_type") == "purchase", cents)
                    .otherwise(F.lit(0)).alias("pc"),
@@ -876,7 +882,7 @@ def ts_turning_points_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-count fold to a single row."""
     ev = (load_table(spark, "events", sf_dir)
           .where(F.col("event_type") == "purchase"))
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     d = (ev.select(F.date_trunc("day", F.col("ts")).alias("day"),
                    cents.alias("c"))
          .groupBy("day")
@@ -2711,7 +2717,7 @@ def ts_sax_symbolize(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus to the calendar; the 5-row moment table broadcasts back; the
     word pack is a 4-rows-per-group fold over calendar-sized data."""
     ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     hourly = (ev.groupBy(F.col("event_type"),
                          F.date_format("ts", "yyyy-MM-dd").alias("day"),
                          F.floor(F.hour("ts") / 6).alias("blk"))
@@ -2916,7 +2922,7 @@ def ts_bitemporal_asof_revision(spark: SparkSession,
         .where(F.col("event_type") == "purchase")
     base = ev.select(
         "event_id", "ts",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        round_cents("value").alias("cents"),
         F.col("ts").alias("knowledge_ts"), F.lit(0).alias("version"))
     corrections = (base.where(F.col("event_id") % 50 == 0)
                    .select("event_id", "ts",
@@ -3001,7 +3007,7 @@ def ts_haar_energy_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a broadcast spine; coefficient and energy folds are combinable
     groupBys over calendar-sized tables."""
     ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     hh = F.floor(F.unix_micros(F.col("ts").cast("timestamp"))
                  / 3600000000).cast("bigint")
     hourly = (ev.select("event_type", hh.alias("hh"), cents.alias("c0"))
@@ -3137,7 +3143,7 @@ def ts_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: combinable (year, month) fold to ~84 rows; 12
     month-keyed lag partitions over that tiny table."""
     o = load_table(spark, "orders", sf_dir)
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    cents = round_cents("o_totalprice")
     monthly = (o.groupBy(F.year("o_orderdate").cast("bigint").alias("yr"),
                          F.month("o_orderdate").cast("bigint").alias("mo"))
                .agg(F.sum(cents).cast("bigint").alias("rev")))
@@ -3193,7 +3199,7 @@ def ts_seasonal_index_monthly(spark: SparkSession,
     Scale shape: one (year, month) fold; 12-row aggregation; the grand
     totals broadcast as scalar subqueries."""
     o = load_table(spark, "orders", sf_dir)
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    cents = round_cents("o_totalprice")
     monthly = (o.groupBy(F.year("o_orderdate").cast("bigint").alias("yr"),
                          F.month("o_orderdate").cast("bigint").alias("mo"))
                .agg(F.sum(cents).cast("bigint").alias("rev")))

@@ -17,7 +17,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lambdatotheslaughter_spark.determinism import iround
+from lambdatotheslaughter_spark.determinism import iround, round_cents
+from lambdatotheslaughter_spark.functions.text import tokens
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.streaming.harness import checkpoint_dir, drain
 from lambdatotheslaughter_spark.tables import load_table
@@ -434,7 +435,7 @@ def udf_pandas_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (load_table(spark, "documents", sf_dir)
          .where(F.col("doc_id") % 10 == 0)
          .select("doc_id",
-                 F.size(F.split("text", " ")).cast("double").alias("n_tok"),
+                 F.size(tokens()).cast("double").alias("n_tok"),
                  F.col("n_chars").cast("double").alias("n_chars")))
     return d.select(
         "doc_id", score("n_tok", "n_chars").alias("inference_score"))
@@ -734,9 +735,7 @@ def udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.udtf.register("lts_type_rollup", TypeRollup)
     ev = (load_table(spark, "events", sf_dir)
           .where(F.col("user_id") % 10 == 0)
-          .select("event_type",
-                  F.round(F.col("value") * 100, 0).cast("bigint")
-                  .alias("cents")))
+          .select("event_type", round_cents("value").alias("cents")))
     return spark.sql("""
         SELECT * FROM lts_type_rollup(
           TABLE(SELECT event_type, cents FROM {ev})

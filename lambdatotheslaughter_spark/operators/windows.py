@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.bucketed import bucketed_order
-from lambdatotheslaughter_spark.determinism import DEC, iround
+from lambdatotheslaughter_spark.determinism import DEC, iround, round_cents
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.tables import load_table
 
@@ -519,7 +519,7 @@ def win_percent_rank_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one window shuffle keyed by priority class; both
     functions share the single sort — no second exchange."""
     o = load_table(spark, "orders", sf_dir)
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    cents = round_cents("o_totalprice")
     w = Window.partitionBy("o_orderpriority").orderBy("cents")
     return (o.select("o_orderkey", "o_orderpriority", cents.alias("cents"))
             .select("o_orderkey", "o_orderpriority", "cents",
@@ -563,7 +563,7 @@ def win_cumsum_reset_on_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: both windows share the one (user, time) sort exchange
     (same partition key, same order); everything else is map-side."""
     ev = load_table(spark, "events", sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = round_cents("value")
     w1 = Window.partitionBy("user_id").orderBy("ts", "event_id") \
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     seq = ev.select(
@@ -785,7 +785,7 @@ def win_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange."""
     ev = (load_table(spark, "events", sf_dir)
           .where(F.col("event_type").isin("purchase", "error")))
-    cents = (F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = (round_cents("value")
              * F.when(F.col("event_type") == "error", F.lit(-1))
              .otherwise(F.lit(1)))
     series = (ev.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
@@ -849,7 +849,7 @@ def win_peer_group_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one combinable segment fold; broadcast join back;
     pure map-side z."""
     c = load_table(spark, "customer", sf_dir)
-    cents = F.round(F.col("c_acctbal") * 100, 0).cast("bigint")
+    cents = round_cents("c_acctbal")
     base = c.select("c_custkey", "c_mktsegment", cents.alias("cents"))
     seg = base.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -896,7 +896,7 @@ def win_ytd_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: (year, month) fold to ~84 rows; year-keyed running
     windows over that tiny grid."""
     o = load_table(spark, "orders", sf_dir)
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    cents = round_cents("o_totalprice")
     monthly = (o.groupBy(F.year("o_orderdate").cast("bigint").alias("yr"),
                          F.month("o_orderdate").cast("bigint").alias("mo"))
                .agg(F.sum(cents).cast("bigint").alias("rev")))
@@ -962,7 +962,7 @@ def win_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, "customer", sf_dir)
     o = load_table(spark, "orders", sf_dir) \
         .select("o_custkey", "o_orderkey")
-    bal = F.round(F.col("c_acctbal") * 100, 0).cast("bigint")
+    bal = round_cents("c_acctbal")
     pts = (c.join(o, c.c_custkey == o.o_custkey, "left")
            .groupBy("c_custkey", bal.alias("bal_cents"))
            .agg(F.count("o_orderkey").cast("bigint").alias("n_orders")))

@@ -55,6 +55,27 @@ def test_dsum_cast_matches_duckdb_semantics(spark, duck):
     assert s == d, (s, d)
 
 
+def test_round_cents_matches_duckdb_cast(spark, duck):
+    """The money rule must give the BIGINT the oracles spell as
+    CAST(round(x * 100, 0) AS BIGINT): half-cent ties of both signs,
+    doubles that sit just off a tie (1.005, -2.675) and large
+    magnitudes."""
+    from lambdatotheslaughter_spark.determinism import round_cents
+
+    vals = [0.125, -0.125, 0.005, -0.005, 1.005, -2.675, 0.0, -0.0,
+            2.0 ** 40 + 0.125, -(2.0 ** 40 + 0.125), 1e13 + 0.005,
+            -1e13 - 0.005, 4.5e13 + 0.125, 1e16, -1e16]
+    vals += [k / 200 for k in range(-4001, 4002, 2)]  # ties in ±20
+    vals += [k / 1000 for k in range(-2000, 2001, 7)]
+    sdf = spark.createDataFrame([(v,) for v in vals], "x double")
+    s = sorted((r["x"], r["c"]) for r in sdf.select(
+        "x", round_cents("x").alias("c")).collect())
+    d = sorted(duck.execute(
+        "SELECT x, CAST(round(x * 100, 0) AS BIGINT) "
+        "FROM (SELECT unnest(?) AS x)", [vals]).fetchall())
+    assert s == d, [(a, b) for a, b in zip(s, d) if a != b][:10]
+
+
 def test_csum_family_semantics_vs_plain_double_sums(spark):
     """Symmetric oracles can't catch a scale-factor bug present on BOTH
     sides (it happened: /1e6 instead of /1e4 hash-matched fine). Guard the

@@ -856,13 +856,12 @@ def test_dtw_pairs_symmetric_and_zero_on_self(spark):
     """DTW(x, x) must be 0 and the banded cost must not depend on
     argument order (|Δ| cost is symmetric) — checked on the real sf0.001
     series."""
-    from lambdatotheslaughter_spark.operators.timeseries import dtw_banded_cost
+    from lambdatotheslaughter_spark.operators.timeseries import (
+        dtw_banded_cost, hourly_cents)
     from lambdatotheslaughter_spark.tables import load_table
     from pyspark.sql import functions as F
     ev = load_table(spark, "events", "/root/testdata/sf0.001")
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    hourly = (ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.sum(cents).cast("bigint").alias("cents")))
+    hourly = hourly_cents(ev)
     series = {r["event_type"]: [int(x) for x in r["s"]]
               for r in (hourly.groupBy("event_type")
                         .agg(F.array_sort(F.collect_list(
