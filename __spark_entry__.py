@@ -2,8 +2,8 @@
 
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+matching ``oracle_sql()[name]`` via DuckDB (row count + column names +
+order-insensitive exact values).
 
 Implementation lives in ``lambdatotheslaughter_spark``; every operator from
 SURVEY.md §2 self-registers in ``lambdatotheslaughter_spark.registry``.

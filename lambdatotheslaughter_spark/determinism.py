@@ -168,8 +168,8 @@ def estimate_rows(sf_dir: str, table: str, bytes_per_row: int = 8) -> int:
     return size // bytes_per_row
 
 
-# Fallback row gate when executor memory is unreadable (ADVICE r10 #1:
-# the old 64M-row gate only guarded the engine's hard 8 GiB / 512M-row
+# Fallback row gate when executor memory is unreadable (a fixed
+# 64M-row gate only guarded the engine's hard 8 GiB / 512M-row
 # BroadcastExchange ceiling — a ~1 GiB-on-the-wire broadcast inflates
 # several-fold as a deserialized hash relation PER EXECUTOR, so a
 # modest-heap executor can OOM well below the hard ceiling). 16M rows of
@@ -196,7 +196,7 @@ def _parse_jvm_mem(text: str) -> int:
 
 def bcast_row_budget(spark) -> int:
     """Derive the broadcast row gate from the CONFIGURED executor heap
-    (ADVICE r10 #1) instead of only the engine's hard ceiling: allow at
+    instead of only the engine's hard ceiling: allow at
     most _BCAST_HEAP_SHARE of the heap for one deserialized hash
     relation at _BCAST_INFLATION× wire inflation. In local mode the
     executor lives in the driver JVM, so spark.driver.memory is the
@@ -224,8 +224,8 @@ def broadcast_if_bounded(df, sf_dir: str, table: str = "part",
     the hint itself is lifted at scale. V for the co-purchase kernels is
     bounded by the part dimension; estimate_rows overestimates ≥2×, so
     the gate can only lift the hint early, never broadcast too big.
-    The default gate is memory-derived per session (bcast_row_budget —
-    ADVICE r10 #1), not a fixed constant: hinting or lifting changes
+    The default gate is memory-derived per session (bcast_row_budget),
+    not a fixed constant: hinting or lifting changes
     only the physical join strategy, never values."""
     from pyspark.sql import functions as F
 

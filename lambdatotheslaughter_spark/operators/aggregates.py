@@ -297,7 +297,7 @@ def agg_distinct_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     second stage touches only one tiny sketch blob per day — re-counting
     distincts over raw history never happens again.
 
-    Value-exact oracle (promoted from rows-only, VERDICT r5 #5): the raw
+    Value-exact oracle (promoted from rows-only): the raw
     HLL estimate can never hash-match a non-HLL engine, so the output
     carries the DETERMINISTIC facts instead — exact event/day/user
     counts plus `estimate_within_5pct`, the 5%-tolerance gate folded
@@ -658,7 +658,7 @@ def agg_weighted_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# built-in linear-regression aggregates (round 5, batch 17)
+# built-in linear-regression aggregates
 # ---------------------------------------------------------------------------
 
 _REGR_SQL = """
@@ -689,7 +689,7 @@ def agg_regr_builtins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# theta sketch set algebra (round 6)
+# theta sketch set algebra
 # ---------------------------------------------------------------------------
 
 _THETA_ORACLE = """
@@ -759,7 +759,7 @@ def agg_theta_sketch_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# bitmap exact-distinct rollup (round 6)
+# bitmap exact-distinct rollup
 # ---------------------------------------------------------------------------
 
 _BITMAP_ORACLE = """
@@ -824,7 +824,7 @@ def agg_bitmap_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# CMS width audit: estimate vs exact across sketch sizes (round 6)
+# CMS width audit: estimate vs exact across sketch sizes
 # ---------------------------------------------------------------------------
 
 _CMSA_DEPTH = 4
@@ -882,7 +882,7 @@ def agg_cms_width_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, not the event stream: a CMS cell count is Σ over users
     hashing into it of that user's count, so pre-aggregation is
     value-identical while cutting the hashed row volume from 8x|events|
-    to 8x|users| (round 10; the md5 is also computed once per
+    to 8x|users| (the md5 is also computed once per
     (seed, user) and only the cheap modulus fans across widths). The
     sketch table stays width-bounded; probes are a broadcast join
     against the bounded key set."""
@@ -1586,7 +1586,7 @@ def agg_percentile_disc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# conditional / boolean / any_value aggregate surface (round 5)
+# conditional / boolean / any_value aggregate surface
 # ---------------------------------------------------------------------------
 
 _COUNT_IF_ORACLE = """
@@ -1625,7 +1625,7 @@ def agg_count_if_any_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Gini impurity of categorical distributions (round 5)
+# Gini impurity of categorical distributions
 # ---------------------------------------------------------------------------
 
 _GINI_ORACLE = """
@@ -1666,7 +1666,7 @@ def agg_gini_impurity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# aggregate FILTER clause (round 5, batch 13)
+# aggregate FILTER clause
 # ---------------------------------------------------------------------------
 
 _AGG_FILTER_SQL = """
@@ -1696,7 +1696,7 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# exact weighted median (round 6)
+# exact weighted median
 # ---------------------------------------------------------------------------
 
 _WMEDIAN_ORACLE = """
@@ -1783,7 +1783,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# revenue concentration: HHI + CR-k (round 6)
+# revenue concentration: HHI + CR-k
 # ---------------------------------------------------------------------------
 
 _HHI_ORACLE = """
@@ -1824,7 +1824,7 @@ def agg_concentration_hhi_crk(spark: SparkSession,
     Scale shape: customer-grain groupBy (40x smaller than orders), one
     combinable moment fold; CR-10's numerator is a TakeOrdered top-10
     head (sort-limit fuses to per-partition heaps + a 10-row merge —
-    the r7 swap that retires the full global rank window entirely),
+    the swap that retires the full global rank window entirely),
     broadcast back beside the one-row moment fold."""
     o = load_table(spark, "orders", sf_dir)
     cents = round_cents("o_totalprice")
@@ -1848,7 +1848,7 @@ def agg_concentration_hhi_crk(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# hierarchical ratio-to-parent rollup (round 6)
+# hierarchical ratio-to-parent rollup
 # ---------------------------------------------------------------------------
 
 _HIER_ORACLE = """
@@ -1918,7 +1918,7 @@ def agg_hierarchy_share_rollup(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# Pareto cutoff point (round 6)
+# Pareto cutoff point
 # ---------------------------------------------------------------------------
 
 _PARETO_ORACLE = """
@@ -1959,7 +1959,7 @@ def agg_pareto_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: customer-grain fold, then the two-pass bucketed
     rank+cumsum (bucketed.py — revenue buckets, broadcast prefix
     offsets; no single-partition window even at fact-scale customer
-    counts, the r7 entity-grain sweep); totals broadcast back as one
+    counts); totals broadcast back as one
     row; one fold to a single row."""
     o = load_table(spark, "orders", sf_dir)
     cents = round_cents("o_totalprice")
@@ -1980,7 +1980,7 @@ def agg_pareto_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# new-vs-returning revenue split (round 6)
+# new-vs-returning revenue split
 # ---------------------------------------------------------------------------
 
 _NVR_ORACLE = """
@@ -2043,7 +2043,7 @@ def agg_new_vs_returning_daily(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# cohort LTV curve (round 6)
+# cohort LTV curve
 # ---------------------------------------------------------------------------
 
 _LTV_ORACLE = """
@@ -2120,7 +2120,7 @@ def agg_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ABC inventory classification (round 6)
+# ABC inventory classification
 # ---------------------------------------------------------------------------
 
 _ABC_ORACLE = """
@@ -2166,8 +2166,7 @@ def agg_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: part-grain fold (30x smaller than lineitem), then the
     two-pass bucketed cumsum over the part table (bucketed.py — no
-    single-partition window at any part count, the r7 entity-grain
-    sweep), 3-row rollup."""
+    single-partition window at any part count), 3-row rollup."""
     li = load_table(spark, "lineitem", sf_dir)
     cents = round_cents("l_extendedprice")
     part_rev = li.groupBy("l_partkey").agg(
@@ -2189,7 +2188,7 @@ def agg_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# repeat-purchase rate by segment (round 6)
+# repeat-purchase rate by segment
 # ---------------------------------------------------------------------------
 
 _REPEAT_ORACLE = """

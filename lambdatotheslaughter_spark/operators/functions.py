@@ -623,7 +623,7 @@ def math_try_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# cryptographic hash / base64 function surface (round 5)
+# cryptographic hash / base64 function surface
 # ---------------------------------------------------------------------------
 
 _HASH_FN_ORACLE = """
@@ -660,7 +660,7 @@ def str_hash_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# business-day calendar arithmetic (round 5)
+# business-day calendar arithmetic
 # ---------------------------------------------------------------------------
 
 _BIZDAYS_ORACLE = """
@@ -713,7 +713,7 @@ def date_business_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ISO-8601 calendar semantics (round 5, batch 9)
+# ISO-8601 calendar semantics
 # ---------------------------------------------------------------------------
 
 _ISO_CAL_ORACLE = """
@@ -759,7 +759,7 @@ def date_iso_week_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# banker's rounding on exact ties (round 6)
+# banker's rounding on exact ties
 # ---------------------------------------------------------------------------
 
 _BROUND_ORACLE = """
@@ -802,7 +802,7 @@ def math_bround_even(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# map construction / combination surface (round 6)
+# map construction / combination surface
 # ---------------------------------------------------------------------------
 
 _MAP_PACK_ORACLE = """
@@ -852,7 +852,7 @@ def type_map_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# timezone conversion (round 6)
+# timezone conversion
 # ---------------------------------------------------------------------------
 
 _TZ_ORACLE = """
@@ -892,7 +892,7 @@ def date_tz_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TRY_CAST error-tolerant conversion surface (round 6)
+# TRY_CAST error-tolerant conversion surface
 # ---------------------------------------------------------------------------
 
 _TRY_CAST_ORACLE = """
@@ -960,7 +960,7 @@ def type_try_cast_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# fiscal-calendar rollup (round 6)
+# fiscal-calendar rollup
 # ---------------------------------------------------------------------------
 
 _FISCAL_ORACLE = """
@@ -1010,7 +1010,7 @@ def date_fiscal_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# retail 4-4-5 calendar rollup (round 6)
+# retail 4-4-5 calendar rollup
 # ---------------------------------------------------------------------------
 
 _R445_ORACLE = """
@@ -1137,7 +1137,7 @@ def str_regexp_extract_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# outer generators: empty arrays must keep their row (round 6)
+# outer generators: empty arrays must keep their row
 # ---------------------------------------------------------------------------
 
 _EXPLODE_OUTER_ORACLE = r"""

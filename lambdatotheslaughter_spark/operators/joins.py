@@ -584,7 +584,7 @@ def join_fuzzy_levenshtein_blocked(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# existence-flag ("mark") join (round 6)
+# existence-flag ("mark") join
 # ---------------------------------------------------------------------------
 
 _MARK_ORACLE = """
@@ -627,7 +627,7 @@ def join_mark_exists_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# spatial bin-and-verify neighbor self-join (round 6)
+# spatial bin-and-verify neighbor self-join
 # ---------------------------------------------------------------------------
 
 _GEO_GRID = 1_000_000   # coordinate domain per axis

@@ -3515,7 +3515,7 @@ def llm_dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, "documents", sf_dir)
     # fingerprint the corpus ONCE: six downstream aggregate branches fan
     # out from keyed, and without this each re-scans the parquet and
-    # re-hashes (METRICS.md showed a 12x input-bytes blowup). In
+    # re-hashes (a 12x blowup in parquet bytes read). In
     # production keyed IS a stored table (the fp index), so the
     # checkpoint mirrors the real shape, not just a local fix.
     keyed = (d.select("doc_id", _prefix_fingerprint().alias("fp"))

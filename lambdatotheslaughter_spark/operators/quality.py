@@ -179,7 +179,7 @@ FROM documents
 @register("dq_pk_uniqueness", oracle=_PK_ORACLE)
 def dq_pk_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Primary-key uniqueness audit across five tables in one report —
-    the third leg of the round-7 DQ set (referential integrity =
+    the third leg of the DQ set (referential integrity =
     cross-table, freshness = temporal, this = key-grain): row count,
     distinct key count and duplicate-row count per declared key,
     including one COMPOSITE key (lineitem's order+line, packed into one
@@ -687,7 +687,7 @@ def dq_cardinality_drift_report(spark: SparkSession,
     key space itself). All counts exact; the half split is one
     broadcast 1-row min/max.
 
-    Scale shape (VERDICT r7 wrong #3 rewrite): exactly TWO scans of
+    Scale shape: exactly TWO scans of
     the fact table — one cheap partial-agg min/max for the broadcast
     span row, then ALL six conditional count-distincts in a single
     agg over one scan (Spark's multi-distinct Expand), unpivoted with
@@ -723,7 +723,7 @@ def dq_cardinality_drift_report(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# sorted-neighborhood blocking for entity resolution (round 6)
+# sorted-neighborhood blocking for entity resolution
 # ---------------------------------------------------------------------------
 
 _SNM_W = 3
@@ -791,7 +791,7 @@ def er_sorted_neighborhood_pairs(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# data-quality expectations report (round 6)
+# data-quality expectations report
 # ---------------------------------------------------------------------------
 
 _DQ_ORACLE = """
@@ -888,7 +888,7 @@ def dq_expectations_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# column-entropy data profile (round 6)
+# column-entropy data profile
 # ---------------------------------------------------------------------------
 
 _ENTROPY_PROFILE_ORACLE = """
@@ -974,7 +974,7 @@ def dq_column_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# population-stability-index distribution drift (round 6)
+# population-stability-index distribution drift
 # ---------------------------------------------------------------------------
 
 _PSI_ORACLE = """
@@ -1068,7 +1068,7 @@ def dq_distribution_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ER blocking quality report (round 6)
+# ER blocking quality report
 # ---------------------------------------------------------------------------
 
 _BQ_W = 3

@@ -612,8 +612,8 @@ def scan_metadata_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     `_metadata.row_index`) — the lineage/debugging surface a 100 TB lake
     operator lives on: which physical file did a corrupt row come from,
     how are rows distributed across files, did a writer number rows
-    correctly. VALUE-EXACT oracle (promoted from rows-only, VERDICT r5
-    #5) via a layout that pins Spark's file metadata to DuckDB-derivable
+    correctly. VALUE-EXACT oracle (promoted from rows-only) via a
+    layout that pins Spark's file metadata to DuckDB-derivable
     facts: the fixture is repartitioned BY the partition key before
     `partitionBy`, so each l_linenumber directory holds exactly ONE
     parquet file. Then per key: n_files (countDistinct of
@@ -1230,7 +1230,7 @@ def sink_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# parquet bloom-filter layout (round 5)
+# parquet bloom-filter layout
 # ---------------------------------------------------------------------------
 
 _BLOOM_KEY = 7
@@ -1280,7 +1280,7 @@ def sink_parquet_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# nested-struct schema pruning (round 5)
+# nested-struct schema pruning
 # ---------------------------------------------------------------------------
 
 _NESTED_ORACLE = """
@@ -1323,7 +1323,7 @@ def scan_nested_struct_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# catalog statistics (ANALYZE TABLE) round trip (round 5)
+# catalog statistics (ANALYZE TABLE) round trip
 # ---------------------------------------------------------------------------
 
 _ANALYZE_ORACLE = """
@@ -1360,7 +1360,7 @@ def catalog_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# PERMISSIVE CSV with corrupt-record capture (round 5)
+# PERMISSIVE CSV with corrupt-record capture
 # ---------------------------------------------------------------------------
 
 _N_BAD_LINES = 7
@@ -1423,7 +1423,7 @@ def scan_csv_permissive_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# CSV quoting/escaping round trip (round 5, batch 8)
+# CSV quoting/escaping round trip
 # ---------------------------------------------------------------------------
 
 _CSV_QUOTES_ORACLE = """
@@ -1481,7 +1481,7 @@ def sink_csv_roundtrip_quotes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SQL column DEFAULT values (round 5, batch 11)
+# SQL column DEFAULT values
 # ---------------------------------------------------------------------------
 
 _DEFAULTS_ORACLE = """
@@ -1525,7 +1525,7 @@ def sql_column_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# nested-field predicate pushdown (round 5, batch 13)
+# nested-field predicate pushdown
 # ---------------------------------------------------------------------------
 
 _NESTED_PP_ORACLE = """
@@ -1565,7 +1565,7 @@ def scan_nested_predicate_pushdown(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# typed partition discovery (round 5, batch 13)
+# typed partition discovery
 # ---------------------------------------------------------------------------
 
 _PART_DISC_ORACLE = """
@@ -1612,7 +1612,7 @@ def source_partition_discovery_types(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 # ---------------------------------------------------------------------------
-# parquet aggregate pushdown (round 5, batch 14)
+# parquet aggregate pushdown
 # ---------------------------------------------------------------------------
 
 _AGG_PUSH_ORACLE = """
@@ -1654,7 +1654,7 @@ def scan_aggregate_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# parquet field-ID rename evolution (round 5, batch 16)
+# parquet field-ID rename evolution
 # ---------------------------------------------------------------------------
 
 _FIELDID_ORACLE = """
@@ -1711,7 +1711,7 @@ def scan_fieldid_rename_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# maxRecordsPerFile sink governance (round 5, batch 16)
+# maxRecordsPerFile sink governance
 # ---------------------------------------------------------------------------
 
 _MRPF_CAP = 150
@@ -1759,7 +1759,7 @@ def sink_max_records_per_file(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# native XML connector (round 6)
+# native XML connector
 # ---------------------------------------------------------------------------
 
 _XML_ORACLE = """
@@ -1800,7 +1800,7 @@ def source_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# recursive file lookup + glob filter (round 6)
+# recursive file lookup + glob filter
 # ---------------------------------------------------------------------------
 
 _RECURSIVE_ORACLE = """
@@ -1846,7 +1846,7 @@ def source_recursive_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# multiline (JSON-array) document source (round 6)
+# multiline (JSON-array) document source
 # ---------------------------------------------------------------------------
 
 _MULTILINE_ORACLE = """
@@ -1889,7 +1889,7 @@ def source_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# gzip-compressed JSONL source (round 6)
+# gzip-compressed JSONL source
 # ---------------------------------------------------------------------------
 
 _JSONL_GZ_ORACLE = """
@@ -1933,7 +1933,7 @@ def source_jsonl_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# partition-spec evolution read (round 6)
+# partition-spec evolution read
 # ---------------------------------------------------------------------------
 
 _SPEC_EVO_ORACLE = """

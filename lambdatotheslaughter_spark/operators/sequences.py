@@ -667,7 +667,7 @@ def seq_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Markov transition matrix of user journeys (round 6)
+# Markov transition matrix of user journeys
 # ---------------------------------------------------------------------------
 
 _MARKOV_ORACLE = """
@@ -724,7 +724,7 @@ def seq_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# funnel time-to-convert quantiles (round 6)
+# funnel time-to-convert quantiles
 # ---------------------------------------------------------------------------
 
 _TTC_ORACLE = """
@@ -807,7 +807,7 @@ def seq_funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# top user journey paths (round 6)
+# top user journey paths
 # ---------------------------------------------------------------------------
 
 _PATH_TOPK_ORACLE = """
@@ -879,7 +879,7 @@ def seq_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# first-touch / last-touch attribution (round 6)
+# first-touch / last-touch attribution
 # ---------------------------------------------------------------------------
 
 _ATTRIB_ORACLE = """
@@ -968,7 +968,7 @@ def seq_attribution_first_last(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# weekly growth accounting (round 6)
+# weekly growth accounting
 # ---------------------------------------------------------------------------
 
 _GROWTH_ORACLE = """
@@ -1053,7 +1053,7 @@ def seq_growth_accounting_weekly(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# strict-order window funnel (round 6)
+# strict-order window funnel
 # ---------------------------------------------------------------------------
 
 _WFUNNEL_ORACLE = """
@@ -1135,7 +1135,7 @@ def seq_window_funnel_strict(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# RFM customer segmentation (round 6)
+# RFM customer segmentation
 # ---------------------------------------------------------------------------
 
 _RFM_ORACLE = """
@@ -1174,8 +1174,8 @@ def seq_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one combinable user-grain fold; the three quartile
     assignments are three chained two-pass bucketed ranks
     (bucketed.py + the exact NTILE formula — no single-partition
-    window over the purchaser table at any user count, the r7
-    entity-grain sweep); a <=64-cell rollup."""
+    window over the purchaser table at any user count); a <=64-cell
+    rollup."""
     ev = load_table(spark, "events", sf_dir) \
         .where(F.col("event_type") == "purchase")
     cents = round_cents("value")
@@ -1204,7 +1204,7 @@ def seq_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# daily bounce rate over 30-minute sessions (round 6)
+# daily bounce rate over 30-minute sessions
 # ---------------------------------------------------------------------------
 
 _BOUNCE_ORACLE = """
@@ -1273,7 +1273,7 @@ def seq_bounce_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# reorder cadence (round 6)
+# reorder cadence
 # ---------------------------------------------------------------------------
 
 _CADENCE_ORACLE = """
@@ -1316,7 +1316,7 @@ def seq_reorder_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: customer-keyed lag (key-parallel); the global rank is
     the two-pass bucketed rank (bucketed.py — gap-value buckets are
     monotone in the order, so ALL inter-order gap rows rank in
-    parallel; the r6 'No Partition Defined' fix, pinned in
+    parallel; no 'No Partition Defined' window, pinned in
     test_plans.py); the total count broadcasts back as one row."""
     o = load_table(spark, "orders", sf_dir)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate",

@@ -174,7 +174,7 @@ def _bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# bucket pruning on read (round 5)
+# bucket pruning on read
 # ---------------------------------------------------------------------------
 
 _BUCKET_PRUNE_KEY = 100

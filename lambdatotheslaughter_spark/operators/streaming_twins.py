@@ -229,7 +229,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     into micro-batches of _WM_CHUNK rows; the watermark a row sees is
     max(ts) over all PRIOR chunks minus 10 min (Spark advances watermarks
     at batch boundaries, never mid-batch — so this is the faithful replay;
-    the r1 per-row running max was both stricter than the engine and a
+    a per-row running max would be both stricter than the engine and a
     single-task scan). Scale shape: per-chunk maxes are one map-side
     combinable groupBy; the running max runs over the CHUNK SUMMARY (4-5
     orders of magnitude smaller than the data — thousands of rows at
@@ -314,9 +314,8 @@ def stream_stateful_state_op(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def tws_available() -> bool:
     """True when `transformWithStateInPandas` can actually run here: the
-    TWS state-server protocol imports Python `google.protobuf`, which
-    this sandbox lacks (broken and uninstallable — verified rounds 4a,
-    4b; SCALE.md streaming section). Guard, don't crash."""
+    TWS state-server protocol imports Python `google.protobuf`, and
+    without the `google` package it cannot start. Guard, don't crash."""
     import importlib.util
     try:
         # find_spec raises (not returns None) when the PARENT package
@@ -328,8 +327,8 @@ def tws_available() -> bool:
 
 def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`stream_stateful_state_op`'s accumulator ported to the Spark 4
-    arbitrary-state API v2 (`transformWithStateInPandas`) — the drop-in
-    rewrite SCALE.md promised: same file-stream source, same per-user
+    arbitrary-state API v2 (`transformWithStateInPandas`) — a drop-in
+    rewrite: same file-stream source, same per-user
     (total, n) value state, same output schema and rounding, so its
     result must hash-match the applyInPandasWithState op and the same
     DuckDB oracle. NOT registered as a driver query: `tws_available()`
@@ -639,7 +638,7 @@ def sink_stream_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# deterministic rate source + checkpoint resume (round 5, batch 18)
+# deterministic rate source + checkpoint resume
 # ---------------------------------------------------------------------------
 
 _RATE_RESUME_ORACLE = """
@@ -700,7 +699,7 @@ def stream_rate_source_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# chained windowed aggregations (round 6 — Spark 4 multi-stateful append)
+# chained windowed aggregations (Spark 4 multi-stateful append)
 # ---------------------------------------------------------------------------
 
 def chained_window_agg(events: DataFrame) -> DataFrame:
@@ -755,7 +754,7 @@ def stream_chained_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# drift-monitor bucket counts: streaming twin (round 6)
+# drift-monitor bucket counts: streaming twin
 # ---------------------------------------------------------------------------
 
 def drift_bucket_counts(events: DataFrame) -> DataFrame:
@@ -798,7 +797,7 @@ def stream_drift_bucket_counts(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# SPRT monitor state: streaming twin (round 7)
+# SPRT monitor state: streaming twin
 # ---------------------------------------------------------------------------
 
 def sprt_daily_counts(events: DataFrame) -> DataFrame:
@@ -839,7 +838,7 @@ def stream_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# changepoint monitor state: streaming twin (round 7, ninth ring)
+# changepoint monitor state: streaming twin
 # ---------------------------------------------------------------------------
 
 def changepoint_daily_revenue(events: DataFrame) -> DataFrame:

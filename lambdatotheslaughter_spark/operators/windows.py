@@ -361,7 +361,7 @@ def win_pct_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# numeric RANGE window frame (round 5)
+# numeric RANGE window frame
 # ---------------------------------------------------------------------------
 
 _RANGE_NUM_ORACLE = """
@@ -403,7 +403,7 @@ def win_range_between_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# top-k WITH TIES (round 5, batch 11)
+# top-k WITH TIES
 # ---------------------------------------------------------------------------
 
 _TOPK_TIES_ORACLE = """
@@ -442,7 +442,7 @@ def win_topk_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# lag IGNORE NULLS (round 5, batch 17)
+# lag IGNORE NULLS
 # ---------------------------------------------------------------------------
 
 _LAG_IN_ORACLE = """
@@ -484,7 +484,7 @@ def win_lag_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# percent_rank / cume_dist (round 6)
+# percent_rank / cume_dist
 # ---------------------------------------------------------------------------
 
 _PCTRANK_ORACLE = """
@@ -528,7 +528,7 @@ def win_percent_rank_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# cumulative sum with reset-on-flag (round 6)
+# cumulative sum with reset-on-flag
 # ---------------------------------------------------------------------------
 
 _RESET_ORACLE = """
@@ -580,7 +580,7 @@ def win_cumsum_reset_on_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# rolling regression slope (round 6)
+# rolling regression slope
 # ---------------------------------------------------------------------------
 
 _ROLL_SLOPE_ORACLE = """
@@ -656,7 +656,7 @@ def win_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# interval-union active time (round 6)
+# interval-union active time
 # ---------------------------------------------------------------------------
 
 _IVU_WINDOW_US = 5 * 60 * 1_000_000  # each event opens a 5-minute window
@@ -732,7 +732,7 @@ def win_interval_union_length(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# maximum drawdown of the daily net series (round 6)
+# maximum drawdown of the daily net series
 # ---------------------------------------------------------------------------
 
 _MDD_ORACLE = """
@@ -808,7 +808,7 @@ def win_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# peer-group z-score benchmarking (round 6)
+# peer-group z-score benchmarking
 # ---------------------------------------------------------------------------
 
 _PEER_Z_ORACLE = """
@@ -866,7 +866,7 @@ def win_peer_group_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# year-to-date running total (round 6)
+# year-to-date running total
 # ---------------------------------------------------------------------------
 
 _YTD_ORACLE = """
@@ -908,7 +908,7 @@ def win_ytd_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 2-D skyline (Pareto frontier) operator (round 6)
+# 2-D skyline (Pareto frontier) operator
 # ---------------------------------------------------------------------------
 
 _SKYLINE_ORACLE = """
@@ -946,10 +946,10 @@ def win_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     order count) -- no other customer is at least as good on both and
     strictly better on one; the multi-criteria shortlist behind
     best-tradeoff queries that no single score can express. Tie
-    semantics follow the dominance definition exactly (the r6 ADVICE
-    fix): customers with IDENTICAL (balance, orders) are mutually
-    non-dominated, so ALL of them are kept — champions are "everyone
-    tying the per-balance max", not one row_number survivor. A point
+    semantics follow the dominance definition exactly: customers with
+    IDENTICAL (balance, orders) are mutually non-dominated, so ALL of
+    them are kept — champions are "everyone tying the per-balance max",
+    not one row_number survivor. A point
     survives iff its orders beat the best over STRICTLY higher
     balances. All exact integers; the dominance test is two
     comparisons.
@@ -958,7 +958,7 @@ def win_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     join picks champions (no window at all), and the running max over
     strictly-higher balances is the two-pass bucketed prefix-max
     (bucketed.py — the distinct-balance table never collapses to one
-    partition, the r7 entity-grain sweep)."""
+    partition)."""
     c = load_table(spark, "customer", sf_dir)
     o = load_table(spark, "orders", sf_dir) \
         .select("o_custkey", "o_orderkey")

@@ -73,43 +73,13 @@ def wholestage_codegen_spans(df: DataFrame) -> int:
     return executed_plan(df).count("*(")
 
 
-def global_window_count(df: DataFrame) -> int:
-    """Number of window-family physical nodes with an EMPTY partition spec
-    — each one forces Exchange SinglePartition of its whole input (the
-    'WindowExec: No Partition Defined' warning). The bucketed_order swap
-    exists to drive this to zero on fact/corpus-grain inputs; windows over
-    by-construction-bounded inputs (calendar series, ≤64-row replicate
-    tables) are the callers' documented exceptions."""
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        plan = plan.executedPlan()
-    count = 0
-
-    def walk(n):
-        nonlocal count
-        cls = n.getClass().getSimpleName()
-        if cls.endswith("QueryStageExec"):
-            walk(n.plan())
-            return
-        if cls == "ReusedExchangeExec":
-            walk(n.child())
-            return
-        if cls in ("WindowExec", "WindowInPandasExec",
-                   "WindowGroupLimitExec") and n.partitionSpec().isEmpty():
-            count += 1
-        it = n.children().iterator()
-        while it.hasNext():
-            walk(it.next())
-
-    walk(plan)
-    return count
-
-
-def _metric_nodes(df: DataFrame):
-    """AQE-final plan nodes with populated SQLMetrics; QueryStage wrappers
-    unwrapped (their subtree hides behind .plan()), reused exchanges
-    followed. The query must have been EXECUTED on this exact DataFrame
-    (collect, not a separate write action) or every metric reads zero."""
+def _plan_nodes(df: DataFrame):
+    """Nodes of the AQE-final (or, before execution, the current) physical
+    plan: QueryStage wrappers unwrapped (their subtree hides behind
+    .plan()), reused exchanges followed. SQLMetrics on these nodes are
+    populated only once the query has been EXECUTED on this exact DataFrame
+    (collect, not a separate write action); before that every metric reads
+    zero."""
     plan = df._jdf.queryExecution().executedPlan()
     if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
         plan = plan.executedPlan()
@@ -132,14 +102,28 @@ def _metric_nodes(df: DataFrame):
     return nodes
 
 
+def global_window_count(df: DataFrame) -> int:
+    """Number of window-family physical nodes with an EMPTY partition spec
+    — each one forces Exchange SinglePartition of its whole input (the
+    'WindowExec: No Partition Defined' warning). The bucketed_order swap
+    exists to drive this to zero on fact/corpus-grain inputs; windows over
+    by-construction-bounded inputs (calendar series, ≤64-row replicate
+    tables) are the callers' documented exceptions."""
+    return sum(1 for n in _plan_nodes(df)
+               if n.getClass().getSimpleName() in (
+                   "WindowExec", "WindowInPandasExec", "WindowGroupLimitExec")
+               and n.partitionSpec().isEmpty())
+
+
 def execution_metrics(df: DataFrame) -> dict[str, int]:
     """Measured counters off the executed plan: parquet bytes/rows/files
     actually read, shuffle bytes/records actually written, broadcast bytes
-    shipped. The hard numbers behind METRICS.md and the shuffle-volume
-    regression tests."""
+    shipped. The hard numbers behind the benchmark's per-layer
+    `tables.*`/`operators.*` counters and the shuffle-volume regression
+    tests."""
     agg = {"input_bytes": 0, "input_rows": 0, "files": 0,
            "shuffle_bytes": 0, "shuffle_records": 0, "broadcast_bytes": 0}
-    for n in _metric_nodes(df):
+    for n in _plan_nodes(df):
         node = n.nodeName()
         mit = n.metrics().iterator()
         while mit.hasNext():

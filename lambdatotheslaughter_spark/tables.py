@@ -72,8 +72,8 @@ SCHEMAS: dict[str, T.StructType] = {
         T.StructField("l_linestatus", T.StringType()),
         T.StructField("l_shipdate", T.TimestampType()),
     ]),
-    # events.ts has shipped as BOTH parquet TIMESTAMP(NANOS) (rounds 1-2)
-    # and TIMESTAMP(MICROS) (regenerated testdata) — the physical unit is
+    # events.ts has shipped as BOTH parquet TIMESTAMP(NANOS) (the first
+    # testdata) and TIMESTAMP(MICROS) (regenerated) — the physical unit is
     # detected per-dataset from the parquet footer (events_ts_unit) and the
     # matching read schema picked in events_reader. This entry is the
     # NANOS-era variant: Spark has no nanosecond timestamp, so ts reads as

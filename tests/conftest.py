@@ -1,7 +1,7 @@
 """Shared fixtures: one SparkSession per test run, a DuckDB connection with
-the driver's pre-registered views, and a comparison helper that replicates
-the driver's correctness gate (row-count + column names + order-insensitive
-exact value comparison) so we never fly blind against CORRECTNESS_r{N}.json.
+the driver's pre-registered views, and the one comparison rule for oracle
+parity (row count + column names + order-insensitive exact values), which
+`tools/drive_driver.py` imports too.
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from lambdatotheslaughter_spark.session import get_spark
 from lambdatotheslaughter_spark.tables import TABLE_NAMES
 
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
+SF_DIR = "/root/testdata/sf0.01"
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -29,12 +29,19 @@ def spark():
     yield sess
 
 
-@pytest.fixture(scope="session")
-def duck():
+def duckdb_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table of `sf_dir`, as the
+    driver registers them before running an oracle."""
     con = duckdb.connect()
     for name in TABLE_NAMES:
-        path = os.path.join(SF_DIR, f"{name}.parquet")
+        path = os.path.join(sf_dir, f"{name}.parquet")
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
+    return con
+
+
+@pytest.fixture(scope="session")
+def duck():
+    con = duckdb_views(SF_DIR)
     yield con
     con.close()
 
@@ -73,8 +80,9 @@ def canonical_rows(df: pd.DataFrame) -> list[tuple]:
     return out
 
 
-def assert_parity(spark_df, duck_con, sql: str, query_name: str = "?"):
-    """Replicates the driver gate: row count, column-name set, exact values."""
+def assert_parity(spark_df, duck_con, sql: str, query_name: str = "?") -> int:
+    """Replicates the driver gate: row count, column-name set, exact values.
+    Returns the row count."""
     sp = spark_df.toPandas()
     dk = duck_con.execute(sql).df()
     assert sorted(sp.columns) == sorted(dk.columns), (
@@ -84,3 +92,4 @@ def assert_parity(spark_df, duck_con, sql: str, query_name: str = "?"):
     if srows != drows:
         diffs = [(a, b) for a, b in zip(srows, drows) if a != b][:5]
         raise AssertionError(f"{query_name}: value mismatch, first diffs: {diffs}")
+    return len(sp)

@@ -1,5 +1,5 @@
-"""Gates for the shared two-pass bucketed global order (bucketed.py — the
-r7 'one helper, used everywhere' sweep): value-exactness against the plain
+"""Gates for the shared two-pass bucketed global order (bucketed.py, the
+one helper every global-order key uses): value-exactness against the plain
 single-partition window it replaces, the SQL-standard NTILE formula against
 Spark's own ntile(), two-run bit-determinism (the hazard that killed the
 repartitionByRange prototype — see the module docstring), and the plan

@@ -239,8 +239,8 @@ def test_cdc_apply_respects_changelog_semantics(spark):
 
 
 def test_exact_moment_ops_are_partition_invariant(spark):
-    """The round-4 exact-arithmetic aggregates (decimal power sums, fixed-
-    point centroid sums) must be BIT-identical under a radically different
+    """The exact-arithmetic aggregates (decimal power sums, fixed-point
+    centroid sums) must be BIT-identical under a radically different
     shuffle partitioning — the property that makes them reproducible
     across cluster sizes and AQE re-plans, not just across engines."""
     from lambdatotheslaughter_spark import registry
@@ -258,7 +258,7 @@ def test_exact_moment_ops_are_partition_invariant(spark):
 
 
 def test_round6_stats_partition_invariance(spark):
-    """The round-6 statistic kernels must produce BIT-IDENTICAL values
+    """The statistic kernels must produce BIT-IDENTICAL values
     under a hostile repartitioning (the 97-partition probe as a pinned
     test): integer-moment folds, rank windows, and fixed-order float
     folds are all partitioning-free by construction — any drift here is
@@ -279,7 +279,7 @@ def test_round6_stats_partition_invariance(spark):
 
 
 def test_third_ring_partition_invariance(spark):
-    """Round-6 third-ring kernels (nonparametric tests, fixed-point folds,
+    """Third-ring kernels (nonparametric tests, fixed-point folds,
     spatial grids, ML eval) must be BIT-identical under the 97-partition
     probe: rank windows, integer fixed-point sums, md5-derived
     randomness and ordered float folds are all partitioning-free by
@@ -319,7 +319,7 @@ def test_third_ring_partition_invariance(spark):
 
 
 def test_seventh_ring_partition_invariance(spark):
-    """Round-7 seventh-ring kernels (trend/diagnostic stats, changepoint
+    """Seventh-ring kernels (trend/diagnostic stats, changepoint
     argmax, MCC sweep, Hurst R/S, label propagation, chrF, DQ audits)
     must be BIT-identical under the hostile 97-partition probe: every
     fold is an integer/decimal sum, a bounded-domain window, or a

@@ -1,8 +1,8 @@
-"""Regression tests for the two data-edge bugs the round-8 cross-SF audits
-caught. Each crafts a minimal sf_dir whose data exhibits the edge (the
-stock testdata only shows these at one SF each — zero-cent events exist
-only at sf0.1, and an empty true-pair set only at sf0.001), so the edge
-stays covered at the default test SF forever.
+"""Regression tests for the two data-edge bugs that running every key at
+each scale factor caught. Each crafts a minimal sf_dir whose data exhibits
+the edge (the stock testdata only shows these at one SF each — zero-cent
+events exist only at sf0.1, and an empty true-pair set only at sf0.001),
+so the edge stays covered at the default test SF forever.
 """
 
 from __future__ import annotations
@@ -65,8 +65,8 @@ _EMPTY_GUARDED = [
     ("llm_hard_negative_mining", ("embeddings",)),
     ("llm_embedding_pq_quantize", ("embeddings",)),
     ("llm_eval_ndcg_at10", ("embeddings",)),
-    # round-9 plan rewrites: re-pin the empty-shard class for the new
-    # shapes (the r8 full-registry audit predates them)
+    # plan rewrites: re-pin the empty-shard class for the new shapes
+    # (the full-registry empty-input audit predates them)
     ("graph_closeness_harmonic_3hop", ("lineitem",)),
     ("graph_label_propagation_sync", ("lineitem",)),
     ("llm_eval_chrf", ("documents",)),
@@ -78,8 +78,8 @@ _EMPTY_GUARDED = [
 
 
 def test_empty_shard_guards(spark, tmp_path):
-    """The eight driver-side-scaffold ops the round-8 empty-input audit
-    crashed (teleport-constant division, empty-query-block np.vstack,
+    """The eight driver-side-scaffold ops a full-registry empty-input
+    audit crashed (teleport-constant division, empty-query-block np.vstack,
     MLlib fit on an empty dataset) must return their exact-schema empty
     result on a zero-row shard — the empty-daily-partition case."""
     import pyarrow.parquet as _pq
@@ -129,7 +129,7 @@ def test_er_blocking_completeness_vacuous_truth(spark, tmp_path):
 
 
 def test_graph_vector_broadcast_hint_is_size_gated(spark):
-    """ADVICE r9: an explicit F.broadcast() hint overrides
+    """An explicit F.broadcast() hint overrides
     autoBroadcastJoinThreshold unconditionally and hard-fails past
     8 GiB / 512M rows instead of falling back, so the graph kernels'
     degrade-to-hash-join story requires the hint itself to lift at
@@ -152,7 +152,7 @@ def test_graph_vector_broadcast_hint_is_size_gated(spark):
 
 
 def test_closeness_dedup_gate_branches_are_value_identical(spark, monkeypatch):
-    """r10: graph_closeness_harmonic_3hop estimate-gates its edge-dedup
+    """graph_closeness_harmonic_3hop estimate-gates its edge-dedup
     (skip the shuffle at bench scale, dedup once at volume — the 100×
     probe OOMed the undeduped checkpoint). bit_or masks are idempotent
     over duplicate edges, so the two branches MUST be value-identical;
@@ -183,7 +183,7 @@ def test_connected_components_distributed_path_matches_oracle(
 
 
 def test_containment_dedup_gate_branches_are_value_identical(spark, monkeypatch):
-    """r11 (VERDICT r10 ask #2): llm_dedup_containment estimate-gates an
+    """llm_dedup_containment estimate-gates an
     exact-dedup-first plan — group byte-identical docs, run the inverted
     index over one representative per group, expand rep pairs back over
     member lists (cross) and emit all intra-group pairs at containment
@@ -242,7 +242,7 @@ def test_containment_gate_fires_by_default_on_duplicate_heavy_corpus(
 
 
 def test_bcast_row_budget_is_memory_derived(spark):
-    """ADVICE r10 #1: the broadcast gate must derive from the configured
+    """The broadcast gate must derive from the configured
     heap (a 1 GiB wire broadcast inflates several-fold deserialized), fall
     back to and never exceed the 16M-row conservative cap."""
     from lambdatotheslaughter_spark import determinism as det
@@ -258,7 +258,7 @@ def test_bcast_row_budget_is_memory_derived(spark):
 
 
 def test_adamic_adar_packed_and_fallback_branches_agree(spark, tmp_path):
-    """r11 §3b: the candidate fold packs (x, y) into one bigint only when
+    """The candidate fold packs (x, y) into one bigint only when
     the data-derived max node id fits in 31 bits; cluster-scale ids take
     the original two-column shape. Run the SAME co-purchase graph twice —
     once with small part ids (packed fastpath) and once with every id

@@ -58,14 +58,14 @@ def test_ivf_ann_recall(spark, duck):
 def test_ivf_cells_scale_and_prune(spark):
     """The IVF index must be a real index: cell count ~ √n (not a constant),
     and the probed candidate-pair volume must be a small fraction of the n²
-    brute-force space — the r1 version's fixed 10 cells left O(n²/10)."""
+    brute-force space — a fixed 10 cells would leave O(n²/10)."""
     import numpy as np
 
     from lambdatotheslaughter_spark.operators.llm import (
         _IVF_MAX_CELLS, _IVF_NPROBE, _ivf_n_cells, _ivf_train_centroids)
     from lambdatotheslaughter_spark.tables import load_table
 
-    # the √n rule and its driver-safety cap (VERDICT r2 #6): cells grow
+    # the √n rule and its driver-safety cap: cells grow
     # with the corpus until the training sample would outgrow the driver,
     # then stop — the comment's bound is enforced, not aspirational
     assert _ivf_n_cells(10_000) == 100
@@ -181,7 +181,7 @@ def test_knn_never_collects_to_driver(spark, monkeypatch):
     classic subclass overrides the method (which silently blinded this
     test's earlier form). The broadcast fastpath's bounded toPandas is BY
     DESIGN and exercised elsewhere; this proves the at-scale path has no
-    driver funnel (the r1 implementation had one)."""
+    driver funnel (an earlier implementation had one)."""
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
 
     from lambdatotheslaughter_spark.operators import llm
@@ -679,9 +679,9 @@ def test_bbit_minhash_estimator_quality(spark):
 
 
 def test_ngram_jaccard_fastpath_and_tiled_agree(spark, monkeypatch):
-    """The dense dictionary-GEMM now has TWO physical dispatches (round-5
-    rewrite): the broadcast fastpath ships raw shingle STRINGS and
-    dict-encodes in the kernel; the tiled path dictionary-encodes to int
+    """The dense dictionary-GEMM has TWO physical dispatches: the broadcast
+    fastpath ships raw shingle STRINGS and dict-encodes in the kernel; the
+    tiled path dictionary-encodes to int
     sids JVM-side before the block-pair cogroup. Same corpus, both
     dispatches forced, identical pairs required — this is the agreement
     test the per-query kNN paths already have."""
@@ -696,7 +696,7 @@ def test_ngram_jaccard_fastpath_and_tiled_agree(spark, monkeypatch):
 
 
 def test_pair_scaffold_empty_corpus_is_empty(spark, monkeypatch):
-    """Round-5 pool_prep edge: an empty corpus must yield an empty pair
+    """pool_prep edge: an empty corpus must yield an empty pair
     result through the broadcast fastpath (the driver-side pool prep
     runs unconditionally, so it must tolerate zero rows — np.vstack
     raises on an empty list without the guard in _norm_prep)."""

@@ -86,7 +86,8 @@ def test_watermark_replay_has_no_full_table_single_partition_window():
     """The watermark replay's only single-partition stage must be the
     chunk-summary window: every 'Exchange SinglePartition' in the executed
     plan must sit above a HashAggregate (the per-chunk max), never directly
-    above an events scan — the r1 shape ran all events through one task."""
+    above an events scan — a per-row running max runs all events through
+    one task."""
     df = _df("stream_watermark_late")
     df.collect()  # AQE final plan
     plan = checks.executed_plan(df)
@@ -280,7 +281,7 @@ def test_compaction_collapses_file_count():
 
 
 def test_metadata_columns_row_index_checksums(spark_also=None):
-    """scan_metadata_columns is oracled since round 6 (one file per
+    """scan_metadata_columns is value-oracled (one file per
     partition key makes every column DuckDB-derivable); this gate pins
     the PHYSICAL claims the oracle encodes: each l_linenumber directory
     holds exactly one parquet file on disk, the operator saw exactly
@@ -486,7 +487,7 @@ def test_triangle_count_stays_on_hash_joins():
     allowed are the final 1-row scalar crossJoins
     (n_vertices × n_edges × n_triangles). The closing-edge probe must stay
     a hash join; the wedge self-join may be either broadcast-hash or
-    sort-merge (since the r11 degree-table checkpoint the planner sees
+    sort-merge (since the degree-table checkpoint the planner sees
     accurate sizes and picks sort-merge with one reusable exchange instead
     of broadcasting an E-row build relation)."""
     plan = checks.executed_plan(_df("graph_triangle_count"))
@@ -938,14 +939,14 @@ def test_path_topk_is_take_ordered():
 
 
 # ---------------------------------------------------------------------------
-# round 7: the bucketed_order sweep — zero global (no-partition) windows
+# the bucketed_order sweep — zero global (no-partition) windows
 # ---------------------------------------------------------------------------
 
 _BUCKETED_SWEPT = [
-    # the four r6 "weak on plan" fact/corpus-grain queries (VERDICT r6 #2)
+    # the four fact/corpus-grain queries that planned a global window
     "ml_lift_gains_table", "seq_reorder_cadence",
     "llm_curriculum_schedule", "llm_pipeline_curation_v2",
-    # the entity-grain sweep (VERDICT r6 #3)
+    # the entity-grain sweep
     "stat_gini_coefficient", "agg_pareto_cutoff", "agg_abc_classification",
     "seq_rfm_segments", "win_skyline_2d", "agg_concentration_hhi_crk",
     "ml_cv_auc_per_fold",
@@ -956,7 +957,7 @@ def test_bucketed_sweep_has_no_single_partition_window():
     """Every query converted to bucketed.py's two-pass order must plan
     ZERO WindowExec nodes with an empty partition spec — the
     'WindowExec: No Partition Defined' warning class is retired for the
-    whole list (VERDICT r6 asks #2 and #3). AQE finalizes window nodes
+    whole list. AQE finalizes window nodes
     only after execution, so run each query first."""
     offenders = {}
     for key in _BUCKETED_SWEPT:
@@ -991,7 +992,7 @@ def test_katz_topk_is_take_ordered_and_hash_joins():
 
 
 def test_hl_and_winrate_have_no_global_window():
-    """The two round-7 ops that need a corpus-scale global order must
+    """The two ops that need a corpus-scale global order must
     route it through the bucketed two-pass rank, not WindowExec with an
     empty partition spec."""
     for key in ("stat_hodges_lehmann_shift", "llm_eval_pairwise_winrate"):
@@ -1031,7 +1032,7 @@ def test_bollinger_single_window_pass():
 
 
 def test_cardinality_drift_is_one_multi_distinct_scan():
-    """dq_cardinality_drift_report (VERDICT r7 wrong #3): the six
+    """dq_cardinality_drift_report: the six
     conditional count-distincts must fold into ONE aggregate over one
     scan (the multi-distinct Expand), plus only the 1-row broadcast
     span scan — two FileScans total, never the old ~6-scan union."""
@@ -1042,11 +1043,11 @@ def test_cardinality_drift_is_one_multi_distinct_scan():
 
 
 def test_closeness_bitmask_has_no_sort_merge_join():
-    """graph_closeness_harmonic_3hop (round-9 MS-BFS rewrite): every
+    """graph_closeness_harmonic_3hop (MS-BFS form): every
     level join must be a broadcast hash join of the V-row mask table
     against the checkpointed edge list — a SortMergeJoin here means the
-    E-row side is being re-sorted per level, the exact shape the rewrite
-    removed (VERDICT r8 ask #4)."""
+    E-row side is being re-sorted per level, the exact shape the MS-BFS
+    form removed."""
     df = _df("graph_closeness_harmonic_3hop")
     plan = checks.executed_plan(df)
     assert "SortMergeJoin" not in plan, plan
@@ -1054,7 +1055,7 @@ def test_closeness_bitmask_has_no_sort_merge_join():
 
 
 def test_label_propagation_rounds_have_no_label_rejoin():
-    """graph_label_propagation_sync (round-9 self-loop rewrite): the
+    """graph_label_propagation_sync (self-loop form): the
     recurrence is one edge⋈labels broadcast join + one min fold per
     round — no SortMergeJoin, and exactly 2 joins for 3 rounds (round 1
     is a plain aggregate because l_0(u) = u)."""
@@ -1065,9 +1066,9 @@ def test_label_propagation_rounds_have_no_label_rejoin():
 
 
 def test_chrf_has_no_gram_join():
-    """llm_eval_chrf (round-9 single-shuffle rewrite): the clipped
+    """llm_eval_chrf (single-shuffle form): the clipped
     overlap folds INSIDE the (doc, n, gram) count aggregate — the plan
-    must contain no join at all (the r8 form shipped a gram-keyed
+    must contain no join at all (the previous form shipped a gram-keyed
     SortMergeJoin plus a doc-grain left join)."""
     df = _df("llm_eval_chrf")
     plan = checks.executed_plan(df)

@@ -1,6 +1,6 @@
-"""Testdata-drift tripwire. The driver regenerates /root/testdata between
-rounds and has already changed a physical type once (events.ts shipped as
-TIMESTAMP(NANOS) in rounds 1-2, TIMESTAMP(MICROS) from round 3) — which,
+"""Testdata-drift tripwire. The testdata is regenerated from time to time
+and has already changed a physical type once (events.ts shipped as
+TIMESTAMP(NANOS) at first, TIMESTAMP(MICROS) since) — which,
 silently combined with a hardcoded nanos read, shifted every events
 timestamp 1000x while green caches hid it. This test makes the next drift
 LOUD: every table's parquet footer must still map onto the explicit read

@@ -618,8 +618,8 @@ def test_session_boundary_tie_merges(spark):
     """Pin Spark's session tie semantics EMPIRICALLY: an event landing
     exactly at session_end + gap MERGES into the session, because
     session_window coalesces touching windows (intervals [a, b) and
-    [b, c) union). This was discovered by this fixture — the r4 code
-    shipped the opposite strict-< rule and no real event ever landed on
+    [b, c) union). This was discovered by this fixture — an earlier
+    version shipped the opposite strict-< rule and no real event ever landed on
     an exact microsecond boundary to expose it. The fixture goes RED
     under a strict-< fold (splits the boundary event into its own
     session) and RED under a `>=`-new-session SQL oracle, pinning both
@@ -654,7 +654,7 @@ def test_session_boundary_tie_merges(spark):
 
     ms = [int(t.value // 1_000_000) for t in ts]
     shipped = fold(ms, lambda a, end: a <= end)  # merge-on-tie (correct)
-    strict = fold(ms, lambda a, end: a < end)    # the r4 bug
+    strict = fold(ms, lambda a, end: a < end)    # the old strict-< bug
     assert len(shipped) == 1, "<= fold must match session_window"
     assert len(strict) == 2, "fixture not discriminating: < should split"
     assert shipped[0] == (ms[0], ms[2], 3)
@@ -673,8 +673,7 @@ def test_session_boundary_tie_merges(spark):
 
 @pytest.mark.skipif(not tw.tws_available(), reason=(
     "transformWithStateInPandas needs google.protobuf (the TWS "
-    "state-server protocol); broken and uninstallable in this sandbox — "
-    "verified rounds 4a/4b, see SCALE.md streaming section. Test goes "
+    "state-server protocol), which is not installed. Test goes "
     "live automatically when the environment gains protobuf."))
 def test_stream_stateful_tws_matches_apply_in_pandas(spark):
     """The Spark-4 arbitrary-state API v2 port (stream_stateful_tws) must

@@ -42,7 +42,7 @@ def test_oracle_coverage_ratio():
     (SURVEY §5 strategy); everything else must carry a DuckDB oracle."""
     qs, oracles = registry.all_queries(), registry.all_oracles()
     rows_only = sorted(set(qs) - set(oracles))
-    # (round 7 promoted llm_multimodal_decode and llm_sim_lsh_mllib to
+    # (llm_multimodal_decode and llm_sim_lsh_mllib were promoted to
     # value-exact oracles — the synthetic codec and the frozen seeded
     # projection are both DuckDB-replayable; 12 remain)
     allowed = {"agg_approx_distinct", "llm_sim_lsh_approx", "llm_sim_ann_ivf",

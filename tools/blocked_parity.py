@@ -1,9 +1,8 @@
 #!/usr/bin/env python
-"""Blocked-oracle sf0.1 value parity for the oracle-intractable closures
-(VERDICT r8 ask #6 / missing #2).
+"""Blocked-oracle sf0.1 value parity for the oracle-intractable closures.
 
 Seven registry keys have DuckDB twins that exceed 180 s at sf0.1 (the
-quadratic pairwise/closure shapes), so the r8 sf0.1 audit could only
+quadratic pairwise/closure shapes), so a full sf0.1 sweep can only
 rows-check them. This tool restores a VALUE-exact check at 10x data by
 restricting BOTH engines to the same deterministic input slice: it
 materializes a copy of sf0.1 where `documents` keeps doc_id % 5 == 0
@@ -12,11 +11,18 @@ incremental-fuzzy key splits batch-vs-history by doc_id parity, and an
 even modulus would leave its incoming side empty, a vacuous 0-row match)
 and `lineitem` keeps l_orderkey % 16 == 0 (the
 graph_connected_components fact), symlinks every other table unchanged,
-then execs tools/drive_driver.py against the sliced directory — the
-driver's exact rows+schema+value-hash check, just on a corpus DuckDB can
-close over. The slice is on the INPUT, so no query or oracle text
-changes; engine dispatch fastpaths and distributed paths both remain
-whatever the sliced size selects, exactly as the driver would see.
+then runs tools/drive_driver.py --sf-dir on the sliced directory — the
+tier-1 parity rule, just on a corpus DuckDB can close over. The slice is
+on the INPUT, so no query or oracle text changes; engine dispatch
+fastpaths and distributed paths both remain whatever the sliced size
+selects, exactly as the driver would see.
+
+On a 4-vCPU / 15 GiB host a run takes about 10 minutes. Six of the seven
+keys MATCH. graph_connected_components does not finish on that host: its
+DuckDB oracle raises OutOfMemoryException (it asks for another 4 GiB with
+9 GiB of DuckDB's default 12.5 GiB limit in use), also when run alone
+with a spill directory set. So the tool exits non-zero there; the engine
+side of that key is not judged.
 
 Usage: python tools/blocked_parity.py   (exit 0 iff all 7 MATCH)
 """
@@ -67,10 +73,9 @@ def build_slice() -> None:
 
 def main() -> int:
     build_slice()
-    env = dict(os.environ, SPARK_GRAFT_DRIVE_SF_DIR=DST)
     tool = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "drive_driver.py")
-    r = subprocess.run([sys.executable, tool, *KEYS], env=env)
+    r = subprocess.run([sys.executable, tool, "--sf-dir", DST, *KEYS])
     return r.returncode
 
 

@@ -1,140 +1,68 @@
-"""Mimic the driver: import __spark_entry__, smoke entry(), then run each
-queries()[k] vs oracle_sql()[k] in DuckDB (count+schema+value hash) at
-$SPARK_GRAFT_DRIVE_SF_DIR (default /root/testdata/sf0.01 — the driver's SF).
+"""Mimic the driver: import __spark_entry__, smoke entry(), then compare each
+queries()[k] with oracle_sql()[k] in DuckDB under the tier-1 parity rule
+(`tests.conftest.assert_parity`: row count, column names, exact values).
 
-Usage: python tools/drive_driver.py [name ...] — with args, only queries
-whose key equals (or contains) an arg are run; no args = the full sweep.
-Flags: --skip NAME (repeatable) drops a key AFTER any positional selection
-is applied (so it composes with selectors too) — used by the sf0.1 parity
-audit to hold out the oracle-intractable closure oracles.
+Usage: python tools/drive_driver.py --sf-dir DIR [name ...] [--skip NAME]...
+With names, only keys that equal or contain one are run; no names runs the
+full sweep. --skip NAME (repeatable) drops a key after that selection.
+Prints one line per key (MATCH, MISMATCH, ERROR or rows-only) and exits
+non-zero if any key is not a MATCH or rows-only.
 """
-import os, sys, hashlib, math, threading
+from __future__ import annotations
+
+import argparse
+import os
+import sys
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb, pandas as pd
 import __spark_entry__ as e
-from pyspark.sql import SparkSession
+from tests.conftest import assert_parity, duckdb_views
 
-SF_DIR = os.environ.get("SPARK_GRAFT_DRIVE_SF_DIR", "/root/testdata/sf0.01")
-# per-oracle wall-clock cap (seconds); 0 = no cap. The engine side is never
-# capped — a TIMEOUT row means the DUCKDB oracle is intractable at this SF
-# (quadratic closure/pairwise shapes), not that the engine is slow.
-ORACLE_TIMEOUT_S = float(os.environ.get("SPARK_GRAFT_ORACLE_TIMEOUT_S", "0"))
 
-# SPARK_GRAFT_DRIVE_SHUFFLE lets the partition-invariance audit rerun the
-# whole sweep at a hostile width (e.g. 97): every hash must still match.
-SHUFFLE = os.environ.get("SPARK_GRAFT_DRIVE_SHUFFLE", "8")
-
-builder = (SparkSession.builder.master("local[8]")
-           .config("spark.sql.shuffle.partitions", SHUFFLE)
-           .config("spark.sql.session.timeZone", "UTC")
-           .config("spark.ui.enabled", "false"))
-# SPARK_GRAFT_DRIVE_CONF="k=v;k2=v2" — extra session confs for robustness
-# axes (e.g. spark.sql.adaptive.enabled=false for the AQE-off audit).
-for kv in filter(None, os.environ.get("SPARK_GRAFT_DRIVE_CONF", "").split(";")):
-    ck, _, cv = kv.partition("=")
-    builder = builder.config(ck.strip(), cv.strip())
-spark = builder.getOrCreate()
-spark.sparkContext.setLogLevel("ERROR")
-
-rows = e.entry(spark).collect()
-print(f"SMOKE entry(): {len(rows)} rows; first: {rows[0]}")
-
-def fresh_con():
-    c = duckdb.connect()
-    for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
-        c.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
-    return c
-
-con = fresh_con()
-
-def vhash(df):
-    cols = sorted(df.columns)
-    cells = []
-    for r in df[cols].itertuples(index=False, name=None):
-        cells.append(tuple(repr(x) if not isinstance(x, float) else repr(round(x,9)) for x in r))
-    cells.sort()
-    return hashlib.md5(str(cells).encode()).hexdigest()
-
-qs, os_ = e.queries(), e.oracle_sql()
-args = sys.argv[1:]
-skips, sel = set(), []
-i = 0
-while i < len(args):
-    if args[i] == "--skip":
-        if i + 1 >= len(args):
-            sys.exit("usage: drive_driver.py [name ...] [--skip NAME]... "
-                     "(--skip needs a key; applies to sweeps AND selections)")
-        skips.add(args[i + 1]); i += 2
-    else:
-        sel.append(args[i]); i += 1
-if sel:
-    qs = {k: v for k, v in qs.items()
-          if any(s == k or s in k for s in sel)}
-if skips:
-    qs = {k: v for k, v in qs.items() if k not in skips}
-    print(f"skipping {len(skips)}: {sorted(skips)}")
-print(f"{len(qs)} queries, {len(os_)} oracles, sf_dir={SF_DIR}")
-bad = 0
-for k, fn in qs.items():
-    try:
-        sp = fn(spark, SF_DIR).toPandas()
-    except Exception as exc:
-        bad += 1
-        print(f"{k}: SPARK ERROR {type(exc).__name__}: {str(exc).splitlines()[0][:160]}")
-        continue
-    if k in os_:
-        # Per-query fired-flag closes the ADVICE r8 race: a Timer that fires
-        # AFTER con.execute() returns but BEFORE timer.cancel() would leave a
-        # stale interrupt on the connection that aborts the NEXT oracle (and
-        # gets misreported as that query's TIMEOUT). Only classify TIMEOUT
-        # when THIS query's flag fired; on a late fire, drop the tainted
-        # connection; on an interrupt with no flag (stale leak), retry once.
-        fired = threading.Event()
-        timer = None
-        if ORACLE_TIMEOUT_S:
-            timer = threading.Timer(ORACLE_TIMEOUT_S,
-                                    lambda: (fired.set(), con.interrupt()))
-            timer.start()
-        try:
+def compare(spark, sf_dir: str, keys) -> int:
+    """Run each key against its oracle at `sf_dir`, print its verdict, and
+    return the number of keys that failed (mismatch or error)."""
+    queries, oracles = e.queries(), e.oracle_sql()
+    bad = 0
+    with duckdb_views(sf_dir) as con:
+        for k in keys:
             try:
-                dk = con.execute(os_[k]).df()
-            except duckdb.InterruptException:
-                if fired.is_set():
-                    print(f"{k}: ORACLE TIMEOUT after {ORACLE_TIMEOUT_S}s "
-                          f"(oracle intractable at this SF; engine result not judged)", flush=True)
-                    continue  # finally sees fired -> rebuilds the connection
-                # stale interrupt leaked from an earlier late timer: this
-                # query was never judged — rebuild the connection, run again.
-                # The retry can ITSELF hit a genuine timeout (the timer
-                # lambda reads the global `con`, so it interrupts the fresh
-                # connection too): classify that as TIMEOUT, not ORACLE
-                # ERROR (ADVICE r9 — the second InterruptException
-                # otherwise fell through to the outer except)
-                con = fresh_con()
-                try:
-                    dk = con.execute(os_[k]).df()
-                except duckdb.InterruptException:
-                    if fired.is_set():
-                        print(f"{k}: ORACLE TIMEOUT after {ORACLE_TIMEOUT_S}s "
-                              f"(oracle intractable at this SF; engine result not judged)", flush=True)
-                        continue
-                    raise
-        except Exception as exc:
-            bad += 1
-            print(f"{k}: ORACLE ERROR {type(exc).__name__}: {str(exc).splitlines()[0][:160]}")
-            continue
-        finally:
-            if timer:
-                timer.cancel()
-                if fired.is_set():
-                    # fired late (query already returned): the interrupt may
-                    # still be pending on this connection — don't let it
-                    # abort the next query
-                    con = fresh_con()
-        ok = (len(sp)==len(dk)) and sorted(sp.columns)==sorted(dk.columns) and vhash(sp)==vhash(dk)
-        bad += 0 if ok else 1
-        print(f"{k}: rows {len(sp)}/{len(dk)} hash_match={vhash(sp)==vhash(dk)} -> {'MATCH' if ok else 'MISMATCH'}", flush=True)
-    else:
-        print(f"{k}: rows-only {len(sp)}", flush=True)
-sys.exit(1 if bad else 0)
+                df = queries[k](spark, sf_dir)
+                if k not in oracles:
+                    print(f"{k}: rows-only {len(df.toPandas())}", flush=True)
+                    continue
+                n = assert_parity(df, con, oracles[k], k)
+                print(f"{k}: MATCH {n} rows", flush=True)
+            except AssertionError as exc:
+                bad += 1
+                print(f"{k}: MISMATCH {str(exc)[:300]}", flush=True)
+            except Exception as exc:
+                bad += 1
+                msg = (str(exc).splitlines() or [""])[0][:160]
+                print(f"{k}: ERROR {type(exc).__name__}: {msg}", flush=True)
+    return bad
+
+
+if __name__ == "__main__":
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--sf-dir", required=True)
+    ap.add_argument("--skip", action="append", default=[])
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_intermixed_args()
+
+    from pyspark.sql import SparkSession
+    spark = (SparkSession.builder.master("local[8]")
+             .config("spark.sql.shuffle.partitions", "8")
+             .config("spark.sql.session.timeZone", "UTC")
+             .config("spark.ui.enabled", "false")
+             .getOrCreate())
+    spark.sparkContext.setLogLevel("ERROR")
+    rows = e.entry(spark).collect()
+    print(f"SMOKE entry(): {len(rows)} rows; first: {rows[0]}")
+
+    keys = [k for k in e.queries()
+            if (not args.names or any(s in k for s in args.names))
+            and k not in args.skip]
+    print(f"{len(keys)} queries, sf_dir={args.sf_dir}")
+    sys.exit(1 if compare(spark, args.sf_dir, keys) else 0)
