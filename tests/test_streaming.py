@@ -19,10 +19,13 @@ from pyspark.sql import functions as F
 from lambdatotheslaughter_spark.operators import streaming_twins as tw
 from lambdatotheslaughter_spark.session import scoped_conf
 from lambdatotheslaughter_spark.streaming.harness import (
-    EventStreamHarness, checkpoint_dir, drain, drop_serving, latest_per_user,
-    read_serving, upsert_foreach_batch)
+    CHECKPOINT_FILE_MANAGER, EventStreamHarness, checkpoint_dir, drain,
+    drop_serving, latest_per_user, read_serving, upsert_foreach_batch)
 from lambdatotheslaughter_spark.tables import load_table
 from tests.conftest import SMOKE_SF_DIR, canonical_rows
+
+
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 
 
 @pytest.fixture
@@ -50,6 +53,19 @@ def test_tumbling_agg_twin(spark, harness):
     assert {o["numShufflePartitions"] for o in ops} == {
         spark.sparkContext.defaultParallelism}
     assert spark.conf.get("spark.sql.shuffle.partitions") == batch_partitions
+
+
+def test_drain_checkpoints_through_filesystem_manager(spark, harness):
+    """Every micro-batch of a query started by ``drain`` runs in a session
+    that writes checkpoints through the FileSystem-based manager, and the
+    caller's session confs are identical before and after the drain."""
+    before = spark.conf.getAll
+    seen = []
+    harness.run(lambda s: s, output_mode="append",
+                foreach_batch=lambda batch_df, _: seen.append(
+                    batch_df.sparkSession.conf.get(CHECKPOINT_MANAGER_CONF, None)))
+    assert len(seen) == 4 and set(seen) == {CHECKPOINT_FILE_MANAGER}, seen
+    assert spark.conf.getAll == before
 
 
 def test_drain_timeout_raises_and_stops(spark, harness):
@@ -308,7 +324,11 @@ def test_checkpoint_recovery_exactly_once(spark):
 
     The first run writes its checkpoint at a state partition count other
     than the machine's (as a checkpoint from an older build would); the
-    restart goes through ``drain`` and must keep the recorded count."""
+    restart goes through ``drain`` and must keep the recorded count. The
+    first run is a raw ``writer.start()``, so it writes through Spark's
+    default FileContext-based checkpoint manager, and the restart reads it
+    through the FileSystem-based one that ``drain`` sets: checkpoints
+    written before ``drain`` chose the manager still restart."""
     import uuid
 
     h = EventStreamHarness(spark, SMOKE_SF_DIR, n_chunks=4)
@@ -329,6 +349,7 @@ def test_checkpoint_recovery_exactly_once(spark):
                     .format("memory").queryName(name))
 
         with checkpoint_dir(spark, "lts_recov") as ckpt:
+            assert spark.conf.get(CHECKPOINT_MANAGER_CONF, None) is None
             with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(recorded)}):
                 q1 = (writer(f"lts_recov1_{uuid.uuid4().hex[:6]}")
                       .option("checkpointLocation", ckpt)

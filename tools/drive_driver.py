@@ -14,7 +14,8 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as e
 from tests.conftest import assert_parity, duckdb_views
@@ -51,6 +52,9 @@ if __name__ == "__main__":
     ap.add_argument("names", nargs="*")
     args = ap.parse_intermixed_args()
 
+    # Spark's Python workers import the engine too, from any working directory
+    old = os.environ.get("PYTHONPATH")
+    os.environ["PYTHONPATH"] = ROOT + (os.pathsep + old if old else "")
     from pyspark.sql import SparkSession
     spark = (SparkSession.builder.master("local[8]")
              .config("spark.sql.shuffle.partitions", "8")
