@@ -8,12 +8,7 @@ partitions with AQE coalescing them at runtime. Each streaming query starts
 through ``streaming.harness.drain`` with ``defaultParallelism`` shuffle
 partitions — one state-store partition per core, fixed in the query's
 checkpoint — because streaming runs without AQE and pays a fixed cost per
-state partition on every micro-batch. ``drain`` also writes each query's
-checkpoint through Spark's FileSystem-based checkpoint manager, whose
-rename is one atomic ``rename(2)`` on a local filesystem: the default
-FileContext manager forks a ``readlink`` process per renamed file when
-Hadoop's native library is missing, 1,008 of the 1,396 forks that
-``tools/fork_census.py`` counts in one sf0.001 speed-layer drain.
+state partition on every micro-batch.
 
 Four environment settings reach the session: ``SPARK_GRAFT_CPUS``,
 ``SPARK_GRAFT_DRIVER_MEM``, ``SPARK_GRAFT_WAREHOUSE`` and
@@ -31,6 +26,8 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 SHUFFLE_PARTITIONS = 32
+CHECKPOINT_FILE_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
+                           "FileSystemBasedCheckpointFileManager")
 
 
 def get_spark(app_name: str = "lambdatotheslaughter_spark") -> SparkSession:
@@ -58,6 +55,12 @@ def get_spark(app_name: str = "lambdatotheslaughter_spark") -> SparkSession:
             "SPARK_GRAFT_WAREHOUSE", "/tmp/lts_spark_warehouse"))
         .config("spark.sql.streaming.checkpointLocation", os.environ.get(
             "SPARK_GRAFT_CKPT", "/tmp/lts_spark_ckpt"))
+        # Spark's default FileContext manager resolves links on every rename,
+        # and without Hadoop's native library that forks a `readlink` from
+        # the driver per state-store, offset, commit or source-log file. This
+        # one renames with FileSystem.rename, a single atomic rename(2) on a
+        # local filesystem, and writes the same checkpoint layout.
+        .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

@@ -13,22 +13,9 @@ partitions with AQE, while each streaming query shuffles into
 ``defaultParallelism`` partitions — one state-store partition per core for
 a stateful query, fixed in its checkpoint from the first batch on, and as
 many files per ``foreachBatch`` merge. Checkpoints live under the session's
-``spark.sql.streaming.checkpointLocation`` root.
-
-``drain`` also writes each checkpoint through Spark's FileSystem-based
-checkpoint manager instead of its default FileContext-based one. On Hadoop's
-local filesystem without the native library, the FileContext manager's
-rename resolves links by forking a ``readlink`` process from the driver JVM
-for every state-store, offset and commit file it writes. In one sf0.001
-drain of the benchmark's speed-layer pipeline (11 micro-batches over two
-queries), ``tools/fork_census.py`` counted 1,396 forks, about 127 per
-micro-batch: 1,008 ``readlink`` from that rename and 387 ``chmod`` from file
-creation. Through the FileSystem manager the same drain forks 428 times,
-and its 40 ``readlink`` all come from the file-source log. The FileSystem
-manager renames with ``FileSystem.rename``, one POSIX ``rename(2)`` on the
-local filesystem, so a reader or a crash still finds the old file or the
-new one, and checkpoint files keep their layout: a checkpoint written
-through the FileContext manager restarts through ``drain``.
+``spark.sql.streaming.checkpointLocation`` root and are written through its
+``spark.sql.streaming.checkpointFileManagerClass``; ``session.get_spark``
+sets both.
 """
 
 from __future__ import annotations
@@ -47,9 +34,6 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from lambdatotheslaughter_spark.session import scoped_conf
 from lambdatotheslaughter_spark.tables import load_table
-
-CHECKPOINT_FILE_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
-                           "FileSystemBasedCheckpointFileManager")
 
 
 @contextmanager
@@ -81,25 +65,13 @@ def drain(spark: SparkSession, writer: DataStreamWriter, checkpoint: str,
     that another thread starts in the same session meanwhile would see the
     streaming count.
 
-    The query's checkpoint manager is chosen the same way:
-    ``spark.sql.streaming.checkpointFileManagerClass`` is
-    ``CHECKPOINT_FILE_MANAGER`` while it starts, so its state stores, its
-    offset and commit logs and ``batch_df.sparkSession`` rename through
-    ``FileSystem.rename``. Spark's default FileContext manager forks a
-    ``readlink`` per renamed file on a local filesystem without Hadoop's
-    native library, about 92 of the 127 forks per micro-batch that
-    ``tools/fork_census.py`` counts. The file-source log, which the stream
-    thread opens after the caller's conf is back, keeps Spark's default.
-
     A query that fails raises its ``StreamingQueryException``; one still
     running after ``timeout`` seconds is stopped and raises
     ``TimeoutError``, so a stalled drain never hands back partial output.
     """
     writer = writer.option("checkpointLocation", checkpoint).trigger(availableNow=True)
     with scoped_conf(spark, {"spark.sql.shuffle.partitions":
-                             str(spark.sparkContext.defaultParallelism),
-                             "spark.sql.streaming.checkpointFileManagerClass":
-                             CHECKPOINT_FILE_MANAGER}):
+                             str(spark.sparkContext.defaultParallelism)}):
         query = start(writer)
     if not query.awaitTermination(timeout):
         query.stop()

@@ -17,15 +17,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.operators import streaming_twins as tw
-from lambdatotheslaughter_spark.session import scoped_conf
+from lambdatotheslaughter_spark.session import CHECKPOINT_FILE_MANAGER, scoped_conf
 from lambdatotheslaughter_spark.streaming.harness import (
-    CHECKPOINT_FILE_MANAGER, EventStreamHarness, checkpoint_dir, drain,
-    drop_serving, latest_per_user, read_serving, upsert_foreach_batch)
+    EventStreamHarness, checkpoint_dir, drain, drop_serving, latest_per_user,
+    read_serving, upsert_foreach_batch)
 from lambdatotheslaughter_spark.tables import load_table
 from tests.conftest import SMOKE_SF_DIR, canonical_rows
 
 
 CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+FILE_CONTEXT_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
+                        "FileContextBasedCheckpointFileManager")
 
 
 @pytest.fixture
@@ -57,8 +59,9 @@ def test_tumbling_agg_twin(spark, harness):
 
 def test_drain_checkpoints_through_filesystem_manager(spark, harness):
     """Every micro-batch of a query started by ``drain`` runs in a session
-    that writes checkpoints through the FileSystem-based manager, and the
-    caller's session confs are identical before and after the drain."""
+    that writes checkpoints through the FileSystem-based manager that
+    ``get_spark`` sets, and the caller's session confs are identical before
+    and after the drain."""
     before = spark.conf.getAll
     seen = []
     harness.run(lambda s: s, output_mode="append",
@@ -325,10 +328,10 @@ def test_checkpoint_recovery_exactly_once(spark):
     The first run writes its checkpoint at a state partition count other
     than the machine's (as a checkpoint from an older build would); the
     restart goes through ``drain`` and must keep the recorded count. The
-    first run is a raw ``writer.start()``, so it writes through Spark's
-    default FileContext-based checkpoint manager, and the restart reads it
-    through the FileSystem-based one that ``drain`` sets: checkpoints
-    written before ``drain`` chose the manager still restart."""
+    first run also pins Spark's default FileContext-based checkpoint
+    manager, and the restart reads its checkpoint through the
+    FileSystem-based one that ``get_spark`` sets: checkpoints written
+    before the session chose that manager still restart."""
     import uuid
 
     h = EventStreamHarness(spark, SMOKE_SF_DIR, n_chunks=4)
@@ -349,8 +352,8 @@ def test_checkpoint_recovery_exactly_once(spark):
                     .format("memory").queryName(name))
 
         with checkpoint_dir(spark, "lts_recov") as ckpt:
-            assert spark.conf.get(CHECKPOINT_MANAGER_CONF, None) is None
-            with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(recorded)}):
+            with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(recorded),
+                                     CHECKPOINT_MANAGER_CONF: FILE_CONTEXT_MANAGER}):
                 q1 = (writer(f"lts_recov1_{uuid.uuid4().hex[:6]}")
                       .option("checkpointLocation", ckpt)
                       .trigger(availableNow=True).start())
@@ -362,6 +365,7 @@ def test_checkpoint_recovery_exactly_once(spark):
                             os.path.join(h.input_dir, f))
 
             name2 = f"lts_recov2_{uuid.uuid4().hex[:6]}"
+            assert spark.conf.get(CHECKPOINT_MANAGER_CONF) == CHECKPOINT_FILE_MANAGER
             q2 = drain(spark, writer(name2), ckpt)
 
         # exactly-once convergence: restarted query's final complete-mode

@@ -1,14 +1,17 @@
 """Count the processes the driver JVM forks during one speed-layer drain.
 
-Usage: python tools/fork_census.py --sf-dir DIR [--chunks N]
+Usage: python tools/fork_census.py --sf-dir DIR
 
 Starts the engine's session with a JFR recording in the driver JVM
 (``-XX:StartFlightRecording`` through ``PYSPARK_SUBMIT_ARGS``
-``--driver-java-options``), stages the ``events`` table at DIR as N
-micro-batch files, and drains them through the speed layer's two queries,
-each through ``streaming.harness.drain``: envelope → watermark dedup →
+``--driver-java-options``), stages the ``events`` table at DIR as
+micro-batch files, and drains them through its own copy of the two queries
+of perfbench's ``speed_layer_ingest``, each through
+``streaming.harness.drain``: envelope → watermark dedup →
 ``upsert_foreach_batch`` into a fresh serving table, then the stateful
-``tumbling_agg``. It prints the ``jdk.ProcessStart`` events recorded during
+``tumbling_agg``. The file count and watermark delay are perfbench's
+(``workloads.STREAM_CHUNKS``, ``datagen.WATERMARK_DELAY``); the events are
+DIR's, not perfbench's seeded stream. It prints the ``jdk.ProcessStart`` events recorded during
 the drain, counted by command, then by command, first Spark frame on the
 stack that forked and the writer behind it (``-`` when the 256 innermost
 frames hold none). Staging and session start-up are left out: the
@@ -26,9 +29,11 @@ import sys
 import tempfile
 from collections import Counter
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 
-WATERMARK_DELAY = "6 hours"
+from datagen import WATERMARK_DELAY  # noqa: E402
+from workloads import STREAM_CHUNKS  # noqa: E402
 
 
 def forks(jvm, jfr_tool: str, path: str) -> Counter:
@@ -59,7 +64,6 @@ def forks(jvm, jfr_tool: str, path: str) -> Counter:
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--sf-dir", required=True)
-    ap.add_argument("--chunks", type=int, default=5)
     args = ap.parse_args()
 
     work = tempfile.mkdtemp(prefix="lts_fork_census_")
@@ -76,7 +80,7 @@ def main() -> None:
     spark = get_spark("fork_census")
     jvm = spark.sparkContext._jvm
     jfr_tool = os.path.join(jvm.System.getProperty("java.home"), "bin", "jfr")
-    harness = EventStreamHarness(spark, args.sf_dir, n_chunks=args.chunks)
+    harness = EventStreamHarness(spark, args.sf_dir, n_chunks=STREAM_CHUNKS)
     try:
         def ingest(s):
             return (parse_envelope(to_envelope(s))
@@ -95,7 +99,7 @@ def main() -> None:
         harness.cleanup()
         shutil.rmtree(work, ignore_errors=True)
 
-    print(f"{sum(counts.values())} forks in one drain of {args.chunks} files "
+    print(f"{sum(counts.values())} forks in one drain of {STREAM_CHUNKS} files "
           f"({batches} micro-batches over 2 queries)")
     by_command = Counter()
     for (command, _, _), n in counts.items():
