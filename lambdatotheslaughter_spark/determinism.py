@@ -13,11 +13,18 @@ final sum is bit-identical regardless of partial-aggregation order. Cast the
 result back to DOUBLE for a plain schema. This is also the right call at
 100 TB: it makes results reproducible across cluster sizes and AQE re-plans,
 not just across engines.
+
+The moment rule: a statistic over exact sums (BIGINT or decimal power
+sums Σ1, Σx, Σx², …, cross sums Σxy) finishes in one fixed double
+expression, written the same way in the Spark plan and the DuckDB oracle,
+so each step is one correctly-rounded IEEE operation. Where doubles must
+be added, :func:`ordered_fold` adds them in key order. The kernels below
+spell each finish once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEC = "decimal(38,6)"
@@ -45,6 +52,124 @@ def oracle_davg(expr: str) -> str:
     """DuckDB twin of :func:`davg`."""
     return (f"CAST(CAST(SUM(CAST(({expr}) AS DECIMAL(38,6))) AS DOUBLE)"
             f" / COUNT({expr}) AS DOUBLE)")
+
+
+# --- exact moment kernels --------------------------------------------------
+
+
+def ordered_fold(keys: list[str], term: Column) -> Column:
+    """Σ term over a group, added in ascending ``keys`` order: the twin of
+    the oracles' ``list_sum(list(term ORDER BY keys))``, so the double sum
+    is associated identically in both engines."""
+    return F.aggregate(
+        F.array_sort(F.collect_list(F.struct(*keys, term.alias("term")))),
+        F.lit(0.0), lambda acc, x: acc + x["term"])
+
+
+def power_sums(df: DataFrame, keys: list[str], col: str) -> DataFrame:
+    """(keys…, n, s1, s2): count, Σx and Σx² of ``col`` per group, BIGINT."""
+    return df.groupBy(*keys).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(col).cast("bigint").alias("s1"),
+        F.sum(F.col(col) * F.col(col)).cast("bigint").alias("s2"))
+
+
+def wide_power_sums(col: str) -> list[Column]:
+    """Aggregates (n, s1, s2) of ``col``: count and Σx as BIGINT, Σx² as
+    decimal(38,0), which squared cents overflow no sooner than Σx."""
+    return [F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum(col).cast("bigint").alias("s1"),
+            F.sum(F.col(col).cast("decimal(38,0)") * F.col(col))
+            .cast("decimal(38,0)").alias("s2")]
+
+
+def mean_var_pop() -> tuple[Column, Column]:
+    """(mean, population variance) over (n, s1, s2): s1/n, s2/n − mean²."""
+    nd = F.col("n").cast("double")
+    mu = F.col("s1").cast("double") / nd
+    return mu, F.col("s2").cast("double") / nd - mu * mu
+
+
+def centered_ss() -> Column:
+    """Σ(x − x̄)² over (n, s1, s2) as s2 − s1·s1/n."""
+    return (F.col("s2").cast("double")
+            - F.col("s1").cast("double") * F.col("s1").cast("double")
+            / F.col("n").cast("double"))
+
+
+def sample_var() -> Column:
+    """Sample variance over (n, s1, s2): (s2 − s1·s1/n)/(n − 1)."""
+    return centered_ss() / (F.col("n") - 1).cast("double")
+
+
+def two_group_sums(df: DataFrame, x: Column, in_a: Column,
+                   in_b: Column) -> DataFrame:
+    """(n1, n2, s1a, s2a, s1b, s2b): count, Σx and Σx² of groups a and b
+    in one conditional aggregate, BIGINT."""
+    return df.agg(
+        F.count(F.when(in_a, 1)).cast("bigint").alias("n1"),
+        F.count(F.when(in_b, 1)).cast("bigint").alias("n2"),
+        F.sum(F.when(in_a, x)).cast("bigint").alias("s1a"),
+        F.sum(F.when(in_a, x * x)).cast("bigint").alias("s2a"),
+        F.sum(F.when(in_b, x)).cast("bigint").alias("s1b"),
+        F.sum(F.when(in_b, x * x)).cast("bigint").alias("s2b"))
+
+
+def two_group_moments() -> tuple[Column, ...]:
+    """(n1, n2, mean1, mean2, var1, var2) as doubles over
+    :func:`two_group_sums`'s row; sample variance as (E[x²] − m²)·n/(n−1)."""
+    n1d = F.col("n1").cast("double")
+    n2d = F.col("n2").cast("double")
+    m1 = F.col("s1a").cast("double") / n1d
+    m2 = F.col("s1b").cast("double") / n2d
+    v1 = (F.col("s2a").cast("double") / n1d - m1 * m1) \
+        * (n1d / (n1d - F.lit(1.0)))
+    v2 = (F.col("s2b").cast("double") / n2d - m2 * m2) \
+        * (n2d / (n2d - F.lit(1.0)))
+    return n1d, n2d, m1, m2, v1, v2
+
+
+def central_moments() -> tuple[Column, Column, Column, Column]:
+    """(mean, m2, skewness, excess kurtosis) over raw power sums (n, s1,
+    s2, s3, s4); m2^1.5 is spelled m2·sqrt(m2), since libm pow() is not
+    portable across engines."""
+    nd = F.col("n").cast("double")
+    a1, a2, a3, a4 = (F.col(c).cast("double") / nd
+                      for c in ("s1", "s2", "s3", "s4"))
+    m2 = a2 - a1 * a1
+    m3 = a3 - F.lit(3.0) * a1 * a2 + F.lit(2.0) * a1 * a1 * a1
+    m4 = (a4 - F.lit(4.0) * a1 * a3 + F.lit(6.0) * a1 * a1 * a2
+          - F.lit(3.0) * a1 * a1 * a1 * a1)
+    return (a1, m2, m3 / (m2 * F.sqrt(m2)),
+            m4 / (m2 * m2) - F.lit(3.0))
+
+
+def pearson_finish(ax: Column, ay: Column, axy: Column, axx: Column,
+                   ayy: Column) -> Column:
+    """Pearson r from the five means E[x], E[y], E[xy], E[x²], E[y²]."""
+    return (axy - ax * ay) / F.sqrt((axx - ax * ax) * (ayy - ay * ay))
+
+
+def pearson_from_sums(n: str, sx: str, sy: str, sxy: str, sxx: str,
+                      syy: str) -> Column:
+    """Pearson r from the count and the five exact sums, each cast to
+    double and divided by the count."""
+    nd = F.col(n).cast("double")
+    return pearson_finish(*(F.col(c).cast("double") / nd
+                            for c in (sx, sy, sxy, sxx, syy)))
+
+
+def integer_corr() -> Column:
+    """Pearson r over exact sums (k, sx, sy, sxy, sxx, syy) in integer
+    form, (k·sxy − sx·sy) / (√(k·sxx − sx²)·√(k·syy − sy²)), NULL when
+    either spread is zero."""
+    k = F.col("k")
+    num = (k * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
+    den = (F.sqrt((k * F.col("sxx") - F.col("sx") * F.col("sx"))
+                  .cast("double"))
+           * F.sqrt((k * F.col("syy") - F.col("sy") * F.col("sy"))
+                    .cast("double")))
+    return (num / F.nullif(den, F.lit(0.0))).cast("double")
 
 
 # --- exact integer-cents fast path -----------------------------------------
@@ -77,36 +202,36 @@ def round_cents(col: str) -> Column:
     return F.round(F.col(col) * 100, 0).cast("bigint")
 
 
-def _scaled(col: Column | str, dp: int) -> Column:
-    """Exact dp-decimal → integer recovery (see :func:`iround`)."""
+def _scaled(col: Column | str) -> Column:
+    """Exact 2-decimal → integer cents recovery (see :func:`iround`)."""
     c = F.col(col) if isinstance(col, str) else col
-    return iround(c * (10 ** dp))
+    return iround(c * 100)
 
 
-def csum(col: Column | str, dp: int = 2) -> Column:
-    """Exact SUM of a dp-decimal double via integer scaling."""
-    return (F.sum(_scaled(col, dp)).cast("double") / float(10 ** dp))
+def csum(col: Column | str) -> Column:
+    """Exact SUM of a 2-decimal double via integer cents."""
+    return F.sum(_scaled(col)).cast("double") / 100.0
 
 
-def cavg(col: Column | str, dp: int = 2) -> Column:
+def cavg(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
-    return (F.sum(_scaled(c, dp)).cast("double") / float(10 ** dp) / F.count(c))
+    return F.sum(_scaled(c)).cast("double") / 100.0 / F.count(c)
 
 
-def oracle_csum(expr: str, dp: int = 2) -> str:
-    return (f"(CAST(SUM(CAST(round(({expr}) * {10 ** dp}, 0) AS BIGINT)) AS DOUBLE)"
-            f" / {float(10 ** dp)})")
+def oracle_csum(expr: str) -> str:
+    return (f"(CAST(SUM(CAST(round(({expr}) * 100, 0) AS BIGINT)) AS DOUBLE)"
+            f" / 100.0)")
 
 
-def oracle_cavg(expr: str, dp: int = 2) -> str:
-    return (f"(CAST(SUM(CAST(round(({expr}) * {10 ** dp}, 0) AS BIGINT)) AS DOUBLE)"
-            f" / {float(10 ** dp)} / COUNT({expr}))")
+def oracle_cavg(expr: str) -> str:
+    return (f"(CAST(SUM(CAST(round(({expr}) * 100, 0) AS BIGINT)) AS DOUBLE)"
+            f" / 100.0 / COUNT({expr}))")
 
 
 def disc_price_csum(price: str, disc: str) -> Column:
     """Exact SUM(price*(1-disc)) for 2-decimal inputs:
     Σ P·(100−D) / 10^4 with P = price·10², D = disc·10²."""
-    return (F.sum(_scaled(price, 2) * (100 - _scaled(disc, 2)))
+    return (F.sum(_scaled(price) * (100 - _scaled(disc)))
             .cast("double") / 1e4)
 
 
@@ -117,8 +242,8 @@ def oracle_disc_price_csum(price: str, disc: str) -> str:
 
 def charge_csum(price: str, disc: str, tax: str) -> Column:
     """Exact SUM(price*(1-disc)*(1+tax)): Σ P·(100−D)·(100+T) / 10^6."""
-    return (F.sum(_scaled(price, 2) * (100 - _scaled(disc, 2))
-                  * (100 + _scaled(tax, 2))).cast("double") / 1e6)
+    return (F.sum(_scaled(price) * (100 - _scaled(disc))
+                  * (100 + _scaled(tax))).cast("double") / 1e6)
 
 
 # --- scale-adaptive selection ----------------------------------------------
@@ -148,7 +273,7 @@ def charge_dsum(price: str, disc: str, tax: str) -> Column:
                   .cast(DEC)).cast("double"))
 
 
-def estimate_rows(sf_dir: str, table: str, bytes_per_row: int = 8) -> int:
+def estimate_rows(sf_dir: str, table: str) -> int:
     """Conservative row-count UPPER bound from parquet file size — no Spark
     job, no footer read. Measured compressed lineitem here is ~17 bytes/row
     (dictionary-heavy), so dividing by 8 overestimates ≥2×; overestimation
@@ -165,7 +290,7 @@ def estimate_rows(sf_dir: str, table: str, bytes_per_row: int = 8) -> int:
                    for f in os.listdir(path) if f.endswith(".parquet"))
     else:
         size = os.path.getsize(path)
-    return size // bytes_per_row
+    return size // 8
 
 
 # Fallback row gate when executor memory is unreadable (a fixed
@@ -216,19 +341,18 @@ def bcast_row_budget(spark) -> int:
 
 def broadcast_if_bounded(df, sf_dir: str, table: str = "part",
                          max_rows: int | None = None):
-    """Broadcast-hint an O(V) graph score/mask vector only while V is
+    """Broadcast-hint ``df`` only while ``table``'s estimated rows are at
+    most ``max_rows``, i.e. while df, which grows with that table, is
     provably broadcastable. An explicit F.broadcast() hint overrides
     autoBroadcastJoinThreshold UNCONDITIONALLY — BroadcastExchangeExec
     hard-fails past 8 GiB / 512M rows rather than falling back — so the
-    degrade-to-hash-join path the graph kernels promise only exists if
-    the hint itself is lifted at scale. V for the co-purchase kernels is
-    bounded by the part dimension; estimate_rows overestimates ≥2×, so
-    the gate can only lift the hint early, never broadcast too big.
-    The default gate is memory-derived per session (bcast_row_budget),
-    not a fixed constant: hinting or lifting changes
-    only the physical join strategy, never values."""
-    from pyspark.sql import functions as F
-
+    degrade-to-shuffle-join path the callers promise only exists if
+    the hint itself is lifted at scale; estimate_rows overestimates ≥2×,
+    so the gate can only lift the hint early, never broadcast too big.
+    The default bounds the O(V) graph score/mask vectors of the
+    co-purchase kernels (V bounded by the part dimension) with a
+    memory-derived per-session gate (bcast_row_budget). Hinting or
+    lifting changes only the physical join strategy, never values."""
     if max_rows is None:
         max_rows = bcast_row_budget(df.sparkSession)
     if estimate_rows(sf_dir, table) <= max_rows:

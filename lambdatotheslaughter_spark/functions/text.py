@@ -13,10 +13,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def tokens(text_col: str = "text") -> Column:
-    """Whitespace tokenization (the corpus is space-separated by
-    construction — FIXTURES.md)."""
-    return F.split(text_col, " ")
+def tokens() -> Column:
+    """Whitespace tokenization of the ``text`` column (the corpus is
+    space-separated by construction — FIXTURES.md)."""
+    return F.split("text", " ")
 
 
 def shingles3(toks: Column | str = "toks") -> Column:

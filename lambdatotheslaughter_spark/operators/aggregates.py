@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.bucketed import bucketed_order
 from lambdatotheslaughter_spark.determinism import (
-    iround,
+    central_moments, iround,
     cavg, charge_csum, csum, davg, disc_price_csum, dsum, estimate_rows,
     money_aggs, oracle_cavg, oracle_charge_csum, oracle_csum, oracle_davg,
     oracle_disc_price_csum, oracle_dsum, round_cents)
@@ -544,21 +544,13 @@ def agg_skew_kurt_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(xc * xc).alias("s2"),
         F.sum(xc * xc * xc).alias("s3"),
         F.sum(xc * xc * xc * xc).alias("s4"))
-    nd = F.col("n").cast("double")
-    a1 = F.col("s1").cast("double") / nd
-    a2 = F.col("s2").cast("double") / nd
-    a3 = F.col("s3").cast("double") / nd
-    a4 = F.col("s4").cast("double") / nd
-    m2 = a2 - a1 * a1
-    m3 = a3 - F.lit(3.0) * a1 * a2 + F.lit(2.0) * a1 * a1 * a1
-    m4 = (a4 - F.lit(4.0) * a1 * a3 + F.lit(6.0) * a1 * a1 * a2
-          - F.lit(3.0) * a1 * a1 * a1 * a1)
+    mean, m2, skew, kurt = central_moments()
     return s.select(
         "event_type", "n",
-        (a1 / F.lit(100.0)).alias("mean_value"),
+        (mean / F.lit(100.0)).alias("mean_value"),
         m2.alias("m2_cents2"),
-        (m3 / (m2 * F.sqrt(m2))).alias("skewness"),
-        (m4 / (m2 * m2) - F.lit(3.0)).alias("excess_kurtosis"))
+        skew.alias("skewness"),
+        kurt.alias("excess_kurtosis"))
 
 
 _HIST_ORACLE = """

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.bucketed import bucketed_order
 from lambdatotheslaughter_spark.determinism import (
-    estimate_rows, iround, round_cents)
+    broadcast_if_bounded, iround, ordered_fold, round_cents)
 from lambdatotheslaughter_spark.functions.text import (
     SHINGLE2_SQL, SHINGLE3_SQL, md5_int60, md5_minhashes, shingles2,
     shingles3, tokens)
@@ -97,8 +97,7 @@ def llm_dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 (-F.col("doc_id")).alias("neg_id")))
                  .alias("m"))
             .select("cluster_id", (-F.col("m.neg_id")).alias("survivor_id")))
-    if estimate_rows(sf_dir, "documents") <= 1_000_000:
-        surv = F.broadcast(surv)
+    surv = broadcast_if_bounded(surv, sf_dir, "documents", 1_000_000)
     return (c.join(surv, "cluster_id")
             .select("doc_id", "cluster_id", "survivor_id",
                     (F.col("doc_id") == F.col("survivor_id"))
@@ -620,8 +619,7 @@ def llm_prompt_template_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select("doc_id", F.explode(shingles3("toks")).alias("s"))
           .localCheckpoint(eager=False))  # df build + join-back share it
     df_tab = sh.groupBy("s").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    if estimate_rows(sf_dir, "documents") <= 1_000_000:
-        df_tab = F.broadcast(df_tab)
+    df_tab = broadcast_if_bounded(df_tab, sf_dir, "documents", 1_000_000)
     boiler = (F.col("df") >= _TEMPLATE_DF_MIN).cast("long")
     return (sh.join(df_tab, "s")
             .groupBy("doc_id")
@@ -2938,6 +2936,21 @@ FROM ov
 """
 
 
+def _clipped_overlap(pred: DataFrame, gold: DataFrame, unit: str) -> DataFrame:
+    """(doc_id, n_overlap): the clipped multiset overlap
+    Σ_u min(c_pred, c_gold) of two (doc_id, ``unit``) frames, through a
+    full outer join of their per-(doc, unit) count tables."""
+    pc = (pred.groupBy("doc_id", unit)
+          .agg(F.count(F.lit(1)).cast("bigint").alias("cp")))
+    gc = (gold.groupBy("doc_id", unit)
+          .agg(F.count(F.lit(1)).cast("bigint").alias("cg")))
+    return (pc.join(gc, ["doc_id", unit], "full_outer")
+            .groupBy("doc_id")
+            .agg(F.sum(F.least(F.coalesce("cp", F.lit(0)),
+                               F.coalesce("cg", F.lit(0))))
+                 .cast("bigint").alias("n_overlap")))
+
+
 @register("llm_eval_token_f1", oracle=_F1_ORACLE)
 def llm_eval_token_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQuAD-style token-overlap F1 between a prediction span and a gold
@@ -2960,15 +2973,7 @@ def llm_eval_token_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.explode(F.slice("l", 1, 12)).alias("t"))
     gold = base.select("doc_id",
                        F.explode(F.slice("l", 6, 12)).alias("t"))
-    pc = (pred.groupBy("doc_id", "t")
-          .agg(F.count(F.lit(1)).cast("bigint").alias("cp")))
-    gc = (gold.groupBy("doc_id", "t")
-          .agg(F.count(F.lit(1)).cast("bigint").alias("cg")))
-    ov = (pc.join(gc, ["doc_id", "t"], "full_outer")
-          .groupBy("doc_id")
-          .agg(F.sum(F.least(F.coalesce("cp", F.lit(0)),
-                             F.coalesce("cg", F.lit(0))))
-               .cast("bigint").alias("n_overlap")))
+    ov = _clipped_overlap(pred, gold, "t")
     p = F.col("n_overlap").cast("double") / F.lit(12.0)
     return ov.select(
         "doc_id",
@@ -3187,15 +3192,7 @@ def llm_eval_rouge2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pred = base.select("doc_id", bigrams(1, 11).alias("g"))
     gold = base.select("doc_id", bigrams(6, 16).alias("g"))
-    pc = (pred.groupBy("doc_id", "g")
-          .agg(F.count(F.lit(1)).cast("bigint").alias("cp")))
-    gc = (gold.groupBy("doc_id", "g")
-          .agg(F.count(F.lit(1)).cast("bigint").alias("cg")))
-    ov = (pc.join(gc, ["doc_id", "g"], "full_outer")
-          .groupBy("doc_id")
-          .agg(F.sum(F.least(F.coalesce("cp", F.lit(0)),
-                             F.coalesce("cg", F.lit(0))))
-               .cast("bigint").alias("n_overlap")))
+    ov = _clipped_overlap(pred, gold, "g")
     p = F.col("n_overlap").cast("double") / F.lit(11.0)
     return ov.select(
         "doc_id", "n_overlap",
@@ -4346,10 +4343,7 @@ def llm_topic_coherence_umass(spark: SparkSession,
                  / F.col("dj").cast("double"))
     return (co.groupBy("lang")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-                 F.round(F.aggregate(
-                     F.array_sort(F.collect_list(F.struct(
-                         F.col("ri"), F.col("rj"), term.alias("v")))),
-                     F.lit(0.0), lambda acc, x: acc + x["v"]), 6)
+                 F.round(ordered_fold(["ri", "rj"], term), 6)
                  .alias("umass_coherence")))
 
 
@@ -4532,10 +4526,7 @@ def llm_eval_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (bins.crossJoin(F.broadcast(tot))
             .groupBy("n")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_bins"),
-                 F.round(F.aggregate(
-                     F.array_sort(F.collect_list(F.struct(
-                         F.col("bin"), term.alias("v")))),
-                     F.lit(0.0), lambda acc, x: acc + x["v"]), 6)
+                 F.round(ordered_fold(["bin"], term), 6)
                  .alias("ece")))
 
 
@@ -4730,10 +4721,8 @@ def llm_mixture_kl_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                      "target_share",
                      (share * F.log(share / F.col("target_share")))
                      .alias("kl_term")))
-    kl = rows_.agg(F.round(F.aggregate(
-        F.array_sort(F.collect_list(F.struct(
-            F.col("tier"), F.col("kl_term").alias("v")))),
-        F.lit(0.0), lambda acc, x: acc + x["v"]), 6).alias("kl"))
+    kl = rows_.agg(
+        F.round(ordered_fold(["tier"], F.col("kl_term")), 6).alias("kl"))
     return (rows_.crossJoin(F.broadcast(kl))
             .select("tier", F.col("tok").alias("n_tokens"),
                     "actual_share", "target_share",

@@ -17,11 +17,11 @@ an iterative algorithm.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lambdatotheslaughter_spark.determinism import (broadcast_if_bounded,
-                                                    estimate_rows)
+from lambdatotheslaughter_spark.determinism import (
+    broadcast_if_bounded, estimate_rows, pearson_from_sums)
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.tables import load_table
 
@@ -113,8 +113,7 @@ def _oriented_triangles(und: DataFrame,
     # joins), plain shuffle join beyond.
     probe = oriented.select(F.least("u", "w").alias("x"),
                             F.greatest("u", "w").alias("y"))
-    if estimate_rows(sf_dir, "lineitem") <= 10_000_000:
-        probe = F.broadcast(probe)
+    probe = broadcast_if_bounded(probe, sf_dir, "lineitem", 10_000_000)
     return deg, wedges.join(probe, ["x", "y"])
 
 
@@ -127,6 +126,61 @@ def _triangle_edges(tri: DataFrame) -> DataFrame:
                  F.greatest("pivot", "y").alias("b")),
         F.struct(F.col("x").alias("a"), F.col("y").alias("b"))))
         .alias("e")).select("e.a", "e.b")
+
+
+def _weighted_transitions(spark: SparkSession,
+                          sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """PageRank's graph: (edges_w, nodes), the part transitions collapsed
+    to weighted distinct (src, dst, wt) pairs and the node set, both
+    checkpointed.
+
+    Collapsing multi-edges once pays because the transition list repeats
+    (src, dst) heavily (~10× here), and w copies of the exact integer
+    term (r div d) sum to w·(r div d) — bit-identical, at a tenth of the
+    per-round scan volume. The node set derives FROM the checkpointed
+    edges_w, so the lineitem window pass runs once per query (the
+    node-set lineage and the degree join would each re-run it). The node
+    set is checkpointed too: it anchors the initial ranks AND every
+    round's left join — uncheckpointed, the window+distinct subtree
+    re-evaluated up to 5× per run (~40% of the key's cost)."""
+    edges_w = (_transitions(load_table(spark, "lineitem", sf_dir))
+               .groupBy("src", "dst")
+               .agg(F.count(F.lit(1)).cast("bigint").alias("wt"))
+               .localCheckpoint(eager=False))
+    nodes = (edges_w.select(F.col("src").alias("node"))
+             .union(edges_w.select("dst")).distinct()
+             .localCheckpoint(eager=False))
+    return edges_w, nodes
+
+
+def _with_out_degree(edges_w: DataFrame) -> DataFrame:
+    """edges_w with each source's weighted out-degree d, checkpointed."""
+    deg = edges_w.groupBy("src").agg(F.sum("wt").cast("bigint").alias("d"))
+    return edges_w.join(deg, "src").localCheckpoint()
+
+
+def _pagerank_round(sf_dir: str, edges_deg: DataFrame, ranks: DataFrame,
+                    nodes: DataFrame, teleport: Column) -> DataFrame:
+    """One 1e-12 fixed-point PageRank round: (node, r), each node of
+    ``nodes`` getting ``teleport`` plus 85% of Σ wt·(r div d) over its
+    in-edges.
+
+    The O(V) rank/contrib vectors are broadcast so the edge list never
+    reshuffles (checkpointed frames carry no stats, so without the hint
+    each round planned a sort-merge join). The hint is SIZE-GATED
+    (broadcast_if_bounded): an explicit hint never falls back on its
+    own — BroadcastExchangeExec hard-fails past 8 GiB / 512M rows — so
+    past the V bound the gate lifts the hint and the round becomes a
+    hash join, still O(E)."""
+    contrib = (edges_deg.join(broadcast_if_bounded(ranks, sf_dir),
+                              edges_deg.src == ranks.node)
+               .select("dst", F.expr("wt * (r div d)").alias("c"))
+               .groupBy("dst").agg(F.sum("c").alias("s")))
+    return (nodes.join(broadcast_if_bounded(contrib, sf_dir),
+                       nodes.node == contrib.dst, "left")
+            .select("node",
+                    (teleport + F.expr("(85 * coalesce(s, 0)) div 100"))
+                    .cast("bigint").alias("r")))
 
 
 def _pagerank_oracle() -> str:
@@ -168,49 +222,17 @@ def graph_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominates and each round is a bounded pair of shuffles — the classic
     Pregel-as-dataflow shape, with AQE free to broadcast the rank vector
     while it is small."""
-    edges = _transitions(load_table(spark, "lineitem", sf_dir))
-    # collapse multi-edges to weighted distinct pairs ONCE: the
-    # transition list repeats (src, dst) heavily (~10× here), and w
-    # copies of the exact integer term (r div d) sum to w·(r div d) —
-    # bit-identical, at a tenth of the per-round scan volume. Checkpoint
-    # edges_w itself and derive the node set FROM it, so the lineitem
-    # window pass runs once per query (the node-set lineage and the
-    # degree join would each re-run it)
-    edges_w = (edges.groupBy("src", "dst")
-               .agg(F.count(F.lit(1)).cast("bigint").alias("wt"))
-               .localCheckpoint(eager=False))
-    # checkpoint the node set: it anchors the initial ranks AND every
-    # round's left join — uncheckpointed, the window+distinct subtree
-    # re-evaluated up to 5× per run (~40% of the key's cost)
-    nodes = (edges_w.select(F.col("src").alias("node"))
-             .union(edges_w.select("dst")).distinct()
-             .localCheckpoint(eager=False))
+    edges_w, nodes = _weighted_transitions(spark, sf_dir)
     n = nodes.count()  # one scalar; the driver never sees row data
     if n == 0:  # empty shard: no graph, no ranks (100 TB empty-partition edge)
         return nodes.select("node", F.lit(0).cast("bigint").alias("rank_fp"))
-    deg = edges_w.groupBy("src").agg(F.sum("wt").cast("bigint").alias("d"))
-    edges_deg = edges_w.join(deg, "src").localCheckpoint()
+    edges_deg = _with_out_degree(edges_w)
 
     ranks = nodes.withColumn("r", F.lit(_SCALE // n).cast("bigint"))
     teleport = (15 * _SCALE) // (100 * n)
     for _ in range(_ITERS):
-        # broadcast the O(V) rank/contrib vectors so the edge list
-        # never reshuffles (checkpointed frames carry no stats, so
-        # without the hint each round planned a sort-merge join). The
-        # hint is SIZE-GATED (broadcast_if_bounded): an explicit hint
-        # never falls back on its own — BroadcastExchangeExec hard-fails
-        # past 8 GiB / 512M rows — so past the V bound the gate lifts
-        # the hint and the round becomes a hash join, still O(E)
-        contrib = (edges_deg.join(broadcast_if_bounded(ranks, sf_dir),
-                                  edges_deg.src == ranks.node)
-                   .select("dst", F.expr("wt * (r div d)").alias("c"))
-                   .groupBy("dst").agg(F.sum("c").alias("s")))
-        ranks = (nodes.join(broadcast_if_bounded(contrib, sf_dir),
-                            nodes.node == contrib.dst, "left")
-                 .select("node",
-                         (F.lit(teleport)
-                          + F.expr("(85 * coalesce(s, 0)) div 100"))
-                         .cast("bigint").alias("r")))
+        ranks = _pagerank_round(sf_dir, edges_deg, ranks, nodes,
+                                F.lit(teleport))
     return ranks.select("node", F.col("r").alias("rank_fp"))
 
 
@@ -787,16 +809,9 @@ def graph_assortativity_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("du") * F.col("dv")).cast("bigint").alias("sxy"),
         F.sum(F.col("du") * F.col("du")).cast("bigint").alias("sx2"),
         F.sum(F.col("dv") * F.col("dv")).cast("bigint").alias("sy2"))
-    m2d = F.col("m2").cast("double")
-    ax = F.col("sx").cast("double") / m2d
-    ay = F.col("sy").cast("double") / m2d
-    axy = F.col("sxy").cast("double") / m2d
-    ax2 = F.col("sx2").cast("double") / m2d
-    ay2 = F.col("sy2").cast("double") / m2d
     return s.select(
         F.expr("m2 div 2").alias("n_edges"),
-        ((axy - ax * ay)
-         / F.sqrt((ax2 - ax * ax) * (ay2 - ay * ay)))
+        pearson_from_sums("m2", "sx", "sy", "sxy", "sx2", "sy2")
         .alias("assortativity"))
 
 
@@ -1267,18 +1282,7 @@ def graph_personalized_pagerank(spark: SparkSession,
     Scale shape: per round the same bounded pair of shuffles as global
     PageRank (edges join ranks on src, groupBy dst, node-set left
     join); the seed membership is a broadcast dimension join."""
-    edges = _transitions(load_table(spark, "lineitem", sf_dir))
-    # collapse multi-edges to weighted pairs once and derive the node set
-    # from the checkpointed edges_w (the graph_pagerank_fixed reasoning)
-    edges_w = (edges.groupBy("src", "dst")
-               .agg(F.count(F.lit(1)).cast("bigint").alias("wt"))
-               .localCheckpoint(eager=False))
-    # checkpoint the node set — it anchors the init AND every round's
-    # left join (uncheckpointed, the window+distinct subtree
-    # re-evaluated per reference)
-    nodes = (edges_w.select(F.col("src").alias("node"))
-             .union(edges_w.select("dst")).distinct()
-             .localCheckpoint(eager=False))
+    edges_w, nodes = _weighted_transitions(spark, sf_dir)
     part = load_table(spark, "part", sf_dir) \
         .where(F.col("p_size") <= 5).select(F.col("p_partkey").alias("sn"))
     seeds = nodes.join(F.broadcast(part), nodes.node == F.col("sn")) \
@@ -1287,8 +1291,7 @@ def graph_personalized_pagerank(spark: SparkSession,
     if ns == 0:  # empty shard / no seed qualifies: nothing is reachable
         return nodes.select("node", F.lit(0).cast("bigint").alias("ppr_fp")) \
             .where(F.lit(False))
-    deg = edges_w.groupBy("src").agg(F.sum("wt").cast("bigint").alias("d"))
-    edges_deg = edges_w.join(deg, "src").localCheckpoint()
+    edges_deg = _with_out_degree(edges_w)
     is_seed = F.col("sn2").isNotNull()
     seeds2 = seeds.select(F.col("node").alias("sn2"))
     teleport = (15 * _SCALE) // (100 * ns)
@@ -1318,19 +1321,7 @@ def graph_personalized_pagerank(spark: SparkSession,
                          F.when(is_seed, F.lit(_SCALE // ns))
                          .otherwise(F.lit(0)).cast("bigint").alias("r")))
     for _ in range(_PPR_ITERS):
-        # broadcast the O(V) vectors (size-gated — the bare hint would
-        # hard-fail, not degrade, past broadcast scale); the edge list
-        # never reshuffles while the gate holds
-        contrib = (edges_deg.join(broadcast_if_bounded(ranks, sf_dir),
-                                  edges_deg.src == ranks.node)
-                   .select("dst", F.expr("wt * (r div d)").alias("c"))
-                   .groupBy("dst").agg(F.sum("c").alias("s")))
-        ranks = (nt.join(broadcast_if_bounded(contrib, sf_dir),
-                         nt.node == contrib.dst, "left")
-                 .select("node",
-                         (F.col("t")
-                          + F.expr("(85 * coalesce(s, 0)) div 100"))
-                         .cast("bigint").alias("r")))
+        ranks = _pagerank_round(sf_dir, edges_deg, ranks, nt, F.col("t"))
     return (ranks.where(F.col("r") > 0)
             .select("node", F.col("r").alias("ppr_fp")))
 

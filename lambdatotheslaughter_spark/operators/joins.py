@@ -14,7 +14,7 @@ Scale notes baked into each shape:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.determinism import (
@@ -655,6 +655,41 @@ WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= {_GEO_R2}
 """
 
 
+def _geo_ring_pairs(spark: SparkSession, sf_dir: str, a: str,
+                    b: str) -> tuple[DataFrame, DataFrame, Column]:
+    """The md5-synthesized plane and its 3x3-ring candidates: (pts,
+    cand, d2). pts is (id, x, y); cand pairs each probe point ``a`` (xa,
+    ya), once per ring cell, with every build point ``b`` (xb, yb) in
+    that cell; d2 is their exact integer squared distance."""
+    c = load_table(spark, "customer", sf_dir)
+
+    def u32(axis: str):
+        return (F.conv(F.substring(F.md5(F.concat(
+            F.col("c_custkey").cast("string"), F.lit(f":{axis}"))), 1, 8),
+            16, 10).cast("bigint") % _GEO_GRID)
+
+    pts = c.select(F.col("c_custkey").alias("id"),
+                   u32("x").alias("x"), u32("y").alias("y"))
+    build = pts.select(
+        F.col("id").alias(b), F.col("x").alias("xb"),
+        F.col("y").alias("yb"),
+        F.floor(F.col("x") / _GEO_R).alias("cx"),
+        F.floor(F.col("y") / _GEO_R).alias("cy"))
+    ring = F.array([F.lit(i) for i in (-1, 0, 1)])
+    probe = (pts.select(F.col("id").alias(a), F.col("x").alias("xa"),
+                        F.col("y").alias("ya"),
+                        F.floor(F.col("x") / _GEO_R).alias("pcx"),
+                        F.floor(F.col("y") / _GEO_R).alias("pcy"))
+             .select("*", F.explode(ring).alias("dx"))
+             .select("*", F.explode(ring).alias("dy"))
+             .select(a, "xa", "ya",
+                     (F.col("pcx") + F.col("dx")).alias("cx"),
+                     (F.col("pcy") + F.col("dy")).alias("cy")))
+    d2 = ((F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb"))
+          + (F.col("ya") - F.col("yb")) * (F.col("ya") - F.col("yb")))
+    return pts, probe.join(build, ["cx", "cy"]), d2
+
+
 @register("geo_grid_neighbor_join", oracle=_GEO_NEIGHBOR_ORACLE)
 def geo_grid_neighbor_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spatial radius self-join via grid binning: every customer pair
@@ -680,34 +715,8 @@ def geo_grid_neighbor_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot-bucket cap from the LSH path. Each qualifying pair matches in
     exactly ONE (probe-ring, build-cell) combination, so no dedup pass
     is needed."""
-    c = load_table(spark, "customer", sf_dir)
-
-    def u32(axis: str):
-        return (F.conv(F.substring(F.md5(F.concat(
-            F.col("c_custkey").cast("string"), F.lit(f":{axis}"))), 1, 8),
-            16, 10).cast("bigint") % _GEO_GRID)
-
-    pts = c.select(F.col("c_custkey").alias("id"),
-                   u32("x").alias("x"), u32("y").alias("y"))
-    build = pts.select(
-        F.col("id").alias("b"), F.col("x").alias("xb"),
-        F.col("y").alias("yb"),
-        F.floor(F.col("x") / _GEO_R).alias("cx"),
-        F.floor(F.col("y") / _GEO_R).alias("cy"))
-    ring = F.explode(F.array([F.lit(i) for i in (-1, 0, 1)])).alias("dx")
-    probe = (pts.select(F.col("id").alias("a"), F.col("x").alias("xa"),
-                        F.col("y").alias("ya"),
-                        F.floor(F.col("x") / _GEO_R).alias("pcx"),
-                        F.floor(F.col("y") / _GEO_R).alias("pcy"))
-             .select("*", ring)
-             .select("*", F.explode(F.array([F.lit(i) for i in (-1, 0, 1)]))
-                     .alias("dy"))
-             .select("a", "xa", "ya",
-                     (F.col("pcx") + F.col("dx")).alias("cx"),
-                     (F.col("pcy") + F.col("dy")).alias("cy")))
-    d2 = ((F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb"))
-          + (F.col("ya") - F.col("yb")) * (F.col("ya") - F.col("yb")))
-    return (probe.join(build, ["cx", "cy"])
+    _, cand, d2 = _geo_ring_pairs(spark, sf_dir, "a", "b")
+    return (cand
             .where((F.col("a") < F.col("b")) & (d2 <= F.lit(_GEO_R2)))
             .select("a", "b", d2.cast("bigint").alias("dist_sq")))
 
@@ -751,34 +760,8 @@ def geo_knn_within_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange, x9 map-side ring explode, density-bounded per-cell work)
     plus one combinable per-point MIN-struct fold and a final
     point-keyed left join to surface the NULL rows."""
-    c = load_table(spark, "customer", sf_dir)
-
-    def u32(axis: str):
-        return (F.conv(F.substring(F.md5(F.concat(
-            F.col("c_custkey").cast("string"), F.lit(f":{axis}"))), 1, 8),
-            16, 10).cast("bigint") % _GEO_GRID)
-
-    pts = c.select(F.col("c_custkey").alias("id"),
-                   u32("x").alias("x"), u32("y").alias("y"))
-    build = pts.select(
-        F.col("id").alias("nb"), F.col("x").alias("xb"),
-        F.col("y").alias("yb"),
-        F.floor(F.col("x") / _GEO_R).alias("cx"),
-        F.floor(F.col("y") / _GEO_R).alias("cy"))
-    probe = (pts.select(F.col("id").alias("pa"), F.col("x").alias("xa"),
-                        F.col("y").alias("ya"),
-                        F.floor(F.col("x") / _GEO_R).alias("pcx"),
-                        F.floor(F.col("y") / _GEO_R).alias("pcy"))
-             .select("*", F.explode(F.array([F.lit(i) for i in (-1, 0, 1)]))
-                     .alias("dx"))
-             .select("*", F.explode(F.array([F.lit(i) for i in (-1, 0, 1)]))
-                     .alias("dy"))
-             .select("pa", "xa", "ya",
-                     (F.col("pcx") + F.col("dx")).alias("cx"),
-                     (F.col("pcy") + F.col("dy")).alias("cy")))
-    d2 = ((F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb"))
-          + (F.col("ya") - F.col("yb")) * (F.col("ya") - F.col("yb")))
-    best = (probe.join(build, ["cx", "cy"])
+    pts, cand, d2 = _geo_ring_pairs(spark, sf_dir, "pa", "nb")
+    best = (cand
             .where((F.col("pa") != F.col("nb")) & (d2 <= F.lit(_GEO_R2)))
             .select(F.col("pa").alias("bid"),
                     F.struct(d2.cast("bigint").alias("d2"),

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.determinism import (
-    DEC, davg, estimate_rows, oracle_davg)
+    DEC, broadcast_if_bounded, davg, oracle_davg)
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.tables import load_table
 
@@ -194,40 +194,23 @@ def _lsh_candidate_pairs(sh: DataFrame) -> DataFrame:
     return all_pairs.unionByName(chained).distinct()
 
 
-_VERIFY_BROADCAST_MAX_PAIRS = 1_000_000  # ~16 MB of (long, long) pairs
-
-
 def _verified_near_dup_pairs(sh: DataFrame) -> DataFrame:
     """LSH candidates exact-verified: (a_id, b_id, jaccard) over the
     shingle-array DataFrame. Shared by the standalone dedup operator and
     the end-to-end pipeline (one implementation, no drift).
 
-    Size-dispatched verify join (same discipline as the CC fastpath and
-    the kNN broadcast fastpath): candidate count grows with the corpus's
-    duplicate MASS, not just its size, so it cannot be unconditionally
-    broadcast at 100 TB.
-
-    • count ≤ _VERIFY_BROADCAST_MAX_PAIRS: BROADCAST the candidates and
-      stream the corpus map-side, twice. The reverse order (shuffling the
-      shingle arrays to meet the pairs) measured ~0.5 s slower at sf0.1
-      and would move the whole corpus for a tiny pair set.
-    • above the cap: shuffle path — hash-partition on the join id.
-      The first join hints SHUFFLE_HASH with the bare (a_id, b_id) pairs
-      as the build side (16 B/row per-partition hash table); the second
-      join carries shingle-array payloads on BOTH sides, so it stays
-      sort-merge (spills gracefully instead of OOMing a hash table of
-      arrays). Nothing is broadcast, nothing is collected.
-    The pairs are localCheckpoint-ed before the dispatch count so the
-    verify join reads the materialized blocks instead of re-running the
-    minhash pipeline."""
-    cand = _lsh_candidate_pairs(sh).localCheckpoint(eager=False)
+    The verify join hash-partitions on the join id, because the candidate
+    count grows with the corpus's duplicate MASS, not just its size, so
+    the candidates cannot be broadcast at 100 TB. The first join hints
+    SHUFFLE_HASH with the bare (a_id, b_id) pairs as the build side
+    (16 B/row per-partition hash table); the second join carries
+    shingle-array payloads on BOTH sides, so it stays sort-merge (spills
+    gracefully instead of OOMing a hash table of arrays). Nothing is
+    broadcast, nothing is collected."""
+    cand = _lsh_candidate_pairs(sh)
     sa = sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b"))
     jac = _jaccard_spark(F.col("sh_a"), F.col("sh_b"))
-    if cand.count() <= _VERIFY_BROADCAST_MAX_PAIRS:
-        withsa = sa.join(F.broadcast(cand), "a_id")
-        return (sb.join(F.broadcast(withsa), "b_id")
-                .select("a_id", "b_id", jac.alias("jaccard")))
     withsa = sa.join(cand.hint("shuffle_hash"), "a_id")
     return (sb.join(withsa, "b_id")
             .select("a_id", "b_id", jac.alias("jaccard")))
@@ -619,6 +602,27 @@ def _norm_block(pdf):
     return _pdf_cached(pdf, "_lts_norm", _norm_prep)
 
 
+def _tile_blocks(lpdf, rpdf):
+    """The tile kernels' prologue: (il, ml, ir, mr), the ids and
+    normalized matrices of both sides (:func:`_norm_block`), or None when
+    either side is empty."""
+    if lpdf.empty:
+        return None
+    il, ml = _norm_block(lpdf)
+    ir, mr = _norm_block(rpdf)
+    if len(ir) == 0:
+        return None
+    return il, ml, ir, mr
+
+
+def _empty_pairs():
+    """The tile kernels' result for a tile without pairs."""
+    import pandas as pd
+
+    return pd.DataFrame({"a_id": [], "b_id": [], "cosine": []}).astype(
+        {"a_id": "int64", "b_id": "int64", "cosine": "float64"})
+
+
 def _unit_rows(vectors):
     """A pandas Series of float arrays as a float64 matrix with L2-unit
     rows; a zero row stays zero."""
@@ -757,14 +761,10 @@ def llm_sim_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def tile_topk(key, lpdf, rpdf):
         bi, bj = key
-        empty = pd.DataFrame({"a_id": [], "b_id": [], "cosine": []}).astype(
-            {"a_id": "int64", "b_id": "int64", "cosine": "float64"})
-        if lpdf.empty:
-            return empty
-        il, ml = _norm_block(lpdf)
-        ir, mr = _norm_block(rpdf)
-        if len(ir) == 0:
-            return empty
+        blocks = _tile_blocks(lpdf, rpdf)
+        if blocks is None:
+            return _empty_pairs()
+        il, ml, ir, mr = blocks
         # 12-dp rounding BEFORE tile-local selection, matching the global
         # merge's rounded order — see _tile_topk_kernel: truncating on raw
         # values lets GEMM noise evict a true tie member inside one tile.
@@ -1576,15 +1576,11 @@ def _tile_topk_kernel(k: int):
 
     def tile_topk(key, lpdf, rpdf):
         bi, bj = key
+        blocks = _tile_blocks(lpdf, rpdf)
+        if blocks is None:
+            return _empty_pairs()
+        il, ml, ir, mr = blocks
         cols = {"a_id": [], "b_id": [], "cosine": []}
-        empty = pd.DataFrame(cols).astype(
-            {"a_id": "int64", "b_id": "int64", "cosine": "float64"})
-        if lpdf.empty:
-            return empty
-        il, ml = _norm_block(lpdf)
-        ir, mr = _norm_block(rpdf)
-        if len(ir) == 0:
-            return empty
         # round to 12 dp HERE, before tile-local selection: the global
         # merge ranks on the 12-dp-rounded cosine, and truncating the
         # tile-local top-k on RAW values lets ~1-ulp GEMM noise evict the
@@ -2369,14 +2365,10 @@ def llm_sim_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def tile_radius(key, lpdf, rpdf):
         bi, bj = key
-        empty = pd.DataFrame({"a_id": [], "b_id": [], "cosine": []}).astype(
-            {"a_id": "int64", "b_id": "int64", "cosine": "float64"})
-        if lpdf.empty:
-            return empty
-        il, ml = _norm_block(lpdf)
-        ir, mr = _norm_block(rpdf)
-        if len(ir) == 0:
-            return empty
+        blocks = _tile_blocks(lpdf, rpdf)
+        if blocks is None:
+            return _empty_pairs()
+        il, ml, ir, mr = blocks
         sims = ml @ mr.T
         a = np.minimum.outer(il, ir).ravel()
         b = np.maximum.outer(il, ir).ravel()
@@ -2809,10 +2801,8 @@ def llm_dedup_incremental_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ≤ ~1M estimated docs ⇒ incoming ≈ ≤35k real docs ⇒ candidate
     # shingle-array broadcast stays well under driver memory
-    small = estimate_rows(sf_dir, "documents") <= 1_000_000
-
     def maybe_broadcast(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
+        return broadcast_if_bounded(df, sf_dir, "documents", 1_000_000)
 
     d = load_table(spark, "documents", sf_dir).where(F.size(_tokens()) >= 3)
     sh = d.select("doc_id", _tokens().alias("toks")) \
@@ -3174,17 +3164,11 @@ def _containment_pairs(docs: DataFrame, sf_dir: str) -> DataFrame:
              .agg(F.count(F.lit(1)).alias("inter")))
     na = sizes.select(F.col("doc_id").alias("a_id"), F.col("n").alias("n_a"))
     nb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n").alias("n_b"))
-    if estimate_rows(sf_dir, "documents") > 1_000_000:
-        # per-doc size table grows with the corpus: past broadcast scale
-        # let AQE plan shuffle joins (physical-only, value-identical)
-        return (inter.join(na, "a_id").join(nb, "b_id")
-                .where(10 * F.col("inter") >= 8 * F.least("n_a", "n_b"))
-                .select("a_id", "b_id",
-                        F.col("inter").cast("bigint").alias("inter"),
-                        (F.col("inter").cast("double")
-                         / F.least("n_a", "n_b").cast("double"))
-                        .alias("containment")))
-    return (inter.join(F.broadcast(na), "a_id").join(F.broadcast(nb), "b_id")
+    # per-doc size table grows with the corpus: past broadcast scale
+    # let AQE plan shuffle joins (physical-only, value-identical)
+    na = broadcast_if_bounded(na, sf_dir, "documents", 1_000_000)
+    nb = broadcast_if_bounded(nb, sf_dir, "documents", 1_000_000)
+    return (inter.join(na, "a_id").join(nb, "b_id")
             .where(10 * F.col("inter") >= 8 * F.least("n_a", "n_b"))
             .select("a_id", "b_id", F.col("inter").cast("bigint").alias("inter"),
                     (F.col("inter").cast("double")
@@ -3412,7 +3396,7 @@ def llm_dedup_span_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the shared 60-bit md5 keeps both engines' pair sets identical even
     under (vanishingly unlikely) hash collisions."""
     d = load_table(spark, "documents", sf_dir).select(
-        "doc_id", _tokens("text").alias("toks"))
+        "doc_id", _tokens().alias("toks"))
     base = d.select("doc_id", F.size("toks").cast("bigint").alias("n_tokens"))
     s = (d.where(F.size("toks") >= _SPAN_W)
          .select("doc_id", "toks",
@@ -4208,9 +4192,8 @@ def llm_embedding_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = e.count()
     import math
     bits = _PQ_M * int(math.log2(_PQ_K))
-    if n == 0:  # empty shard: nothing to train or encode; report the empty index
-        enc = spark.createDataFrame(
-            [], "vec_id bigint, err2_fp bigint, energy_fp bigint")
+
+    def report(enc: DataFrame) -> DataFrame:
         return enc.agg(
             F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
             F.lit(_PQ_M).cast("bigint").alias("m_subspaces"),
@@ -4218,6 +4201,10 @@ def llm_embedding_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(bits).cast("bigint").alias("bits_per_vector"),
             (F.sum("err2_fp").cast("double")
              / F.sum("energy_fp").cast("double")).alias("relative_mse"))
+
+    if n == 0:  # empty shard: nothing to train or encode; report the empty index
+        return report(spark.createDataFrame(
+            [], "vec_id bigint, err2_fp bigint, energy_fp bigint"))
     books = _pq_train_codebooks(e, n)
     sub = books.shape[2]
 
@@ -4238,17 +4225,8 @@ def llm_embedding_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "energy_fp": np.full(len(s), _PQ_ERR_SCALE, dtype="int64"),
             })
 
-    enc = e.mapInPandas(
-        encode, schema="vec_id bigint, err2_fp bigint, energy_fp bigint")
-    import math
-    bits = _PQ_M * int(math.log2(_PQ_K))
-    return enc.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
-        F.lit(_PQ_M).cast("bigint").alias("m_subspaces"),
-        F.lit(_PQ_K).cast("bigint").alias("k_codes"),
-        F.lit(bits).cast("bigint").alias("bits_per_vector"),
-        (F.sum("err2_fp").cast("double")
-         / F.sum("energy_fp").cast("double")).alias("relative_mse"))
+    return report(e.mapInPandas(
+        encode, schema="vec_id bigint, err2_fp bigint, energy_fp bigint"))
 
 
 # ---------------------------------------------------------------------------

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lambdatotheslaughter_spark.determinism import round_cents
+from lambdatotheslaughter_spark.determinism import ordered_fold, round_cents
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.tables import load_table
 
@@ -958,10 +958,7 @@ def dq_column_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                      / F.col("tot").cast("double"))
                    * F.log(F.col("n").cast("double")
                            / F.col("tot").cast("double")), 9)
-    ent = F.round(F.aggregate(
-        F.array_sort(F.collect_list(F.struct(F.col("v"),
-                                             term.alias("t")))),
-        F.lit(0.0), lambda acc, x: acc + x["t"]), 6)
+    ent = F.round(ordered_fold(["v"], term), 6)
     return (t.groupBy("col_name")
             .agg(F.max("k").cast("bigint").alias("n_distinct"),
                  F.max("tot").cast("bigint").alias("n_rows"),

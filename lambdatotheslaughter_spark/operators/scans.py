@@ -268,14 +268,19 @@ def source_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
         "docs_jsonl", sf_dir, "documents",
         lambda tmp: (load_table(spark, "documents", sf_dir)
                      .write.mode("overwrite").json(tmp)))
+    return _docs_json_summary(spark, out, "lang")
+
+
+def _docs_json_summary(spark: SparkSession, path: str, key: str) -> DataFrame:
+    """Documents written as JSON lines at ``path``, read back with an
+    EXPLICIT schema: per-``key`` doc count and char and id sums."""
     schema = ("doc_id bigint, text string, lang string, source string, "
               "n_chars bigint")
-    back = spark.read.schema(schema).json(out)
-    return back.groupBy("lang").agg(
+    back = spark.read.schema(schema).json(path)
+    return back.groupBy(key).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("total_chars"),
-        F.sum("doc_id").cast("bigint").alias("id_sum"),
-    )
+        F.sum("doc_id").cast("bigint").alias("id_sum"))
 
 
 _CSV_ORACLE = """
@@ -1923,13 +1928,7 @@ def source_jsonl_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .repartition(4)
                      .write.mode("overwrite")
                      .option("compression", "gzip").json(tmp)))
-    schema = ("doc_id bigint, text string, lang string, source string, "
-              "n_chars bigint")
-    back = spark.read.schema(schema).json(out)
-    return back.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").cast("bigint").alias("total_chars"),
-        F.sum("doc_id").cast("bigint").alias("id_sum"))
+    return _docs_json_summary(spark, out, "source")
 
 
 # ---------------------------------------------------------------------------
@@ -2066,21 +2065,25 @@ def txlog_snapshot_files(root: str, version: int) -> list[str]:
     return [_os.path.join(root, p) for p in sorted(live)]
 
 
-def _txlog_fixture(spark: SparkSession, sf_dir: str) -> str:
-    def build(tmp: str) -> None:
-        import os as _os
-        o = load_table(spark, "orders", sf_dir)
-        for i, mod in enumerate((0, 1, 2)):
-            (o.where(F.pmod("o_orderkey", F.lit(3)) == mod)
-             .write.mode("overwrite")
-             .parquet(_os.path.join(tmp, f"batch{mod}")))
-        # v0: add batch0; v1: add batch1; v2: remove batch0, add batch2
-        assert txlog_commit(tmp, [{"op": "add", "path": "batch0"}]) == 0
-        assert txlog_commit(tmp, [{"op": "add", "path": "batch1"}]) == 1
-        assert txlog_commit(tmp, [{"op": "remove", "path": "batch0"},
-                                  {"op": "add", "path": "batch2"}]) == 2
+def _txlog_batches(spark: SparkSession, sf_dir: str, tmp: str) -> None:
+    """Write orders under ``tmp`` as three batches by o_orderkey mod 3
+    and commit v0: add batch0; v1: add batch1; v2: remove batch0, add
+    batch2."""
+    import os as _os
+    o = load_table(spark, "orders", sf_dir)
+    for mod in (0, 1, 2):
+        (o.where(F.pmod("o_orderkey", F.lit(3)) == mod)
+         .write.mode("overwrite")
+         .parquet(_os.path.join(tmp, f"batch{mod}")))
+    assert txlog_commit(tmp, [{"op": "add", "path": "batch0"}]) == 0
+    assert txlog_commit(tmp, [{"op": "add", "path": "batch1"}]) == 1
+    assert txlog_commit(tmp, [{"op": "remove", "path": "batch0"},
+                              {"op": "add", "path": "batch2"}]) == 2
 
-    return _cached_dataset("txlog_orders", sf_dir, "orders", build)
+
+def _txlog_fixture(spark: SparkSession, sf_dir: str) -> str:
+    return _cached_dataset("txlog_orders", sf_dir, "orders",
+                           lambda tmp: _txlog_batches(spark, sf_dir, tmp))
 
 
 @register("scan_txlog_snapshot", oracle=_TXLOG_ORACLE)
@@ -2185,16 +2188,7 @@ def txlog_snapshot_files_ckpt(root: str, version: int) -> list[str]:
 
 def _txlog_ckpt_fixture(spark: SparkSession, sf_dir: str) -> str:
     def build(tmp: str) -> None:
-        import os as _os
-        o = load_table(spark, "orders", sf_dir)
-        for mod in (0, 1, 2):
-            (o.where(F.pmod("o_orderkey", F.lit(3)) == mod)
-             .write.mode("overwrite")
-             .parquet(_os.path.join(tmp, f"batch{mod}")))
-        assert txlog_commit(tmp, [{"op": "add", "path": "batch0"}]) == 0
-        assert txlog_commit(tmp, [{"op": "add", "path": "batch1"}]) == 1
-        assert txlog_commit(tmp, [{"op": "remove", "path": "batch0"},
-                                  {"op": "add", "path": "batch2"}]) == 2
+        _txlog_batches(spark, sf_dir, tmp)
         txlog_write_checkpoint(tmp, 2)
         # the post-checkpoint tail the checkpoint reader must still see
         assert txlog_commit(tmp, [{"op": "add", "path": "batch0"}]) == 3

@@ -3,7 +3,7 @@ cohorts, RFM segments and next-event models over ``events``."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.bucketed import bucketed_order
@@ -65,22 +65,12 @@ FROM km WHERE d > 0
 """
 
 
-@register("seq_survival_km", oracle=_KM_ORACLE)
-def seq_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kaplan–Meier survival curve for time-to-first-purchase (days
-    from a user's first event; users who never purchase are censored at
-    the observation horizon) — THE time-to-event estimator behind
-    conversion-lag and churn dashboards, with the risk set handled
-    correctly where a naive conversion-rate-by-day silently drops
-    censored users. Counts collapse to per-day (events, censored);
-    n_at_risk is total minus the exclusive prefix; S(t) = Π(1 − dⱼ/nⱼ)
-    via exp of the running ln sum — the window order is deterministic,
-    both engines fold the same doubles in the same sequence, and the
-    one transcendental chain rounds 6 dp at the end.
-
-    Scale shape: one combinable user-grain fold, one per-day collapse
-    (calendar-bounded domain), windows over that bounded domain; the
-    horizon broadcasts as one row."""
+def _first_purchase_risk_days(spark: SparkSession,
+                              sf_dir: str) -> tuple[DataFrame, Column]:
+    """Risk sets for time-to-first-purchase, in days tt from a user's
+    first event: (days, n_at_risk). days holds per tt the d users who
+    convert and the c censored at the observation horizon, crossed with
+    their total n; n_at_risk is n minus the exclusive prefix of d + c."""
     ev = load_table(spark, "events", sf_dir)
     horizon = ev.agg(F.max(F.col("ts").cast("date")).alias("end_day"))
     per_user = ev.groupBy("user_id").agg(
@@ -99,14 +89,32 @@ def seq_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = days.agg(F.sum(F.col("d") + F.col("c")).cast("bigint")
                    .alias("n"))
     wb = Window.orderBy("tt").rowsBetween(Window.unboundedPreceding, -1)
+    n_at_risk = (F.col("n")
+                 - F.coalesce(F.sum(F.col("d") + F.col("c")).over(wb),
+                              F.lit(0)).cast("bigint"))
+    return days.crossJoin(F.broadcast(tot)), n_at_risk
+
+
+@register("seq_survival_km", oracle=_KM_ORACLE)
+def seq_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kaplan–Meier survival curve for time-to-first-purchase (days
+    from a user's first event; users who never purchase are censored at
+    the observation horizon) — THE time-to-event estimator behind
+    conversion-lag and churn dashboards, with the risk set handled
+    correctly where a naive conversion-rate-by-day silently drops
+    censored users. Counts collapse to per-day (events, censored);
+    n_at_risk is total minus the exclusive prefix; S(t) = Π(1 − dⱼ/nⱼ)
+    via exp of the running ln sum — the window order is deterministic,
+    both engines fold the same doubles in the same sequence, and the
+    one transcendental chain rounds 6 dp at the end.
+
+    Scale shape: one combinable user-grain fold, one per-day collapse
+    (calendar-bounded domain), windows over that bounded domain; the
+    horizon broadcasts as one row."""
+    days, n_at_risk = _first_purchase_risk_days(spark, sf_dir)
     wc = Window.orderBy("tt").rowsBetween(Window.unboundedPreceding,
                                           Window.currentRow)
-    risk = (days.crossJoin(F.broadcast(tot))
-            .select("tt", "d", "c",
-                    (F.col("n")
-                     - F.coalesce(F.sum(F.col("d") + F.col("c")).over(wb),
-                                  F.lit(0)).cast("bigint"))
-                    .alias("n_at_risk")))
+    risk = days.select("tt", "d", "c", n_at_risk.alias("n_at_risk"))
     lterm = (F.when(F.col("d") >= F.col("n_at_risk"),
                     F.lit(-1000000000.0))
              .when(F.col("d") > 0,
@@ -264,30 +272,8 @@ def seq_hazard_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: user-grain fold; calendar-bounded day domain; two
     windows over that bounded domain."""
-    ev = load_table(spark, "events", sf_dir)
-    horizon = ev.agg(F.max(F.col("ts").cast("date")).alias("end_day"))
-    per_user = ev.groupBy("user_id").agg(
-        F.min(F.col("ts").cast("date")).alias("t0"),
-        F.min(F.when(F.col("event_type") == "purchase",
-                     F.col("ts").cast("date"))).alias("tp"))
-    is_ev = F.col("tp").isNotNull() & (F.col("tp") >= F.col("t0"))
-    obs = (per_user.crossJoin(F.broadcast(horizon))
-           .select(F.when(is_ev, F.datediff("tp", "t0"))
-                   .otherwise(F.datediff("end_day", "t0"))
-                   .cast("bigint").alias("tt"),
-                   is_ev.alias("ev")))
-    days = obs.groupBy("tt").agg(
-        F.count(F.when(F.col("ev"), 1)).cast("bigint").alias("d"),
-        F.count(F.when(~F.col("ev"), 1)).cast("bigint").alias("c"))
-    tot = days.agg(F.sum(F.col("d") + F.col("c")).cast("bigint")
-                   .alias("n"))
-    wb = Window.orderBy("tt").rowsBetween(Window.unboundedPreceding, -1)
-    risk = (days.crossJoin(F.broadcast(tot))
-            .select("tt", "d",
-                    (F.col("n")
-                     - F.coalesce(F.sum(F.col("d") + F.col("c")).over(wb),
-                                  F.lit(0)).cast("bigint"))
-                    .alias("n_at_risk")))
+    days, n_at_risk = _first_purchase_risk_days(spark, sf_dir)
+    risk = days.select("tt", "d", n_at_risk.alias("n_at_risk"))
     ws = Window.orderBy("tt").rowsBetween(-(_HAZ_W // 2), _HAZ_W // 2)
     return risk.select(
         F.col("tt").alias("day"), "n_at_risk",

@@ -19,6 +19,15 @@ def _slice(spark, sf_dir, etype):
     return ev.where(F.col("event_type") == etype).select("user_id", "event_type", "value")
 
 
+def _users_before(spark, sf_dir, etype, cutoff):
+    """user_id of each ``etype`` event and of each purchase before the
+    ``cutoff`` timestamp: the two sides of the time-sliced set ops."""
+    ev = load_table(spark, "events", sf_dir)
+    before = F.col("ts") < F.lit(cutoff).cast("timestamp")
+    return tuple(ev.where((F.col("event_type") == t) & before)
+                 .select("user_id") for t in (etype, "purchase"))
+
+
 @register("set_union_all", oracle="""
 SELECT user_id, event_type, value FROM events WHERE event_type = 'click'
 UNION ALL
@@ -64,10 +73,7 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Users who viewed but hadn't purchased in the first two days (set
     difference). Time-sliced so the result is non-empty at sf0.01 — every
     user eventually does everything in the synthetic stream."""
-    ev = load_table(spark, "events", sf_dir)
-    cutoff = F.lit("2024-01-03").cast("timestamp")
-    a = ev.where((F.col("event_type") == "view") & (F.col("ts") < cutoff)).select("user_id")
-    b = ev.where((F.col("event_type") == "purchase") & (F.col("ts") < cutoff)).select("user_id")
+    a, b = _users_before(spark, sf_dir, "view", "2024-01-03")
     return a.subtract(b)
 
 
@@ -82,10 +88,7 @@ def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag intersection (INTERSECT ALL): each user_id appears
     min(count_left, count_right) times — the multiplicity-aware form both
     engines implement by hashing full rows with counters; one shuffle."""
-    ev = load_table(spark, "events", sf_dir)
-    cutoff = F.lit("2024-01-05").cast("timestamp")
-    a = ev.where((F.col("event_type") == "click") & (F.col("ts") < cutoff)).select("user_id")
-    b = ev.where((F.col("event_type") == "purchase") & (F.col("ts") < cutoff)).select("user_id")
+    a, b = _users_before(spark, sf_dir, "click", "2024-01-05")
     return a.intersectAll(b)
 
 
@@ -99,10 +102,7 @@ WHERE event_type = 'purchase' AND ts < TIMESTAMP '2024-01-05 00:00:00'
 def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag difference (EXCEPT ALL): multiplicities subtract instead of the
     set form's all-or-nothing — views in excess of purchases per user."""
-    ev = load_table(spark, "events", sf_dir)
-    cutoff = F.lit("2024-01-05").cast("timestamp")
-    a = ev.where((F.col("event_type") == "view") & (F.col("ts") < cutoff)).select("user_id")
-    b = ev.where((F.col("event_type") == "purchase") & (F.col("ts") < cutoff)).select("user_id")
+    a, b = _users_before(spark, sf_dir, "view", "2024-01-05")
     return a.exceptAll(b)
 
 

@@ -24,11 +24,15 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.bucketed import bucketed_order
-from lambdatotheslaughter_spark.determinism import round_cents
+from lambdatotheslaughter_spark.determinism import (
+    central_moments, centered_ss, mean_var_pop, ordered_fold,
+    pearson_finish, pearson_from_sums, power_sums, round_cents, sample_var,
+    two_group_moments, two_group_sums, wide_power_sums)
 from lambdatotheslaughter_spark.operators.streaming_twins import (
     sprt_daily_counts)
 from lambdatotheslaughter_spark.operators.timeseries import (
-    _ACF_ORACLE, click_purchase_events, hourly_cents, ts_acf_multi_lag)
+    _ACF_ORACLE, click_purchase_events, hour_indexed_cents, hourly_cents,
+    hourly_counts, ts_acf_multi_lag)
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.tables import load_table
 
@@ -119,23 +123,9 @@ def stat_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     six partials per partition."""
     ev = click_purchase_events(spark, sf_dir)
     xc = round_cents("value")
-    is1 = F.col("event_type") == "click"
-    is2 = F.col("event_type") == "purchase"
-    s = ev.agg(
-        F.count(F.when(is1, 1)).cast("bigint").alias("n1"),
-        F.count(F.when(is2, 1)).cast("bigint").alias("n2"),
-        F.sum(F.when(is1, xc)).cast("bigint").alias("s1a"),
-        F.sum(F.when(is1, xc * xc)).cast("bigint").alias("s2a"),
-        F.sum(F.when(is2, xc)).cast("bigint").alias("s1b"),
-        F.sum(F.when(is2, xc * xc)).cast("bigint").alias("s2b"))
-    n1d = F.col("n1").cast("double")
-    n2d = F.col("n2").cast("double")
-    m1 = F.col("s1a").cast("double") / n1d
-    e2a = F.col("s2a").cast("double") / n1d
-    m2 = F.col("s1b").cast("double") / n2d
-    e2b = F.col("s2b").cast("double") / n2d
-    v1 = (e2a - m1 * m1) * (n1d / (n1d - F.lit(1.0)))
-    v2 = (e2b - m2 * m2) * (n2d / (n2d - F.lit(1.0)))
+    s = two_group_sums(ev, xc, F.col("event_type") == "click",
+                       F.col("event_type") == "purchase")
+    n1d, n2d, m1, m2, v1, v2 = two_group_moments()
     se2 = v1 / n1d + v2 / n2d
     return s.select(
         F.col("n1").alias("n_click"),
@@ -730,11 +720,7 @@ def ts_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: combinable hourly groupBy collapses the corpus; the
     pair self-join co-partitions on event_type; one ranked window per
     type over calendar-bounded pairs."""
-    hourly = (hourly_cents(load_table(spark, "events", sf_dir))
-              .select("event_type",
-                      (F.unix_timestamp("hr") / 3600).cast("bigint")
-                      .alias("h"),
-                      "cents"))
+    hourly = hour_indexed_cents(load_table(spark, "events", sf_dir))
     a = hourly.alias("a")
     b = hourly.alias("b")
     pairs = (a.join(b, (F.col("a.event_type") == F.col("b.event_type"))
@@ -1042,16 +1028,9 @@ def stat_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("rx2") * F.col("ry2")).cast("bigint").alias("sxy"),
         F.sum(F.col("rx2") * F.col("rx2")).cast("bigint").alias("sxx"),
         F.sum(F.col("ry2") * F.col("ry2")).cast("bigint").alias("syy"))
-    nd = F.col("n").cast("double")
-    ax = F.col("sx").cast("double") / nd
-    ay = F.col("sy").cast("double") / nd
-    axy = F.col("sxy").cast("double") / nd
-    axx = F.col("sxx").cast("double") / nd
-    ayy = F.col("syy").cast("double") / nd
     return s.select(
         F.col("n").alias("n_hours"),
-        ((axy - ax * ay)
-         / F.sqrt((axx - ax * ax) * (ayy - ay * ay)))
+        pearson_from_sums("n", "sx", "sy", "sxy", "sxx", "syy")
         .alias("spearman_rho"))
 
 
@@ -1102,11 +1081,7 @@ def _oneway_sums(per: DataFrame) -> DataFrame:
         F.sum("n").cast("bigint").alias("n_tot"),
         F.sum("s1").cast("bigint").alias("s1_tot"),
         F.sum("s2").cast("bigint").alias("s2_tot"),
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct(F.col("event_type"),
-                                                 term.alias("t")))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["t"]).alias("ssb_term"))
+        ordered_fold(["event_type"], term).alias("ssb_term"))
 
 
 def _oneway_ss() -> tuple[Column, Column, Column, Column]:
@@ -1384,21 +1359,8 @@ def stat_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = click_purchase_events(spark, sf_dir)
     xc = round_cents("value")
     is1 = F.col("event_type") == "click"
-    s = ev.agg(
-        F.count(F.when(is1, 1)).cast("bigint").alias("n1"),
-        F.count(F.when(~is1, 1)).cast("bigint").alias("n2"),
-        F.sum(F.when(is1, xc)).cast("bigint").alias("s1a"),
-        F.sum(F.when(is1, xc * xc)).cast("bigint").alias("s2a"),
-        F.sum(F.when(~is1, xc)).cast("bigint").alias("s1b"),
-        F.sum(F.when(~is1, xc * xc)).cast("bigint").alias("s2b"))
-    n1d = F.col("n1").cast("double")
-    n2d = F.col("n2").cast("double")
-    m1 = F.col("s1a").cast("double") / n1d
-    m2 = F.col("s1b").cast("double") / n2d
-    v1 = (F.col("s2a").cast("double") / n1d - m1 * m1) \
-        * (n1d / (n1d - F.lit(1.0)))
-    v2 = (F.col("s2b").cast("double") / n2d - m2 * m2) \
-        * (n2d / (n2d - F.lit(1.0)))
+    s = two_group_sums(ev, xc, is1, ~is1)
+    n1d, n2d, m1, m2, v1, v2 = two_group_moments()
     d = (m1 - m2) / F.sqrt(((n1d - F.lit(1.0)) * v1
                             + (n2d - F.lit(1.0)) * v2)
                            / (n1d + n2d - F.lit(2.0)))
@@ -1498,12 +1460,7 @@ def stat_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n").alias("n_total"),
         F.countDistinct("event_type").cast("bigint").alias("r"),
         F.countDistinct("bucket").cast("bigint").alias("cc"),
-        F.aggregate(
-            F.array_sort(F.collect_list(
-                F.struct(F.col("event_type"), F.col("bucket"),
-                         F.col("c").alias("t")))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["t"]).alias("chi2"))
+        ordered_fold(["event_type", "bucket"], F.col("c")).alias("chi2"))
     return fold.select(
         "n_total", F.col("r").alias("n_rows"), F.col("cc").alias("n_cols"),
         "chi2",
@@ -3131,10 +3088,7 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold = grp.agg(
         F.sum("n_j").cast("bigint").alias("n"),
         F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct(F.col("event_type"),
-                                                 term.alias("v")))),
-            F.lit(0.0), lambda acc, x: acc + x["v"]).alias("srsq"))
+        ordered_fold(["event_type"], term).alias("srsq"))
     nd = F.col("n").cast("double")
     h_raw = (F.lit(12.0) / (nd * (nd + F.lit(1.0))) * F.col("srsq")
              - F.lit(3.0) * (nd + F.lit(1.0)))
@@ -3317,7 +3271,7 @@ def stat_fisher_z_corr_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     nd = F.col("n").cast("double")
     ax, ay = hop("sx") / nd, hop("sy") / nd
     axy, axx, ayy = hop("sxy") / nd, hop("sxx") / nd, hop("syy") / nd
-    r = (axy - ax * ay) / F.sqrt((axx - ax * ax) * (ayy - ay * ay))
+    r = pearson_finish(ax, ay, axy, axx, ayy)
     zr = F.lit(0.5) * F.log((F.lit(1.0) + r) / (F.lit(1.0) - r))
     half = F.lit(_Z_ALPHA_2) / F.sqrt(nd - F.lit(3.0))
 
@@ -3560,16 +3514,7 @@ def stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("xd") * F.col("x") * F.col("x") * F.col("x"))
         .alias("s4"))
     nd = F.col("n").cast("double")
-    mu = F.col("s1").cast("double") / nd
-    r2 = F.col("s2").cast("double") / nd
-    r3 = F.col("s3").cast("double") / nd
-    r4 = F.col("s4").cast("double") / nd
-    m2 = r2 - mu * mu
-    m3 = r3 - F.lit(3.0) * mu * r2 + F.lit(2.0) * mu * mu * mu
-    m4 = (r4 - F.lit(4.0) * mu * r3 + F.lit(6.0) * mu * mu * r2
-          - F.lit(3.0) * mu * mu * mu * mu)
-    skew = m3 / (m2 * F.sqrt(m2))
-    kurt = m4 / (m2 * m2) - F.lit(3.0)
+    _, _, skew, kurt = central_moments()
     return s.select(
         "n", skew.alias("skewness"), kurt.alias("excess_kurtosis"),
         (nd / F.lit(6.0) * (skew * skew + kurt * kurt / F.lit(4.0)))
@@ -4299,18 +4244,11 @@ def stat_poisson_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: calendar-bounded hourly count fold; one combinable
     three-sum fold per type."""
-    ev = load_table(spark, "events", sf_dir)
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.count(F.lit(1)).cast("bigint").alias("c")))
-    s = hourly.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("c").cast("bigint").alias("s1"),
-        F.sum(F.col("c") * F.col("c")).cast("bigint").alias("s2"))
+    s = power_sums(hourly_counts(load_table(spark, "events", sf_dir)),
+                   ["event_type"], "c")
     nd = F.col("n").cast("double")
-    s1d = F.col("s1").cast("double")
-    ss = F.col("s2").cast("double") - s1d * s1d / nd
-    mean = s1d / nd
+    ss = centered_ss()
+    mean, _ = mean_var_pop()
     return s.select("event_type", F.col("n").alias("n_hours"),
                     mean.alias("mean_count"),
                     (ss / (nd - F.lit(1.0)) / mean)
@@ -4708,10 +4646,7 @@ def stat_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
               F.sum("xc").cast("decimal(38,0)").alias("s1"),
               F.sum(F.col("xc").cast("decimal(38,0)") * F.col("xc"))
               .cast("decimal(38,0)").alias("s2")))
-    var_i = ((F.col("s2").cast("double")
-              - F.col("s1").cast("double") * F.col("s1").cast("double")
-                / F.col("n").cast("double"))
-             / (F.col("n") - 1).cast("double"))
+    var_i = sample_var()
     v = g.select("grp", "n", var_i.alias("var_i"))
     terms = v.agg(
         F.sum("n").cast("bigint").alias("nt"),
@@ -5207,24 +5142,13 @@ def stat_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir)
     xc = round_cents("value")
     per = (ev.select(F.col("event_type").alias("t"), xc.alias("xc"))
-           .groupBy("t")
-           .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
-                F.sum("xc").cast("bigint").alias("s1"),
-                F.sum(F.col("xc").cast("decimal(38,0)") * F.col("xc"))
-                .cast("decimal(38,0)").alias("s2")))
+           .groupBy("t").agg(*wide_power_sums("xc")))
     mu = F.col("s1").cast("double") / F.col("n").cast("double")
-    w = (F.col("n").cast("double")
-         / ((F.col("s2").cast("double")
-             - F.col("s1").cast("double") * F.col("s1").cast("double")
-               / F.col("n").cast("double"))
-            / (F.col("n") - 1).cast("double")))
+    w = F.col("n").cast("double") / sample_var()
     g = per.select("t", "n", mu.alias("mu"), w.alias("w"))
 
     def ofold(expr, name):
-        return F.aggregate(
-            F.array_sort(F.collect_list(F.struct(F.col("t"),
-                                                 expr.alias("x")))),
-            F.lit(0.0), lambda acc, s: acc + s["x"]).alias(name)
+        return ordered_fold(["t"], expr).alias(name)
 
     f1 = g.agg(F.count(F.lit(1)).cast("bigint").alias("k"),
                ofold(F.col("w"), "bigw"),
@@ -5330,33 +5254,16 @@ def stat_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(obs, ["h", "t"], "left")
             .select("h", "t", F.coalesce("x", F.lit(0)).alias("x"))
             .localCheckpoint(eager=False))  # item + rowsum folds share it
-    item = (grid.groupBy("t")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
-                 F.sum("x").cast("bigint").alias("s1"),
-                 F.sum(F.col("x").cast("decimal(38,0)") * F.col("x"))
-                 .cast("decimal(38,0)").alias("s2")))
-    var_i = ((F.col("s2").cast("double")
-              - F.col("s1").cast("double") * F.col("s1").cast("double")
-                / F.col("n").cast("double"))
-             / (F.col("n") - 1).cast("double"))
+    item = grid.groupBy("t").agg(*wide_power_sums("x"))
+    var_i = sample_var()
     iv = item.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
         F.max("n").cast("bigint").alias("n_obs"),
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct(F.col("t"),
-                                                 var_i.alias("v")))),
-            F.lit(0.0), lambda acc, s: acc + s["v"]).alias("sum_item_var"))
+        ordered_fold(["t"], var_i).alias("sum_item_var"))
     rowsum = (grid.groupBy("h")
               .agg(F.sum("x").cast("bigint").alias("r")))
-    tv = rowsum.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("r").cast("bigint").alias("s1"),
-        F.sum(F.col("r").cast("decimal(38,0)") * F.col("r"))
-        .cast("decimal(38,0)").alias("s2"))
-    var_t = ((F.col("s2").cast("double")
-              - F.col("s1").cast("double") * F.col("s1").cast("double")
-                / F.col("n").cast("double"))
-             / (F.col("n") - 1).cast("double"))
+    tv = rowsum.agg(*wide_power_sums("r"))
+    var_t = sample_var()
     kd = F.col("k").cast("double")
     return (iv.crossJoin(F.broadcast(tv))
             .select(F.col("k").alias("k_items"), "n_obs",
@@ -5483,10 +5390,7 @@ def stat_meta_fixed_effect_pool(spark: SparkSession,
                        (v1 + v2).alias("v"))
 
     def ofold(expr, name):
-        return F.aggregate(
-            F.array_sort(F.collect_list(F.struct(F.col("dow"),
-                                                 expr.alias("x")))),
-            F.lit(0.0), lambda acc, s: acc + s["x"]).alias(name)
+        return ordered_fold(["dow"], expr).alias(name)
 
     f1 = study.agg(F.count(F.lit(1)).cast("bigint").alias("k"),
                    ofold(F.lit(1.0) / F.col("v"), "sw"),
@@ -5565,18 +5469,13 @@ def stat_capability_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
           .where(F.col("event_type") == "purchase"))
     xc = round_cents("value")
     s = ev.select(xc.alias("xc")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("xc").cast("bigint").alias("s1"),
-        F.sum(F.col("xc").cast("decimal(38,0)") * F.col("xc"))
-        .cast("decimal(38,0)").alias("s2"),
+        *wide_power_sums("xc"),
         F.count(F.when((F.col("xc") < _CAP_LSL)
                        | (F.col("xc") > _CAP_USL), 1)).cast("bigint")
         .alias("n_out"))
     nd = F.col("n").cast("double")
     mu = F.col("s1").cast("double") / nd
-    sd = F.sqrt((F.col("s2").cast("double")
-                 - F.col("s1").cast("double") * F.col("s1").cast("double")
-                   / nd) / (F.col("n") - 1).cast("double"))
+    sd = F.sqrt(sample_var())
     return s.select(
         "n", "n_out",
         F.round(F.col("n_out").cast("double") / nd, 6)
@@ -5748,10 +5647,7 @@ def stat_entropy_rate_markov(spark: SparkSession,
     contrib = rows_.select("prev", "cur", t.alias("t"), "n")
     return contrib.agg(
         F.max("n").cast("bigint").alias("n_transitions"),
-        F.round(F.aggregate(
-            F.array_sort(F.collect_list(
-                F.struct(F.col("prev"), F.col("cur"), F.col("t")))),
-            F.lit(0.0), lambda acc, x: acc + x["t"]), 6)
+        F.round(ordered_fold(["prev", "cur"], F.col("t")), 6)
         .alias("entropy_rate_nats"))
 
 
@@ -5810,10 +5706,5 @@ def stat_ljung_box_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.max("n").cast("bigint").alias("n_obs"),
                  F.count(F.lit(1)).cast("bigint").alias("n_lags"),
                  F.round(nd * (nd + F.lit(2.0))
-                         * F.aggregate(
-                             F.array_sort(F.collect_list(
-                                 F.struct(F.col("lag"),
-                                          F.col("t").alias("v")))),
-                             F.lit(0.0),
-                             lambda acc, x: acc + x["v"]), 6)
+                         * ordered_fold(["lag"], F.col("t")), 6)
                  .alias("ljung_box_q")))

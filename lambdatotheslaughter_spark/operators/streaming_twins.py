@@ -497,16 +497,16 @@ def windowed_counts(events: DataFrame) -> DataFrame:
                     "n_events"))
 
 
-def topk_per_window(counts: DataFrame, k: int = 2) -> DataFrame:
-    """Serving-layer rank over the maintained counts — the batch half
-    (row_number is not incrementally computable, so it runs against the
-    sink, not inside the stream)."""
+def topk_per_window(counts: DataFrame) -> DataFrame:
+    """Serving-layer top-2 rank over the maintained counts — the batch
+    half (row_number is not incrementally computable, so it runs against
+    the sink, not inside the stream)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("window_start").orderBy(
         F.col("n_events").desc(), F.col("event_type"))
     return (counts.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
+            .where(F.col("rn") <= 2)
             .select("window_start", "event_type", "n_events",
                     F.col("rn").cast("int").alias("rn")))
 

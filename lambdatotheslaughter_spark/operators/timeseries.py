@@ -9,7 +9,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.determinism import (
-    csum, iround, oracle_csum, round_cents)
+    centered_ss, csum, integer_corr, iround, mean_var_pop, oracle_csum,
+    ordered_fold, pearson_from_sums, power_sums, round_cents)
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.tables import load_table
 
@@ -21,6 +22,43 @@ def hourly_cents(events: DataFrame) -> DataFrame:
     return (events.groupBy("event_type",
                            F.date_trunc("hour", "ts").alias("hr"))
             .agg(F.sum(round_cents("value")).cast("bigint").alias("cents")))
+
+
+def hour_indexed_cents(events: DataFrame) -> DataFrame:
+    """:func:`hourly_cents` keyed by an integer hour: (event_type, h,
+    cents), h the hours since the epoch."""
+    return hourly_cents(events).select(
+        "event_type",
+        (F.unix_timestamp("hr") / 3600).cast("bigint").alias("h"), "cents")
+
+
+def purchase_day_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily purchase revenue: (day, y), y the exact BIGINT sum of each
+    purchase's value rounded to whole cents."""
+    ev = (load_table(spark, "events", sf_dir)
+          .where(F.col("event_type") == "purchase"))
+    return (ev.select(F.date_trunc("day", F.col("ts")).alias("day"),
+                      round_cents("value").alias("c"))
+            .groupBy("day")
+            .agg(F.sum("c").cast("bigint").alias("y")))
+
+
+def monthly_order_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Order revenue per calendar month: (yr, mo, rev), rev the exact
+    BIGINT sum of o_totalprice in whole cents."""
+    o = load_table(spark, "orders", sf_dir)
+    return (o.groupBy(F.year("o_orderdate").cast("bigint").alias("yr"),
+                      F.month("o_orderdate").cast("bigint").alias("mo"))
+            .agg(F.sum(round_cents("o_totalprice")).cast("bigint")
+                 .alias("rev")))
+
+
+def hourly_counts(events: DataFrame) -> DataFrame:
+    """Per-type hourly event counts of ``events``: (event_type, hr, c),
+    c a BIGINT count."""
+    return (events.groupBy("event_type",
+                           F.date_trunc("hour", "ts").alias("hr"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("c")))
 
 
 def click_purchase_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -346,13 +384,7 @@ def ts_changepoint_cusum_argmax(spark: SparkSession,
     Scale shape: calendar-bounded daily fold (≤366 rows/year at ANY
     corpus size); one cumulative window over the bounded domain; a
     broadcast 1-row total; argmax fuses to TakeOrderedAndProject."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type") == "purchase"))
-    cents = round_cents("value")
-    d = (ev.select(F.date_trunc("day", F.col("ts")).alias("day"),
-                   cents.alias("c"))
-         .groupBy("day")
-         .agg(F.sum("c").cast("bigint").alias("y")))
+    d = purchase_day_cents(spark, sf_dir)
     w = (Window.orderBy("day")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     t = d.select("day", "y",
@@ -464,13 +496,7 @@ def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: calendar-bounded daily fold (≤366 rows at ANY corpus
     size); the ×3 size fan-out, block windows, and folds all run on the
     bounded domain — corpus cost is the one daily collapse."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type") == "purchase"))
-    cents = round_cents("value")
-    d = (ev.select(F.date_trunc("day", F.col("ts")).alias("day"),
-                   cents.alias("c"))
-         .groupBy("day")
-         .agg(F.sum("c").cast("bigint").alias("y"))
+    d = (purchase_day_cents(spark, sf_dir)
          # the ≤366-row daily fold feeds both the n1 scalar and the
          # indexed series — pin it so the events scan runs once per query
          .localCheckpoint(eager=False))
@@ -611,13 +637,7 @@ def ts_dickey_fuller_unit_root(spark: SparkSession,
 
     Scale shape: ≤366-row daily fold, one lag window on the bounded
     domain, one broadcast coefficient row, one residual fold."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type") == "purchase"))
-    cents = round_cents("value")
-    d = (ev.select(F.date_trunc("day", F.col("ts")).alias("day"),
-                   cents.alias("c"))
-         .groupBy("day")
-         .agg(F.sum("c").cast("bigint").alias("y")))
+    d = purchase_day_cents(spark, sf_dir)
     w = Window.orderBy("day")
     q = (d.select((F.col("y") - F.lag("y").over(w)).alias("dy"),
                   F.lag("y").over(w).alias("x"))
@@ -880,13 +900,7 @@ def ts_turning_points_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ≤366-row daily fold; one bounded-domain window; one
     two-count fold to a single row."""
-    ev = (load_table(spark, "events", sf_dir)
-          .where(F.col("event_type") == "purchase"))
-    cents = round_cents("value")
-    d = (ev.select(F.date_trunc("day", F.col("ts")).alias("day"),
-                   cents.alias("c"))
-         .groupBy("day")
-         .agg(F.sum("c").cast("bigint").alias("y")))
+    d = purchase_day_cents(spark, sf_dir)
     w = Window.orderBy("day")
     t = d.select("y", F.lag("y").over(w).alias("p"),
                  F.lead("y").over(w).alias("nx"))
@@ -1462,17 +1476,10 @@ def ts_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(xd * xd).over(w).alias("sxx"),
         F.sum(yd * yd).over(w).alias("syy"),
         F.sum(xd * yd).over(w).alias("sxy"))
-    num = (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")) \
-        .cast("double")
-    den = (F.sqrt((F.col("k") * F.col("sxx")
-                   - F.col("sx") * F.col("sx")).cast("double"))
-           * F.sqrt((F.col("k") * F.col("syy")
-                     - F.col("sy") * F.col("sy")).cast("double")))
     return (sums.where(F.col("k") == 6)
             .select("event_type", "h", F.col("x").cast("bigint").alias("x"),
                     "y",
-                    (num / F.nullif(den, F.lit(0.0))).cast("double")
-                    .alias("rolling_corr")))
+                    integer_corr().alias("rolling_corr")))
 
 
 # ---------------------------------------------------------------------------
@@ -1998,15 +2005,8 @@ def ts_autocorr_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(xd).alias("sx"), F.sum(yd).alias("sy"),
         F.sum(xd * xd).alias("sxx"), F.sum(yd * yd).alias("syy"),
         F.sum(xd * yd).alias("sxy"))
-    num = (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")) \
-        .cast("double")
-    den = (F.sqrt((F.col("k") * F.col("sxx")
-                   - F.col("sx") * F.col("sx")).cast("double"))
-           * F.sqrt((F.col("k") * F.col("syy")
-                     - F.col("sy") * F.col("sy")).cast("double")))
     return m.select("event_type", "k",
-                    (num / F.nullif(den, F.lit(0.0))).cast("double")
-                    .alias("autocorr_lag1"))
+                    integer_corr().alias("autocorr_lag1"))
 
 
 # ---------------------------------------------------------------------------
@@ -2162,11 +2162,7 @@ def ts_acf_multi_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     the calendar; the 24-lag spine is a broadcast cross join over the
     HOURLY table (24×hours rows — calendar-bounded, corpus-free); the
     per-(type, lag) moment fold is one combinable groupBy."""
-    hourly = (hourly_cents(load_table(spark, "events", sf_dir))
-              .select("event_type",
-                      (F.unix_timestamp("hr") / 3600).cast("bigint")
-                      .alias("h"),
-                      "cents")
+    hourly = (hour_indexed_cents(load_table(spark, "events", sf_dir))
               .localCheckpoint(eager=False))  # both join sides share it
     lags = spark.range(1, _ACF_MAX_LAG + 1).select(F.col("id").alias("lag"))
     a = hourly.alias("a")
@@ -2187,16 +2183,10 @@ def ts_acf_multi_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x").cast(dec) * F.col("y").cast(dec)).alias("sxy"),
         F.sum(F.col("x").cast(dec) * F.col("x").cast(dec)).alias("sxx"),
         F.sum(F.col("y").cast(dec) * F.col("y").cast(dec)).alias("syy"))
-    nd = F.col("n").cast("double")
-    ax = F.col("sx").cast("double") / nd
-    ay = F.col("sy").cast("double") / nd
-    axy = F.col("sxy").cast("double") / nd
-    axx = F.col("sxx").cast("double") / nd
-    ayy = F.col("syy").cast("double") / nd
     return s.select(
         "event_type", "lag", F.col("n").alias("n_pairs"),
-        ((axy - ax * ay)
-         / F.sqrt((axx - ax * ax) * (ayy - ay * ay))).alias("acf"))
+        pearson_from_sums("n", "sx", "sy", "sxy", "sxx", "syy")
+        .alias("acf"))
 
 
 # ---------------------------------------------------------------------------
@@ -2255,13 +2245,9 @@ def ts_xcorr_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the corpus collapses to two calendar-bounded hourly
     series; the 25-lag spine is a broadcast cross join over the click
     series; one combinable moment fold per lag."""
-    hourly = (hourly_cents(load_table(spark, "events", sf_dir)
-                           .where(F.col("event_type").isin("click",
-                                                           "purchase")))
-              .select("event_type",
-                      (F.unix_timestamp("hr") / 3600).cast("bigint")
-                      .alias("h"),
-                      "cents")
+    hourly = (hour_indexed_cents(load_table(spark, "events", sf_dir)
+                                 .where(F.col("event_type").isin(
+                                     "click", "purchase")))
               .localCheckpoint(eager=False))
     x = hourly.where(F.col("event_type") == "click").select("h", "cents")
     y = (hourly.where(F.col("event_type") == "purchase")
@@ -2279,16 +2265,10 @@ def ts_xcorr_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("xv").cast(dec) * F.col("yv").cast(dec)).alias("sxy"),
         F.sum(F.col("xv").cast(dec) * F.col("xv").cast(dec)).alias("sxx"),
         F.sum(F.col("yv").cast(dec) * F.col("yv").cast(dec)).alias("syy"))
-    nd = F.col("n").cast("double")
-    ax = F.col("sx").cast("double") / nd
-    ay = F.col("sy").cast("double") / nd
-    axy = F.col("sxy").cast("double") / nd
-    axx = F.col("sxx").cast("double") / nd
-    ayy = F.col("syy").cast("double") / nd
     return s.select(
         "lag", F.col("n").alias("n_pairs"),
-        ((axy - ax * ay)
-         / F.sqrt((axx - ax * ax) * (ayy - ay * ay))).alias("xcorr"))
+        pearson_from_sums("n", "sx", "sy", "sxy", "sxx", "syy")
+        .alias("xcorr"))
 
 
 # ---------------------------------------------------------------------------
@@ -2332,17 +2312,9 @@ def ts_burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: hourly pre-agg collapses the corpus to the calendar;
     one combinable three-sum fold per type."""
-    ev = load_table(spark, "events", sf_dir)
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.count(F.lit(1)).cast("bigint").alias("c")))
-    s = hourly.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("c").cast("bigint").alias("s1"),
-        F.sum(F.col("c") * F.col("c")).cast("bigint").alias("s2"))
-    nd = F.col("n").cast("double")
-    mu = F.col("s1").cast("double") / nd
-    var_pop = F.col("s2").cast("double") / nd - mu * mu
+    s = power_sums(hourly_counts(load_table(spark, "events", sf_dir)),
+                   ["event_type"], "c")
+    mu, var_pop = mean_var_pop()
     return s.select(
         "event_type", F.col("n").alias("n_hours"),
         mu.alias("mean_per_hour"),
@@ -2722,14 +2694,10 @@ def ts_sax_symbolize(spark: SparkSession, sf_dir: str) -> DataFrame:
                          F.date_format("ts", "yyyy-MM-dd").alias("day"),
                          F.floor(F.hour("ts") / 6).alias("blk"))
               .agg(F.sum(cents).cast("bigint").alias("bs")))
-    mom = hourly.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("bs").cast("bigint").alias("s1"),
-        F.sum(F.col("bs") * F.col("bs")).cast("bigint").alias("s2"))
+    mom = power_sums(hourly, ["event_type"], "bs")
     nd = F.col("n").cast("double")
-    mu = F.col("s1").cast("double") / nd
-    sig = F.sqrt((F.col("s2").cast("double") / nd - mu * mu)
-                 * (nd / (nd - F.lit(1.0))))
+    mu, var_pop = mean_var_pop()
+    sig = F.sqrt(var_pop * (nd / (nd - F.lit(1.0))))
     z = (hourly.join(F.broadcast(mom), "event_type")
          .select("event_type", "day", "blk",
                  F.col("bs").cast("double").alias("bsd"),
@@ -2828,21 +2796,12 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     hod_sums = det.groupBy("event_type", "hod").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_h"),
         F.sum("d24").cast("bigint").alias("s1_h"))
-    glob = det.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("d24").cast("bigint").alias("s1"),
-        F.sum(F.col("d24") * F.col("d24")).cast("bigint").alias("s2"))
+    glob = power_sums(det, ["event_type"], "d24")
     term = (F.col("s1_h").cast("double") * F.col("s1_h").cast("double")
             / F.col("n_h").cast("double"))
     folds = hod_sums.groupBy("event_type").agg(
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct(F.col("hod"),
-                                                 term.alias("t")))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["t"]).alias("ssb_term"))
-    sst = (F.col("s2").cast("double")
-           - F.col("s1").cast("double") * F.col("s1").cast("double")
-           / F.col("n").cast("double"))
+        ordered_fold(["hod"], term).alias("ssb_term"))
+    sst = centered_ss()
     ssw = F.col("s2").cast("double") - F.col("ssb_term")
     return (glob.join(folds, "event_type")
             .select("event_type", F.col("n").alias("n_points"),
@@ -3142,11 +3101,7 @@ def ts_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: combinable (year, month) fold to ~84 rows; 12
     month-keyed lag partitions over that tiny table."""
-    o = load_table(spark, "orders", sf_dir)
-    cents = round_cents("o_totalprice")
-    monthly = (o.groupBy(F.year("o_orderdate").cast("bigint").alias("yr"),
-                         F.month("o_orderdate").cast("bigint").alias("mo"))
-               .agg(F.sum(cents).cast("bigint").alias("rev")))
+    monthly = monthly_order_cents(spark, sf_dir)
     w = Window.partitionBy("mo").orderBy("yr")
     prev = F.lag("rev").over(w)
     return monthly.select(
@@ -3198,11 +3153,7 @@ def ts_seasonal_index_monthly(spark: SparkSession,
 
     Scale shape: one (year, month) fold; 12-row aggregation; the grand
     totals broadcast as scalar subqueries."""
-    o = load_table(spark, "orders", sf_dir)
-    cents = round_cents("o_totalprice")
-    monthly = (o.groupBy(F.year("o_orderdate").cast("bigint").alias("yr"),
-                         F.month("o_orderdate").cast("bigint").alias("mo"))
-               .agg(F.sum(cents).cast("bigint").alias("rev")))
+    monthly = monthly_order_cents(spark, sf_dir)
     tot = monthly.agg(F.sum("rev").cast("bigint").alias("tot_rev"),
                       F.count(F.lit(1)).cast("bigint").alias("n_cells"))
     agg = (monthly.groupBy("mo")
@@ -3307,9 +3258,6 @@ def ts_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type")
             .agg(F.max("n").cast("bigint").alias("n_windows"),
                  F.count(F.lit(1)).cast("bigint").alias("n_patterns"),
-                 F.round(-F.aggregate(
-                     F.array_sort(F.collect_list(
-                         F.struct(F.col("pat"), F.col("t").alias("v")))),
-                     F.lit(0.0), lambda acc, x: acc + x["v"])
-                     / F.log(F.lit(6.0)), 6)
+                 F.round(-ordered_fold(["pat"], F.col("t"))
+                         / F.log(F.lit(6.0)), 6)
                  .alias("perm_entropy_norm")))

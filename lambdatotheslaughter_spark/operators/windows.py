@@ -13,7 +13,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.bucketed import bucketed_order
-from lambdatotheslaughter_spark.determinism import DEC, iround, round_cents
+from lambdatotheslaughter_spark.determinism import (
+    DEC, iround, mean_var_pop, power_sums, round_cents)
 from lambdatotheslaughter_spark.registry import register
 from lambdatotheslaughter_spark.tables import load_table
 
@@ -626,13 +627,10 @@ def win_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     type; everything combinable before it."""
     # a module-level import would register the timeseries keys ahead of
     # this module's, reordering the registry
-    from lambdatotheslaughter_spark.operators.timeseries import hourly_cents
+    from lambdatotheslaughter_spark.operators.timeseries import (
+        hour_indexed_cents)
 
-    hourly = (hourly_cents(load_table(spark, "events", sf_dir))
-              .select("event_type",
-                      (F.unix_timestamp("hr") / 3600).cast("bigint")
-                      .alias("h"),
-                      "cents"))
+    hourly = hour_indexed_cents(load_table(spark, "events", sf_dir))
     w = Window.partitionBy("event_type").orderBy("h") \
         .rowsBetween(-23, Window.currentRow)
     m = hourly.select(
@@ -851,14 +849,10 @@ def win_peer_group_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, "customer", sf_dir)
     cents = round_cents("c_acctbal")
     base = c.select("c_custkey", "c_mktsegment", cents.alias("cents"))
-    seg = base.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("cents").cast("bigint").alias("s1"),
-        F.sum(F.col("cents") * F.col("cents")).cast("bigint").alias("s2"))
+    seg = power_sums(base, ["c_mktsegment"], "cents")
     nd = F.col("n").cast("double")
-    mu = F.col("s1").cast("double") / nd
-    var = (F.col("s2").cast("double") / nd - mu * mu) \
-        * (nd / (nd - F.lit(1.0)))
+    mu, var_pop = mean_var_pop()
+    var = var_pop * (nd / (nd - F.lit(1.0)))
     return (base.join(F.broadcast(seg), "c_mktsegment")
             .select("c_custkey", "c_mktsegment",
                     ((F.col("cents").cast("double") - mu) / F.sqrt(var))
@@ -895,11 +889,12 @@ def win_ytd_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: (year, month) fold to ~84 rows; year-keyed running
     windows over that tiny grid."""
-    o = load_table(spark, "orders", sf_dir)
-    cents = round_cents("o_totalprice")
-    monthly = (o.groupBy(F.year("o_orderdate").cast("bigint").alias("yr"),
-                         F.month("o_orderdate").cast("bigint").alias("mo"))
-               .agg(F.sum(cents).cast("bigint").alias("rev")))
+    # a module-level import would register the timeseries keys ahead of
+    # this module's, reordering the registry
+    from lambdatotheslaughter_spark.operators.timeseries import (
+        monthly_order_cents)
+
+    monthly = monthly_order_cents(spark, sf_dir)
     w = (Window.partitionBy("yr").orderBy("mo")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return monthly.select(

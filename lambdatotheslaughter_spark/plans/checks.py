@@ -13,6 +13,12 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def formatted_plan(df: DataFrame) -> str:
+    """The physical plan as ``df.explain("formatted")`` prints it."""
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+
+
 def optimized_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 

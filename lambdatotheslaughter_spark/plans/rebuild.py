@@ -38,15 +38,15 @@ DEFAULT_VIEWS = (
 )
 
 
-def rebuild_views(spark: SparkSession, sf_dir: str,
-                  views: tuple[str, ...] = DEFAULT_VIEWS) -> dict[str, float]:
-    """Recompute each serving view and publish it as ``lts_view_<name>``.
+def rebuild_views(spark: SparkSession, sf_dir: str) -> dict[str, float]:
+    """Recompute each of ``DEFAULT_VIEWS`` and publish it as
+    ``lts_view_<name>``.
 
     The views are built concurrently, one thread per view; each thread
     inherits the caller's local properties (job group and description) and
     session tags. Returns per-view wall seconds; the views overlap, so their
     sum exceeds the rebuild's total. Every view finishes, published or
-    failed, before this returns; then the first failure in ``views`` order
+    failed, before this returns; then the first failure in view order
     is raised. A view that failed keeps its previous version."""
     def rebuild(name: str) -> float:
         t0 = time.perf_counter()
@@ -56,7 +56,7 @@ def rebuild_views(spark: SparkSession, sf_dir: str,
 
     # each view gets its own copy of the caller's local properties (and
     # session tags): Spark sets the SQL execution id in them per thread
-    with ThreadPoolExecutor(max_workers=max(len(views), 1)) as pool:
+    with ThreadPoolExecutor(max_workers=len(DEFAULT_VIEWS)) as pool:
         futures = {name: pool.submit(inheritable_thread_target(spark)(rebuild), name)
-                   for name in views}
+                   for name in DEFAULT_VIEWS}
     return {name: f.result() for name, f in futures.items()}

@@ -25,7 +25,6 @@ class Registered:
     name: str
     fn: QueryFn
     oracle: str | None
-    doc: str
 
 
 _REGISTRY: dict[str, Registered] = {}
@@ -61,8 +60,7 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query key {name!r}")
-        _REGISTRY[name] = Registered(name=name, fn=fn, oracle=oracle,
-                                     doc=(fn.__doc__ or "").strip())
+        _REGISTRY[name] = Registered(name=name, fn=fn, oracle=oracle)
         return fn
     return deco
 

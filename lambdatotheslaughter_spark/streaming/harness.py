@@ -33,7 +33,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from lambdatotheslaughter_spark.session import scoped_conf
-from lambdatotheslaughter_spark.tables import load_table
+from lambdatotheslaughter_spark.tables import load_table, sweep_versions
 
 
 @contextmanager
@@ -213,7 +213,8 @@ def upsert_foreach_batch(serving_path: str):
     ``serving_path`` is a symlink to one version directory under
     ``<serving_path>.versions``. Each batch writes its merge to a new
     version, repoints the link with one atomic ``os.replace``, then
-    deletes every version but the new one and the one it replaced. A
+    deletes every entry but the new version and the one it replaced
+    (``tables.sweep_versions``, the batch views' retention rule). A
     reader, or a crash at any point, finds a whole table: the old version
     or the new one. ``spark.read.parquet(serving_path)`` reads the current
     version; readers that run during merges use ``read_serving``."""
@@ -236,6 +237,5 @@ def upsert_foreach_batch(serving_path: str):
             os.unlink(swap)
         os.symlink(os.path.join(os.path.basename(versions), version), swap)
         os.replace(swap, serving_path)
-        for old in set(os.listdir(versions)) - {version, os.path.basename(previous)}:
-            shutil.rmtree(os.path.join(versions, old), ignore_errors=True)
+        sweep_versions(versions, {version, os.path.basename(previous)})
     return _merge

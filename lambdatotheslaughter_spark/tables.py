@@ -232,7 +232,14 @@ def publish_view(spark: SparkSession, df: DataFrame, view: str) -> None:
     # finds no view
     verb = "ALTER" if spark.catalog.tableExists(view) else "CREATE"
     spark.sql(f"{verb} VIEW {view} AS SELECT * FROM parquet.`{path}`")
-    for old in set(os.listdir(root)) - {version, replaced}:
+    sweep_versions(root, {version, replaced})
+
+
+def sweep_versions(root: str, keep: set[str | None]) -> None:
+    """The retention rule of a versioned table: delete every entry under
+    ``root`` (version directories and stray files alike) whose name is
+    not in ``keep``, the new version and the one it replaced."""
+    for old in set(os.listdir(root)) - keep:
         old = os.path.join(root, old)
         if os.path.isdir(old):
             shutil.rmtree(old, ignore_errors=True)

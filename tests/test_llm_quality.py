@@ -137,14 +137,13 @@ def test_lsh_hot_bucket_cap_is_not_quadratic(spark):
     assert len(roots) == 1, f"chained candidates split into {len(roots)} components"
 
 
-def test_verify_join_shuffle_path_matches_broadcast(spark, monkeypatch):
-    """The LSH candidate-verify join is size-dispatched: broadcast below
-    _VERIFY_BROADCAST_MAX_PAIRS candidates, shuffle join above (a
-    100 TB corpus's candidate count grows with duplicate mass and cannot
-    be unconditionally broadcast). Force each dispatch on the same corpus
-    — a forced-large fixture with planted near-dups plus a hot identical
-    block so the candidate set is non-trivial — and require the exact
-    same verified (a_id, b_id, jaccard) rows from both paths."""
+def test_verify_join_shuffle_path_matches_broadcast(spark):
+    """The LSH candidate-verify join (a shuffle join: a 100 TB corpus's
+    candidate count grows with duplicate mass, so the candidates cannot be
+    broadcast) returns exactly the LSH candidates whose shingle-set
+    Jaccard, computed in Python, is at least 0.5 — on a fixture with
+    planted near-dups plus a hot identical block, so the candidate set is
+    non-trivial and chaining is exercised too."""
     from pyspark.sql import functions as F
 
     from lambdatotheslaughter_spark.functions.text import shingles3, tokens
@@ -158,19 +157,20 @@ def test_verify_join_shuffle_path_matches_broadcast(spark, monkeypatch):
     sh = docs.select("doc_id", tokens().alias("toks")) \
         .select("doc_id", shingles3("toks").alias("sh"))
 
-    def run():
-        return {(r.a_id, r.b_id, round(r.jaccard, 9))
+    verified = {(r.a_id, r.b_id, r.jaccard)
                 for r in llm._verified_near_dup_pairs(sh)
                 .where(F.col("jaccard") >= 0.5).collect()}
-
-    monkeypatch.setattr(llm, "_VERIFY_BROADCAST_MAX_PAIRS", 0)
-    shuffled = run()
-    monkeypatch.setattr(llm, "_VERIFY_BROADCAST_MAX_PAIRS", 1_000_000_000)
-    broadcasted = run()
-    assert shuffled, "forced-large fixture produced no verified pairs"
-    assert shuffled == broadcasted, (
-        f"shuffle/broadcast verify paths disagree: "
-        f"{len(shuffled)} vs {len(broadcasted)} pairs")
+    shingles = {r.doc_id: set(r.sh) for r in sh.collect()}
+    expected = set()
+    for r in llm._lsh_candidate_pairs(sh).collect():
+        a, b = shingles[r.a_id], shingles[r.b_id]
+        jac = len(a & b) / (len(a) + len(b) - len(a & b))
+        if jac >= 0.5:
+            expected.add((r.a_id, r.b_id, jac))
+    assert verified, "fixture produced no verified pairs"
+    assert verified == expected, (
+        f"verify join disagrees with Python Jaccard: "
+        f"{len(verified)} vs {len(expected)} pairs")
 
 
 def test_knn_never_collects_to_driver(spark, monkeypatch):

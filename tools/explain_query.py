@@ -16,12 +16,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql.classic.dataframe import DataFrame
 
 from lambdatotheslaughter_spark import registry
+from lambdatotheslaughter_spark.plans.checks import formatted_plan
 from lambdatotheslaughter_spark.session import get_spark
-
-
-def formatted(df):
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted")
 
 
 checkpointed = []
@@ -29,7 +25,7 @@ _local_checkpoint = DataFrame.localCheckpoint
 
 
 def _recording_local_checkpoint(self, *args, **kwargs):
-    checkpointed.append(formatted(self))
+    checkpointed.append(formatted_plan(self))
     return _local_checkpoint(self, *args, **kwargs)
 
 
@@ -46,7 +42,7 @@ for name in args.queries:
     checkpointed.clear()
     df = registry.get(name).fn(spark, args.sf_dir)
     print(f"== {name} ==")
-    print(formatted(df))
+    print(formatted_plan(df))
     for n, plan in enumerate(checkpointed, 1):
         print(f"== {name} checkpoint {n} ==")
         print(plan)

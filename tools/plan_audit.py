@@ -25,6 +25,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lambdatotheslaughter_spark import registry
+from lambdatotheslaughter_spark.plans.checks import formatted_plan
 from lambdatotheslaughter_spark.session import get_spark
 
 # keys whose CONTRACT is a cross/nested-loop shape (the survey names them):
@@ -82,8 +83,7 @@ n_benign_bnlj = 0
 for i, name in enumerate(names, 1):
     try:
         df = registry.all_queries()[name](spark, args.sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
+        plan = formatted_plan(df)
     except Exception as exc:  # noqa: BLE001 — audit must visit every key
         errors.append((name, repr(exc)[:200]))
         continue
