@@ -796,8 +796,7 @@ def agg_bitmap_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.date_trunc("day", "ts").alias("day"),
                         F.bitmap_bucket_number("user_id").alias("bucket"))
              .agg(F.bitmap_construct_agg(F.bitmap_bit_position("user_id"))
-                  .alias("bm"))
-             .localCheckpoint(eager=False))  # both grains read it
+                  .alias("bm")))
     daily = (parts.groupBy("event_type", "day")
              .agg(F.sum(F.bitmap_count("bm")).cast("bigint")
                   .alias("daily_distinct")))

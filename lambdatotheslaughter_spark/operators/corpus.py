@@ -2042,8 +2042,7 @@ def llm_dedup_cross_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_shard = (d.select("doc_id", "lang", fp.alias("fp"),
                           shard.alias("shard"))
                  .withColumn("rn", F.row_number().over(w_shard))
-                 .where(F.col("rn") == 1).drop("rn")
-                 .localCheckpoint(eager=False))  # both aggregates read it
+                 .where(F.col("rn") == 1).drop("rn"))
     w_glob = Window.partitionBy("fp").orderBy("doc_id")
     merged = (per_shard.withColumn("rn", F.row_number().over(w_glob))
               .where(F.col("rn") == 1))
@@ -4219,8 +4218,10 @@ def llm_vocab_growth_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one groupBy), new-vocab counts cumulate over the 10-slice spine,
     and the β fit is regr_slope over 10 log points, rounded 6 dp.
 
-    Scale shape: one token-grain fold (combinable min), one 10-row
-    spine; the corpus is scanned exactly once."""
+    Scale shape: two token-grain folds (the per-slice count and the
+    combinable first-slice min), each fed by its own scan and partially
+    aggregated right after the tokenize, so no raw token is shuffled or
+    materialised; one 10-row spine."""
     d = load_table(spark, "documents", sf_dir)
     mx = d.agg(F.max("doc_id").cast("bigint").alias("m"))
     sl = F.least(F.lit(_HEAPS_SLICES - 1),
@@ -4228,8 +4229,7 @@ def llm_vocab_growth_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
                          / (F.col("m") + 1))).cast("bigint")
     toks = (d.crossJoin(F.broadcast(mx))
             .select(sl.alias("slice"),
-                    F.explode(tokens()).alias("tok"))
-            .localCheckpoint(eager=False))  # volume + first-seen share it
+                    F.explode(tokens()).alias("tok")))
     per_slice = toks.groupBy("slice").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_tok"))
     vocab_new = (toks.groupBy("tok")
@@ -4313,8 +4313,7 @@ def llm_topic_coherence_umass(spark: SparkSession,
     d = load_table(spark, "documents", sf_dir)
     dt = (d.select("doc_id", "lang",
                    F.explode(tokens()).alias("tok"))
-          .distinct()
-          .localCheckpoint(eager=False))  # df, lang-df and co share it
+          .distinct())
     df = dt.groupBy("tok").agg(
         F.countDistinct("doc_id").cast("bigint").alias("d"))
     ld = dt.groupBy("lang", "tok").agg(

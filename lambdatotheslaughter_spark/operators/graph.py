@@ -652,8 +652,7 @@ def graph_bipartite_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds both inputs); the pair groupBy is map-side combinable; the
     weight filter collapses output to the repeated-pair tail."""
     items = (load_table(spark, "lineitem", sf_dir)
-             .select("l_orderkey", "l_partkey").distinct()
-             .localCheckpoint(eager=False))  # one shuffle feeds both sides
+             .select("l_orderkey", "l_partkey").distinct())
     a = items.select("l_orderkey", F.col("l_partkey").alias("part_a"))
     b = items.select(F.col("l_orderkey").alias("ok2"),
                      F.col("l_partkey").alias("part_b"))

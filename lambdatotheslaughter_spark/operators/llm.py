@@ -203,10 +203,14 @@ def _verified_near_dup_pairs(sh: DataFrame) -> DataFrame:
     count grows with the corpus's duplicate MASS, not just its size, so
     the candidates cannot be broadcast at 100 TB. The first join hints
     SHUFFLE_HASH with the bare (a_id, b_id) pairs as the build side
-    (16 B/row per-partition hash table); the second join carries
-    shingle-array payloads on BOTH sides, so it stays sort-merge (spills
-    gracefully instead of OOMing a hash table of arrays). Nothing is
-    broadcast, nothing is collected."""
+    (16 B/row per-partition hash table). The second join carries
+    shingle arrays on both sides and has no hint, so the planner picks it
+    by size: while the estimate of the shingle frame (that of the
+    documents scan it is checkpointed from) is under
+    ``spark.sql.autoBroadcastJoinThreshold``, it broadcasts the ``sb``
+    side (BroadcastHashJoin BuildLeft), as it does at sf0.01 and sf0.1;
+    above it the join is sort-merge, which spills instead of building a
+    hash table of arrays. Nothing is collected."""
     cand = _lsh_candidate_pairs(sh)
     sa = sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b"))

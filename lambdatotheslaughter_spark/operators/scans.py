@@ -10,6 +10,7 @@ scan from reading 100 TB.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import shutil
 import tempfile
@@ -538,7 +539,6 @@ def _orders_manifest_fixture(spark: SparkSession, sf_dir: str,
     .tmp files beside commit 1 — failed-writer debris for the vacuum op
     (a distinct ``tag`` keeps orphan-bearing fixtures separate)."""
     import glob
-    import json
 
     o = load_table(spark, "orders", sf_dir)
 
@@ -564,8 +564,6 @@ def _orders_manifest_fixture(spark: SparkSession, sf_dir: str,
 
 
 def _manifest_files(root: str, version: int) -> list[str]:
-    import json
-
     with open(os.path.join(root, f"manifest_v{version}.json")) as f:
         return json.load(f)["files"]
 
@@ -674,8 +672,6 @@ def scan_observe_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric). The observed values are returned as the result row, so the
     oracle proves the observation API reports exactly what a direct
     aggregation would."""
-    import uuid
-
     from pyspark.sql import Observation
 
     o = load_table(spark, "orders", sf_dir)
@@ -2024,61 +2020,60 @@ def txlog_commit(root: str, actions: list[dict]) -> int:
     then atomically rename it to the NEXT version slot; on collision
     (another writer won that version) re-read the log head and retry —
     the Delta-protocol core. Returns the committed version."""
-    import json as _json
-    import os as _os
-    import uuid as _uuid
-
-    log = _os.path.join(root, "_txlog")
-    _os.makedirs(log, exist_ok=True)
+    log = os.path.join(root, "_txlog")
+    os.makedirs(log, exist_ok=True)
     while True:
-        versions = [int(f.split(".")[0]) for f in _os.listdir(log)
+        versions = [int(f.split(".")[0]) for f in os.listdir(log)
                     if f.endswith(".json")]
         nxt = (max(versions) + 1) if versions else 0
-        tmp = _os.path.join(log, f".tmp-{_uuid.uuid4().hex[:8]}")
+        tmp = os.path.join(log, f".tmp-{uuid.uuid4().hex[:8]}")
         with open(tmp, "w") as fh:
-            _json.dump({"version": nxt, "actions": actions}, fh)
-        final = _os.path.join(log, f"{nxt:05d}.json")
+            json.dump({"version": nxt, "actions": actions}, fh)
+        final = os.path.join(log, f"{nxt:05d}.json")
         try:
-            _os.link(tmp, final)          # atomic create-if-absent
-            _os.unlink(tmp)
+            os.link(tmp, final)          # atomic create-if-absent
+            os.unlink(tmp)
             return nxt
         except FileExistsError:
-            _os.unlink(tmp)               # lost the race: retry at nxt+1
+            os.unlink(tmp)               # lost the race: retry at nxt+1
+
+
+def _txlog_replay(root: str, live: set[str], after: int,
+                  version: int) -> list[str]:
+    """Apply the add/remove actions of commits ``after`` < v ≤
+    ``version`` to the live-file set ``live``; return its paths."""
+    log = os.path.join(root, "_txlog")
+    for v in sorted(int(f.split(".")[0]) for f in os.listdir(log)
+                    if f.endswith(".json")):
+        if after < v <= version:
+            with open(os.path.join(log, f"{v:05d}.json")) as fh:
+                actions = json.load(fh)["actions"]
+            for act in actions:
+                if act["op"] == "add":
+                    live.add(act["path"])
+                elif act["op"] == "remove":
+                    live.discard(act["path"])
+    return [os.path.join(root, p) for p in sorted(live)]
 
 
 def txlog_snapshot_files(root: str, version: int) -> list[str]:
     """Replay add/remove actions through `version` (inclusive)."""
-    import json as _json
-    import os as _os
-
-    log = _os.path.join(root, "_txlog")
-    live: set[str] = set()
-    for v in sorted(int(f.split(".")[0]) for f in _os.listdir(log)
-                    if f.endswith(".json")):
-        if v > version:
-            break
-        for act in _json.load(open(_os.path.join(log, f"{v:05d}.json")))["actions"]:
-            if act["op"] == "add":
-                live.add(act["path"])
-            elif act["op"] == "remove":
-                live.discard(act["path"])
-    return [_os.path.join(root, p) for p in sorted(live)]
+    return _txlog_replay(root, set(), -1, version)
 
 
 def _txlog_batches(spark: SparkSession, sf_dir: str, tmp: str) -> None:
     """Write orders under ``tmp`` as three batches by o_orderkey mod 3
     and commit v0: add batch0; v1: add batch1; v2: remove batch0, add
     batch2."""
-    import os as _os
     o = load_table(spark, "orders", sf_dir)
     for mod in (0, 1, 2):
         (o.where(F.pmod("o_orderkey", F.lit(3)) == mod)
          .write.mode("overwrite")
-         .parquet(_os.path.join(tmp, f"batch{mod}")))
-    assert txlog_commit(tmp, [{"op": "add", "path": "batch0"}]) == 0
-    assert txlog_commit(tmp, [{"op": "add", "path": "batch1"}]) == 1
-    assert txlog_commit(tmp, [{"op": "remove", "path": "batch0"},
-                              {"op": "add", "path": "batch2"}]) == 2
+         .parquet(os.path.join(tmp, f"batch{mod}")))
+    txlog_commit(tmp, [{"op": "add", "path": "batch0"}])
+    txlog_commit(tmp, [{"op": "add", "path": "batch1"}])
+    txlog_commit(tmp, [{"op": "remove", "path": "batch0"},
+                       {"op": "add", "path": "batch2"}])
 
 
 def _txlog_fixture(spark: SparkSession, sf_dir: str) -> str:
@@ -2141,57 +2136,39 @@ def txlog_write_checkpoint(root: str, version: int) -> None:
     idea: later readers replay only commits AFTER the checkpoint.
     Kept in a sibling directory so the plain commit log (and its
     version-slot race) is untouched."""
-    import json as _json
-    import os as _os
-
-    live = [_os.path.relpath(p, root)
+    live = [os.path.relpath(p, root)
             for p in txlog_snapshot_files(root, version)]
-    ckpt = _os.path.join(root, "_txlog_ckpt")
-    _os.makedirs(ckpt, exist_ok=True)
-    tmp = _os.path.join(ckpt, f".tmp-{version:05d}")
+    ckpt = os.path.join(root, "_txlog_ckpt")
+    os.makedirs(ckpt, exist_ok=True)
+    tmp = os.path.join(ckpt, f".tmp-{version:05d}")
     with open(tmp, "w") as fh:
-        _json.dump({"version": version, "live": sorted(live)}, fh)
-    _os.replace(tmp, _os.path.join(ckpt, f"{version:05d}.json"))
+        json.dump({"version": version, "live": sorted(live)}, fh)
+    os.replace(tmp, os.path.join(ckpt, f"{version:05d}.json"))
 
 
 def txlog_snapshot_files_ckpt(root: str, version: int) -> list[str]:
     """Snapshot via the LATEST checkpoint ≤ `version`, replaying only
     the commit tail after it — O(tail) metadata reads instead of
     O(history)."""
-    import json as _json
-    import os as _os
-
-    ckpt_dir = _os.path.join(root, "_txlog_ckpt")
+    ckpt_dir = os.path.join(root, "_txlog_ckpt")
     base_v, live = -1, set()
-    if _os.path.isdir(ckpt_dir):
-        versions = [int(f.split(".")[0]) for f in _os.listdir(ckpt_dir)
+    if os.path.isdir(ckpt_dir):
+        versions = [int(f.split(".")[0]) for f in os.listdir(ckpt_dir)
                     if f.endswith(".json") and not f.startswith(".")]
         usable = [v for v in versions if v <= version]
         if usable:
             base_v = max(usable)
-            doc = _json.load(open(_os.path.join(ckpt_dir,
-                                                f"{base_v:05d}.json")))
-            live = set(doc["live"])
-    log = _os.path.join(root, "_txlog")
-    for v in sorted(int(f.split(".")[0]) for f in _os.listdir(log)
-                    if f.endswith(".json")):
-        if v <= base_v or v > version:
-            continue
-        doc = _json.load(open(_os.path.join(log, f"{v:05d}.json")))
-        for act in doc["actions"]:
-            if act["op"] == "add":
-                live.add(act["path"])
-            elif act["op"] == "remove":
-                live.discard(act["path"])
-    return [_os.path.join(root, p) for p in sorted(live)]
+            with open(os.path.join(ckpt_dir, f"{base_v:05d}.json")) as fh:
+                live = set(json.load(fh)["live"])
+    return _txlog_replay(root, live, base_v, version)
 
 
 def _txlog_ckpt_fixture(spark: SparkSession, sf_dir: str) -> str:
     def build(tmp: str) -> None:
         _txlog_batches(spark, sf_dir, tmp)
         txlog_write_checkpoint(tmp, 2)
-        # the post-checkpoint tail the checkpoint reader must still see
-        assert txlog_commit(tmp, [{"op": "add", "path": "batch0"}]) == 3
+        # v3, the post-checkpoint tail the checkpoint reader must still see
+        txlog_commit(tmp, [{"op": "add", "path": "batch0"}])
 
     return _cached_dataset("txlog_ckpt_orders", sf_dir, "orders", build)
 

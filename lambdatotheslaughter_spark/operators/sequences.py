@@ -181,8 +181,7 @@ def seq_market_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     and basket totals are combinable folds; the rule join decorates
     pair rows with two broadcast-scale item dims."""
     li = load_table(spark, "lineitem", sf_dir)
-    baskets = (li.select("l_orderkey", "l_partkey").distinct()
-               .localCheckpoint(eager=False))  # pairs + items share it
+    baskets = li.select("l_orderkey", "l_partkey").distinct()
     nb = baskets.agg(F.countDistinct("l_orderkey").cast("bigint")
                      .alias("nb"))
     item = baskets.groupBy("l_partkey").agg(
@@ -505,8 +504,7 @@ def seq_next_event_prediction_eval(spark: SparkSession,
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     tr = (ev.select(F.col("event_type").alias("cur"),
                     F.lag("event_type").over(w).alias("prev"))
-          .where(F.col("prev").isNotNull())
-          .localCheckpoint(eager=False))  # matrix + scoring share it
+          .where(F.col("prev").isNotNull()))
     matrix = (tr.groupBy("prev", "cur")
               .agg(F.count(F.lit(1)).cast("bigint").alias("c")))
     mx = matrix.groupBy("prev").agg(F.max("c").alias("mc"))

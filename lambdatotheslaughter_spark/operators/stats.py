@@ -805,8 +805,7 @@ def stat_runs_test_wald_wolfowitz(spark: SparkSession,
     Scale shape: hourly pre-agg collapses the corpus to the calendar;
     the rank-median, sign lag, and run count are all windows over the
     calendar-sized series; one final five-integer fold per type."""
-    hourly = (hourly_cents(load_table(spark, "events", sf_dir))
-              .localCheckpoint(eager=False))  # median + signing share it
+    hourly = hourly_cents(load_table(spark, "events", sf_dir))
     wp = Window.partitionBy("event_type")
     ranked = hourly.select(
         "event_type", "cents",
@@ -5252,8 +5251,7 @@ def stat_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     types = obs.select("t").distinct()
     grid = (hours.crossJoin(F.broadcast(types))
             .join(obs, ["h", "t"], "left")
-            .select("h", "t", F.coalesce("x", F.lit(0)).alias("x"))
-            .localCheckpoint(eager=False))  # item + rowsum folds share it
+            .select("h", "t", F.coalesce("x", F.lit(0)).alias("x")))
     item = grid.groupBy("t").agg(*wide_power_sums("x"))
     var_i = sample_var()
     iv = item.agg(

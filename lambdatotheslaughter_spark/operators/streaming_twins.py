@@ -312,73 +312,6 @@ def stream_stateful_state_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drain_to_memory(spark, out, "update", "lts_state")[0]
 
 
-def tws_available() -> bool:
-    """True when `transformWithStateInPandas` can actually run here: the
-    TWS state-server protocol imports Python `google.protobuf`, and
-    without the `google` package it cannot start. Guard, don't crash."""
-    import importlib.util
-    try:
-        # find_spec raises (not returns None) when the PARENT package
-        # 'google' is itself absent, as in this sandbox
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        return False
-
-
-def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`stream_stateful_state_op`'s accumulator ported to the Spark 4
-    arbitrary-state API v2 (`transformWithStateInPandas`) — a drop-in
-    rewrite: same file-stream source, same per-user
-    (total, n) value state, same output schema and rounding, so its
-    result must hash-match the applyInPandasWithState op and the same
-    DuckDB oracle. NOT registered as a driver query: `tws_available()`
-    is False in this sandbox (no google.protobuf), so a registry slot
-    would crash the driver; tests/test_streaming.py carries the
-    skip-guarded equivalence test instead, which goes live the moment
-    the environment gains protobuf. Scale shape is identical to the
-    applyInPandasWithState form — per-key state in the state store,
-    Arrow-batched Python, one shuffle on the grouping key — with TWS
-    adding typed state primitives (value/list/map) and timers."""
-    import pandas as pd
-
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires google.protobuf, "
-            "unavailable in this environment (see tws_available)")
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    class TotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "total double, n bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = self._totals.get() if self._totals.exists() else None
-            total, n = prev if prev is not None else (0.0, 0)
-            for pdf in rows:
-                total += float(pdf["value"].sum())
-                n += len(pdf)
-            self._totals.update((total, n))
-            yield pd.DataFrame({"user_id": [key[0]],
-                                "total_value": [round(total, 4)],
-                                "n_events": [n]})
-
-        def close(self) -> None:
-            pass
-
-    from lambdatotheslaughter_spark.tables import events_reader
-
-    src = events_reader(spark, sf_dir, streaming=True)
-    out = src.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=TotalsProcessor(),
-        outputStructType="user_id bigint, total_value double, n_events bigint",
-        outputMode="Update",
-        timeMode="None")
-    return drain_to_memory(spark, out, "update", "lts_tws")[0]
-
-
 def interval_pair_join(views: DataFrame, clicks: DataFrame,
                        how: str = "inner") -> DataFrame:
     """Shared by the batch twins and the LIVE stream-stream join tests

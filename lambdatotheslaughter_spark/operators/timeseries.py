@@ -2162,8 +2162,7 @@ def ts_acf_multi_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     the calendar; the 24-lag spine is a broadcast cross join over the
     HOURLY table (24×hours rows — calendar-bounded, corpus-free); the
     per-(type, lag) moment fold is one combinable groupBy."""
-    hourly = (hour_indexed_cents(load_table(spark, "events", sf_dir))
-              .localCheckpoint(eager=False))  # both join sides share it
+    hourly = hour_indexed_cents(load_table(spark, "events", sf_dir))
     lags = spark.range(1, _ACF_MAX_LAG + 1).select(F.col("id").alias("lag"))
     a = hourly.alias("a")
     b = hourly.alias("b")

@@ -347,8 +347,7 @@ def win_pct_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), F.col("c_nationkey") == n.n_nationkey)
         .groupBy("n_name", F.date_trunc("month", "o_orderdate").alias("month"))
         .agg(F.sum(iround(F.col("o_totalprice") * 100))
-             .cast("bigint").alias("rev_cents"))
-        .localCheckpoint(eager=False))  # window branch + grand total share it
+             .cast("bigint").alias("rev_cents")))
     tot = monthly.agg(F.sum("rev_cents").cast("bigint").alias("grand_cents"))
     w = Window.partitionBy("n_name")
     return (monthly.crossJoin(tot)

@@ -29,11 +29,11 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from lambdatotheslaughter_spark.session import scoped_conf
-from lambdatotheslaughter_spark.tables import load_table, sweep_versions
+from lambdatotheslaughter_spark.tables import (EVENTS_US_SCHEMA, load_table,
+                                               sweep_versions)
 
 
 @contextmanager
@@ -95,16 +95,6 @@ def drain_to_memory(spark: SparkSession, stream: DataFrame, output_mode: str,
     return rows, query
 
 
-EVENT_STREAM_SCHEMA = T.StructType([
-    T.StructField("event_id", T.LongType()),
-    T.StructField("ts", T.TimestampType()),
-    T.StructField("user_id", T.LongType()),
-    T.StructField("event_type", T.StringType()),
-    T.StructField("value", T.DoubleType()),
-    T.StructField("props", T.StringType()),
-])
-
-
 class EventStreamHarness:
     """Writes the events table as N ordered chunk files, exposes them as a
     rate-limited file stream, and runs a transform to a memory sink."""
@@ -144,7 +134,7 @@ class EventStreamHarness:
     def source(self) -> DataFrame:
         return (
             self.spark.readStream
-            .schema(EVENT_STREAM_SCHEMA)
+            .schema(EVENTS_US_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(self.input_dir)
         )

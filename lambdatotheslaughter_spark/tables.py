@@ -104,7 +104,7 @@ SCHEMAS: dict[str, T.StructType] = {
 TABLE_NAMES = tuple(SCHEMAS)
 
 # micros-era events schema: ts reads directly as a (naive-UTC) timestamp
-_EVENTS_US_SCHEMA = T.StructType([
+EVENTS_US_SCHEMA = T.StructType([
     T.StructField("ts", T.TimestampType()) if f.name == "ts" else f
     for f in SCHEMAS["events"]
 ])
@@ -146,7 +146,7 @@ def events_reader(spark: SparkSession, sf_dir: str,
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         schema = SCHEMAS["events"]
     else:
-        schema = _EVENTS_US_SCHEMA
+        schema = EVENTS_US_SCHEMA
     if streaming:
         # file-stream sources require a directory: stream the sf dir but
         # glob down to the single events file

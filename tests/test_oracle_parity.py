@@ -55,10 +55,9 @@ EAGER_AT_BUILD: frozenset[str] = frozenset({
     # graph: iterative algorithms checkpoint each round from the driver
     "graph_adamic_adar_linkpred", "graph_assortativity_degree",
     "graph_avg_neighbor_degree", "graph_bfs_distance",
-    "graph_bipartite_copurchase", "graph_closeness_harmonic_3hop",
-    "graph_clustering_coefficient", "graph_connected_components",
-    "graph_degree_histogram", "graph_hits_fixed", "graph_jaccard_neighbors",
-    "graph_k_core", "graph_katz_centrality_fixed",
+    "graph_closeness_harmonic_3hop", "graph_clustering_coefficient",
+    "graph_connected_components", "graph_degree_histogram", "graph_hits_fixed",
+    "graph_jaccard_neighbors", "graph_k_core", "graph_katz_centrality_fixed",
     "graph_label_propagation_sync", "graph_local_bridges",
     "graph_modularity_brand", "graph_pagerank_fixed",
     "graph_personalized_pagerank", "graph_reciprocity",
@@ -73,10 +72,9 @@ EAGER_AT_BUILD: frozenset[str] = frozenset({
     "llm_sim_knn_per_query", "llm_sim_knn_quantized", "llm_sim_lsh_approx",
     "llm_sim_lsh_mllib", "llm_sim_radius_search", "llm_text_tfidf_top_terms",
     "llm_tokenizer_bpe_apply", "llm_tokenizer_bpe_train",
-    "llm_cluster_topic_terms", "llm_dedup_cross_shard_merge",
-    "llm_dedup_paragraph", "llm_dedup_survivorship", "llm_eval_ndcg_at10",
-    "llm_lsh_tuning_report", "llm_pipeline_curation_v2", "llm_sim_mmr_rerank",
-    "llm_topic_coherence_umass", "llm_vocab_coverage", "llm_vocab_growth_heaps",
+    "llm_cluster_topic_terms", "llm_dedup_paragraph", "llm_dedup_survivorship",
+    "llm_eval_ndcg_at10", "llm_lsh_tuning_report", "llm_pipeline_curation_v2",
+    "llm_sim_mmr_rerank", "llm_vocab_coverage",
     # scans: the write is the operation, or an on-disk fixture is built; a
     # fixture is cached across runs, and some are shared by several keys
     "catalog_analyze_stats", "scan_aggregate_pushdown", "scan_cached_view_reuse",
@@ -107,12 +105,9 @@ EAGER_AT_BUILD: frozenset[str] = frozenset({
     # stats, timeseries, sequences, aggregates, windows, quality:
     # checkpointed shared intermediates and driver-side scalars
     "ml_lift_gains_table", "stat_bh_fdr_permutation", "stat_cochran_q",
-    "stat_cronbach_alpha", "stat_crosstab", "stat_hodges_lehmann_shift",
-    "stat_kendall_tau", "stat_ljung_box_q", "stat_runs_test_wald_wolfowitz",
-    "stat_wilcoxon_signed_rank", "ts_acf_multi_lag", "ts_dtw_banded_pairs",
-    "ts_hurst_rs", "ts_xcorr_lead_lag", "seq_growth_accounting_weekly",
-    "seq_market_basket_rules", "seq_next_event_prediction_eval",
-    "seq_rfm_segments", "agg_bitmap_distinct_rollup", "win_pct_of_total",
+    "stat_crosstab", "stat_hodges_lehmann_shift", "stat_kendall_tau",
+    "stat_wilcoxon_signed_rank", "ts_dtw_banded_pairs", "ts_hurst_rs",
+    "ts_xcorr_lead_lag", "seq_growth_accounting_weekly", "seq_rfm_segments",
     "dq_schema_drift_report",
 })
 

@@ -9,6 +9,8 @@ import glob
 import os
 import tempfile
 
+import pytest
+
 from lambdatotheslaughter_spark import registry
 from lambdatotheslaughter_spark.plans import checks
 from lambdatotheslaughter_spark.session import scoped_conf
@@ -511,6 +513,31 @@ def test_vocab_coverage_uses_take_ordered_not_global_window():
     plan = checks.executed_plan(_df("llm_vocab_coverage"))
     assert "TakeOrderedAndProject" in plan, plan
     assert "Window" not in plan, plan
+
+
+# keys that read one frame on two sides and leave its sharing to Spark's
+# exchange reuse (a checkpoint there started build-time jobs for no gain);
+# in llm_vocab_growth_heaps only the max(doc_id) broadcast is reused, and
+# each token fold tokenizes the corpus itself
+_SHARED_BY_REUSE = [
+    "agg_bitmap_distinct_rollup", "graph_bipartite_copurchase",
+    "llm_dedup_cross_shard_merge", "llm_topic_coherence_umass",
+    "llm_vocab_growth_heaps", "seq_market_basket_rules",
+    "seq_next_event_prediction_eval", "stat_cronbach_alpha",
+    "stat_ljung_box_q", "stat_runs_test_wald_wolfowitz", "ts_acf_multi_lag",
+    "win_pct_of_total",
+]
+
+
+@pytest.mark.parametrize("name", _SHARED_BY_REUSE)
+def test_shared_frame_is_reused_not_recomputed(name):
+    """Each of these builders reads a shared frame on two sides with no
+    checkpoint: the executed plan must reuse its exchange, so a change
+    that makes the second side recompute the shared scan fails here."""
+    df = _df(name)
+    df.collect()  # AQE final plan
+    plan = checks.executed_plan(df)
+    assert "ReusedExchange" in plan, plan
 
 
 def test_winnow_window_is_partitioned_by_doc():

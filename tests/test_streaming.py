@@ -696,20 +696,6 @@ def test_session_boundary_tie_merges(spark):
     con.close()
 
 
-@pytest.mark.skipif(not tw.tws_available(), reason=(
-    "transformWithStateInPandas needs google.protobuf (the TWS "
-    "state-server protocol), which is not installed. Test goes "
-    "live automatically when the environment gains protobuf."))
-def test_stream_stateful_tws_matches_apply_in_pandas(spark):
-    """The Spark-4 arbitrary-state API v2 port (stream_stateful_tws) must
-    emit exactly the per-user (total_value, n_events) rows its
-    applyInPandasWithState sibling produces — same source, same state
-    semantics, different state backend."""
-    tws = canonical_rows(tw.stream_stateful_tws(spark, SMOKE_SF_DIR))
-    aip = canonical_rows(tw.stream_stateful_state_op(spark, SMOKE_SF_DIR))
-    assert tws == aip
-
-
 def test_chained_window_agg_twin(spark, harness):
     """Spark-4 multi-stateful chaining: hourly window agg re-windowed
     into a daily rollup inside ONE streaming query (append mode +
